@@ -100,6 +100,13 @@ object Curate {
     *
     * `langCol` must be low-cardinality (it is a language) — see the
     * broadcast-offsets precondition on [[bucketedRunningSum]].
+    *
+    * The survivor anti-join runs at construction (it is checkpointed) and
+    * follows [[Dedup.dropNearDuplicates]]: it broadcasts the near-dup
+    * losers when the dedup graph took the driver union-find and the losers
+    * fit the broadcast threshold, so the gated corpus is never shuffled;
+    * it shuffles the gated corpus on the id when the losers are larger or
+    * the graph needed the distributed component loop.
     */
   def curateCorpus(df: DataFrame, idCol: String, textCol: String,
                    langCol: String, minQuality: Double,

@@ -356,16 +356,34 @@ object Dedup {
   }
 
   /** The per-document chain (no collapse) — optimal for all-distinct
-    * corpora: signatures → banded candidates → pinned verify joins.
+    * corpora: signatures → banded candidates → pinned verify joins. The
+    * collapsed chain runs this same verify block over its representatives
+    * ([[minhashCollapsedRep]]).
+    *
+    * @param keyed rows with `id` and `__text` columns.
+    * @param materializePairs run one job that fills the `pairs` cache
+    *        BEFORE the verify plan is built. Set only by the eager label
+    *        path ([[minhashLabelsH]]); the lazy pair API leaves it off so
+    *        an explicit-collapse construction stays job-free (spec-pinned).
     */
   private[graft] def minhashPerDoc(keyed: DataFrame, threshold: Double,
                                    numHashes: Int, bands: Int,
-                                   shingleSize: Int): (DataFrame, Seq[DataFrame]) = {
+                                   shingleSize: Int,
+                                   materializePairs: Boolean = false): (DataFrame, Seq[DataFrame]) = {
     val (rawPairs, banded) =
       minhashCandidatePairsH(keyed, "id", "__text", numHashes, bands, shingleSize)
-    // pairs feed three consumers (id collection + two verify joins)
+    // pairs feed three consumers (id collection + two verify joins), so
+    // they are persisted. With `materializePairs` the cache is filled here,
+    // before the verify plan exists, so the planner sizes `candIds` from
+    // the real pair count: a small candidate set broadcasts into the
+    // semi-join and no corpus text is shuffled, while a corpus-scale one
+    // still exceeds the broadcast threshold and shuffles. An unfilled
+    // cache reports the bucket self-join's far larger estimate, so the
+    // semi-join exchanges every (id, text) row before AQE switches it to
+    // a broadcast.
     val pairs = rawPairs
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    if (materializePairs) pairs.count()
     val candIds = pairs.select(explode(array(col("id_a"), col("id_b"))).as("id")).distinct()
     val sets = keyed
       .join(candIds, Seq("id"), "leftsemi") // filter BEFORE shingling
@@ -407,7 +425,8 @@ object Dedup {
 
   private[graft] def minhashCollapsedRep(keyed: DataFrame, threshold: Double,
                                          numHashes: Int, bands: Int,
-                                         shingleSize: Int): CollapsedRep = {
+                                         shingleSize: Int,
+                                         materializePairs: Boolean = false): CollapsedRep = {
     // Content addressing: group and join on a content hash, never on the
     // text itself. The original shape keyed BOTH the rep aggregate and the
     // membership join by the full document text, so the membership join
@@ -440,31 +459,10 @@ object Dedup {
         .hint("shuffle_hash"), "__h")
       .select(col("__rid"), col("id"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (rawPairs, banded) =
-      minhashCandidatePairsH(reps, "id", "__text", numHashes, bands, shingleSize)
-    // pairs feed three consumers (id collection + two verify joins)
-    val pairs = rawPairs
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val candIds = pairs.select(explode(array(col("id_a"), col("id_b"))).as("id")).distinct()
-    val sets = reps
-      .join(candIds, Seq("id"), "leftsemi") // filter BEFORE shingling
-      .select(col("id"), shingleHashSet(col("__text"), shingleSize).as("sh"))
-    // The sets side carries the shingle-hash ARRAYS — Catalyst's size
-    // estimate for array columns runs low, so left to itself the planner
-    // sometimes broadcasts a corpus-proportional HashedRelation of shingle
-    // sets (measured at sf1 on the pre-r21 string arrays: the broadcast
-    // plan ran ~2x slower than the shuffled one, and the flip-flop made
-    // the row bimodal across clean runs). Pin the two verify joins to
-    // shuffle-hash: both sides are corpus-proportional, so the shuffled
-    // join is also the only plan that survives 100 TB.
-    val repVerified = pairs
-      .join(sets.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a")
-        .hint("shuffle_hash"), "id_a")
-      .join(sets.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b")
-        .hint("shuffle_hash"), "id_b")
-      .withColumn("jaccard", jaccardSorted(col("sh_a"), col("sh_b")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), Nums.round6(col("jaccard")).as("jaccard"))
+    // verified edges between distinct texts: the per-document chain, run
+    // over one representative per content
+    val (repVerified, chainCaches) = minhashPerDoc(reps, threshold,
+      numHashes, bands, shingleSize, materializePairs)
     // Same-text jaccard: identical sets, so n/n = 1.0 ALWAYS — shingle
     // sets are never empty ([[shingles]] clamps short texts to one
     // full-token shingle; property-suite-pinned), so the old
@@ -477,7 +475,7 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
       .select(col("id").as("__rid"), col("gsz"),
         Nums.round6(col("jaccard")).as("jaccard"))
-    CollapsedRep(membership, repVerified, selfJ, Seq(banded, pairs, membership))
+    CollapsedRep(membership, repVerified, selfJ, chainCaches :+ membership)
   }
 
   /** The collapsed chain: one representative (min id) per DISTINCT text
@@ -534,7 +532,10 @@ object Dedup {
     *
     * The returned labels are localCheckpoint-materialized (the CC loop
     * inside is already eager), so callers may release `caches`
-    * immediately; the labels then read executor blocks only.
+    * immediately; the labels then read executor blocks only. Being eager
+    * anyway, this path also fills the candidate-pair cache before the
+    * verify plan is built (`materializePairs`, see [[minhashPerDoc]]), so
+    * a small candidate set never shuffles the corpus text.
     */
   private[graft] def minhashLabelsH(df: DataFrame, idCol: String,
                                     textCol: String, threshold: Double,
@@ -543,7 +544,8 @@ object Dedup {
                                     collapse: Option[Boolean]): (DataFrame, Seq[DataFrame]) = {
     val keyed = df.select(col(idCol).as("id"), col(textCol).as("__text"))
     if (collapse.getOrElse(duplicationMaterial(keyed, col("__text")))) {
-      val r = minhashCollapsedRep(keyed, threshold, numHashes, bands, shingleSize)
+      val r = minhashCollapsedRep(keyed, threshold, numHashes, bands, shingleSize,
+        materializePairs = true)
       val comp = connectedComponents(r.repVerified.select("id_a", "id_b"),
           toFixpoint = true)
         .withColumnRenamed("id", "__rid")
@@ -559,8 +561,8 @@ object Dedup {
         .localCheckpoint() // pin label rows before the caches release
       (labels, r.caches)
     } else {
-      val (verified, caches) =
-        minhashPerDoc(keyed, threshold, numHashes, bands, shingleSize)
+      val (verified, caches) = minhashPerDoc(keyed, threshold, numHashes,
+        bands, shingleSize, materializePairs = true)
       (connectedComponents(verified.select("id_a", "id_b"),
         toFixpoint = true), caches)
     }
@@ -964,46 +966,6 @@ object Dedup {
       }
     }
 
-  /** Connected components over an undirected pair list — the CLUSTER step
-    * of near-dup dedup (pairs → clusters → one canonical survivor per
-    * cluster; the reference stops at ingest, this is the extension mandate's
-    * training-data curation surface).
-    *
-    * Min-label propagation: every vertex starts labeled with itself; each
-    * round a vertex takes the minimum label over its closed neighborhood;
-    * the fixpoint labels every vertex with the smallest id in its component
-    * (deterministic, engine-agnostic — a DuckDB recursive CTE replays it
-    * exactly). Rounds needed = graph diameter; similarity graphs are
-    * clique-ish, so a handful.
-    *
-    * Scale shape (the GraphX/GraphFrames pattern): ONE shuffle-join + ONE
-    * min-aggregate job per round — shuffle volume is O(edges), never
-    * materializing anything quadratic. Each vertex's previous label rides
-    * the aggregation (`min` over a tagged own-row), so the convergence check
-    * is a trivial scan of the round's already-materialized checkpoint blocks
-    * instead of a second shuffle-join job. Each round's label table is
-    * checkpointed (lineage truncation — constant-size plans/codegen across
-    * rounds, the GraphFrames iterative discipline) and the previous round's
-    * blocks are freed once the new round materializes.
-    *
-    * If the loop hits `maxIters` before the fixpoint (diameter > maxIters),
-    * a WARNING is logged and the partially-propagated labels are returned —
-    * downstream dedup would then under-merge, so the log line is the signal
-    * to raise `maxIters`. Callers that advertise EXACT transitive closure
-    * (the survivor dedup-id paths, [[minhashLabelsH]]) pass
-    * `toFixpoint = true` instead: the loop then runs until convergence
-    * (guaranteed finite — min propagation is monotone on a finite label
-    * set) and `maxIters` degrades to a soft logging threshold.
-    *
-    * @param pairs undirected edges as two id columns (`id_a`, `id_b`).
-    * @param checkpointDir when set, label tables use RELIABLE `checkpoint`
-    *        into this directory (survives executor loss — on a real cluster
-    *        `localCheckpoint` blocks live on executors and a lost executor
-    *        kills the job mid-iteration with no lineage to recompute); when
-    *        None (default), the faster executor-local `localCheckpoint`.
-    * @return (id, component) for every vertex appearing in some pair,
-    *         component = min id in the vertex's connected component.
-    */
   /** Estimated driver heap for the union-find over `edgeCount` directed
     * edges with ids of `idWidth` bytes each: per edge two id objects land in
     * the parent/min maps plus map-entry overhead (~48 bytes per boxed
@@ -1035,6 +997,57 @@ object Dedup {
     }
   }
 
+  /** Connected components over an undirected pair list — the CLUSTER step
+    * of near-dup dedup (pairs → clusters → one canonical survivor per
+    * cluster; the reference stops at ingest, this is the extension mandate's
+    * training-data curation surface).
+    *
+    * Min-label propagation: every vertex starts labeled with itself; each
+    * round a vertex takes the minimum label over its closed neighborhood;
+    * the fixpoint labels every vertex with the smallest id in its component
+    * (deterministic, engine-agnostic — a DuckDB recursive CTE replays it
+    * exactly). Rounds needed = graph diameter; similarity graphs are
+    * clique-ish, so a handful.
+    *
+    * `pairs` is read exactly once (spec-pinned): one scan emits both
+    * directions of every pair (explode of the two (src, dst) structs),
+    * and the distinct directed edge table is checkpointed before anything
+    * else reads it. Callers may therefore pass an un-persisted plan — the
+    * minhash label path hands in its whole verify chain.
+    *
+    * Small graphs (under `driverCutoff` edges and `driverCutoffBytes` of
+    * estimated driver heap) are labelled by a driver-side union-find whose
+    * result is a checkpointed local relation carrying its exact size, so
+    * a join against the labels can be planned as a broadcast.
+    *
+    * Scale shape (the GraphX/GraphFrames pattern): ONE shuffle-join + ONE
+    * min-aggregate job per round — shuffle volume is O(edges), never
+    * materializing anything quadratic. Each vertex's previous label rides
+    * the aggregation (`min` over a tagged own-row), so the convergence check
+    * is a trivial scan of the round's already-materialized checkpoint blocks
+    * instead of a second shuffle-join job. Each round's label table is
+    * checkpointed (lineage truncation — constant-size plans/codegen across
+    * rounds, the GraphFrames iterative discipline) and the previous round's
+    * blocks are freed once the new round materializes.
+    *
+    * If the loop hits `maxIters` before the fixpoint (diameter > maxIters),
+    * a WARNING is logged and the partially-propagated labels are returned —
+    * downstream dedup would then under-merge, so the log line is the signal
+    * to raise `maxIters`. Callers that advertise EXACT transitive closure
+    * (the survivor dedup-id paths, [[minhashLabelsH]]) pass
+    * `toFixpoint = true` instead: the loop then runs until convergence
+    * (guaranteed finite — min propagation is monotone on a finite label
+    * set) and `maxIters` degrades to a soft logging threshold.
+    *
+    * @param pairs undirected edges as two id columns (`id_a`, `id_b`).
+    * @param checkpointDir when set, label tables use RELIABLE `checkpoint`
+    *        into this directory (survives executor loss — on a real cluster
+    *        `localCheckpoint` blocks live on executors and a lost executor
+    *        kills the job mid-iteration with no lineage to recompute); when
+    *        None (default), the faster executor-local `localCheckpoint`.
+    * @return (id, component) for every vertex appearing in some pair,
+    *         component = min id in the vertex's connected component.
+    */
   def connectedComponents(pairs: DataFrame, maxIters: Int = 20,
                           checkpointDir: Option[String] = None,
                           driverCutoff: Long = 2000000L,
@@ -1054,20 +1067,31 @@ object Dedup {
         df => df.checkpoint()
       case None => df => df.localCheckpoint()
     }
-    val edges = ckpt(pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
+    // one scan for both directions: a union of two projections would run
+    // the input plan twice (the branches' exchanges differ by alias, so
+    // ReuseExchange does not merge them)
+    val edges = ckpt(pairs
+      .select(explode(array(
+        struct(col("id_a").as("src"), col("id_b").as("dst")),
+        struct(col("id_b").as("src"), col("id_a").as("dst")))).as("__e"))
+      .select(col("__e.src").as("src"), col("__e.dst").as("dst"))
       .distinct())
     val idType = edges.schema("src").dataType
     // Adaptive small-graph path: verified near-dup pair graphs are usually
     // a tiny fraction of the corpus, and each distributed round costs two
     // fixed job overheads regardless of size. Below the cutoff a driver-side
     // union-find computes the IDENTICAL min-id labels in one collect; the
-    // result is parallelized AND checkpointed so multi-consumer chains read
+    // result is a local relation, checkpointed so multi-consumer chains read
     // executor blocks, not a re-serialized driver collection (without the
     // checkpoint a clique-heavy 2M-edge rehearsal graph measured 3× SLOWER
-    // than the loop). The cutoff is BYTE-aware, not just row-count: 2M long
-    // edges ≈ 32 MB is control-plane grade, but 2M long-TEXT keys could be
-    // hundreds of MB, so string ids are sized from a sampled average length
+    // than the loop). A local relation knows its exact size and the
+    // checkpoint keeps that figure, so a join against the labels (the
+    // survivor anti-join) is planned as a broadcast when they are small —
+    // a parallelized RDD would report an unknown, effectively infinite,
+    // size and shuffle the other side first. The cutoff is BYTE-aware, not
+    // just row-count: 2M long edges ≈ 32 MB is control-plane grade, but 2M
+    // long-TEXT keys could be hundreds of MB, so string ids are sized from
+    // a sampled average length
     // (one cheap agg over the checkpoint blocks) and non-Long/Int/String id
     // types always take the distributed loop (their driver ordering isn't
     // guaranteed to match min(lbl)). Pass driverCutoff = 0 to force the loop.
@@ -1117,13 +1141,9 @@ object Dedup {
       val rows = ids.map(id =>
         org.apache.spark.sql.Row(id, minOfRoot.get(find(id))))
       unpersistCheckpointed(edges)
-      // partition like any other table (a 1-partition result would
-      // serialize every downstream join) and checkpoint so consumers hit
-      // executor blocks instead of re-shipping the driver collection
-      val slices = math.max(1, math.min(
-        spark.sparkContext.defaultParallelism, rows.size / 10000 + 1))
-      return ckpt(spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, slices), schema))
+      // the local scan spreads its rows over up to defaultParallelism
+      // partitions, so downstream joins are not serialized on one task
+      return ckpt(spark.createDataFrame(rows.asJava, schema))
     }
     // `current` is the round's checkpointed table (held for unpersist);
     // `labels` the (id, lbl) view of it the next round joins against.
@@ -1206,9 +1226,17 @@ object Dedup {
 
   /** Materialized near-dup dedup: drop every cluster member except the
     * canonical (min-id) one. Anti-join of the corpus against the non-
-    * canonical vertex set — the corpus-sized side is touched once, map-only
-    * plus one broadcast-able join (non-canonical ids ≪ corpus). Labels come
-    * from [[minhashLabelsH]] — no within-group pair expansion.
+    * canonical vertex set. Labels come from [[minhashLabelsH]] — no
+    * within-group pair expansion.
+    *
+    * When the anti-join broadcasts: labels from the driver-side union-find
+    * (graphs under [[connectedComponents]]' driver cutoff, the usual case)
+    * carry their exact size, so the losers are broadcast whenever they fit
+    * `spark.sql.autoBroadcastJoinThreshold` and `df` is scanned map-only,
+    * never shuffled. When it shuffles: losers over the threshold, or labels
+    * from the distributed loop, whose size is only an estimate — then `df`
+    * is exchanged on the id (AQE may still switch to a broadcast after that
+    * exchange once it sees the real loser count).
     */
   def dropNearDuplicates(df: DataFrame, idCol: String, textCol: String,
                          threshold: Double, numHashes: Int = 16,

@@ -33,6 +33,27 @@ class CurateSpec extends SparkSpec {
     assert(sum == Seq(("en", 2L), ("fr", 1L)), s"got $sum")
   }
 
+  test("curateCorpus: the survivor anti-join ships no text when few docs lose") {
+    // A mostly distinct corpus (the probe keeps the per-document path) with
+    // 20 last-token near-dups: 20 losers against 420 gated rows, so the
+    // anti-join inside curateCorpus must broadcast the losers rather than
+    // shuffle the gated corpus. Only construction is captured — the
+    // budget window that shuffles the survivors runs later, lazily.
+    val rnd = new scala.util.Random(13)
+    def doc() = Seq.fill(30)(s"w${rnd.nextInt(5000)}").mkString(" ")
+    val base = (1 to 400).map(i => (i.toLong, doc(), "en"))
+    val near = base.take(20).map { case (i, t, l) => (1000L + i, t + " tail", l) }
+    val corpus = (base ++ near).toDF("doc_id", "text", "lang")
+    var curated: org.apache.spark.sql.DataFrame = null
+    val plans = FinalPlans.during(spark) {
+      curated = Curate.curateCorpus(corpus, "doc_id", "text", "lang",
+        minQuality = 0.0, dupThreshold = 0.9, tokenBudget = 1000000L)
+    }
+    val textual = FinalPlans.shuffleOutputs(plans).filter(_.contains("text"))
+    assert(textual.isEmpty, s"exchanges carrying text: $textual")
+    assert(curated.count() == 400L)
+  }
+
   test("curateCorpus: token budget caps each language independently") {
     // budget below a single doc's token count → everything capped out
     val none = Curate.curateCorpus(docs, "doc_id", "text", "lang",

@@ -130,6 +130,50 @@ class DedupSpec extends SparkSpec {
       s"paths disagree: ${fast.toSeq.sorted.take(10)}... vs ${distributed.toSeq.sorted.take(10)}...")
   }
 
+  test("connectedComponents reads its pairs input exactly once (driver path and loop)") {
+    // Every pair row passes through a counting UDF: a plan that scans the
+    // input once per edge direction counts each row twice. The source is
+    // an RDD, not a local relation, so the UDF runs in tasks and never at
+    // optimization time on the driver.
+    val rnd = new scala.util.Random(7)
+    val raw = (1 to 200).map(_ => (rnd.nextInt(80).toLong, rnd.nextInt(80).toLong))
+      .filter { case (a, b) => a != b }
+    for (cutoff <- Seq(2000000L, 0L)) {
+      val reads = spark.sparkContext.longAccumulator(s"cc_reads_$cutoff")
+      val tap = udf { (a: Long) => reads.add(1L); a }
+      val pairs = spark.sparkContext.parallelize(raw, 4).toDF("id_a", "id_b")
+        .select(tap(col("id_a")).as("id_a"), col("id_b"))
+      val labels = Dedup.connectedComponents(pairs, driverCutoff = cutoff)
+      assert(reads.value == raw.size.toLong,
+        s"driverCutoff=$cutoff: ${reads.value} UDF calls for ${raw.size} pair rows")
+      labels.collect()
+      assert(reads.value == raw.size.toLong,
+        s"driverCutoff=$cutoff: reading the labels re-scanned the pairs")
+    }
+  }
+
+  test("the eager dedup path ships no text when the candidate set is small") {
+    // 400 distinct 30-token documents plus 20 last-token near-dups: the
+    // candidate set is a few dozen ids, so the semi-join before shingling
+    // and the survivor anti-join must both broadcast — no exchange in any
+    // final plan may carry the text column.
+    val rnd = new scala.util.Random(11)
+    def doc() = Seq.fill(30)(s"w${rnd.nextInt(5000)}").mkString(" ")
+    val base = (1 to 400).map(i => (i.toLong, doc()))
+    val near = base.take(20).map { case (i, t) => (1000L + i, t + " tail") }
+    val corpus = (base ++ near).toDF("id", "text")
+    var survivors = 0L
+    val plans = FinalPlans.during(spark) {
+      survivors = Dedup.dropNearDuplicates(corpus, "id", "text", 0.9,
+        collapse = Some(false)).collect().length
+    }
+    assert(survivors == 400L, s"expected the 20 near-dups dropped, kept $survivors")
+    val shuffles = FinalPlans.shuffleOutputs(plans)
+    assert(shuffles.nonEmpty, "the bucket self-join should have shuffled")
+    val textual = shuffles.filter(_.exists(Set("text", "__text")))
+    assert(textual.isEmpty, s"exchanges carrying text: $textual")
+  }
+
   test("minhashRecallStats: found pairs are a subset of exact, recall exact-integer") {
     // two exact-dup pairs plus unique docs: banding cannot miss identical
     // signatures, so recall must be 1e6 exactly; with no dups, 0 not a crash
