@@ -1,7 +1,7 @@
 package graft
 
 import graft.model.JsonSchema
-import graft.ops.{Corpus, Evolution, Extract, InferSchema, Validate}
+import graft.ops.{Corpus, Evolution, Extract, InferSchema, Materialize, Validate}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -114,26 +114,27 @@ object Pipeline {
   def ingestJson(spark: SparkSession, records: DataFrame, jsonCol: String,
                  corpusDir: String, idCol: Option[String] = None): IngestResult = {
     val evo = new Evolution(spark, corpusDir)
-    val asJson = records.withColumnRenamed(jsonCol, "data")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val schema = InferSchema.infer(asJson, "data")
-        .getOrElse(return IngestResult(evo.latestVersion, JsonSchema(Map.empty, Nil), 0, 0, 0))
-      val version = evo.evolve(schema, schema.fieldNames)
-      val validated = Validate.withQualityIssues(asJson, schema, "data")
-      val idBase = if (idCol.isDefined) 0L else Corpus.maxId(spark, corpusDir) + 1L
-      val obs = new org.apache.spark.sql.Observation()
-      val observed = validated.observe(obs,
-        count(lit(1)).as("n"),
-        count(when(size(col("_quality_issues")) === 0, 1)).as("clean"),
-        count(when(size(col("_quality_issues")) > 0, 1)).as("flagged"))
-      val stamped = Corpus.stampAndSerializeJson(observed, version,
-        idBase = idBase, idCol = idCol)
-      Corpus.append(stamped, corpusDir)
-      val m = obs.get
-      IngestResult(version, schema,
-        m("n").asInstanceOf[Long], m("clean").asInstanceOf[Long],
-        m("flagged").asInstanceOf[Long])
-    } finally asJson.unpersist(blocking = false)
+    Materialize.scoped {
+      val asJson = Materialize.persist(records.withColumnRenamed(jsonCol, "data"))
+      InferSchema.infer(asJson, "data") match {
+        case None => IngestResult(evo.latestVersion, JsonSchema(Map.empty, Nil), 0, 0, 0)
+        case Some(schema) =>
+          val version = evo.evolve(schema, schema.fieldNames)
+          val validated = Validate.withQualityIssues(asJson, schema, "data")
+          val idBase = if (idCol.isDefined) 0L else Corpus.maxId(spark, corpusDir) + 1L
+          val obs = new org.apache.spark.sql.Observation()
+          val observed = validated.observe(obs,
+            count(lit(1)).as("n"),
+            count(when(size(col("_quality_issues")) === 0, 1)).as("clean"),
+            count(when(size(col("_quality_issues")) > 0, 1)).as("flagged"))
+          val stamped = Corpus.stampAndSerializeJson(observed, version,
+            idBase = idBase, idCol = idCol)
+          Corpus.append(stamped, corpusDir)
+          val m = obs.get
+          IngestResult(version, schema,
+            m("n").asInstanceOf[Long], m("clean").asInstanceOf[Long],
+            m("flagged").asInstanceOf[Long])
+      }
+    }
   }
 }

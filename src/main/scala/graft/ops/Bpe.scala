@@ -92,12 +92,12 @@ object Bpe {
         val next = words.select(col("cnt"),
           replace(col("sym"), lit(s" $a  $b "), lit(s" $a$b ")).as("sym"))
           .localCheckpoint()
-        Dedup.unpersistCheckpointed(words)
+        Materialize.releaseCheckpoint(words)
         words = next
         step += 1
       }
     }
-    Dedup.unpersistCheckpointed(words)
+    Materialize.releaseCheckpoint(words)
     // lhs/rhs, not left/right: the merge table should be directly usable
     // in SQL without keyword quoting
     learned.result().toDF("step", "lhs", "rhs", "pair_count")

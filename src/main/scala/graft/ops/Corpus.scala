@@ -114,41 +114,6 @@ object Corpus {
       .select("id", "data", "schema_version", "ingested_at", "ingested_at_iso", "quality_issues")
   }
 
-  /** `stampAndSerializeJson` for records whose `data` is ALREADY in
-    * json.dumps parity format (rendered by the native `graft_pyjson`
-    * expression): the stamped tail is spliced python-style and there is no
-    * final re-render pass — the whole blob path is one codegen'd chain.
-    * Requires [[graft.GraftExtensions]] (for the issues-array rendering).
-    */
-  def stampAndSerializeNative(records: DataFrame, schemaVersion: Int,
-                              idBase: Long = 0L, idCol: Option[String] = None): DataFrame = {
-    val id = idCol.map(c => col(c).cast("long"))
-      .getOrElse(lit(idBase) + monotonically_increasing_id())
-    val isObject = col("data").startsWith("{") && col("data").endsWith("}")
-    val spliced = concat(
-      expr("substring(data, 1, length(data) - 1)"),
-      when(length(trim(col("data"))) > 2, lit(", ")).otherwise(lit("")),
-      lit("\"_schema_version\": "), col("_schema_version").cast("string"),
-      lit(", \"_ingested_at\": \""), col("_ingested_at_iso"), lit("\""),
-      lit(", \"_quality_issues\": "),
-      call_function("graft_pyjson",
-        coalesce(col("_quality_issues"), array().cast("array<string>"))),
-      lit("}"))
-    records
-      .withColumn("_schema_version", lit(schemaVersion))
-      .withColumn("ingested_at", current_timestamp())
-      .withColumn("_ingested_at_iso",
-        date_format(col("ingested_at"), "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"))
-      .withColumn("id", id)
-      .withColumn("schema_version", lit(schemaVersion))
-      .withColumn("data", when(isObject, spliced).otherwise(col("data")))
-      .withColumn("ingested_at_iso", col("_ingested_at_iso"))
-      .withColumn("quality_issues",
-        when(size(coalesce(col("_quality_issues"), array())) === 0, lit(null))
-          .otherwise(col("_quality_issues")).cast("array<string>"))
-      .select("id", "data", "schema_version", "ingested_at", "ingested_at_iso", "quality_issues")
-  }
-
   /** W1 — append a stamped batch to the corpus (reference `store_record`,
     * `app.py:133-141`, minus the per-row commit pathology).
     *

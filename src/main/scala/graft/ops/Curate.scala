@@ -111,24 +111,24 @@ object Curate {
   def curateCorpus(df: DataFrame, idCol: String, textCol: String,
                    langCol: String, minQuality: Double,
                    dupThreshold: Double, tokenBudget: Long): DataFrame = {
-    // The gated working set feeds several consumers (the dedup chain's
-    // bucket scan and verify joins, the anti-join, the budget window);
-    // without persisting it, every consumer re-runs the regex-heavy quality
-    // features over the full corpus. MEMORY_AND_DISK spills at scale — the
-    // classic materialize-the-filtered-working-set pattern.
-    val gated = TextAnalysis.withQualityFeatures(df, textCol)
-      .filter(col("quality_score") >= minQuality)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // The dedup chain is already eager (the component loop runs jobs), so an
     // eager localCheckpoint of its survivor set costs one extra anti-join
-    // job — and lets us RELEASE the gated cache before returning instead of
-    // leaking it for the session's lifetime (repeated curations would pile
-    // cached blocks up). The returned frame is backed by the checkpoint;
-    // its blocks are freed by the ContextCleaner once the frame is
-    // unreachable.
-    val deduped = Dedup.dropNearDuplicates(gated, idCol, textCol, dupThreshold)
-      .localCheckpoint()
-    gated.unpersist(blocking = false)
+    // job — and lets the scope RELEASE the gated cache before returning
+    // instead of leaking it for the session's lifetime (repeated curations
+    // would pile cached blocks up). The returned frame is backed by the
+    // checkpoint; its blocks are freed by the ContextCleaner once the
+    // frame is unreachable.
+    val deduped = Materialize.scoped {
+      // The gated working set feeds several consumers (the dedup chain's
+      // bucket scan and verify joins, the anti-join); without persisting
+      // it, every consumer re-runs the regex-heavy quality features over
+      // the full corpus. MEMORY_AND_DISK spills at scale — the classic
+      // materialize-the-filtered-working-set pattern.
+      val gated = Materialize.persist(TextAnalysis.withQualityFeatures(df, textCol)
+        .filter(col("quality_score") >= minQuality))
+      Dedup.dropNearDuplicates(gated, idCol, textCol, dupThreshold)
+        .localCheckpoint()
+    }
     // Bucket-parallel running budget (see [[bucketedRunningSum]]): the bare
     // per-language window is one sequential task per language — the
     // bucketed shape keeps the same (md5(id), id) order at 256× the

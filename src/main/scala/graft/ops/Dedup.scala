@@ -118,20 +118,13 @@ object Dedup {
     * empty/boilerplate docs sharing a signature) stays a join-skew problem
     * AQE splits across tasks — never an unbounded `collect_set` array on
     * one executor.
+    *
+    * The bucket table is persisted through [[Materialize.persist]]; its
+    * lifetime is the caller's scope (see [[Materialize.tracked]]).
     */
   def minhashCandidatePairs(df: DataFrame, idCol: String, textCol: String,
                             numHashes: Int = 16, bands: Int = 4,
-                            shingleSize: Int = 5): DataFrame =
-    minhashCandidatePairsH(df, idCol, textCol, numHashes, bands, shingleSize)._1
-
-  /** [[minhashCandidatePairs]] plus the persisted bucket-table handle, so
-    * eager composites can release the cache once their downstream
-    * materializes (the public lazy API leaves it cached by design — its
-    * consumers run later).
-    */
-  private def minhashCandidatePairsH(df: DataFrame, idCol: String, textCol: String,
-                                     numHashes: Int, bands: Int,
-                                     shingleSize: Int): (DataFrame, DataFrame) = {
+                            shingleSize: Int = 5): DataFrame = {
     // The bucket table feeds BOTH sides of the self-join; without an explicit
     // materialization Spark recomputes the whole signature scan twice (alias
     // differences below the exchange defeat ReuseExchange). It is the small
@@ -144,18 +137,17 @@ object Dedup {
     // (bands−1)/2 keys per bucket row against the removed
     // corpus×multiplicity shuffle.
     val sig = minhashSignature(col(textCol), numHashes, shingleSize)
-    val banded = df
+    val banded = Materialize.persist(df
       .select(col(idCol).as("id"), lshBands(sig, numHashes, bands).as("__bands"))
       .select(col("id"), col("__bands"),
         posexplode(col("__bands")).as(Seq("band", "bkey")))
       .select(col("id"), col("band"), col("bkey"),
-        slice(col("__bands"), lit(1), col("band")).as("__prior"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        slice(col("__bands"), lit(1), col("band")).as("__prior")))
     // Pin the self-join to shuffle-hash: both sides are the SAME
     // corpus-proportional table, so a broadcast is never right at scale,
     // and letting the planner flip to one on borderline size estimates
     // made the whole minhash family bimodal across clean runs (see the
-    // verify-join note in minhashNearDuplicatesH).
+    // verify-join note in minhashPerDoc).
     //
     // FIRST-AGREEING-BAND ownership (r22, the fuzzy_join r21 move): a pair
     // colliding in several bands used to be deduplicated with
@@ -171,14 +163,13 @@ object Dedup {
       col("band") <= j ||
         get(col("__pa"), lit(j)) =!= get(col("__pb"), lit(j))
     }.reduceOption(_ && _).getOrElse(lit(true))
-    val pairs = banded.select(col("band"), col("bkey"), col("id").as("id_a"),
+    banded.select(col("band"), col("bkey"), col("id").as("id_a"),
         col("__prior").as("__pa"))
       .join(banded.select(col("band"), col("bkey"), col("id").as("id_b"),
           col("__prior").as("__pb"))
         .hint("shuffle_hash"), Seq("band", "bkey"))
       .filter(col("id_a") < col("id_b") && noEarlierAgree)
       .select("id_a", "id_b")
-    (pairs, banded)
   }
 
   /** Candidate pairs + exact shingle-set Jaccard, filtered at `threshold`.
@@ -188,21 +179,10 @@ object Dedup {
     * candidates are a sliver of the table, and computing + shuffling
     * shingle sets for every document — the naive plan — moves orders of
     * magnitude more data than the candidates need.
-    */
-  def minhashNearDuplicates(df: DataFrame, idCol: String, textCol: String,
-                            threshold: Double, numHashes: Int = 16,
-                            bands: Int = 4, shingleSize: Int = 5,
-                            collapse: Option[Boolean] = None): DataFrame =
-    minhashNearDuplicatesH(df, idCol, textCol, threshold, numHashes, bands,
-      shingleSize, collapse)._1
-
-  /** [[minhashNearDuplicates]] plus the persisted intermediates — the
-    * H(andle) variant: `unpersist()` each returned frame once the pair
-    * result is materialized (see [[minhashCandidatePairsH]]). Public so
-    * long-lived drivers running many dedups get the same deterministic
-    * cache release the internal composites ([[minhashClusters]],
-    * [[dropNearDuplicates]]) use; the convenience wrapper above holds its
-    * persists until a global clearCache.
+    *
+    * CACHE LIFETIME: the persisted intermediates stay cached after this
+    * returns; long-lived drivers wrap the call in [[Materialize.tracked]]
+    * and unpersist them once the pairs are materialized.
     *
     * EXACT-DUPLICATE COLLAPSE, data-gated (r14): production corpora are
     * heavily exact-duplicated (30-50 % of a web crawl), and every verbatim
@@ -223,16 +203,34 @@ object Dedup {
     * JOB at construction time; an explicit Some(_) picks the path with
     * zero jobs (spec-pinned), for callers composing lazy plans.
     */
-  def minhashNearDuplicatesH(df: DataFrame, idCol: String, textCol: String,
-                                     threshold: Double, numHashes: Int,
-                                     bands: Int, shingleSize: Int,
-                                     collapse: Option[Boolean] = None): (DataFrame, Seq[DataFrame]) = {
+  def minhashNearDuplicates(df: DataFrame, idCol: String, textCol: String,
+                            threshold: Double, numHashes: Int = 16,
+                            bands: Int = 4, shingleSize: Int = 5,
+                            collapse: Option[Boolean] = None): DataFrame = {
     val keyed = df.select(col(idCol).as("id"), col(textCol).as("__text"))
     if (collapse.getOrElse(duplicationMaterial(keyed, col("__text"))))
       minhashCollapsed(keyed, threshold, numHashes, bands, shingleSize)
     else
       minhashPerDoc(keyed, threshold, numHashes, bands, shingleSize)
   }
+
+  /** [[minhashNearDuplicates]] through [[Materialize.tracked]]: the pairs
+    * plus the frames persisted to build them. Kept for existing callers;
+    * new code calls `Materialize.tracked` directly.
+    */
+  def minhashNearDuplicatesH(df: DataFrame, idCol: String, textCol: String,
+                             threshold: Double, numHashes: Int,
+                             bands: Int, shingleSize: Int,
+                             collapse: Option[Boolean] = None): (DataFrame, Seq[DataFrame]) =
+    Materialize.tracked(minhashNearDuplicates(df, idCol, textCol, threshold,
+      numHashes, bands, shingleSize, collapse))
+
+  /** Memoized result of the duplication probe: corpus row count plus the
+    * >~10 %-duplicated verdict. `rows` is carried so per-operator gates can
+    * fold a SIZE term into the decision (the embedding LSH gate's bucket-
+    * occupancy cutoff) without a second probe job.
+    */
+  private[graft] final case class DupStats(rows: Long, material: Boolean)
 
   /** Collapse-gate memo: (input-plan semantic hash, optimizer size
     * estimate) → "duplication is material". The size estimate — free, no
@@ -244,13 +242,6 @@ object Dedup {
     * Access-ordered LRU: the OLDEST entry is evicted past 256, not the
     * whole memo.
     */
-  /** Memoized result of the duplication probe: corpus row count plus the
-    * >~10 %-duplicated verdict. `rows` is carried so per-operator gates can
-    * fold a SIZE term into the decision (the embedding LSH gate's bucket-
-    * occupancy cutoff) without a second probe job.
-    */
-  private[graft] final case class DupStats(rows: Long, material: Boolean)
-
   private val gateCache = java.util.Collections.synchronizedMap(
     new java.util.LinkedHashMap[(Int, BigInt), DupStats](64, 0.75f, true) {
       override def removeEldestEntry(
@@ -363,15 +354,13 @@ object Dedup {
     * @param keyed rows with `id` and `__text` columns.
     * @param materializePairs run one job that fills the `pairs` cache
     *        BEFORE the verify plan is built. Set only by the eager label
-    *        path ([[minhashLabelsH]]); the lazy pair API leaves it off so
+    *        path ([[minhashLabels]]); the lazy pair API leaves it off so
     *        an explicit-collapse construction stays job-free (spec-pinned).
     */
   private[graft] def minhashPerDoc(keyed: DataFrame, threshold: Double,
                                    numHashes: Int, bands: Int,
                                    shingleSize: Int,
-                                   materializePairs: Boolean = false): (DataFrame, Seq[DataFrame]) = {
-    val (rawPairs, banded) =
-      minhashCandidatePairsH(keyed, "id", "__text", numHashes, bands, shingleSize)
+                                   materializePairs: Boolean = false): DataFrame = {
     // pairs feed three consumers (id collection + two verify joins), so
     // they are persisted. With `materializePairs` the cache is filled here,
     // before the verify plan exists, so the planner sizes `candIds` from
@@ -381,8 +370,8 @@ object Dedup {
     // cache reports the bucket self-join's far larger estimate, so the
     // semi-join exchanges every (id, text) row before AQE switches it to
     // a broadcast.
-    val pairs = rawPairs
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val pairs = Materialize.persist(
+      minhashCandidatePairs(keyed, "id", "__text", numHashes, bands, shingleSize))
     if (materializePairs) pairs.count()
     val candIds = pairs.select(explode(array(col("id_a"), col("id_b"))).as("id")).distinct()
     val sets = keyed
@@ -396,7 +385,7 @@ object Dedup {
     // the row bimodal across clean runs). Pin the two verify joins to
     // shuffle-hash: both sides are corpus-proportional, so the shuffled
     // join is also the only plan that survives 100 TB.
-    val verified = pairs
+    pairs
       .join(sets.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a")
         .hint("shuffle_hash"), "id_a")
       .join(sets.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b")
@@ -404,15 +393,14 @@ object Dedup {
       .withColumn("jaccard", jaccardSorted(col("sh_a"), col("sh_b")))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), Nums.round6(col("jaccard")).as("jaccard"))
-    (verified, Seq(banded, pairs))
   }
 
   /** The rep-level material of the collapsed chain, shared by the pair API
     * ([[minhashCollapsed]] expands it to member pairs) and the label API
-    * ([[minhashLabelsH]] runs connected components over it directly).
+    * ([[minhashLabels]] runs connected components over it directly).
     *
-    * @param membership (`__rid`, `id`) — persisted MEMORY_AND_DISK; listed
-    *        in `caches` for the caller's deterministic release.
+    * @param membership (`__rid`, `id`) — persisted through
+    *        [[Materialize.persist]].
     * @param repVerified verified near-dup edges BETWEEN distinct texts
     *        (`id_a`, `id_b`, `jaccard`), rep ids only.
     * @param selfJ (`__rid`, `gsz`, `jaccard`) — groups whose same-text
@@ -420,8 +408,7 @@ object Dedup {
     *        on `gsz` as their semantics need).
     */
   private[graft] final case class CollapsedRep(
-      membership: DataFrame, repVerified: DataFrame, selfJ: DataFrame,
-      caches: Seq[DataFrame])
+      membership: DataFrame, repVerified: DataFrame, selfJ: DataFrame)
 
   private[graft] def minhashCollapsedRep(keyed: DataFrame, threshold: Double,
                                          numHashes: Int, bands: Int,
@@ -454,14 +441,13 @@ object Dedup {
     // (rep id, member id) — membership feeds the same-text self-join and
     // both expansion joins; corpus-proportional, so pinned shuffle-hash
     // everywhere below
-    val membership = hashed.select(col("__h"), col("id"))
+    val membership = Materialize.persist(hashed.select(col("__h"), col("id"))
       .join(reps.select(col("__h"), col("id").as("__rid"))
         .hint("shuffle_hash"), "__h")
-      .select(col("__rid"), col("id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("__rid"), col("id")))
     // verified edges between distinct texts: the per-document chain, run
     // over one representative per content
-    val (repVerified, chainCaches) = minhashPerDoc(reps, threshold,
+    val repVerified = minhashPerDoc(reps, threshold,
       numHashes, bands, shingleSize, materializePairs)
     // Same-text jaccard: identical sets, so n/n = 1.0 ALWAYS — shingle
     // sets are never empty ([[shingles]] clamps short texts to one
@@ -475,7 +461,7 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
       .select(col("id").as("__rid"), col("gsz"),
         Nums.round6(col("jaccard")).as("jaccard"))
-    CollapsedRep(membership, repVerified, selfJ, chainCaches :+ membership)
+    CollapsedRep(membership, repVerified, selfJ)
   }
 
   /** The collapsed chain: one representative (min id) per DISTINCT text
@@ -483,12 +469,11 @@ object Dedup {
     * texts have identical signatures, so (a) every same-text pair is
     * always a candidate and (b) a cross-group doc pair is a candidate /
     * match iff its rep pair is — the expansion reproduces the per-doc
-    * output EXACTLY, row for row (see the NaN note on
-    * [[minhashCollapsedRep]]'s selfJ).
+    * output EXACTLY, row for row.
     */
   private[graft] def minhashCollapsed(keyed: DataFrame, threshold: Double,
                                       numHashes: Int, bands: Int,
-                                      shingleSize: Int): (DataFrame, Seq[DataFrame]) = {
+                                      shingleSize: Int): DataFrame = {
     val r = minhashCollapsedRep(keyed, threshold, numHashes, bands, shingleSize)
     // expansion: rep pair → every member pair between the two (disjoint)
     // groups; jaccard is a group-level constant, so it rides the join
@@ -506,7 +491,7 @@ object Dedup {
         .hint("shuffle_hash"), "__rid")
       .filter(col("id") < col("id_b"))
       .select(col("id").as("id_a"), col("id_b"), col("jaccard"))
-    (cross.union(same), r.caches)
+    cross.union(same)
   }
 
   /** Doc-level connected-component labels of the verified near-duplicate
@@ -531,17 +516,17 @@ object Dedup {
     * edges and threshold-failing groups are unlabeled in both shapes.
     *
     * The returned labels are localCheckpoint-materialized (the CC loop
-    * inside is already eager), so callers may release `caches`
-    * immediately; the labels then read executor blocks only. Being eager
+    * inside is already eager), so callers run this under
+    * [[Materialize.scoped]]: the labels read executor blocks only. Being eager
     * anyway, this path also fills the candidate-pair cache before the
     * verify plan is built (`materializePairs`, see [[minhashPerDoc]]), so
     * a small candidate set never shuffles the corpus text.
     */
-  private[graft] def minhashLabelsH(df: DataFrame, idCol: String,
-                                    textCol: String, threshold: Double,
-                                    numHashes: Int, bands: Int,
-                                    shingleSize: Int,
-                                    collapse: Option[Boolean]): (DataFrame, Seq[DataFrame]) = {
+  private[graft] def minhashLabels(df: DataFrame, idCol: String,
+                                   textCol: String, threshold: Double,
+                                   numHashes: Int, bands: Int,
+                                   shingleSize: Int,
+                                   collapse: Option[Boolean]): DataFrame = {
     val keyed = df.select(col(idCol).as("id"), col(textCol).as("__text"))
     if (collapse.getOrElse(duplicationMaterial(keyed, col("__text")))) {
       val r = minhashCollapsedRep(keyed, threshold, numHashes, bands, shingleSize,
@@ -555,16 +540,14 @@ object Dedup {
         r.selfJ.filter(col("gsz") >= 2).select(col("__rid"))
           .join(comp.select("__rid"), Seq("__rid"), "left_anti")
           .select(col("__rid"), col("__rid").as("component")))
-      val labels = r.membership
+      r.membership
         .join(repLabel.hint("shuffle_hash"), "__rid")
         .select(col("id"), col("component"))
         .localCheckpoint() // pin label rows before the caches release
-      (labels, r.caches)
     } else {
-      val (verified, caches) = minhashPerDoc(keyed, threshold, numHashes,
+      val verified = minhashPerDoc(keyed, threshold, numHashes,
         bands, shingleSize, materializePairs = true)
-      (connectedComponents(verified.select("id_a", "id_b"),
-        toFixpoint = true), caches)
+      connectedComponents(verified.select("id_a", "id_b"), toFixpoint = true)
     }
   }
 
@@ -617,31 +600,18 @@ object Dedup {
     * first-agreeing-segment ownership (a pair matching several segments is
     * emitted only at its first — a bit-op filter, not a distinct shuffle)
     * → exact Hamming verify. The segment table is persisted because it
-    * feeds both join sides; long-lived sessions use [[bandedHammingJoinH]]
-    * and unpersist the returned handle once the pairs are materialized
-    * (one-shot callers can instead rely on session end or
-    * `spark.catalog.clearCache()`, as the bench does).
+    * feeds both join sides; its lifetime is the caller's scope (see
+    * [[Materialize.tracked]]).
     */
   private[graft] def bandedHammingJoin(hashes: DataFrame, bits: Int,
-                                       maxDistance: Int): DataFrame =
-    bandedHammingJoinH(hashes, bits, maxDistance)._1
-
-  /** [[bandedHammingJoin]] plus the persisted handles (the H(andle)
-    * convention): the segment table on the wide path, the (id, sig) and
-    * distinct-sig tables on the collapsed path — all corpus- or
-    * value-proportional. Unpersist them once the pair result is
-    * materialized; the no-handle wrapper leaves them to session end /
-    * `clearCache()`.
-    */
-  private[graft] def bandedHammingJoinH(hashes: DataFrame, bits: Int,
-                                        maxDistance: Int): (DataFrame, Seq[DataFrame]) = {
+                                       maxDistance: Int): DataFrame = {
     require(bits >= 1 && bits <= 64, s"bad fingerprint width $bits")
     require(maxDistance >= 0 && maxDistance < bits,
       s"bad maxDistance $maxDistance for $bits bits")
     if (useCollapsedHamming(bits, maxDistance))
-      collapsedHammingJoinH(hashes, bits, maxDistance)
+      collapsedHammingJoin(hashes, bits, maxDistance)
     else
-      segmentedHammingJoinH(hashes, bits, maxDistance)
+      segmentedHammingJoin(hashes, bits, maxDistance)
   }
 
   /** Dispatch rule for [[bandedHammingJoin]]. Narrow fingerprints (≤ 2^20
@@ -665,11 +635,7 @@ object Dedup {
     * path; also reachable directly for A/B probes).
     */
   private[graft] def segmentedHammingJoin(hashes: DataFrame, bits: Int,
-                                          maxDistance: Int): DataFrame =
-    segmentedHammingJoinH(hashes, bits, maxDistance)._1
-
-  private[graft] def segmentedHammingJoinH(hashes: DataFrame, bits: Int,
-                                           maxDistance: Int): (DataFrame, Seq[DataFrame]) = {
+                                          maxDistance: Int): DataFrame = {
     val nSeg = maxDistance + 1
     val segLen = math.ceil(bits.toDouble / nSeg).toInt
     // Segment s of a fingerprint, as a small int (long bits from the top,
@@ -681,14 +647,13 @@ object Dedup {
       else shiftrightunsigned(sig, bits - s * segLen - width)
         .bitwiseAND(lit((1L << width) - 1L))
     }
-    val segmented = hashes.select(col("id"), col("sig"),
-      posexplode(array((0 until nSeg).map(segOf(col("sig"), _)): _*)).as(Seq("seg", "segval")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val segmented = Materialize.persist(hashes.select(col("id"), col("sig"),
+      posexplode(array((0 until nSeg).map(segOf(col("sig"), _)): _*)).as(Seq("seg", "segval"))))
     val firstAgreement = (0 until nSeg - 1).map { t =>
       when(col("seg") > t, segOf(col("sig_a"), t) =!= segOf(col("sig_b"), t))
         .otherwise(lit(true))
     }.reduceOption(_ && _).getOrElse(lit(true))
-    val pairs = segmented
+    segmented
       .select(col("seg"), col("segval"), col("id").as("id_a"), col("sig").as("sig_a"))
       .join(segmented.select(col("seg"), col("segval"),
           col("id").as("id_b"), col("sig").as("sig_b"))
@@ -698,7 +663,37 @@ object Dedup {
       .withColumn("distance", hammingDistance(col("sig_a"), col("sig_b")))
       .filter(col("distance") <= maxDistance)
       .select("id_a", "id_b", "distance")
-    (pairs, Seq(segmented))
+  }
+
+  /** All (sig_a < sig_b) pairs of PRESENT fingerprint values within Hamming
+    * distance 1..maxDistance — the value-level candidate core shared by
+    * [[collapsedHammingJoin]] and [[hammingDedupIds]]. XOR-mask neighbor
+    * enumeration against the fixed popcount-1..d delta table, semi-joined
+    * back against the distinct set: exact by construction (every value
+    * within distance d differs by exactly one such mask), no verify pass.
+    * Cost is independent of corpus size — `distinctSigs` is bounded by
+    * 2^bits values no matter how many documents carry each.
+    */
+  private[graft] def hammingValuePairs(distinctSigs: DataFrame, bits: Int,
+                                       maxDistance: Int): DataFrame = {
+    val masks: Array[Long] = (1 to maxDistance).toArray.flatMap(k =>
+      (0 until bits).combinations(k)
+        .map(_.foldLeft(0L)((m, b) => m | (1L << b))).toArray)
+    distinctSigs
+      .select(col("sig").as("sig_a"),
+        explode(typedLit(masks)).as("__m"))
+      .select(col("sig_a"), col("sig_a").bitwiseXOR(col("__m")).as("sig_b"))
+      .filter(col("sig_a") < col("sig_b"))
+      .join(distinctSigs.withColumnRenamed("sig", "sig_b"), Seq("sig_b"), "leftsemi")
+      .select(col("sig_a"), col("sig_b"))
+  }
+
+  /** The (id, sig) table and its distinct values, both persisted: the
+    * narrow-fingerprint paths read each of them several times.
+    */
+  private def sigTables(hashes: DataFrame): (DataFrame, DataFrame) = {
+    val sigs = Materialize.persist(hashes.select(col("id"), col("sig")))
+    (sigs, Materialize.persist(sigs.select("sig").distinct()))
   }
 
   /** Narrow-fingerprint Hamming join via distinct-value collapse + XOR-mask
@@ -730,44 +725,14 @@ object Dedup {
     * Equivalent to the segment join (one spec asserts it on random
     * fingerprints); dispatch lives in [[bandedHammingJoin]].
     */
-  /** All (sig_a < sig_b) pairs of PRESENT fingerprint values within Hamming
-    * distance 1..maxDistance — the value-level candidate core shared by
-    * [[collapsedHammingJoin]] and [[hammingDedupIdsH]]. XOR-mask neighbor
-    * enumeration against the fixed popcount-1..d delta table, semi-joined
-    * back against the distinct set: exact by construction (every value
-    * within distance d differs by exactly one such mask), no verify pass.
-    * Cost is independent of corpus size — `distinctSigs` is bounded by
-    * 2^bits values no matter how many documents carry each.
-    */
-  private[graft] def hammingValuePairs(distinctSigs: DataFrame, bits: Int,
-                                       maxDistance: Int): DataFrame = {
-    val masks: Array[Long] = (1 to maxDistance).toArray.flatMap(k =>
-      (0 until bits).combinations(k)
-        .map(_.foldLeft(0L)((m, b) => m | (1L << b))).toArray)
-    distinctSigs
-      .select(col("sig").as("sig_a"),
-        explode(typedLit(masks)).as("__m"))
-      .select(col("sig_a"), col("sig_a").bitwiseXOR(col("__m")).as("sig_b"))
-      .filter(col("sig_a") < col("sig_b"))
-      .join(distinctSigs.withColumnRenamed("sig", "sig_b"), Seq("sig_b"), "leftsemi")
-      .select(col("sig_a"), col("sig_b"))
-  }
-
   private[graft] def collapsedHammingJoin(hashes: DataFrame, bits: Int,
-                                          maxDistance: Int): DataFrame =
-    collapsedHammingJoinH(hashes, bits, maxDistance)._1
-
-  private[graft] def collapsedHammingJoinH(hashes: DataFrame, bits: Int,
-                                           maxDistance: Int): (DataFrame, Seq[DataFrame]) = {
-    val sigs = hashes.select(col("id"), col("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val distinctSigs = sigs.select("sig").distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+                                          maxDistance: Int): DataFrame = {
+    val (sigs, distinctSigs) = sigTables(hashes)
     val valuePairs = hammingValuePairs(distinctSigs, bits, maxDistance)
     // Pin the expansion joins and the same-sig self-join to shuffle-hash:
     // `sigs` (one row per DOCUMENT) is corpus-proportional, so a broadcast
     // is never right at scale — the same design rule as the minhash verify
-    // joins (minhashNearDuplicatesH). Measured on the ×30 ScaleUp corpus
+    // joins (minhashPerDoc). Measured on the ×30 ScaleUp corpus
     // (150 k docs, 3.0 B output pairs): the planner's broadcast plan OOMs
     // a 24 g local[32] heap mid-expansion, while the pinned shuffle plan
     // finishes in 79 s at the same concurrency — and at 100 TB a
@@ -788,7 +753,7 @@ object Dedup {
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),
         lit(0).cast("int").as("distance"))
-    (cross.union(same), Seq(sigs, distinctSigs))
+    cross.union(same)
   }
 
   /** Survivor-oriented SimHash dedup: one row `(survivor, dropped_id)` per
@@ -806,27 +771,13 @@ object Dedup {
     *
     * CACHE LIFETIME: both dispatch paths persist corpus-proportional
     * intermediates (the fingerprint table on the narrow path, the segment
-    * table on the wide path) that this convenience wrapper cannot
-    * release. One-shot callers are fine — session end or
-    * `spark.catalog.clearCache()` reclaims them — but long-lived drivers
-    * should call [[simhashDedupIdsH]] and unpersist the returned handles
-    * once the result is materialized (the deterministic-release pattern
-    * every internal composite uses).
+    * table on the wide path) and the result reads them; long-lived drivers
+    * wrap the call in [[Materialize.tracked]] and unpersist them once the
+    * result is materialized.
     */
   def simhashDedupIds(df: DataFrame, idCol: String, textCol: String,
                       bits: Int = 16, maxDistance: Int = 3): DataFrame =
-    simhashDedupIdsH(df, idCol, textCol, bits, maxDistance)._1
-
-  /** [[simhashDedupIds]] plus the persisted handles (the H(andle)
-    * convention — unpersist once the result is materialized). The
-    * connected-components step inside is EAGER, so construction runs jobs;
-    * the returned frame then reads the CC labels (checkpointed, value-graph
-    * sized) plus the persisted fingerprint table.
-    */
-  def simhashDedupIdsH(df: DataFrame, idCol: String, textCol: String,
-                       bits: Int = 16,
-                       maxDistance: Int = 3): (DataFrame, Seq[DataFrame]) =
-    hammingDedupIdsH(
+    hammingDedupIds(
       df.select(col(idCol).as("id"), simhashLong(col(textCol), bits).as("sig")),
       bits, maxDistance)
 
@@ -857,16 +808,13 @@ object Dedup {
     * pairs), cross-sig edges exist value-wise exactly when some doc pair
     * carries them.
     */
-  private[graft] def hammingDedupIdsH(hashes: DataFrame, bits: Int,
-                                      maxDistance: Int): (DataFrame, Seq[DataFrame]) = {
+  private[graft] def hammingDedupIds(hashes: DataFrame, bits: Int,
+                                     maxDistance: Int): DataFrame = {
     require(bits >= 1 && bits <= 64, s"bad fingerprint width $bits")
     require(maxDistance >= 0 && maxDistance < bits,
       s"bad maxDistance $maxDistance for $bits bits")
     if (useCollapsedHamming(bits, maxDistance)) {
-      val sigs = hashes.select(col("id"), col("sig"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val distinctSigs = sigs.select("sig").distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val (sigs, distinctSigs) = sigTables(hashes)
       val valuePairs = hammingValuePairs(distinctSigs, bits, maxDistance)
       val comp = connectedComponents(valuePairs
           .select(col("sig_a").as("id_a"), col("sig_b").as("id_b")),
@@ -876,23 +824,18 @@ object Dedup {
         .select(col("id"), coalesce(col("component"), col("sig")).as("__lbl"))
       val survivors = labeled.groupBy(col("__lbl"))
         .agg(min(col("id")).as("survivor"))
-      val dropped = labeled.join(broadcast(survivors), Seq("__lbl"))
+      labeled.join(broadcast(survivors), Seq("__lbl"))
         .filter(col("id") =!= col("survivor"))
         .select(col("survivor"), col("id").as("dropped_id"))
-      (dropped, Seq(sigs, distinctSigs))
     } else {
-      val (pairs, caches) = segmentedHammingJoinH(hashes, bits, maxDistance)
-      val dropped = connectedComponents(
-          pairs.select(col("id_a"), col("id_b")), toFixpoint = true)
+      // The CC labels are checkpointed by the eager loop, so the result
+      // reads executor blocks only and never re-touches the segment table,
+      // whose blocks stay cached until the caller's scope releases them.
+      connectedComponents(
+          segmentedHammingJoin(hashes, bits, maxDistance).select(col("id_a"), col("id_b")),
+          toFixpoint = true)
         .filter(col("id") =!= col("component"))
         .select(col("component").as("survivor"), col("id").as("dropped_id"))
-      // The CC labels are checkpointed by the eager loop, so `dropped`
-      // reads executor blocks only and never re-touches the segment
-      // table — but Spark keeps the segment persist's blocks until an
-      // explicit unpersist. Hand the handle out (r16 What's-wrong #3) so
-      // long-lived callers release the corpus-proportional cache
-      // deterministically instead of via clearCache().
-      (dropped, caches)
     }
   }
 
@@ -941,30 +884,6 @@ object Dedup {
   }
 
   @transient private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
-  /** Best-effort release of the block-manager storage behind a checkpointed
-    * Dataset (the analyzed plan of a `checkpoint`/`localCheckpoint` result is
-    * a `LogicalRDD` wrapping the materialized RDD — reached reflectively
-    * because the node type is `private[sql]`). Safe to call only once the
-    * Dataset is no longer needed: localCheckpoint blocks ARE the data (no
-    * lineage remains to recompute them).
-    */
-  private[ops] def unpersistCheckpointed(df: DataFrame): Unit =
-    scala.util.Try {
-      val plan = df.queryExecution.analyzed
-      if (plan.getClass.getSimpleName == "LogicalRDD") {
-        val rdd = plan.getClass.getMethod("rdd").invoke(plan)
-          .asInstanceOf[org.apache.spark.rdd.RDD[_]]
-        // NOT rdd.unpersist(): that path warns "lineage has been truncated
-        // and cannot be recomputed after unpersisting" on every locally
-        // checkpointed RDD — deliberate here (the blocks ARE the data and
-        // the Dataset is dead), so go straight to the SparkContext cleanup
-        // RDD.unpersist delegates to (private[spark] → public in bytecode).
-        val sc = rdd.sparkContext
-        sc.getClass.getMethod("unpersistRDD", classOf[Int], classOf[Boolean])
-          .invoke(sc, Integer.valueOf(rdd.id), java.lang.Boolean.FALSE)
-      }
-    }
 
   /** Estimated driver heap for the union-find over `edgeCount` directed
     * edges with ids of `idWidth` bytes each: per edge two id objects land in
@@ -1034,7 +953,7 @@ object Dedup {
     * a WARNING is logged and the partially-propagated labels are returned —
     * downstream dedup would then under-merge, so the log line is the signal
     * to raise `maxIters`. Callers that advertise EXACT transitive closure
-    * (the survivor dedup-id paths, [[minhashLabelsH]]) pass
+    * (the survivor dedup-id paths, [[minhashLabels]]) pass
     * `toFixpoint = true` instead: the loop then runs until convergence
     * (guaranteed finite — min propagation is monotone on a finite label
     * set) and `maxIters` degrades to a soft logging threshold.
@@ -1056,13 +975,17 @@ object Dedup {
     val ckpt: DataFrame => DataFrame = checkpointDir match {
       case Some(dir) =>
         val sc = pairs.sparkSession.sparkContext
-        // getCheckpointDir reports the UUID SUBdirectory Spark created, so
-        // test by prefix (Option.contains would compare whole strings and
-        // re-set — and thereby clobber — the session-global dir every call).
-        // Checkpoint FILES outlive the job unless
+        // getCheckpointDir reports the qualified UUID SUBdirectory Spark
+        // created, so compare its parent with the qualified `dir` (a
+        // whole-string compare would re-set — and thereby clobber — the
+        // session-global dir every call; a substring test let `…/ck` match
+        // an earlier `…/ck2`). Checkpoint FILES outlive the job unless
         // spark.cleaner.referenceTracking.cleanCheckpoints=true; a
         // long-running service should enable it or sweep `dir` itself.
-        if (!sc.getCheckpointDir.exists(_.contains(dir)))
+        val want = new org.apache.hadoop.fs.Path(dir)
+        val qualified = want.getFileSystem(sc.hadoopConfiguration).makeQualified(want)
+        if (!sc.getCheckpointDir.exists(d =>
+              new org.apache.hadoop.fs.Path(d).getParent == qualified))
           sc.setCheckpointDir(dir)
         df => df.checkpoint()
       case None => df => df.localCheckpoint()
@@ -1140,7 +1063,7 @@ object Dedup {
         org.apache.spark.sql.types.StructField("component", idType, nullable = false)))
       val rows = ids.map(id =>
         org.apache.spark.sql.Row(id, minOfRoot.get(find(id))))
-      unpersistCheckpointed(edges)
+      Materialize.releaseCheckpoint(edges)
       // the local scan spreads its rows over up to defaultParallelism
       // partitions, so downstream joins are not serialized on one task
       return ckpt(spark.createDataFrame(rows.asJava, schema))
@@ -1175,7 +1098,7 @@ object Dedup {
       // min propagation is monotone: converged when no vertex improved.
       // This scans the just-written checkpoint blocks — no recompute, no join.
       converged = next.filter(col("lbl") =!= col("prev")).isEmpty
-      unpersistCheckpointed(current)
+      Materialize.releaseCheckpoint(current)
       current = next
       labels = next.select("id", "lbl")
       iter += 1
@@ -1200,13 +1123,13 @@ object Dedup {
       log.warn(s"connectedComponents: no fixpoint after $maxIters rounds — " +
         "labels are partially propagated (graph diameter exceeds maxIters); " +
         "downstream dedup will under-merge. Raise maxIters.")
-    unpersistCheckpointed(edges)
+    Materialize.releaseCheckpoint(edges)
     labels.select(col("id"), col("lbl").as("component"))
   }
 
   /** Near-duplicate cluster summary over MinHash-verified pairs: one row per
     * cluster (≥2 members) — canonical (min) id, member count, max id.
-    * Consumes [[minhashLabelsH]], so on the collapsed path no within-group
+    * Consumes [[minhashLabels]], so on the collapsed path no within-group
     * pair is ever materialized (r16 — the pair expansion was ~2/3 of the
     * chain's cost on a ×10-duplicated corpus, contracted right back by the
     * component loop).
@@ -1215,18 +1138,17 @@ object Dedup {
                       threshold: Double, numHashes: Int = 16, bands: Int = 4,
                       shingleSize: Int = 5,
                       collapse: Option[Boolean] = None): DataFrame = {
-    val (labels, caches) = minhashLabelsH(df, idCol, textCol,
-      threshold, numHashes, bands, shingleSize, collapse)
     // labels are checkpoint-materialized — the chain's caches are dead
     // weight from here on
-    caches.foreach(_.unpersist(blocking = false))
+    val labels = Materialize.scoped(minhashLabels(df, idCol, textCol,
+      threshold, numHashes, bands, shingleSize, collapse))
     labels.groupBy("component")
       .agg(count(lit(1)).as("n_members"), max(col("id")).as("max_id"))
   }
 
   /** Materialized near-dup dedup: drop every cluster member except the
     * canonical (min-id) one. Anti-join of the corpus against the non-
-    * canonical vertex set. Labels come from [[minhashLabelsH]] — no
+    * canonical vertex set. Labels come from [[minhashLabels]] — no
     * within-group pair expansion.
     *
     * When the anti-join broadcasts: labels from the driver-side union-find
@@ -1242,14 +1164,12 @@ object Dedup {
                          threshold: Double, numHashes: Int = 16,
                          bands: Int = 4, shingleSize: Int = 5,
                          collapse: Option[Boolean] = None): DataFrame = {
-    val (labels, caches) = minhashLabelsH(df, idCol, textCol,
-      threshold, numHashes, bands, shingleSize, collapse)
-    val losers = labels
-      .filter(col("id") =!= col("component"))
-      .select(col("id").as(idCol))
     // labels are checkpoint-materialized — the anti-join below touches
     // only df and the label blocks
-    caches.foreach(_.unpersist(blocking = false))
+    val losers = Materialize.scoped(minhashLabels(df, idCol, textCol,
+        threshold, numHashes, bands, shingleSize, collapse))
+      .filter(col("id") =!= col("component"))
+      .select(col("id").as(idCol))
     df.join(losers, Seq(idCol), "left_anti")
   }
 
@@ -1257,7 +1177,7 @@ object Dedup {
     * NON-survivor member of each near-dup cluster — the same output shape
     * as [[simhashDedupIds]] and `Similarity.embeddingDedupIds`, so all
     * three near-dup families expose the linear 100 TB dedup surface.
-    * Labels come from [[minhashLabelsH]] (connected components over the
+    * Labels come from [[minhashLabels]] (connected components over the
     * distinct-content rep graph + one membership join — no within-group
     * pair expansion), and the survivor is the component label itself
     * (min id per cluster). Spec-pinned row-equal to dropping non-min ids
@@ -1267,10 +1187,9 @@ object Dedup {
                       threshold: Double, numHashes: Int = 16, bands: Int = 4,
                       shingleSize: Int = 5,
                       collapse: Option[Boolean] = None): DataFrame = {
-    val (labels, caches) = minhashLabelsH(df, idCol, textCol,
-      threshold, numHashes, bands, shingleSize, collapse)
-    caches.foreach(_.unpersist(blocking = false))
-    labels.filter(col("id") =!= col("component"))
+    Materialize.scoped(minhashLabels(df, idCol, textCol,
+        threshold, numHashes, bands, shingleSize, collapse))
+      .filter(col("id") =!= col("component"))
       .select(col("component").as("survivor"), col("id").as("dropped_id"))
   }
 
@@ -1398,9 +1317,8 @@ object Dedup {
                            numHashes: Int = 16, bands: Int = 4,
                            shingleSize: Int = 5,
                            collapse: Option[Boolean] = None): DataFrame = {
-    val (labels, caches) = minhashLabelsH(df, idCol, textCol,
-      threshold, numHashes, bands, shingleSize, collapse)
-    caches.foreach(_.unpersist(blocking = false))
+    val labels = Materialize.scoped(minhashLabels(df, idCol, textCol,
+      threshold, numHashes, bands, shingleSize, collapse))
     val scored = labels.join(
       df.select(col(idCol).as("id"), col(scoreCol).as("__score")), "id")
     val w = Window.partitionBy(col("component"))
@@ -1411,10 +1329,6 @@ object Dedup {
     df.join(losers, Seq(idCol), "left_anti")
   }
 
-  /** N-gram (token shingle) Jaccard similarity for explicit pairs of rows —
-    * the exact-verify primitive behind `minhashNearDuplicates`, exposed
-    * standalone for pair-scoring use.
-    */
   /** Exact all-pairs near-dup baseline: every unordered doc pair with
     * shingle-set Jaccard ≥ threshold. O(n²) BY DESIGN — the labeled ground
     * truth for [[minhashRecallStats]], meant for bounded evaluation
@@ -1462,6 +1376,10 @@ object Dedup {
           .otherwise(expr("(1000000 * n_found) div n_exact")).as("recall_ppm"))
   }
 
+  /** N-gram (token shingle) Jaccard similarity for explicit pairs of rows —
+    * the exact-verify primitive behind `minhashNearDuplicates`, exposed
+    * standalone for pair-scoring use.
+    */
   def ngramJaccard(df: DataFrame, idCol: String, textCol: String,
                    pairs: DataFrame, n: Int = 3): DataFrame = {
     // hashed shingle sets (r21, see [[shingleHashSet]]) — same counts,
@@ -1469,7 +1387,7 @@ object Dedup {
     val sets = df.select(col(idCol).as("id"), shingleHashSet(col(textCol), n).as("sh"))
     // sets carries shingle ARRAYS — the size-underestimate shape that made
     // the minhash verify joins flip to a broadcast of a corpus-proportional
-    // HashedRelation (see minhashNearDuplicatesH); pinned for the same reason
+    // HashedRelation (see minhashPerDoc); pinned for the same reason
     pairs
       .join(sets.select(col("id").as("id_a"), col("sh").as("sh_a"))
         .hint("shuffle_hash"), "id_a")

@@ -124,15 +124,15 @@ object Graph {
         val ck = next.localCheckpoint()
         // safe only AFTER ck materialized — the lazy round in between
         // still read prev's blocks during the checkpoint job
-        prev.foreach(Dedup.unpersistCheckpointed)
+        prev.foreach(Materialize.releaseCheckpoint)
         prev = Some(ck)
         ranks = ck
       } else ranks = next
     }
-    Dedup.unpersistCheckpointed(edged)
+    Materialize.releaseCheckpoint(edged)
     // after ≥1 round the returned table is its own checkpoint; the vertex
     // checkpoint only backs the iters=0 degenerate return
-    if (iters > 0) Dedup.unpersistCheckpointed(verts)
+    if (iters > 0) Materialize.releaseCheckpoint(verts)
     ranks
   }
 }

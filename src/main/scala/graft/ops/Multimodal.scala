@@ -626,16 +626,7 @@ object Multimodal {
     * exact-hash equi-join.
     */
   def imageNearDuplicates(hashes: DataFrame, maxDistance: Int = 3): DataFrame =
-    imageNearDuplicatesH(hashes, maxDistance)._1
-
-  /** [[imageNearDuplicates]] plus the persisted segment-table handle (the
-    * H(andle) convention — unpersist once the pairs are materialized; the
-    * no-handle wrapper leaves the corpus-proportional persist to session
-    * end / `clearCache()`).
-    */
-  def imageNearDuplicatesH(hashes: DataFrame,
-                           maxDistance: Int = 3): (DataFrame, Seq[DataFrame]) =
-    Dedup.bandedHammingJoinH(
+    Dedup.bandedHammingJoin(
       hashes.select(col("media_id").as("id"), col("dhash").as("sig")),
       bits = 64, maxDistance = maxDistance)
 
@@ -649,17 +640,7 @@ object Multimodal {
     * buys nothing, and the CC label is the survivor directly).
     */
   def imageDedupIds(hashes: DataFrame, maxDistance: Int = 3): DataFrame =
-    imageDedupIdsH(hashes, maxDistance)._1
-
-  /** [[imageDedupIds]] plus the persisted segment-table handle (the
-    * H(andle) convention): the survivor frame reads only the CC loop's
-    * checkpointed labels, so the handle may be unpersisted as soon as this
-    * returns — long-lived 100 TB drivers should, instead of leaking one
-    * corpus-proportional cache per call until `clearCache()`.
-    */
-  def imageDedupIdsH(hashes: DataFrame,
-                     maxDistance: Int = 3): (DataFrame, Seq[DataFrame]) =
-    Dedup.hammingDedupIdsH(
+    Dedup.hammingDedupIds(
       hashes.select(col("media_id").as("id"), col("dhash").as("sig")),
       bits = 64, maxDistance = maxDistance)
 }

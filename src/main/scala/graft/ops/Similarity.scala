@@ -475,41 +475,6 @@ object Similarity {
       .agg(avg(col("recall")).as("mean_recall"), count(lit(1)).as("n_queries"))
   }
 
-  /** Embedding near-duplicate pairs: cosine >= threshold. Scale variant is
-    * the LSH self-join (both sides bucketed — an equi-join, not a cross
-    * join); within-bucket pairs get exact cosine.
-    *
-    * CACHE LIFETIME: on the collapsed path this persists a
-    * corpus-proportional membership table that this convenience wrapper
-    * cannot release (it hands back only the pair frame). One-shot callers
-    * are fine — the session end or a `spark.catalog.clearCache()` reclaims
-    * it — but long-lived drivers running many dedups should call
-    * [[embeddingNearDuplicatesH]] and unpersist the returned handles once
-    * the result is materialized (the deterministic-release pattern every
-    * internal composite uses).
-    */
-  def embeddingNearDuplicates(corpus: DataFrame, threshold: Double,
-                              numPlanes: Int, dim: Int,
-                              collapse: Option[Boolean] = None): DataFrame =
-    embeddingNearDuplicatesH(corpus, threshold, numPlanes, dim, collapse)._1
-
-  /** [[embeddingNearDuplicates]] plus the persisted intermediates
-    * (the collapsed path's membership table; empty on the per-doc path) —
-    * the H(andle) variant: `unpersist()` each returned frame once the pair
-    * result is materialized, the same deterministic-release pattern as
-    * `Dedup.minhashNearDuplicatesH`; without it the corpus-proportional
-    * membership cache lingers until a global clearCache. Public so
-    * long-lived drivers get the same lifetime control the internal
-    * composites have.
-    *
-    * `collapse = None` runs the `Dedup.duplicationStats` probe — ONE
-    * EAGER JOB at construction time; an explicit Some(_) picks the path
-    * with zero jobs (spec-pinned), for callers composing lazy plans. The
-    * default collapses only when duplication is material AND mean bucket
-    * occupancy clears [[collapseOccupancyCutoff]] (r16: below it the
-    * per-doc bucket join is cheaper even on a duplicated corpus — see the
-    * cutoff's scaladoc for the measured crossover).
-    */
   /** Minimum mean LSH-bucket occupancy (corpus rows / 2^numPlanes) for the
     * identical-vector collapse to repay its fixed cost. The collapse
     * machinery is ~5 corpus-sized shuffle stages (full-vector group-by,
@@ -532,9 +497,26 @@ object Similarity {
     */
   private[graft] val collapseOccupancyCutoff = 2000L
 
-  def embeddingNearDuplicatesH(
-      corpus: DataFrame, threshold: Double, numPlanes: Int, dim: Int,
-      collapse: Option[Boolean] = None): (DataFrame, Seq[DataFrame]) = {
+  /** Embedding near-duplicate pairs: cosine >= threshold. Scale variant is
+    * the LSH self-join (both sides bucketed — an equi-join, not a cross
+    * join); within-bucket pairs get exact cosine.
+    *
+    * CACHE LIFETIME: on the collapsed path this persists a
+    * corpus-proportional membership table that the result reads;
+    * long-lived drivers wrap the call in [[Materialize.tracked]] and
+    * unpersist it once the result is materialized.
+    *
+    * `collapse = None` runs the `Dedup.duplicationStats` probe — ONE
+    * EAGER JOB at construction time; an explicit Some(_) picks the path
+    * with zero jobs (spec-pinned), for callers composing lazy plans. The
+    * default collapses only when duplication is material AND mean bucket
+    * occupancy clears [[collapseOccupancyCutoff]] (r16: below it the
+    * per-doc bucket join is cheaper even on a duplicated corpus — see the
+    * cutoff's scaladoc for the measured crossover).
+    */
+  def embeddingNearDuplicates(corpus: DataFrame, threshold: Double,
+                              numPlanes: Int, dim: Int,
+                              collapse: Option[Boolean] = None): DataFrame = {
     val c = corpus.select(col("id"), col("vec").cast("array<double>").as("vec"))
       .withColumn("bucket", lshBucket(col("vec"), numPlanes, dim))
       .withColumn("nrm", norm(col("vec")))
@@ -544,7 +526,7 @@ object Similarity {
         st.rows / (1L << math.min(numPlanes, 62)) >= collapseOccupancyCutoff
     }
     if (doCollapse) embedPairsCollapsed(c, threshold)
-    else (embedPairsPerDoc(c, threshold), Seq.empty)
+    else embedPairsPerDoc(c, threshold)
   }
 
   /** The direct bucket self-join — optimal for all-distinct corpora. */
@@ -571,12 +553,9 @@ object Similarity {
     * SAME cosine expression — a duplicated zero vector yields 0/0 = NaN
     * which passes the threshold filter under Spark's NaN ordering,
     * whatever the per-doc join emitted).
-    *
-    * Returns the pair frame plus the persisted membership table for the
-    * caller to release once the result is materialized.
     */
-  private[graft] def embedPairsCollapsed(c: DataFrame, threshold: Double)
-      : (DataFrame, Seq[DataFrame]) = {
+  private[graft] def embedPairsCollapsed(c: DataFrame,
+                                         threshold: Double): DataFrame = {
     // Content addressing (the minhash-collapse argument, applied to
     // vectors): group and membership-join on sha2 of the vector's
     // canonical byte image, never on the multi-KB array itself — the
@@ -589,10 +568,9 @@ object Similarity {
     val groups = hashed.groupBy(col("__vh"))
       .agg(min(col("id")).as("rid"), first(col("vec")).as("vec"),
         min(col("bucket")).as("bucket"), min(col("nrm")).as("nrm"))
-    val membership = hashed.select(col("__vh"), col("id"))
+    val membership = Materialize.persist(hashed.select(col("__vh"), col("id"))
       .join(groups.select(col("__vh"), col("rid")).hint("shuffle_hash"), Seq("__vh"))
-      .select(col("rid"), col("id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("rid"), col("id")))
     val ga = groups.select(col("bucket"), col("rid").as("rid_a"),
       col("vec").as("vec_a"), col("nrm").as("nrm_a"))
     val gb = groups.select(col("bucket"), col("rid").as("rid_b"),
@@ -619,7 +597,7 @@ object Similarity {
         .hint("shuffle_hash"), "rid")
       .filter(col("id") < col("id_b"))
       .select(col("id").as("id_a"), col("id_b"), round(col("sim"), 6).as("sim"))
-    (cross.union(same), Seq(membership))
+    cross.union(same)
   }
 
   /** Survivor-oriented embedding dedup: one row `(survivor, dropped_id)`
@@ -641,25 +619,17 @@ object Similarity {
     * components expand exactly to the doc graph's, and min-rep = min-doc
     * id because each rep IS its group's min id.
     *
-    * CACHE LIFETIME: persists the corpus-proportional membership table and
-    * the distinct-vector groups table, which this convenience wrapper
-    * cannot release — long-lived drivers should call
-    * [[embeddingDedupIdsH]] and unpersist the returned handles once the
-    * result is materialized (the same contract as
-    * [[embeddingNearDuplicates]] / `Dedup.simhashDedupIds`).
-    */
-  def embeddingDedupIds(corpus: DataFrame, threshold: Double,
-                        numPlanes: Int, dim: Int): DataFrame =
-    embeddingDedupIdsH(corpus, threshold, numPlanes, dim)._1
-
-  /** [[embeddingDedupIds]] plus the persisted membership handle (the
-    * H(andle) convention — unpersist once the result is materialized).
     * The connected-components loop inside is EAGER, so construction runs
     * jobs; the returned frame then reads only the CC loop's checkpointed
     * labels plus the persisted membership.
+    *
+    * CACHE LIFETIME: persists the corpus-proportional membership table and
+    * the distinct-vector groups table; long-lived drivers wrap the call in
+    * [[Materialize.tracked]] and unpersist them once the result is
+    * materialized.
     */
-  def embeddingDedupIdsH(corpus: DataFrame, threshold: Double,
-                         numPlanes: Int, dim: Int): (DataFrame, Seq[DataFrame]) = {
+  def embeddingDedupIds(corpus: DataFrame, threshold: Double,
+                        numPlanes: Int, dim: Int): DataFrame = {
     val c = corpus.select(col("id"), col("vec").cast("array<double>").as("vec"))
       .withColumn("bucket", lshBucket(col("vec"), numPlanes, dim))
       .withColumn("nrm", norm(col("vec")))
@@ -672,15 +642,13 @@ object Similarity {
     // Content-addressed like [[embedPairsCollapsed]]: the membership join
     // ships (64-char sha2 key, id), never the full vector as a join key.
     val hashed = c.withColumn("__vh", vecKey(col("vec")))
-    val groups = hashed.groupBy(col("__vh"))
+    val groups = Materialize.persist(hashed.groupBy(col("__vh"))
       .agg(min(col("id")).as("rid"), first(col("vec")).as("vec"),
         min(col("bucket")).as("bucket"),
-        min(col("nrm")).as("nrm"), count(lit(1)).as("gsz"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val membership = hashed.select(col("__vh"), col("id"))
+        min(col("nrm")).as("nrm"), count(lit(1)).as("gsz")))
+    val membership = Materialize.persist(hashed.select(col("__vh"), col("id"))
       .join(groups.select(col("__vh"), col("rid")).hint("shuffle_hash"), Seq("__vh"))
-      .select(col("rid"), col("id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("rid"), col("id")))
     val ga = groups.select(col("bucket"), col("rid").as("rid_a"),
       col("vec").as("vec_a"), col("nrm").as("nrm_a"))
     val gb = groups.select(col("bucket"), col("rid").as("rid_b"),
@@ -710,11 +678,10 @@ object Similarity {
     val repLabel = comp.unionByName(
       selfDup.join(comp.select("rid"), Seq("rid"), "left_anti")
         .select(col("rid"), col("rid").as("component")))
-    val dropped = membership
+    membership
       .join(repLabel.hint("shuffle_hash"), Seq("rid"))
       .filter(col("id") =!= col("component"))
       .select(col("component").as("survivor"), col("id").as("dropped_id"))
-    (dropped, Seq(membership, groups))
   }
 
   /** Cross-set embedding near-dup — semantic DECONTAMINATION: every corpus
@@ -742,31 +709,15 @@ object Similarity {
     *
     * CACHE LIFETIME: the prepped eval projection is persisted so the
     * gate's count and the join share ONE eval-source scan (r19 verdict
-    * #4) — this convenience wrapper cannot release it (it hands back only
-    * the result frame). One-shot callers are fine — session end or
-    * `spark.catalog.clearCache()` reclaims the (eval-sized, i.e. small by
-    * this operator's contract) block — but long-lived drivers should call
-    * [[crossNearDuplicatesH]] and unpersist the returned handle once the
-    * result is materialized, the same deterministic-release pattern as
-    * [[embeddingNearDuplicatesH]].
+    * #4), and the result reads it; long-lived drivers wrap the call in
+    * [[Materialize.tracked]] and unpersist it once the result is
+    * materialized.
     *
     * @return (id, eval_id, sim) — one row per CONTAMINATED corpus vector.
     */
   def crossNearDuplicates(corpus: DataFrame, evalSet: DataFrame,
                           threshold: Double, numPlanes: Int, dim: Int,
-                          evalBroadcastMaxBytes: Long = 1L << 30): DataFrame =
-    crossNearDuplicatesH(corpus, evalSet, threshold, numPlanes, dim,
-      evalBroadcastMaxBytes)._1
-
-  /** [[crossNearDuplicates]] plus its persisted intermediate (the prepped
-    * eval projection, shared by the gate count and the join — one source
-    * scan instead of two): `unpersist()` the returned handle once the
-    * result is materialized.
-    */
-  def crossNearDuplicatesH(corpus: DataFrame, evalSet: DataFrame,
-                           threshold: Double, numPlanes: Int, dim: Int,
-                           evalBroadcastMaxBytes: Long = 1L << 30)
-      : (DataFrame, Seq[DataFrame]) = {
+                          evalBroadcastMaxBytes: Long = 1L << 30): DataFrame = {
     def prep(df: DataFrame, side: String) =
       df.select(col("id").as(s"id_$side"),
         col("vec").cast("array<double>").as(s"vec_$side"))
@@ -779,8 +730,7 @@ object Similarity {
     // the PERSISTED prepped projection, so the source is scanned once and
     // the join below reads the cached blocks (r19 verdict #4: the gate
     // must not buy its measurement with a second eval-source scan).
-    val evalPrepped = prep(evalSet, "b")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val evalPrepped = Materialize.persist(prep(evalSet, "b"))
     val evalRows = evalPrepped.count()
     val joined =
       if (evalRows * (8L * dim + 64L) <= evalBroadcastMaxBytes)
@@ -793,7 +743,7 @@ object Similarity {
           explode(sequence(lit(0), lit(salts - 1))))
         a.join(b.hint("shuffle_hash"), Seq("bucket", "__salt")).drop("__salt")
       }
-    val result = joined
+    joined
       .select(col("id_a"), col("id_b"),
         cosineFromNorms(dot(col("vec_a"), col("vec_b")),
           col("nrm_a"), col("nrm_b")).as("sim"))
@@ -803,7 +753,6 @@ object Similarity {
       .agg(max(struct(col("sim"), (-col("id_b")).as("neg"))).as("best"))
       .select(col("id"), (-col("best.neg")).cast("long").as("eval_id"),
         round(col("best.sim"), 6).as("sim"))
-    (result, Seq(evalPrepped))
   }
 
   /** Exact (brute-force) near-duplicate pairs — the oracle-checkable variant;

@@ -536,7 +536,7 @@ object TextAnalysis {
     // function of the data, so any recompute reproduces the assignment —
     // unlike the previous spark_partition_id() scheme, where a dropped
     // cache re-sampled range boundaries under the collected offsets.
-    val histP = hist.persist()
+    val histP = Materialize.persist(hist)
     // Freeze nb-1 approximate c-quantile boundaries ON THE DRIVER (one tiny
     // job over the histogram — distinct counts, k ≤ √(2·total) rows). Once
     // frozen they are literals: bucket(c) = #{boundaries ≥ c} (bucket 0 =

@@ -243,6 +243,18 @@ class DedupSpec extends SparkSpec {
     assert(cc == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L))
     assert(java.nio.file.Files.list(java.nio.file.Paths.get(dir)).count() > 0,
       "reliable checkpoint files should have been written under the given dir")
+    // a dir whose path is a prefix of the current one is a different dir:
+    // after a run under `…/ck2`, a run under `…/ck` must write under `ck`
+    val base = java.nio.file.Files.createTempDirectory("graft_cc_prefix")
+    val (ck, ck2) = (base.resolve("ck"), base.resolve("ck2"))
+    Dedup.connectedComponents(pairs, checkpointDir = Some(ck2.toString)).collect()
+    val viaCk = Dedup.connectedComponents(pairs, checkpointDir = Some(ck.toString))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(viaCk == cc)
+    assert(java.nio.file.Files.isDirectory(ck) &&
+      java.nio.file.Files.walk(ck).anyMatch(_.getFileName.toString.startsWith("rdd-")),
+      s"checkpoint files for $ck were written elsewhere: " +
+        spark.sparkContext.getCheckpointDir)
   }
 
   test("dropNearDuplicates keeps exactly one canonical member per cluster") {
@@ -331,8 +343,8 @@ class DedupSpec extends SparkSpec {
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
         .sortBy(t => (t._1, t._2)).toSeq
     val keyed = dupDocs.select(col("id"), col("text").as("__text"))
-    val perDoc = canon(Dedup.minhashPerDoc(keyed, 0.9, 16, 4, 5)._1)
-    val collapsed = canon(Dedup.minhashCollapsed(keyed, 0.9, 16, 4, 5)._1)
+    val perDoc = canon(Dedup.minhashPerDoc(keyed, 0.9, 16, 4, 5))
+    val collapsed = canon(Dedup.minhashCollapsed(keyed, 0.9, 16, 4, 5))
     assert(collapsed == perDoc)
     // all 3 same-text pairs per base text at jaccard 1.0 are present
     assert(perDoc.count(_._3 == 1.0) >= base.size * 3)
@@ -365,10 +377,10 @@ class DedupSpec extends SparkSpec {
     val expected = canonL(Dedup.connectedComponents(
       Dedup.minhashNearDuplicates(dupDocs, "id", "text", 0.9,
         collapse = Some(false)).select("id_a", "id_b")))
-    val collapsed = canonL(Dedup.minhashLabelsH(dupDocs, "id", "text",
-      0.9, 16, 4, 5, Some(true))._1)
-    val perDoc = canonL(Dedup.minhashLabelsH(dupDocs, "id", "text",
-      0.9, 16, 4, 5, Some(false))._1)
+    val collapsed = canonL(Dedup.minhashLabels(dupDocs, "id", "text",
+      0.9, 16, 4, 5, Some(true)))
+    val perDoc = canonL(Dedup.minhashLabels(dupDocs, "id", "text",
+      0.9, 16, 4, 5, Some(false)))
     assert(collapsed == expected)
     assert(perDoc == expected)
     // the singleton (id 30) is unlabeled; the no-cross-edge dup group is
@@ -397,8 +409,8 @@ class DedupSpec extends SparkSpec {
     val exp07 = canonL(Dedup.connectedComponents(
       Dedup.minhashNearDuplicates(dupDocs, "id", "text", 0.7,
         collapse = Some(false)).select("id_a", "id_b")))
-    val col07 = canonL(Dedup.minhashLabelsH(dupDocs, "id", "text",
-      0.7, 16, 4, 5, Some(true))._1)
+    val col07 = canonL(Dedup.minhashLabels(dupDocs, "id", "text",
+      0.7, 16, 4, 5, Some(true)))
     assert(col07 == exp07)
     assert(exp07.filter(_._1 <= 12L).forall(_._2 == 0L) &&
       exp07.count(_._2 == 0L) == 6)
@@ -444,7 +456,7 @@ class DedupSpec extends SparkSpec {
     assert(narrow.map(_._1).toSet.intersect(droppedIds).isEmpty)
   }
 
-  test("minhashDedupIds matches CC-over-pairs on both gate paths; simhash H releases") {
+  test("minhashDedupIds matches CC-over-pairs on both gate paths; simhash frames release") {
     import spark.implicits._
     val base = Seq(
       "the quick brown fox jumps over the lazy dog again and again today",
@@ -465,8 +477,9 @@ class DedupSpec extends SparkSpec {
       collapse = Some(true))) == expected)
     assert(canon2(Dedup.minhashDedupIds(dupDocs, "id", "text", 0.9,
       collapse = Some(false))) == expected)
-    // the H variant's handles release deterministically (house pattern)
-    val (out, caches) = Dedup.simhashDedupIdsH(dupDocs, "id", "text", 16, 3)
+    // the tracked frames release deterministically (house pattern)
+    val (out, caches) = graft.ops.Materialize.tracked(
+      Dedup.simhashDedupIds(dupDocs, "id", "text", 16, 3))
     out.count()
     assert(caches.nonEmpty)
     caches.foreach(_.unpersist(blocking = true))

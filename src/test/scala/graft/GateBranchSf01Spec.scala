@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Dedup, Similarity}
+import graft.ops.{Dedup, Materialize, Similarity}
 
 /** Both-branch verification of every data-gated plan choice over the REAL
   * sf0.1 parquet (r17 verdict item 4): the collapse gate (minhash family),
@@ -53,12 +53,11 @@ class GateBranchSf01Spec extends SparkSpec {
 
   test("embedding occupancy gate: pair branches row-identical on sf0.1") {
     assume(available, s"$sf missing")
-    val (a, ca) = Similarity.embeddingNearDuplicatesH(emb, 0.45, 4, 3,
-      collapse = Some(true))
-    val (b, cb) = Similarity.embeddingNearDuplicatesH(emb, 0.45, 4, 3,
-      collapse = Some(false))
-    assertRowEqual("embeddingNearDuplicates", a, b)
-    (ca ++ cb).foreach(_.unpersist(blocking = false))
+    Materialize.scoped {
+      assertRowEqual("embeddingNearDuplicates",
+        Similarity.embeddingNearDuplicates(emb, 0.45, 4, 3, collapse = Some(true)),
+        Similarity.embeddingNearDuplicates(emb, 0.45, 4, 3, collapse = Some(false)))
+    }
   }
 
   test("hamming dispatch: collapsed and segmented branches row-identical on sf0.1") {
@@ -68,10 +67,10 @@ class GateBranchSf01Spec extends SparkSpec {
     // real 16-bit simhash signature distribution, not a toy one.
     val sigs = docs.select(col("doc_id").as("id"),
       Dedup.simhashLong(col("text"), 16).as("sig"))
-    val (a, ca) = Dedup.collapsedHammingJoinH(sigs, 16, 3)
-    val (b, cb) = Dedup.segmentedHammingJoinH(sigs, 16, 3)
-    assertRowEqual("bandedHammingJoin",
-      a.select("id_a", "id_b"), b.select("id_a", "id_b"))
-    (ca ++ cb).foreach(_.unpersist(blocking = false))
+    Materialize.scoped {
+      assertRowEqual("bandedHammingJoin",
+        Dedup.collapsedHammingJoin(sigs, 16, 3).select("id_a", "id_b"),
+        Dedup.segmentedHammingJoin(sigs, 16, 3).select("id_a", "id_b"))
+    }
   }
 }

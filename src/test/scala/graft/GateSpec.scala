@@ -4,7 +4,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.ops.{Dedup, Similarity}
+import graft.ops.{Dedup, Materialize, Similarity}
 
 /** The collapse gate's laziness contract (r15): an explicit
   * `collapse = Some(_)` override must pick the path WITHOUT launching any
@@ -12,7 +12,7 @@ import graft.ops.{Dedup, Similarity}
   * one-job duplication probe, documented in the operators' scaladoc), the
   * override must be honored row-identically in either direction, and the
   * collapsed paths' persisted intermediates must be releasable
-  * deterministically through the returned handles.
+  * deterministically through [[Materialize.tracked]].
   */
 class GateSpec extends SparkSpec {
   import spark.implicits._
@@ -58,8 +58,8 @@ class GateSpec extends SparkSpec {
     val jobs = jobsDuring {
       Dedup.minhashNearDuplicates(docs, "id", "text", 0.9, collapse = Some(true))
       Dedup.minhashNearDuplicates(docs, "id", "text", 0.9, collapse = Some(false))
-      Similarity.embeddingNearDuplicatesH(emb, 0.9, 4, 3, collapse = Some(true))
-      Similarity.embeddingNearDuplicatesH(emb, 0.9, 4, 3, collapse = Some(false))
+      Similarity.embeddingNearDuplicates(emb, 0.9, 4, 3, collapse = Some(true))
+      Similarity.embeddingNearDuplicates(emb, 0.9, 4, 3, collapse = Some(false))
     }
     assert(jobs == 0, s"expected zero jobs at construction with an explicit override, saw $jobs")
   }
@@ -91,9 +91,9 @@ class GateSpec extends SparkSpec {
     assert(s1 == s2, s"semanticDedup override paths diverge: $s1 vs $s2")
   }
 
-  test("embeddingNearDuplicatesH threads its persisted membership out for deterministic release") {
-    val (out, caches) = Similarity.embeddingNearDuplicatesH(emb, 0.9, 4, 3,
-      collapse = Some(true))
+  test("embeddingNearDuplicates hands its membership persist to Materialize.tracked") {
+    val (out, caches) = Materialize.tracked(Similarity.embeddingNearDuplicates(
+      emb, 0.9, 4, 3, collapse = Some(true)))
     assert(caches.nonEmpty, "collapsed path must hand back its persisted intermediates")
     out.count() // materialize (populates the persisted membership)
     assert(caches.forall(_.storageLevel == StorageLevel.MEMORY_AND_DISK))
@@ -101,15 +101,14 @@ class GateSpec extends SparkSpec {
     assert(caches.forall(_.storageLevel == StorageLevel.NONE),
       "membership persist must be released by the returned handle, not a global clearCache")
     // the per-doc path has nothing persisted to leak
-    val (_, none) = Similarity.embeddingNearDuplicatesH(emb, 0.9, 4, 3,
-      collapse = Some(false))
+    val (_, none) = Materialize.tracked(Similarity.embeddingNearDuplicates(
+      emb, 0.9, 4, 3, collapse = Some(false)))
     assert(none.isEmpty)
   }
 
-  test("imageDedupIdsH threads the wide-path segment persist out for deterministic release") {
-    // 64-bit dHashes take the segmented (wide-fingerprint) branch — the
-    // segment table persisted inside segmentedHammingJoinH was the one
-    // H-convention gap left after r15 (r16 What's-wrong #3). The survivor
+  test("imageDedupIds hands its wide-path segment persist to Materialize.tracked") {
+    // 64-bit dHashes take the segmented (wide-fingerprint) branch, whose
+    // segment table is persisted inside segmentedHammingJoin. The survivor
     // frame reads only the eager CC loop's checkpointed labels, so the
     // handle must be releasable IMMEDIATELY and the result must survive
     // the release.
@@ -118,7 +117,8 @@ class GateSpec extends SparkSpec {
       (3L, 0x7777777777777777L), (4L, 0x7777777777777777L), // distance 0
       (5L, 0x0000000000000000L)                             // isolated
     ).toDF("media_id", "dhash")
-    val (out, caches) = graft.ops.Multimodal.imageDedupIdsH(hashes, maxDistance = 3)
+    val (out, caches) = Materialize.tracked(
+      graft.ops.Multimodal.imageDedupIds(hashes, maxDistance = 3))
     assert(caches.nonEmpty, "wide path must hand back its persisted segment table")
     assert(caches.forall(_.storageLevel == StorageLevel.MEMORY_AND_DISK))
     caches.foreach(_.unpersist(blocking = true))
@@ -133,9 +133,9 @@ class GateSpec extends SparkSpec {
     // 4 rows / 2^4 buckets = occupancy ≪ cutoff: even though the corpus is
     // 50 % verbatim-duplicated (the duplication term alone says collapse),
     // the default must take the per-doc path — observable as an empty
-    // caches handle (the collapsed path always returns its membership).
-    val (out, caches) = Similarity.embeddingNearDuplicatesH(emb, 0.9, 4, 3,
-      collapse = None)
+    // tracked frame list (the collapsed path always persists its membership).
+    val (out, caches) = Materialize.tracked(Similarity.embeddingNearDuplicates(
+      emb, 0.9, 4, 3, collapse = None))
     assert(caches.isEmpty,
       "low-occupancy corpus must default to the per-doc bucket join")
     // and the decision is advisory only: rows match the forced collapse
@@ -180,7 +180,10 @@ class GateSpec extends SparkSpec {
     // (id, component) rows — the returned frame's own data, released by
     // the caller's lifecycle). `unpersistRDD` updates the persistentRdds
     // map synchronously even with blocking = false, so the post-call
-    // snapshot is race-free.
+    // snapshot is race-free. Earlier tests leave the lazy pair API's
+    // caches of the same plans behind; a persist of an already-cached plan
+    // adds no entry, which would hide a leak, so start from an empty cache.
+    spark.catalog.clearCache()
     val sc = spark.sparkContext
     def leaked(before: Set[Int]): Seq[Int] =
       sc.getPersistentRDDs.values.toSeq

@@ -110,7 +110,7 @@ class PipelineSpec extends SparkSpec {
     assert(scrub(a) == scrub(b), s"\nstruct: $a\nsplice: $b")
   }
 
-  test("one-shot native stamp renders the same blob as the native splice path") {
+  test("one-shot native stamp renders the same blob as the to_json + json.dumps render") {
     import graft.ops.{Corpus => C, Validate}
     import graft.model.JsonSchema
     val batch = Seq(("hello \"wörld\"", 42)).toDF("content", "n")
@@ -119,13 +119,13 @@ class PipelineSpec extends SparkSpec {
     val asJson = withPat.withColumn("data",
       call_function("graft_pyjson", struct(cols.map(col).toSeq: _*)))
     val schema = JsonSchema(cols.map(_ -> "string").toMap, cols.sorted.toSeq)
-    val validated = Validate.withQualityIssues(asJson, schema, "data")
-    val a = C.stampAndSerialize(validated.drop("data"), 1, idCol = Some("n"), native = true)
+    val validated = Validate.withQualityIssues(asJson, schema, "data").drop("data")
+    val a = C.stampAndSerialize(validated, 1, idCol = Some("n"), native = true)
       .select("data").collect()(0).getString(0)
-    val b = C.stampAndSerializeNative(validated, 1, idCol = Some("n"))
+    val b = C.stampAndSerialize(validated, 1, idCol = Some("n"), native = false)
       .select("data").collect()(0).getString(0)
     def scrub(s: String) = s.replaceAll(""""_ingested_at": "[^"]*"""", """"_ingested_at": "T"""")
-    assert(scrub(a) == scrub(b), s"\none-shot: $a\nsplice:   $b")
+    assert(scrub(a) == scrub(b), s"\nnative:  $a\nto_json: $b")
   }
 
   test("native graft_pyjson equals to_json + PyJson.dumps on a gnarly payload") {

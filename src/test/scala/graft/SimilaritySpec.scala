@@ -326,7 +326,7 @@ class SimilaritySpec extends SparkSpec {
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
         .sortBy(t => (t._1, t._2)).toSeq
     val perDoc = canon(Similarity.embedPairsPerDoc(c, 0.9))
-    val collapsed = canon(Similarity.embedPairsCollapsed(c, 0.9)._1)
+    val collapsed = canon(Similarity.embedPairsCollapsed(c, 0.9))
     assert(collapsed == perDoc, s"collapsed=$collapsed perDoc=$perDoc")
     // every same-direction pair is present at sim 1.0
     assert(perDoc.count(_._3 == 1.0) >= 3 + 3 + 1)
@@ -344,7 +344,8 @@ class SimilaritySpec extends SparkSpec {
     val rows = (Seq.fill(3)(Seq(1.0, 0.0, 0.0)) ++ Seq.fill(3)(Seq(2.0, 0.0, 0.0)) ++
       Seq.fill(2)(Seq(0.0, 0.0, 1.0)) ++ Seq(Seq(0.0, 1.0, 0.0)))
       .zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("id", "vec")
-    val (dedupDf, caches) = Similarity.embeddingDedupIdsH(rows, 0.9, 4, 3)
+    val (dedupDf, caches) = graft.ops.Materialize.tracked(
+      Similarity.embeddingDedupIds(rows, 0.9, 4, 3))
     val dedup = dedupDf.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     caches.foreach(_.unpersist(blocking = true))
     assert(caches.forall(_.storageLevel ==
