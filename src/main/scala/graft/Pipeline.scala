@@ -84,26 +84,12 @@ object Pipeline {
     // payload + `_schema_version`/`_ingested_at`/`_quality_issues`, in
     // reference dict order (`app.py:355-364`) — renders in one codegen'd
     // `graft_pyjson` pass; otherwise to_json + the json.dumps re-render.
-    // idBase seeds above the corpus max so ids stay unique and ascending
-    // across batches (the reference's AUTOINCREMENT contract that Q4's
-    // "latest N by id desc" depends on). V2 counters ride the SAME job via
-    // observe() — no second pass over the batch.
     val nativeRender =
       try spark.catalog.functionExists("graft_pyjson") catch { case _: Exception => false }
-    val idBase = if (idCol.isDefined) 0L else Corpus.maxId(spark, corpusDir) + 1L
-    val obs = new org.apache.spark.sql.Observation()
-    val observed = validated.observe(obs,
-      count(lit(1)).as("n"),
-      count(when(size(col("_quality_issues")) === 0, 1)).as("clean"),
-      count(when(size(col("_quality_issues")) > 0, 1)).as("flagged"))
-    val stamped = Corpus.stampAndSerialize(observed, version,
-      idBase = idBase, idCol = idCol, native = nativeRender)
-    Corpus.append(stamped, corpusDir)
-
-    val m = obs.get // collected during the write job
-    IngestResult(version, schema,
-      m("n").asInstanceOf[Long], m("clean").asInstanceOf[Long],
-      m("flagged").asInstanceOf[Long])
+    store(spark, validated, version, schema, corpusDir, idCol) { (observed, idBase) =>
+      Corpus.stampAndSerialize(observed, version,
+        idBase = idBase, idCol = idCol, native = nativeRender)
+    }
   }
 
   /** Schema-on-read ingest for genuinely ragged JSON records (one string
@@ -121,20 +107,33 @@ object Pipeline {
         case Some(schema) =>
           val version = evo.evolve(schema, schema.fieldNames)
           val validated = Validate.withQualityIssues(asJson, schema, "data")
-          val idBase = if (idCol.isDefined) 0L else Corpus.maxId(spark, corpusDir) + 1L
-          val obs = new org.apache.spark.sql.Observation()
-          val observed = validated.observe(obs,
-            count(lit(1)).as("n"),
-            count(when(size(col("_quality_issues")) === 0, 1)).as("clean"),
-            count(when(size(col("_quality_issues")) > 0, 1)).as("flagged"))
-          val stamped = Corpus.stampAndSerializeJson(observed, version,
-            idBase = idBase, idCol = idCol)
-          Corpus.append(stamped, corpusDir)
-          val m = obs.get
-          IngestResult(version, schema,
-            m("n").asInstanceOf[Long], m("clean").asInstanceOf[Long],
-            m("flagged").asInstanceOf[Long])
+          store(spark, validated, version, schema, corpusDir, idCol) { (observed, idBase) =>
+            Corpus.stampAndSerializeJson(observed, version, idBase = idBase, idCol = idCol)
+          }
       }
     }
+  }
+
+  /** The ingest tail both entry points share: stamp and render through
+    * `stamp` (given the observed batch and the id base), append, and
+    * return the V2 counters, which ride the write job via `observe()` —
+    * no second pass over the batch. The id base seeds above the corpus
+    * max so ids stay unique and ascending across batches (the reference's
+    * AUTOINCREMENT contract that Q4's "latest N by id desc" depends on).
+    */
+  private def store(spark: SparkSession, validated: DataFrame, version: Int,
+                    schema: JsonSchema, corpusDir: String, idCol: Option[String])(
+                    stamp: (DataFrame, Long) => DataFrame): IngestResult = {
+    val idBase = if (idCol.isDefined) 0L else Corpus.maxId(spark, corpusDir) + 1L
+    val obs = new org.apache.spark.sql.Observation()
+    val observed = validated.observe(obs,
+      count(lit(1)).as("n"),
+      count(when(size(col("_quality_issues")) === 0, 1)).as("clean"),
+      count(when(size(col("_quality_issues")) > 0, 1)).as("flagged"))
+    Corpus.append(stamp(observed, idBase), corpusDir)
+    val m = obs.get // collected during the write job
+    IngestResult(version, schema,
+      m("n").asInstanceOf[Long], m("clean").asInstanceOf[Long],
+      m("flagged").asInstanceOf[Long])
   }
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** W1/M1/Q1-Q4 — the corpus sink and its browse queries (reference
@@ -43,8 +43,8 @@ object Corpus {
     * callers MUST pass an `idBase` above every previously issued id (Pipeline
     * derives it from the corpus max — `app.py:169-173` AUTOINCREMENT
     * semantics) so Q4's "latest N by id desc" orders batches correctly.
-    */
-  /** With `native=true` (requires [[graft.GraftExtensions]]) the whole blob —
+    *
+    * With `native=true` (requires [[graft.GraftExtensions]]) the whole blob —
     * payload and stamped fields — renders in ONE codegen'd `graft_pyjson`
     * pass over the final struct: no `to_json`, no re-render, no splice copy.
     * This is the structured-ingest hot path.
@@ -58,47 +58,49 @@ object Corpus {
       payloadCols.map(col) ++ Seq(
         col("_schema_version"), col("_ingested_at_iso").as("_ingested_at"),
         col("_quality_issues"))
-    val id = idCol.map(c => col(c).cast("long"))
-      .getOrElse(lit(idBase) + monotonically_increasing_id())
     val blob =
       if (native) call_function("graft_pyjson", struct(blobCols: _*))
       else pyDumps(to_json(struct(blobCols: _*), Map("ignoreNullFields" -> "false")))
-    records
-      .withColumn("_schema_version", lit(schemaVersion))
-      .withColumn("ingested_at", current_timestamp())
-      .withColumn("_ingested_at_iso",
-        date_format(col("ingested_at"), "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"))
-      .withColumn("id", id)
-      .withColumn("schema_version", lit(schemaVersion))
-      .withColumn("data", blob)
-      .withColumn("ingested_at_iso", col("_ingested_at_iso"))
-      .withColumn("quality_issues",
-        when(size(coalesce(col("_quality_issues"), array())) === 0, lit(null))
-          .otherwise(col("_quality_issues")).cast("array<string>"))
-      .select("id", "data", "schema_version", "ingested_at", "ingested_at_iso", "quality_issues")
+    stamp(records, schemaVersion, idBase, idCol, blob)
   }
 
   /** `stampAndSerialize` for records that already carry their canonical
     * JSON in a `data` column (the schema-on-read ingest path): the stamped
     * fields are SPLICED into the existing blob with string expressions —
     * codegen'd concat, no re-parse and no second struct render — then the
-    * whole blob gets one json.dumps-parity pass. Non-object records (the
-    * reference would crash on them, `app.py:320`) keep their blob unspliced;
-    * validation has already flagged them.
+    * whole blob gets one json.dumps-parity pass. The object test and the
+    * splice both work on the blob without its surrounding JSON whitespace,
+    * which validation accepts too. Non-object records (the reference would
+    * crash on them, `app.py:320`) keep their blob unspliced; validation
+    * has already flagged them.
     */
   def stampAndSerializeJson(records: DataFrame, schemaVersion: Int,
                             idBase: Long = 0L, idCol: Option[String] = None): DataFrame = {
-    val id = idCol.map(c => col(c).cast("long"))
-      .getOrElse(lit(idBase) + monotonically_increasing_id())
-    val isObject = col("data").startsWith("{") && col("data").endsWith("}")
+    val jsonWs = " \t\n\r"
+    val obj = trim(col("data"), jsonWs)
+    val isObject = obj.startsWith("{") && obj.endsWith("}")
+    val open = obj.substr(lit(1), length(obj) - 1) // drops the closing brace
+    val hasMembers = length(trim(open.substr(lit(2), length(open)), jsonWs)) > 0
     val spliced = concat(
-      expr("substring(data, 1, length(data) - 1)"),
-      when(length(trim(col("data"))) > 2, lit(",")).otherwise(lit("")),
+      open,
+      when(hasMembers, lit(",")).otherwise(lit("")),
       lit("\"_schema_version\":"), col("_schema_version").cast("string"),
       lit(",\"_ingested_at\":\""), col("_ingested_at_iso"), lit("\""),
       lit(",\"_quality_issues\":"),
       to_json(coalesce(col("_quality_issues"), array().cast("array<string>"))),
       lit("}"))
+    stamp(records, schemaVersion, idBase, idCol,
+      pyDumps(when(isObject, spliced).otherwise(col("data"))))
+  }
+
+  /** The stamping block both serializers share: id, `_schema_version` and
+    * the ingest timestamps (which `data` may reference), `data`, then the
+    * stored columns.
+    */
+  private def stamp(records: DataFrame, schemaVersion: Int, idBase: Long,
+                    idCol: Option[String], data: Column): DataFrame = {
+    val id = idCol.map(c => col(c).cast("long"))
+      .getOrElse(lit(idBase) + monotonically_increasing_id())
     records
       .withColumn("_schema_version", lit(schemaVersion))
       .withColumn("ingested_at", current_timestamp())
@@ -106,7 +108,7 @@ object Corpus {
         date_format(col("ingested_at"), "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"))
       .withColumn("id", id)
       .withColumn("schema_version", lit(schemaVersion))
-      .withColumn("data", pyDumps(when(isObject, spliced).otherwise(col("data"))))
+      .withColumn("data", data)
       .withColumn("ingested_at_iso", col("_ingested_at_iso"))
       .withColumn("quality_issues",
         when(size(coalesce(col("_quality_issues"), array())) === 0, lit(null))
@@ -150,14 +152,6 @@ object Corpus {
     fs.delete(pendingPath(corpusDir), false)
   }
 
-  /** The record store, resolving an interrupted [[compact]] READ-ONLY: if
-    * the live dir is missing, fall back to `_records_compacting` (complete
-    * by invariant — it is only ever renamed after its write finished; while
-    * a compact's write is in flight the live dir still exists, so a partial
-    * tmp is never read) and then `_records_old`. Readers never mutate
-    * (single-writer discipline, same reasoning as [[maxId]]); the next
-    * writer through [[append]]/[[compact]] runs [[repairCompaction]].
-    */
   /** Record-store dirs in PREFERENCE ORDER: live first, then the two
     * crash-recovery names (the complete compaction output, then the
     * moved-aside old store) — the one ordering [[records]],
@@ -167,6 +161,14 @@ object Corpus {
     Seq(s"$corpusDir/records", s"$corpusDir/_records_compacting",
       s"$corpusDir/_records_old")
 
+  /** The record store, resolving an interrupted [[compact]] READ-ONLY: if
+    * the live dir is missing, fall back to `_records_compacting` (complete
+    * by invariant — it is only ever renamed after its write finished; while
+    * a compact's write is in flight the live dir still exists, so a partial
+    * tmp is never read) and then `_records_old`. Readers never mutate
+    * (single-writer discipline, same reasoning as [[maxId]]); the next
+    * writer through [[append]]/[[compact]] runs [[repairCompaction]].
+    */
   def records(spark: SparkSession, corpusDir: String): DataFrame = {
     val fs = fsOf(spark, corpusDir)
     val candidates = storeDirs(corpusDir)

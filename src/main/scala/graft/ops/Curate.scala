@@ -145,23 +145,6 @@ object Curate {
       .agg(count(lit(1)).as("n_docs"),
         sum(col("q_n_tokens").cast("long")).as("n_tokens"))
 
-  /** Training-sequence packing accounting (concat-and-chunk, the standard
-    * LLM-pretraining layout): within each `partitionCol` stratum, documents
-    * are laid out in deterministic md5(id) order and the token stream is cut
-    * every `seqLen` tokens; a document belongs to the sequence its FIRST
-    * token lands in. Returns one row per sequence: doc count, token count,
-    * and first/last doc id — the shard manifest a packing job would emit.
-    *
-    * Shape: one shuffle on the stratum key, a streaming running-sum window
-    * (no full sort — rank within partitions), one hash aggregate. The
-    * stratum key bounds window parallelism exactly like `sampleStratified`;
-    * at 100 TB the stratum is (language × shard), never a global window.
-    * All arithmetic is exact integers — the DuckDB oracle replays it.
-    *
-    * `partitionCol` must be low-cardinality (language, language × shard) —
-    * see the broadcast-offsets precondition on [[bucketedRunningSum]]; a
-    * per-domain stratum belongs in the bare window shape instead.
-    */
   /** Deterministic train/val/test corpus split: the id's md5-fraction is
     * compared against cumulative thresholds, so every row gets exactly ONE
     * label, the same label on every run/engine/cluster, and resizing a
@@ -185,6 +168,23 @@ object Curate {
     df.withColumn("split", label)
   }
 
+  /** Training-sequence packing accounting (concat-and-chunk, the standard
+    * LLM-pretraining layout): within each `partitionCol` stratum, documents
+    * are laid out in deterministic md5(id) order and the token stream is cut
+    * every `seqLen` tokens; a document belongs to the sequence its FIRST
+    * token lands in. Returns one row per sequence: doc count, token count,
+    * and first/last doc id — the shard manifest a packing job would emit.
+    *
+    * Shape: one shuffle on the stratum key, a streaming running-sum window
+    * (no full sort — rank within partitions), one hash aggregate. The
+    * stratum key bounds window parallelism exactly like `sampleStratified`;
+    * at 100 TB the stratum is (language × shard), never a global window.
+    * All arithmetic is exact integers — the DuckDB oracle replays it.
+    *
+    * `partitionCol` must be low-cardinality (language, language × shard) —
+    * see the broadcast-offsets precondition on [[bucketedRunningSum]]; a
+    * per-domain stratum belongs in the bare window shape instead.
+    */
   def packSequences(df: DataFrame, idCol: String, textCol: String,
                     partitionCol: String, seqLen: Long): DataFrame = {
     val nt = TextAnalysis.tokenCount(col(textCol)).cast("long")

@@ -395,60 +395,74 @@ object Dedup {
       .select(col("id_a"), col("id_b"), Nums.round6(col("jaccard")).as("jaccard"))
   }
 
-  /** The rep-level material of the collapsed chain, shared by the pair API
-    * ([[minhashCollapsed]] expands it to member pairs) and the label API
-    * ([[minhashLabels]] runs connected components over it directly).
+  /** The rep-level material of a collapsed dedup chain: the one contract
+    * between a family's builder ([[minhashCollapsedRep]] for text,
+    * `Similarity.embedCollapsedRep` for vectors) and the two consumers
+    * every family shares — [[expandPairs]] (the pair API) and
+    * [[repLabels]] (the label API).
     *
-    * @param membership (`__rid`, `id`) — persisted through
-    *        [[Materialize.persist]].
-    * @param repVerified verified near-dup edges BETWEEN distinct texts
-    *        (`id_a`, `id_b`, `jaccard`), rep ids only.
-    * @param selfJ (`__rid`, `gsz`, `jaccard`) — groups whose same-text
-    *        jaccard clears the threshold (any group size; consumers gate
-    *        on `gsz` as their semantics need).
+    * @param membership (`rid`, `id`) — from [[contentMembership]], persisted.
+    * @param repVerified verified near-dup edges BETWEEN distinct contents
+    *        (`id_a`, `id_b`, score), rep ids only.
+    * @param selfJ (`rid`, `gsz`, score) — groups whose same-content score
+    *        clears the threshold (any group size; consumers gate on `gsz`
+    *        as their semantics need).
     */
   private[graft] final case class CollapsedRep(
       membership: DataFrame, repVerified: DataFrame, selfJ: DataFrame)
+
+  /** One row per DISTINCT content of `keyed` (`id`, …): `__h`, `rid` (the
+    * group's min id — its representative), `gsz` (group size), then the
+    * `carry` aggregates. Returns `keyed` plus its `__h` column alongside,
+    * for [[contentMembership]].
+    *
+    * Content addressing: `key` is a fixed-width content hash, and rows
+    * group and join on it, never on the content itself. Keyed by the
+    * content, the membership join would shuffle the whole corpus with
+    * multi-KB strings or arrays as the join key — at 100 TB a corpus-sized
+    * content shuffle for what is logically an (id → group) lookup. With
+    * the hash the membership join ships (64-char key, id) rows only; the
+    * sole content that still moves is ONE representative per distinct
+    * content inside the aggregate (`first()` after map-side partial agg —
+    * any member's content works because same-content rows are identical
+    * by definition). Exactness: hash equality stands in for content
+    * equality, so `key` must be collision-resistant against ADVERSARIAL
+    * input, not just random input — the corpus is untrusted web-crawl
+    * content, and md5 chosen-prefix collisions are practical (two crafted
+    * documents would silently merge into one group and one would be
+    * dropped as a dup). SHA-256 has no known collision; its 256-bit
+    * random birthday bound at 10^10 docs is ~1e-58. (A 64-bit non-crypto
+    * hash fails even the random bound at that scale.)
+    */
+  private[graft] def contentGroups(keyed: DataFrame, key: Column,
+                                   carry: Column*): (DataFrame, DataFrame) = {
+    val hashed = keyed.withColumn("__h", key)
+    (hashed, hashed.groupBy("__h")
+      .agg(min(col("id")).as("rid"), (count(lit(1)).as("gsz") +: carry): _*))
+  }
+
+  /** (`rid`, `id`) for every row of `hashed` — persisted through
+    * [[Materialize.persist]]: the same-content self-join and both
+    * expansion joins read it. Corpus-proportional, so every join on it is
+    * pinned shuffle-hash.
+    */
+  private[graft] def contentMembership(hashed: DataFrame,
+                                       groups: DataFrame): DataFrame =
+    Materialize.persist(hashed.select(col("__h"), col("id"))
+      .join(groups.select(col("__h"), col("rid")).hint("shuffle_hash"), "__h")
+      .select(col("rid"), col("id")))
 
   private[graft] def minhashCollapsedRep(keyed: DataFrame, threshold: Double,
                                          numHashes: Int, bands: Int,
                                          shingleSize: Int,
                                          materializePairs: Boolean = false): CollapsedRep = {
-    // Content addressing: group and join on a content hash, never on the
-    // text itself. The original shape keyed BOTH the rep aggregate and the
-    // membership join by the full document text, so the membership join
-    // shuffled the whole corpus with multi-KB strings as the join key —
-    // at 100 TB that is a corpus-sized text shuffle for what is logically
-    // an (id → group) lookup. With a fixed-width content hash the
-    // membership join ships (64-char key, id) rows only; the sole text
-    // that still moves is ONE representative per distinct content inside
-    // the aggregate (first() after map-side partial agg — any member's
-    // text works because same-content texts are identical by definition).
-    // Exactness: hash equality stands in for text equality, so the hash
-    // must be collision-resistant against ADVERSARIAL input, not just
-    // random input — this corpus is untrusted web-crawl text, and md5
-    // chosen-prefix collisions are practical (two crafted documents would
-    // silently merge into one group and one would be dropped as a dup).
-    // SHA-256 has no known collision; its 256-bit random birthday bound
-    // at 10^10 docs is ~1e-58. (A 64-bit non-crypto hash fails even the
-    // random bound at that scale.)
-    // rep = min id per distinct content; gsz rides the same aggregate for
-    // the label path's self-dup gate.
-    val hashed = keyed.withColumn("__h", sha2(col("__text"), 256))
-    val reps = hashed.groupBy("__h")
-      .agg(min(col("id")).as("id"), count(lit(1)).as("gsz"),
-        first(col("__text")).as("__text"))
-    // (rep id, member id) — membership feeds the same-text self-join and
-    // both expansion joins; corpus-proportional, so pinned shuffle-hash
-    // everywhere below
-    val membership = Materialize.persist(hashed.select(col("__h"), col("id"))
-      .join(reps.select(col("__h"), col("id").as("__rid"))
-        .hint("shuffle_hash"), "__h")
-      .select(col("__rid"), col("id")))
+    val (hashed, reps) = contentGroups(keyed, sha2(col("__text"), 256),
+      first(col("__text")).as("__text"))
+    val membership = contentMembership(hashed, reps)
     // verified edges between distinct texts: the per-document chain, run
     // over one representative per content
-    val repVerified = minhashPerDoc(reps, threshold,
-      numHashes, bands, shingleSize, materializePairs)
+    val repVerified = minhashPerDoc(reps.select(col("rid").as("id"), col("__text")),
+      threshold, numHashes, bands, shingleSize, materializePairs)
     // Same-text jaccard: identical sets, so n/n = 1.0 ALWAYS — shingle
     // sets are never empty ([[shingles]] clamps short texts to one
     // full-token shingle; property-suite-pinned), so the old
@@ -459,61 +473,84 @@ object Dedup {
     val selfJ = reps
       .withColumn("jaccard", lit(1.0))
       .filter(col("jaccard") >= threshold)
-      .select(col("id").as("__rid"), col("gsz"),
-        Nums.round6(col("jaccard")).as("jaccard"))
+      .select(col("rid"), col("gsz"), Nums.round6(col("jaccard")).as("jaccard"))
     CollapsedRep(membership, repVerified, selfJ)
   }
 
-  /** The collapsed chain: one representative (min id) per DISTINCT text
-    * runs the full pipeline; doc pairs expand back afterwards. Identical
-    * texts have identical signatures, so (a) every same-text pair is
-    * always a candidate and (b) a cross-group doc pair is a candidate /
-    * match iff its rep pair is — the expansion reproduces the per-doc
-    * output EXACTLY, row for row.
+  /** Rep pairs → member pairs: the pair API's output from a
+    * [[CollapsedRep]], with `score` (the third column of `repVerified` and
+    * `selfJ`) riding along. Identical contents share every signature (band
+    * keys, LSH bucket) and every score, so (a) every same-content pair is always a candidate and (b) a
+    * cross-group doc pair is a candidate / match iff its rep pair is — the
+    * expansion reproduces the per-doc output EXACTLY, row for row.
     */
-  private[graft] def minhashCollapsed(keyed: DataFrame, threshold: Double,
-                                      numHashes: Int, bands: Int,
-                                      shingleSize: Int): DataFrame = {
-    val r = minhashCollapsedRep(keyed, threshold, numHashes, bands, shingleSize)
-    // expansion: rep pair → every member pair between the two (disjoint)
-    // groups; jaccard is a group-level constant, so it rides the join
+  private[graft] def expandPairs(r: CollapsedRep, score: String): DataFrame = {
+    // rep pair → every member pair between the two (disjoint) groups; the
+    // score is a group-level constant, so it rides the join
     val cross = r.repVerified
-      .join(r.membership.select(col("__rid").as("id_a"), col("id").as("__ma"))
+      .join(r.membership.select(col("rid").as("id_a"), col("id").as("__ma"))
         .hint("shuffle_hash"), "id_a")
-      .join(r.membership.select(col("__rid").as("id_b"), col("id").as("__mb"))
+      .join(r.membership.select(col("rid").as("id_b"), col("id").as("__mb"))
         .hint("shuffle_hash"), "id_b")
       .select(least(col("__ma"), col("__mb")).as("id_a"),
-        greatest(col("__ma"), col("__mb")).as("id_b"), col("jaccard"))
+        greatest(col("__ma"), col("__mb")).as("id_b"), col(score))
     val same = r.membership
-      .join(r.selfJ.select(col("__rid"), col("jaccard"))
-        .hint("shuffle_hash"), "__rid")
-      .join(r.membership.select(col("__rid"), col("id").as("id_b"))
-        .hint("shuffle_hash"), "__rid")
+      .join(r.selfJ.select(col("rid"), col(score)).hint("shuffle_hash"), "rid")
+      .join(r.membership.select(col("rid"), col("id").as("id_b"))
+        .hint("shuffle_hash"), "rid")
       .filter(col("id") < col("id_b"))
-      .select(col("id").as("id_a"), col("id_b"), col("jaccard"))
+      .select(col("id").as("id_a"), col("id_b"), col(score))
     cross.union(same)
   }
 
-  /** Doc-level connected-component labels of the verified near-duplicate
-    * graph — row-equal (spec-pinned) to
-    * `connectedComponents(minhashNearDuplicates(...).select("id_a","id_b"))`
-    * but WITHOUT ever materializing within-group pairs on the collapsed
-    * path: components run over the DISTINCT-content rep graph and labels
-    * expand through one membership join. This is the 100 TB shape for
-    * every cluster/survivor consumer ([[minhashClusters]],
-    * [[dropNearDuplicates]], [[dropNearDuplicatesBy]]): m verbatim copies
-    * cost O(m) membership rows here, never the m²/2 pair expansion the
-    * pair-audit API emits — the same rep-graph argument as
-    * [[graft.ops.Similarity.embeddingDedupIds]].
+  /** Rep-graph labels → member labels: `(id, component)` for every member
+    * of a near-duplicate cluster, row-equal to connected components over
+    * the expanded doc pairs but without ever building a within-group pair.
+    * Components run over the distinct-content rep graph (EAGER — the CC
+    * loop checkpoints), and labels expand through one membership join.
     *
     * Label identity: every rep is its own group's min member id, so a
     * rep-graph component's min-rep label IS the min doc id over all member
     * docs of the component — exactly the label the doc-level loop yields.
     * Vertex identity: members of a group with a cross-group edge all
     * appear in expanded pairs (labeled); a duplicated group (gsz ≥ 2)
-    * whose same-text jaccard clears the threshold is a cluster even with
+    * whose same-content score clears the threshold is a cluster even with
     * no cross edge (its members pair with each other); singletons without
     * edges and threshold-failing groups are unlabeled in both shapes.
+    */
+  private[graft] def repLabels(r: CollapsedRep): DataFrame = {
+    val comp = connectedComponents(r.repVerified.select("id_a", "id_b"),
+        toFixpoint = true)
+      .withColumnRenamed("id", "rid")
+    val repLabel = comp.unionByName(
+      r.selfJ.filter(col("gsz") >= 2).select(col("rid"))
+        .join(comp.select("rid"), Seq("rid"), "left_anti")
+        .select(col("rid"), col("rid").as("component")))
+    r.membership
+      .join(repLabel.hint("shuffle_hash"), "rid")
+      .select(col("id"), col("component"))
+  }
+
+  /** The collapsed chain: one representative (min id) per DISTINCT text
+    * runs the full pipeline; doc pairs expand back afterwards
+    * ([[expandPairs]]).
+    */
+  private[graft] def minhashCollapsed(keyed: DataFrame, threshold: Double,
+                                      numHashes: Int, bands: Int,
+                                      shingleSize: Int): DataFrame =
+    expandPairs(minhashCollapsedRep(keyed, threshold, numHashes, bands,
+      shingleSize), "jaccard")
+
+  /** Doc-level connected-component labels of the verified near-duplicate
+    * graph — row-equal (spec-pinned) to
+    * `connectedComponents(minhashNearDuplicates(...).select("id_a","id_b"))`
+    * but WITHOUT ever materializing within-group pairs on the collapsed
+    * path ([[repLabels]]). This is the 100 TB shape for every
+    * cluster/survivor consumer ([[minhashClusters]],
+    * [[dropNearDuplicates]], [[dropNearDuplicatesBy]]): m verbatim copies
+    * cost O(m) membership rows here, never the m²/2 pair expansion the
+    * pair-audit API emits — the same consumer
+    * [[graft.ops.Similarity.embeddingDedupIds]] runs.
     *
     * The returned labels are localCheckpoint-materialized (the CC loop
     * inside is already eager), so callers run this under
@@ -529,20 +566,8 @@ object Dedup {
                                    collapse: Option[Boolean]): DataFrame = {
     val keyed = df.select(col(idCol).as("id"), col(textCol).as("__text"))
     if (collapse.getOrElse(duplicationMaterial(keyed, col("__text")))) {
-      val r = minhashCollapsedRep(keyed, threshold, numHashes, bands, shingleSize,
-        materializePairs = true)
-      val comp = connectedComponents(r.repVerified.select("id_a", "id_b"),
-          toFixpoint = true)
-        .withColumnRenamed("id", "__rid")
-      // duplicated groups that cleared the same-text threshold but have no
-      // cross-group edge are still clusters of their own (label = rep id)
-      val repLabel = comp.unionByName(
-        r.selfJ.filter(col("gsz") >= 2).select(col("__rid"))
-          .join(comp.select("__rid"), Seq("__rid"), "left_anti")
-          .select(col("__rid"), col("__rid").as("component")))
-      r.membership
-        .join(repLabel.hint("shuffle_hash"), "__rid")
-        .select(col("id"), col("component"))
+      repLabels(minhashCollapsedRep(keyed, threshold, numHashes, bands,
+          shingleSize, materializePairs = true))
         .localCheckpoint() // pin label rows before the caches release
     } else {
       val verified = minhashPerDoc(keyed, threshold, numHashes,
@@ -1253,7 +1278,7 @@ object Dedup {
     // paragraph text is never needed after the agg (only the winner
     // coordinates are), so the post-combine shuffle ships (64-char key,
     // 12-byte struct) rows instead of multi-hundred-byte paragraphs as
-    // grouping keys (the minhash-collapse argument; sha2-256 is the
+    // grouping keys (the argument on [[contentGroups]]; sha2-256 is the
     // collision-resistant equality proxy safe on untrusted corpora).
     val winners = paras.groupBy(sha2(col("para"), 256))
       .agg(min(struct(col("id"), col("pidx"))).as("w"))

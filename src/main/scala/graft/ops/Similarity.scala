@@ -547,57 +547,54 @@ object Similarity {
   }
 
   /** Identical-vector collapse of the bucket self-join — row-identical to
-    * [[embedPairsPerDoc]] (the minhash-collapse argument: identical
-    * vectors share the bucket, the norm, and every pairwise cosine, so
-    * rep-level pairs expand exactly, and same-group sims come from the
-    * SAME cosine expression — a duplicated zero vector yields 0/0 = NaN
-    * which passes the threshold filter under Spark's NaN ordering,
-    * whatever the per-doc join emitted).
+    * [[embedPairsPerDoc]]: identical vectors share the bucket, the norm
+    * and every pairwise cosine, so rep-level pairs expand exactly
+    * ([[Dedup.expandPairs]]).
     */
   private[graft] def embedPairsCollapsed(c: DataFrame,
                                          threshold: Double): DataFrame = {
-    // Content addressing (the minhash-collapse argument, applied to
-    // vectors): group and membership-join on sha2 of the vector's
-    // canonical byte image, never on the multi-KB array itself — the
-    // membership join ships (64-char key, id) rows instead of shuffling
-    // the corpus keyed by full embeddings. graft_vec_bytes folds -0.0 and
-    // NaN exactly as Catalyst's NormalizeFloatingNumbers does, so the
-    // hash groups are the groupBy(vec) groups; one representative vector
-    // rides first() inside the map-side-combined aggregate.
-    val hashed = c.withColumn("__vh", vecKey(col("vec")))
-    val groups = hashed.groupBy(col("__vh"))
-      .agg(min(col("id")).as("rid"), first(col("vec")).as("vec"),
-        min(col("bucket")).as("bucket"), min(col("nrm")).as("nrm"))
-    val membership = Materialize.persist(hashed.select(col("__vh"), col("id"))
-      .join(groups.select(col("__vh"), col("rid")).hint("shuffle_hash"), Seq("__vh"))
-      .select(col("rid"), col("id")))
-    val ga = groups.select(col("bucket"), col("rid").as("rid_a"),
+    val (hashed, groups) = vecGroups(c)
+    Dedup.expandPairs(embedCollapsedRep(hashed, groups, threshold), "sim")
+  }
+
+  /** One row per DISTINCT vector of `c` — `__h`, `rid`, `gsz`, `vec`,
+    * `bucket`, `nrm` — content-addressed on [[vecKey]] (see
+    * [[Dedup.contentGroups]]), plus `c` with its `__h` column.
+    */
+  private def vecGroups(c: DataFrame): (DataFrame, DataFrame) =
+    Dedup.contentGroups(c, vecKey(col("vec")), first(col("vec")).as("vec"),
+      min(col("bucket")).as("bucket"), min(col("nrm")).as("nrm"))
+
+  /** The embedding builder of [[Dedup.CollapsedRep]] (score column `sim`)
+    * over [[vecGroups]]' output; the caller decides whether `groups` is
+    * persisted before membership is built from it.
+    */
+  private def embedCollapsedRep(hashed: DataFrame, groups: DataFrame,
+                                threshold: Double): Dedup.CollapsedRep = {
+    val membership = Dedup.contentMembership(hashed, groups)
+    val ga = groups.select(col("bucket"), col("rid").as("id_a"),
       col("vec").as("vec_a"), col("nrm").as("nrm_a"))
-    val gb = groups.select(col("bucket"), col("rid").as("rid_b"),
+    val gb = groups.select(col("bucket"), col("rid").as("id_b"),
       col("vec").as("vec_b"), col("nrm").as("nrm_b"))
-    val repPairs = ga.join(gb.hint("shuffle_hash"), "bucket")
-      .filter(col("rid_a") < col("rid_b"))
-      .select(col("rid_a"), col("rid_b"),
+    // rep-level near-dup edges: distinct-vector-sized, shuffle-hash pinned
+    // for the same never-broadcast-embeddings rule as the per-doc join
+    val repVerified = ga.join(gb.hint("shuffle_hash"), "bucket")
+      .filter(col("id_a") < col("id_b"))
+      .select(col("id_a"), col("id_b"),
         cosineFromNorms(dot(col("vec_a"), col("vec_b")), col("nrm_a"), col("nrm_b")).as("sim"))
       .filter(col("sim") >= threshold)
-    val cross = repPairs
-      .join(membership.select(col("rid").as("rid_a"), col("id").as("__ma"))
-        .hint("shuffle_hash"), "rid_a")
-      .join(membership.select(col("rid").as("rid_b"), col("id").as("__mb"))
-        .hint("shuffle_hash"), "rid_b")
-      .select(least(col("__ma"), col("__mb")).as("id_a"),
-        greatest(col("__ma"), col("__mb")).as("id_b"),
-        round(col("sim"), 6).as("sim"))
-    val selfSim = groups
-      .select(col("rid"),
+      .select(col("id_a"), col("id_b"), round(col("sim"), 6).as("sim"))
+    // Same-group sims come from the SAME cosine expression the per-doc
+    // join applies to two copies: 1 for any non-zero vector, and 0 for the
+    // zero vector ([[cosineFromNorms]] returns 0 on a zero denominator, so
+    // a duplicated zero vector clears the threshold only when it is ≤ 0 —
+    // exactly when the per-doc join emits its pairs).
+    val selfJ = groups
+      .select(col("rid"), col("gsz"),
         cosineFromNorms(dot(col("vec"), col("vec")), col("nrm"), col("nrm")).as("sim"))
       .filter(col("sim") >= threshold)
-    val same = membership.join(selfSim.hint("shuffle_hash"), "rid")
-      .join(membership.select(col("rid"), col("id").as("id_b"))
-        .hint("shuffle_hash"), "rid")
-      .filter(col("id") < col("id_b"))
-      .select(col("id").as("id_a"), col("id_b"), round(col("sim"), 6).as("sim"))
-    cross.union(same)
+      .select(col("rid"), col("gsz"), round(col("sim"), 6).as("sim"))
+    Dedup.CollapsedRep(membership, repVerified, selfJ)
   }
 
   /** Survivor-oriented embedding dedup: one row `(survivor, dropped_id)`
@@ -614,10 +611,9 @@ object Similarity {
     * corpus.
     *
     * Row-equal to dropping non-min ids over the transitive closure of the
-    * pair API's output (spec-pinned on a duplicated corpus): identical
-    * vectors share the bucket and every pairwise cosine, so the rep graph's
-    * components expand exactly to the doc graph's, and min-rep = min-doc
-    * id because each rep IS its group's min id.
+    * pair API's output (spec-pinned on a duplicated corpus): the labels
+    * come from [[Dedup.repLabels]], the consumer the minhash label path
+    * shares, and each label IS its cluster's survivor.
     *
     * The connected-components loop inside is EAGER, so construction runs
     * jobs; the returned frame then reads only the CC loop's checkpointed
@@ -633,53 +629,12 @@ object Similarity {
     val c = corpus.select(col("id"), col("vec").cast("array<double>").as("vec"))
       .withColumn("bucket", lshBucket(col("vec"), numPlanes, dim))
       .withColumn("nrm", norm(col("vec")))
-    // One representative (min id) per DISTINCT vector — the same group /
-    // membership construction as [[embedPairsCollapsed]] (and the same
-    // row-identity argument), plus the group size for the self-dup test.
-    // PERSISTED: three consumers read it (the rep self-join behind the
-    // eager CC, the membership join, the selfDup branch) — unpersisted,
-    // each re-runs the corpus-wide full-vector hash aggregate.
-    // Content-addressed like [[embedPairsCollapsed]]: the membership join
-    // ships (64-char sha2 key, id), never the full vector as a join key.
-    val hashed = c.withColumn("__vh", vecKey(col("vec")))
-    val groups = Materialize.persist(hashed.groupBy(col("__vh"))
-      .agg(min(col("id")).as("rid"), first(col("vec")).as("vec"),
-        min(col("bucket")).as("bucket"),
-        min(col("nrm")).as("nrm"), count(lit(1)).as("gsz")))
-    val membership = Materialize.persist(hashed.select(col("__vh"), col("id"))
-      .join(groups.select(col("__vh"), col("rid")).hint("shuffle_hash"), Seq("__vh"))
-      .select(col("rid"), col("id")))
-    val ga = groups.select(col("bucket"), col("rid").as("rid_a"),
-      col("vec").as("vec_a"), col("nrm").as("nrm_a"))
-    val gb = groups.select(col("bucket"), col("rid").as("rid_b"),
-      col("vec").as("vec_b"), col("nrm").as("nrm_b"))
-    // rep-level near-dup edges: distinct-vector-sized, shuffle-hash pinned
-    // for the same never-broadcast-embeddings rule as the pair chain
-    val repEdges = ga.join(gb.hint("shuffle_hash"), "bucket")
-      .filter(col("rid_a") < col("rid_b"))
-      .filter(cosineFromNorms(dot(col("vec_a"), col("vec_b")),
-        col("nrm_a"), col("nrm_b")) >= threshold)
-      .select(col("rid_a").as("id_a"), col("rid_b").as("id_b"))
-    // duplicated-vector groups whose members are mutual near-dups (the
-    // self-cosine is 1 for any non-zero vector and NaN — which passes
-    // under Spark's NaN ordering — for the zero vector, so this matches
-    // the pair API's same-group semantics exactly)
-    val selfDup = groups.filter(col("gsz") >= 2)
-      .filter(cosineFromNorms(dot(col("vec"), col("vec")),
-        col("nrm"), col("nrm")) >= threshold)
-      .select(col("rid"))
-    // min-label components over the rep graph (EAGER, checkpointed); a
-    // component's label = its min rid = the cluster's min doc id, because
-    // every rep is its own group's min id — so the label IS the survivor.
-    val comp = Dedup.connectedComponents(repEdges, toFixpoint = true)
-      .withColumnRenamed("id", "rid")
-    // reps in clusters: graph components ∪ self-dup singleton groups (a
-    // duplicated vector with no cross-group edge is still a cluster)
-    val repLabel = comp.unionByName(
-      selfDup.join(comp.select("rid"), Seq("rid"), "left_anti")
-        .select(col("rid"), col("rid").as("component")))
-    membership
-      .join(repLabel.hint("shuffle_hash"), Seq("rid"))
+    // PERSISTED: three consumers read the groups (the rep self-join behind
+    // the eager CC, the membership join, the self-dup branch) —
+    // unpersisted, each re-runs the corpus-wide full-vector hash aggregate.
+    val (hashed, groups) = vecGroups(c)
+    val r = embedCollapsedRep(hashed, Materialize.persist(groups), threshold)
+    Dedup.repLabels(r)
       .filter(col("id") =!= col("component"))
       .select(col("component").as("survivor"), col("id").as("dropped_id"))
   }

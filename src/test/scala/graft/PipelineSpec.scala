@@ -91,6 +91,29 @@ class PipelineSpec extends SparkSpec {
       s"expected python-style issues in blob: ${rows(0).getString(2)}")
   }
 
+  test("ingestJson: padded and empty objects get the stamp spliced into valid JSON") {
+    // JSONL lines reach the splice as written (Readers.txt keeps padding),
+    // and validation accepts JSON whitespace around an object
+    val file = java.nio.file.Paths.get(tmpDir("ragged_"), "in.jsonl")
+    java.nio.file.Files.write(file,
+      " {\"a\": 1}\n{\"a\": 2}  \n{ }\n".getBytes("UTF-8"))
+    val dir = tmpDir("corpus_")
+    val recs = graft.ingest.Readers.txt(spark, file.toString)
+    val r = Pipeline.ingestJson(spark, recs, "content", dir)
+    assert(r.recordCount == 3)
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val blobs = Corpus.records(spark, dir).select("data").collect().map(_.getString(0))
+    assert(blobs.length == 3)
+    blobs.foreach { b =>
+      val tree = scala.util.Try(mapper.readTree(b)).toOption
+      assert(tree.exists(_.isObject), s"stored blob is not a JSON object: $b")
+      assert(tree.get.path("_schema_version").asInt(-1) == r.version,
+        s"blob missing spliced _schema_version: $b")
+      assert(tree.get.has("_ingested_at") && tree.get.has("_quality_issues"),
+        s"blob missing spliced stamp fields: $b")
+    }
+  }
+
   test("stampAndSerialize (struct variant) renders the same blob as the splice path") {
     import graft.ops.{Corpus => C, Validate}
     import graft.model.JsonSchema

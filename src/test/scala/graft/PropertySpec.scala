@@ -481,6 +481,60 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("minhash label law: collapsed labels == per-doc labels on random duplicated corpora") {
+    val word = Gen.oneOf("ba", "qu", "xo", "ze", "mi", "ta", "re", "lu", "ko")
+    val docGen = Gen.chooseNum(0, 9).flatMap(n => Gen.listOfN(n, word))
+      .map(_.mkString(" "))
+    val corpusGen = for {
+      texts <- Gen.nonEmptyListOf(docGen)
+      dups <- Gen.listOfN(texts.size, Gen.chooseNum(1, 4))
+    } yield texts.zip(dups).zipWithIndex.flatMap { case ((t, d), i) =>
+      (0 until d).map(c => (i * 10L + c, t))
+    }
+    def canonL(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(identity).toSeq
+    samples(corpusGen, 5).foreach { rows =>
+      val df = rows.toDF("id", "text")
+      graft.ops.Materialize.scoped {
+        val collapsed = canonL(graft.ops.Dedup.minhashLabels(df, "id", "text",
+          0.6, 16, 4, 3, Some(true)))
+        val perDoc = canonL(graft.ops.Dedup.minhashLabels(df, "id", "text",
+          0.6, 16, 4, 3, Some(false)))
+        assert(collapsed == perDoc, s"corpus=$rows")
+      }
+    }
+  }
+
+  test("embedding label law: embeddingDedupIds == closure-minus-min of per-doc pairs") {
+    // Every draw carries a duplicated-or-single zero vector; at threshold
+    // 0.0 the zero vector's self-cosine (0) clears the threshold, at 0.8
+    // it does not — both paths must agree either way.
+    val vecGen = Gen.listOfN(3, Gen.chooseNum(-2, 2)).map(_.map(_.toDouble))
+    val corpusGen = for {
+      vecs <- Gen.listOf(vecGen).map(List(0.0, 0.0, 0.0) :: _)
+      dups <- Gen.listOfN(vecs.size, Gen.chooseNum(1, 3))
+    } yield vecs.zip(dups).zipWithIndex.flatMap { case ((v, d), i) =>
+      (0 until d).map(c => (i * 10L + c, v))
+    }
+    def canon2(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(identity).toSeq
+    for (rows <- samples(corpusGen, 4); threshold <- Seq(0.8, 0.0)) {
+      val corpus = rows.toDF("id", "vec")
+      val c = corpus
+        .select(col("id"), col("vec").cast("array<double>").as("vec"))
+        .withColumn("bucket", graft.ops.Similarity.lshBucket(col("vec"), 4, 3))
+        .withColumn("nrm", graft.ops.Similarity.norm(col("vec")))
+      val expected = canon2(graft.ops.Dedup.connectedComponents(
+          graft.ops.Similarity.embedPairsPerDoc(c, threshold).select("id_a", "id_b"))
+        .filter(col("id") =!= col("component"))
+        .select(col("component"), col("id")))
+      graft.ops.Materialize.scoped {
+        val got = canon2(graft.ops.Similarity.embeddingDedupIds(corpus, threshold, 4, 3))
+        assert(got == expected, s"threshold=$threshold corpus=$rows")
+      }
+    }
+  }
+
   test("semanticDedup collapse law: dropped ids identical on random assignments") {
     // Random (id, iv, cluster) tables with duplicated quantized vectors
     // (incl. zero vectors) across a few clusters: the group-collapsed
