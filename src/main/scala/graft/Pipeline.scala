@@ -9,11 +9,17 @@ import org.apache.spark.sql.functions._
   * §3.1): ingest → extract patterns → infer schema → evolve version →
   * validate → stamp metadata → append to corpus.
   *
-  * Spark shape: ONE distributed job per batch. Extraction, serialization,
-  * validation, stamping, and the parity blob render fuse into the store
-  * write's map-only chain; the V2 counters ride the same job via
-  * `Dataset.observe`. Everything else is O(1) driver-side control plane
-  * (empty-batch probe, id seed, the version state machine).
+  * Spark shape: ONE write job per batch, plus what the input needs before
+  * it. Extraction, serialization, validation, stamping, and the parity
+  * blob render fuse into the store write's map-only chain (no sort: the
+  * batch goes straight into its version directory, see [[Corpus.append]]);
+  * the V2 counters ride the same job via `Dataset.observe`. Before the
+  * write, `ingest` runs the empty-batch probe (one job) and, for a batch
+  * the spread rule below repartitions, the spread's shuffle stage (one
+  * more); `ingestJson` runs the inference jobs instead of the probe. So a
+  * small CSV batch takes 3 jobs and a batch that already has enough
+  * splits takes 2. The id seed and the version state machine are O(1)
+  * driver-side control plane (sidecar reads, no job).
   *
   * Schema inference on this path is CONSTANT, not a scan: a DataFrame batch
   * has a fixed column set and the blob is rendered with
@@ -48,12 +54,16 @@ object Pipeline {
     if (batch.isEmpty)
       return IngestResult(evo.latestVersion, JsonSchema(Map.empty, Nil), 0, 0, 0)
 
-    // Spread a narrow batch before the render+write: one small file with a
-    // single row group arrives as ONE input split, which would serialize the
-    // whole extract -> blob-render -> write chain on one core while the rest
-    // idle. The repartition shuffles only the raw batch (cheap at batch
-    // sizes) and is skipped when the source already carries enough splits —
-    // at warehouse scale it always does, so this never shuffles 100 TB.
+    // Spread a narrow batch before the render+write: a small file arrives
+    // as one or a few input splits, which would serialize the whole
+    // extract -> blob-render -> write chain on one core while the rest
+    // idle. The rule counts splits, not rows or bytes: a small CSV or JSON
+    // file is one split and gets spread over every core, while a
+    // single-row-group parquet file of a few MB already arrives as 2 splits
+    // (one of them empty) and, on 4 cores, is not spread. The repartition
+    // shuffles only the raw batch (cheap at batch sizes) and is skipped
+    // when the source already carries enough splits — at warehouse scale
+    // it always does, so this never shuffles 100 TB.
     val par = spark.sparkContext.defaultParallelism
     val spread =
       if (batch.rdd.getNumPartitions * 4 <= par) batch.repartition(par)

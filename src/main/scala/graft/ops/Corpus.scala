@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.MetadataBuilder
 
 /** W1/M1/Q1-Q4 — the corpus sink and its browse queries (reference
   * `app.py:133-173`).
@@ -9,8 +10,10 @@ import org.apache.spark.sql.functions._
   * The reference inserts one row per SQLite connection+commit (~1k rec/s, its
   * measured bottleneck — BASELINE.md). Here the sink is a single vectorized
   * parquet append: the whole ingest chain (extract → validate → stamp →
-  * to_json → write) is one map-only codegen'd stage, no shuffle, scaling
-  * linearly with executors.
+  * to_json → write) is one map-only codegen'd stage, no shuffle and no
+  * sort, scaling linearly with executors. One stamped batch is one schema
+  * version, so [[append]] writes it straight into that version's directory
+  * instead of asking Spark to partition (and hence sort) it.
   *
   * `id` assignment: the reference relies on SQLite AUTOINCREMENT. A global
   * sequential id is an anti-pattern at 100 TB (it serializes the write), so we
@@ -93,21 +96,29 @@ object Corpus {
       pyDumps(when(isObject, spliced).otherwise(col("data"))))
   }
 
+  /** Metadata key on the stamped `schema_version` column naming the one
+    * version the batch was stamped with; [[append]] reads it to pick the
+    * version directory.
+    */
+  private val VersionKey = "graft.version"
+
   /** The stamping block both serializers share: id, `_schema_version` and
     * the ingest timestamps (which `data` may reference), `data`, then the
-    * stored columns.
+    * stored columns. The `schema_version` column carries its version as
+    * metadata too (see [[append]]).
     */
   private def stamp(records: DataFrame, schemaVersion: Int, idBase: Long,
                     idCol: Option[String], data: Column): DataFrame = {
     val id = idCol.map(c => col(c).cast("long"))
       .getOrElse(lit(idBase) + monotonically_increasing_id())
+    val version = new MetadataBuilder().putLong(VersionKey, schemaVersion).build()
     records
       .withColumn("_schema_version", lit(schemaVersion))
       .withColumn("ingested_at", current_timestamp())
       .withColumn("_ingested_at_iso",
         date_format(col("ingested_at"), "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"))
       .withColumn("id", id)
-      .withColumn("schema_version", lit(schemaVersion))
+      .withColumn("schema_version", lit(schemaVersion).as("schema_version", version))
       .withColumn("data", data)
       .withColumn("ingested_at_iso", col("_ingested_at_iso"))
       .withColumn("quality_issues",
@@ -125,8 +136,26 @@ object Corpus {
     * to its partitions at the scan (`PartitionFilters`, pinned by PlanSpec)
     * instead of scanning an ever-growing corpus. Version count is small and
     * append-monotone, the ideal partition key cardinality.
+    *
+    * One stamped batch is one version: `stamped` must come from
+    * [[stampAndSerialize]] or [[stampAndSerializeJson]], whose
+    * `schema_version` column names that version in its metadata. The batch
+    * is written without `schema_version` straight into
+    * `records/schema_version=<v>/`, so the write stage stays map-only — a
+    * `partitionBy` write would sort the whole batch on a column that holds
+    * one value. Each row is still checked against the version: on the
+    * ingest path the column is the literal `v` and the check folds away;
+    * a frame mixing versions (a union of stamped batches, say) fails the
+    * append before anything is committed. The committer's `_SUCCESS`
+    * marker lands in the version directory; readers skip it.
     */
   def append(stamped: DataFrame, corpusDir: String): Unit = {
+    val stampedVersion = stamped.schema.find(_.name == "schema_version")
+      .map(_.metadata).filter(_.contains(VersionKey))
+    require(stampedVersion.isDefined,
+      "Corpus.append: `schema_version` carries no stamped version; build the " +
+        "batch with stampAndSerialize or stampAndSerializeJson")
+    val v = stampedVersion.get.getLong(VersionKey)
     val spark = stamped.sparkSession
     val fs = fsOf(spark, corpusDir)
     // The id high-water sidecar makes the next batch's idBase seed an O(1)
@@ -141,9 +170,12 @@ object Corpus {
     repairCompaction(fs, corpusDir) // never append beside an orphaned store
     fs.create(pendingPath(corpusDir), true).close()
     val obs = new org.apache.spark.sql.Observation()
-    stamped.observe(obs, max(col("id")).as("max_id"))
-      .write.mode(SaveMode.Append)
-      .partitionBy("schema_version").parquet(s"$corpusDir/records")
+    stamped
+      .withColumn("id", when(col("schema_version") === v, col("id"))
+        .otherwise(raise_error(lit(s"Corpus.append: batch stamped $v holds another version"))))
+      .drop("schema_version")
+      .observe(obs, max(col("id")).as("max_id"))
+      .write.mode(SaveMode.Append).parquet(s"$corpusDir/records/schema_version=$v")
     val mx = obs.get("max_id") match {
       case null => -1L
       case v => v.asInstanceOf[Long]

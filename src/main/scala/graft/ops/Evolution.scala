@@ -136,6 +136,12 @@ class Evolution(spark: SparkSession, corpusDir: String) {
       g.append("created_at", createdAt)
     }
 
+  /** Change-log row count from the parquet dimension; no job when the log
+    * has never been written (a new corpus). */
+  private def changeRows: Long =
+    if (!fs.exists(new org.apache.hadoop.fs.Path(changesPath))) 0L
+    else schemaChanges.count()
+
   /** Authoritative latest (version, schema) from the parquet dimension
     * (no-job short-circuit for a corpus with no history yet).
     */
@@ -175,7 +181,7 @@ class Evolution(spark: SparkSession, corpusDir: String) {
     if (hist.isEmpty) { fs.delete(statePendingPath, false); return }
     val (vNew, sNew, tsNew) =
       (hist(0).getInt(0), hist(0).getString(1), hist(0).getString(2))
-    var changeCount = schemaChanges.count()
+    var changeCount = changeRows
     if (hist.length == 2) {
       val (vOld, sOld) = (hist(1).getInt(0), hist(1).getString(1))
       val newNames = fieldNamesOfStoredSchema(sNew)
@@ -220,7 +226,7 @@ class Evolution(spark: SparkSession, corpusDir: String) {
       g.append("created_at", ts)
     }
 
-    var changeCount = state.map(_._2).getOrElse(schemaChanges.count())
+    var changeCount = state.map(_._2).getOrElse(changeRows)
     if (currentVersion > 0) {
       val added = (newFieldNames -- oldNames).toSeq.sorted
       val removed = (oldNames -- newFieldNames).toSeq.sorted

@@ -22,6 +22,13 @@ class EvolutionSpec extends SparkSpec {
     assert(evo.schemaChanges.count() == 0)
   }
 
+  test("the first evolve of a new corpus runs no Spark job") {
+    val evo = new Evolution(spark, tmpDir("evo_"))
+    val jobs = FinalPlans.jobsDuring(spark)(evo.evolve(schema("a", "b"), Set("a", "b")))
+    assert(jobs == 0)
+    assert(evo.latestVersion == 1)
+  }
+
   test("identical field set is a version no-op") {
     val dir = tmpDir("evo_")
     val evo = new Evolution(spark, dir)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -17,25 +16,7 @@ import graft.ops.{Dedup, Materialize, Similarity}
 class GateSpec extends SparkSpec {
   import spark.implicits._
 
-  /** Jobs submitted while `body` runs (listener-counted; the listener bus
-    * is drained before reading — `waitUntilEmpty` is private[spark], so
-    * reached reflectively like the other bytecode-public test hooks).
-    */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    try {
-      body
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethods.filter(_.getName == "waitUntilEmpty")
-        .find(_.getParameterCount == 0).foreach(_.invoke(bus))
-      n.get()
-    } finally sc.removeSparkListener(l)
-  }
+  private def jobsDuring(body: => Unit): Int = FinalPlans.jobsDuring(spark)(body)
 
   private def docs = Seq(
     (1L, "the quick brown fox jumps over the lazy dog again today"),

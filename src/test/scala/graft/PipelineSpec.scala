@@ -168,16 +168,18 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
+  /** Data files under `dir`, recursively. */
+  private def dataFiles(dir: String): Seq[String] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+    walk(new java.io.File(dir)).map(_.getPath).filter(_.endsWith(".parquet"))
+  }
+
   test("compact rewrites many small appends into few files, data intact") {
     val dir = tmpDir("corpus_")
     (1 to 5).foreach(i =>
       Pipeline.ingest(spark, Seq((s"doc$i", i)).toDF("content", "n"), dir))
-    def parquetFiles = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-      walk(new java.io.File(s"$dir/records"))
-        .filter(_.getName.endsWith(".parquet"))
-    }
+    def parquetFiles = dataFiles(s"$dir/records")
     val before = Corpus.records(spark, dir).orderBy("id")
       .select("id", "data").collect().map(r => (r.getLong(0), r.getString(1)))
     assert(parquetFiles.size >= 5, s"expected >=5 small files, got ${parquetFiles.size}")
@@ -271,6 +273,64 @@ class PipelineSpec extends SparkSpec {
     assert(repairedMax > trueMax, "new batch must seed above the scanned max")
     assert(Corpus.readHighWater(spark, dir) == repairedMax)
     assert(!new java.io.File(s"$dir/_maxid_pending").exists())
+  }
+
+  private def stampable = Seq(("x", 1), ("y", 2), ("z", 3)).toDF("content", "n")
+    .withColumn("_quality_issues", array().cast("array<string>"))
+
+  test("ingest and ingestJson write their batch without a sort") {
+    val dir = tmpDir("corpus_")
+    val plans = FinalPlans.during(spark) {
+      Pipeline.ingest(spark, Seq(("a", 1), ("b", 2)).toDF("content", "n"), dir)
+      Pipeline.ingestJson(spark, Seq("""{"a": 1}""", """{"b": 2}""").toDF("j"), "j", dir)
+    }
+    val writes = plans.collect {
+      case w: org.apache.spark.sql.execution.command.DataWritingCommandExec => w
+    }
+    assert(writes.size == 2, s"expected both batch writes, got:\n${plans.mkString("\n")}")
+    val sorts = plans.flatMap(p => FinalPlans.collectWithSubqueries(p) {
+      case s: org.apache.spark.sql.execution.SortExec => s
+    })
+    assert(sorts.isEmpty, s"ingest must not sort its batch:\n${sorts.mkString("\n")}")
+    assert(Corpus.records(spark, dir).groupBy("schema_version").count()
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap == Map(1 -> 2L, 2 -> 2L))
+  }
+
+  test("append of a frame mixing stamped versions fails and commits nothing") {
+    val dir = tmpDir("corpus_")
+    val mixed = Corpus.stampAndSerialize(stampable, 1, idBase = 0L)
+      .union(Corpus.stampAndSerialize(stampable, 2, idBase = 10L))
+    // literal versions fail at planning; cached ones inside the write tasks
+    intercept[Exception](Corpus.append(mixed, dir))
+    val cached = mixed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try intercept[Exception](Corpus.append(cached, dir))
+    finally cached.unpersist(blocking = true)
+    assert(dataFiles(s"$dir/records").isEmpty,
+      s"a failed append must leave no data file: ${dataFiles(s"$dir/records")}")
+  }
+
+  test("a persisted stamped batch lands in its version's directory") {
+    val dir = tmpDir("corpus_")
+    val stamped = Corpus.stampAndSerialize(stampable, 3, idBase = 0L)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      stamped.count()
+      Corpus.append(stamped, dir)
+    } finally stamped.unpersist(blocking = true)
+    val files = dataFiles(s"$dir/records")
+    val v3 = new java.io.File(s"$dir/records/schema_version=3").getPath
+    assert(files.nonEmpty && files.forall(_.startsWith(v3)),
+      s"expected every data file under $v3: $files")
+    assert(Corpus.records(spark, dir).select("schema_version").distinct()
+      .collect().map(_.getInt(0)).toSeq == Seq(3))
+  }
+
+  test("append refuses a frame that stampAndSerialize did not build") {
+    val dir = tmpDir("corpus_")
+    val plain = Seq((1L, "{}", 1)).toDF("id", "data", "schema_version")
+    intercept[IllegalArgumentException](Corpus.append(plain, dir))
+    assert(!new java.io.File(s"$dir/records").exists() &&
+      !new java.io.File(s"$dir/_maxid_pending").exists())
   }
 
   test("counters are per-batch, not cumulative") {
