@@ -9,17 +9,21 @@ import org.apache.spark.sql.functions._
   * §3.1): ingest → extract patterns → infer schema → evolve version →
   * validate → stamp metadata → append to corpus.
   *
-  * Spark shape: ONE write job per batch, plus what the input needs before
-  * it. Extraction, serialization, validation, stamping, and the parity
-  * blob render fuse into the store write's map-only chain (no sort: the
-  * batch goes straight into its version directory, see [[Corpus.append]]);
-  * the V2 counters ride the same job via `Dataset.observe`. Before the
-  * write, `ingest` runs the empty-batch probe (one job) and, for a batch
-  * the spread rule below repartitions, the spread's shuffle stage (one
-  * more); `ingestJson` runs the inference jobs instead of the probe. So a
-  * small CSV batch takes 3 jobs and a batch that already has enough
-  * splits takes 2. The id seed and the version state machine are O(1)
-  * driver-side control plane (sidecar reads, no job).
+  * Spark shape: ONE job per structured batch — the store write. Extraction,
+  * serialization, validation, stamping, and the parity blob render fuse
+  * into that write's map-only chain (no sort: the batch goes straight
+  * into its staging dir, see [[Corpus.append]]); the V2 counters and the
+  * row count that decides whether anything is published ride the same job
+  * via `Dataset.observe`. Everything else is driver-side control plane:
+  * the writer-side repair, the version [[Evolution.plan]] and
+  * [[Evolution.publish]] (sidecar and one-row-file reads and writes), the
+  * id seed (the high-water sidecar) and the move of the staged files. Jobs
+  * that can come on top, per batch:
+  *  - whatever the reader runs before `batch` exists (e.g. a CSV header
+  *    and `inferSchema` pass, a JSON or parquet schema pass);
+  *  - for a batch the spread rule below repartitions, its shuffle stage;
+  *  - in `ingestJson`, the key-presence inference jobs;
+  *  - after a crash, one high-water scan in the next writer's repair.
   *
   * Schema inference on this path is CONSTANT, not a scan: a DataFrame batch
   * has a fixed column set and the blob is rendered with
@@ -32,12 +36,20 @@ import org.apache.spark.sql.functions._
   */
 object Pipeline {
 
+  /** One batch's outcome. `addedFields`/`removedFields` are the batch's
+    * field-name diff against the version before it (every field for a new
+    * corpus, both empty when the version did not change) — for v > 1 the
+    * same lists as its change-log row. A batch of 0 rows publishes nothing
+    * and reports the latest version with an empty schema and diff.
+    */
   final case class IngestResult(
       version: Int,
       schema: JsonSchema,
       recordCount: Long,
       cleanCount: Long,
-      flaggedCount: Long)
+      flaggedCount: Long,
+      addedFields: Seq[String],
+      removedFields: Seq[String])
 
   /** Run the full ingest pipeline for one batch of records.
     *
@@ -50,23 +62,24 @@ object Pipeline {
     */
   def ingest(spark: SparkSession, batch: DataFrame, corpusDir: String,
              idCol: Option[String] = None): IngestResult = {
-    val evo = new Evolution(spark, corpusDir)
-    if (batch.isEmpty)
-      return IngestResult(evo.latestVersion, JsonSchema(Map.empty, Nil), 0, 0, 0)
-
-    // Spread a narrow batch before the render+write: a small file arrives
-    // as one or a few input splits, which would serialize the whole
-    // extract -> blob-render -> write chain on one core while the rest
-    // idle. The rule counts splits, not rows or bytes: a small CSV or JSON
-    // file is one split and gets spread over every core, while a
-    // single-row-group parquet file of a few MB already arrives as 2 splits
-    // (one of them empty) and, on 4 cores, is not spread. The repartition
-    // shuffles only the raw batch (cheap at batch sizes) and is skipped
-    // when the source already carries enough splits — at warehouse scale
-    // it always does, so this never shuffles 100 TB.
+    // Spread a narrow batch before the render+write: a large input that
+    // arrives as one or a few splits (a multi-line JSON or a compressed
+    // file, say) would serialize the whole extract -> blob-render -> write
+    // chain on one core while the rest idle. Both conditions must hold: at
+    // most one split per 4 cores, and at least Spark's own
+    // `spark.sql.files.openCostInBytes` of input by the plan's size
+    // estimate — the size below which Spark itself packs a file into
+    // another task instead of giving it one. So a CSV or JSON batch of a
+    // few hundred rows stays on its one task (and writes one file), and a
+    // single-row-group parquet file of a few MB, which arrives as 2 splits
+    // (one of them empty), is not spread on 4 cores. The repartition
+    // shuffles only the raw batch, and at warehouse scale the source always
+    // carries enough splits, so this never shuffles 100 TB.
     val par = spark.sparkContext.defaultParallelism
     val spread =
-      if (batch.rdd.getNumPartitions * 4 <= par) batch.repartition(par)
+      if (batch.queryExecution.optimizedPlan.stats.sizeInBytes >=
+            spark.sessionState.conf.filesOpenCostInBytes &&
+          batch.rdd.getNumPartitions * 4 <= par) batch.repartition(par)
       else batch
 
     // F2 — extract patterns from content (empty struct when none)
@@ -76,9 +89,6 @@ object Pipeline {
     val payloadCols = withPatterns.columns
     val schema = JsonSchema(
       payloadCols.map(_ -> "string").toMap, payloadCols.sorted.toSeq)
-
-    // A2/W2 — version state machine (driver-side control plane)
-    val version = evo.evolve(schema, schema.fieldNames)
 
     // V1 — CONSTANT on this path, like inference: the blob is rendered from
     // the batch's fixed column struct with nulls kept, so every record
@@ -96,7 +106,7 @@ object Pipeline {
     // `graft_pyjson` pass; otherwise to_json + the json.dumps re-render.
     val nativeRender =
       try spark.catalog.functionExists("graft_pyjson") catch { case _: Exception => false }
-    store(spark, validated, version, schema, corpusDir, idCol) { (observed, idBase) =>
+    store(spark, validated, schema, corpusDir, idCol) { (observed, version, idBase) =>
       Corpus.stampAndSerialize(observed, version,
         idBase = idBase, idCol = idCol, native = nativeRender)
     }
@@ -109,41 +119,49 @@ object Pipeline {
     */
   def ingestJson(spark: SparkSession, records: DataFrame, jsonCol: String,
                  corpusDir: String, idCol: Option[String] = None): IngestResult = {
-    val evo = new Evolution(spark, corpusDir)
     Materialize.scoped {
       val asJson = Materialize.persist(records.withColumnRenamed(jsonCol, "data"))
       InferSchema.infer(asJson, "data") match {
-        case None => IngestResult(evo.latestVersion, JsonSchema(Map.empty, Nil), 0, 0, 0)
+        case None => nothingStored(spark, corpusDir)
         case Some(schema) =>
-          val version = evo.evolve(schema, schema.fieldNames)
           val validated = Validate.withQualityIssues(asJson, schema, "data")
-          store(spark, validated, version, schema, corpusDir, idCol) { (observed, idBase) =>
+          store(spark, validated, schema, corpusDir, idCol) { (observed, version, idBase) =>
             Corpus.stampAndSerializeJson(observed, version, idBase = idBase, idCol = idCol)
           }
       }
     }
   }
 
-  /** The ingest tail both entry points share: stamp and render through
-    * `stamp` (given the observed batch and the id base), append, and
-    * return the V2 counters, which ride the write job via `observe()` —
-    * no second pass over the batch. The id base seeds above the corpus
-    * max so ids stay unique and ascending across batches (the reference's
-    * AUTOINCREMENT contract that Q4's "latest N by id desc" depends on).
+  /** The ingest tail both entry points share (A2/W2 + M1/W1): repair the
+    * corpus, plan the batch's version, stamp and render through `stamp`
+    * (given the observed batch, the planned version and the id base), then
+    * stage-then-publish it with [[Corpus.commit]] — the version is
+    * published only once the batch's records are written and counted, and
+    * a batch of 0 rows publishes nothing. The V2 counters ride the write
+    * job via `observe()` — no second pass over the batch. The id base seeds
+    * above the corpus max so ids stay unique and ascending across batches
+    * (the reference's AUTOINCREMENT contract that Q4's "latest N by id
+    * desc" depends on).
     */
-  private def store(spark: SparkSession, validated: DataFrame, version: Int,
-                    schema: JsonSchema, corpusDir: String, idCol: Option[String])(
-                    stamp: (DataFrame, Long) => DataFrame): IngestResult = {
+  private def store(spark: SparkSession, validated: DataFrame, schema: JsonSchema,
+                    corpusDir: String, idCol: Option[String])(
+                    stamp: (DataFrame, Int, Long) => DataFrame): IngestResult = {
+    Corpus.repair(spark, corpusDir)
+    val plan = new Evolution(spark, corpusDir).plan(schema, schema.fieldNames)
     val idBase = if (idCol.isDefined) 0L else Corpus.maxId(spark, corpusDir) + 1L
     val obs = new org.apache.spark.sql.Observation()
     val observed = validated.observe(obs,
-      count(lit(1)).as("n"),
       count(when(size(col("_quality_issues")) === 0, 1)).as("clean"),
       count(when(size(col("_quality_issues")) > 0, 1)).as("flagged"))
-    Corpus.append(stamp(observed, idBase), corpusDir)
+    val n = Corpus.commit(stamp(observed, plan.version, idBase), corpusDir, Some(plan))
+    if (n == 0) return nothingStored(spark, corpusDir)
     val m = obs.get // collected during the write job
-    IngestResult(version, schema,
-      m("n").asInstanceOf[Long], m("clean").asInstanceOf[Long],
-      m("flagged").asInstanceOf[Long])
+    IngestResult(plan.version, schema, n,
+      m("clean").asInstanceOf[Long], m("flagged").asInstanceOf[Long],
+      plan.added, plan.removed)
   }
+
+  private def nothingStored(spark: SparkSession, corpusDir: String): IngestResult =
+    IngestResult(new Evolution(spark, corpusDir).latestVersion, JsonSchema(Map.empty, Nil),
+      0, 0, 0, Nil, Nil)
 }

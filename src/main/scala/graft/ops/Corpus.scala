@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.model.CorpusModel
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.MetadataBuilder
@@ -140,49 +141,150 @@ object Corpus {
     * One stamped batch is one version: `stamped` must come from
     * [[stampAndSerialize]] or [[stampAndSerializeJson]], whose
     * `schema_version` column names that version in its metadata. The batch
-    * is written without `schema_version` straight into
-    * `records/schema_version=<v>/`, so the write stage stays map-only — a
-    * `partitionBy` write would sort the whole batch on a column that holds
-    * one value. Each row is still checked against the version: on the
+    * is written without `schema_version`, so the write stage stays map-only
+    * — a `partitionBy` write would sort the whole batch on a column that
+    * holds one value. Each row is still checked against the version: on the
     * ingest path the column is the literal `v` and the check folds away;
     * a frame mixing versions (a union of stamped batches, say) fails the
-    * append before anything is committed. The committer's `_SUCCESS`
-    * marker lands in the version directory; readers skip it.
+    * append before anything is committed.
+    *
+    * Stage, then publish, in this order (the one write job is step 2):
+    *  1. the pending marker `_maxid_pending` goes up;
+    *  2. the batch is written to the hidden `_staging/` dir, counting its
+    *     rows and max id on the way (`observe`); a failed write, or a batch
+    *     of 0 rows, drops the dir and the marker and changes nothing else;
+    *  3. the commit point: `_staging/_publish` (tmp + rename) records the
+    *     version and, for [[graft.Pipeline]]'s batches, the planned schema;
+    *  4. the version is published ([[Evolution.publish]], idempotent);
+    *  5. the staged files move into `records/schema_version=<v>/`;
+    *  6. the id high-water sidecar advances; `_staging/` and the marker go.
+    * Crash guarantee (single writer): the next writer's [[repair]] leaves
+    * the corpus either as it was before the batch (no commit point: the
+    * staged files are dropped) or with the whole batch (commit point
+    * present: steps 4–6 run again, each skipping what is already done), and
+    * rebuilds the high-water from the records. A version is therefore never
+    * published without its records. While the marker is up, [[maxId]]
+    * falls back to the authoritative scan.
     */
   def append(stamped: DataFrame, corpusDir: String): Unit = {
+    repair(stamped.sparkSession, corpusDir)
+    commit(stamped, corpusDir, None)
+  }
+
+  /** [[append]]'s steps 1–6 for a batch the caller has already repaired
+    * the corpus for; `plan`, when given, is published at step 4 and must
+    * name the version `stamped` carries. Returns the rows committed.
+    */
+  private[graft] def commit(stamped: DataFrame, corpusDir: String,
+                            plan: Option[Evolution.Plan]): Long = {
     val stampedVersion = stamped.schema.find(_.name == "schema_version")
       .map(_.metadata).filter(_.contains(VersionKey))
     require(stampedVersion.isDefined,
       "Corpus.append: `schema_version` carries no stamped version; build the " +
         "batch with stampAndSerialize or stampAndSerializeJson")
-    val v = stampedVersion.get.getLong(VersionKey)
+    val v = stampedVersion.get.getLong(VersionKey).toInt
+    require(plan.forall(_.version == v), s"Corpus.commit: batch stamped $v, plan $plan")
     val spark = stamped.sparkSession
     val fs = fsOf(spark, corpusDir)
-    // The id high-water sidecar makes the next batch's idBase seed an O(1)
-    // driver-side file read instead of a max-agg scan over an append-only
-    // corpus that only grows. Crash-safe under the corpus's single-writer
-    // discipline: the pending marker is up for the whole append, and maxId
-    // falls back to the authoritative scan whenever it finds one — so a
-    // crash anywhere in here can only cost readers a scan, never a
-    // duplicate id. Repair is writer-only (maxId never mutates): the next
-    // append through here publishes an accurate sidecar and clears any
-    // stale marker along with its own.
-    repairCompaction(fs, corpusDir) // never append beside an orphaned store
-    fs.create(pendingPath(corpusDir), true).close()
-    val obs = new org.apache.spark.sql.Observation()
-    stamped
-      .withColumn("id", when(col("schema_version") === v, col("id"))
-        .otherwise(raise_error(lit(s"Corpus.append: batch stamped $v holds another version"))))
-      .drop("schema_version")
-      .observe(obs, max(col("id")).as("max_id"))
-      .write.mode(SaveMode.Append).parquet(s"$corpusDir/records/schema_version=$v")
-    val mx = obs.get("max_id") match {
-      case null => -1L
-      case v => v.asInstanceOf[Long]
+    val staging = stagingPath(corpusDir)
+    def rollBack(): Unit = {
+      fs.delete(staging, true)
+      fs.delete(pendingPath(corpusDir), false)
     }
+    fs.create(pendingPath(corpusDir), true).close()
+    // tasks of an earlier failed write that Spark was still cancelling can
+    // leave uncommitted attempt dirs in `_staging` after its roll-back
+    fs.delete(staging, true)
+    reached("marked")
+    val obs = new org.apache.spark.sql.Observation()
+    try
+      stamped
+        .withColumn("id", when(col("schema_version") === v, col("id"))
+          .otherwise(raise_error(lit(s"Corpus.append: batch stamped $v holds another version"))))
+        .drop("schema_version")
+        .observe(obs, count(lit(1)).as("n"), max(col("id")).as("max_id"))
+        .write.mode(SaveMode.Append).parquet(staging.toString)
+    catch { case e: Throwable => rollBack(); throw e }
+    reached("staged")
+    val m = obs.get
+    val n = m("n").asInstanceOf[Long]
+    if (n == 0) { rollBack(); return 0L }
+    val commitTmp = new org.apache.hadoop.fs.Path(staging, ".publish.tmp")
+    val out = fs.create(commitTmp, true)
+    try out.write(s"$v\n${plan.fold("")(_.schemaJson)}".getBytes("UTF-8"))
+    finally out.close()
+    if (!fs.rename(commitTmp, commitPath(corpusDir)))
+      sys.error(s"Corpus.commit: cannot publish $commitTmp")
+    reached("committed")
+    finish(spark, fs, corpusDir, v, plan)
+    val mx = Option(m("max_id")).fold(-1L)(_.asInstanceOf[Long])
     writeHighWater(spark, corpusDir, math.max(mx, readHighWater(spark, corpusDir)))
+    reached("highwater")
+    fs.delete(staging, true)
+    reached("cleaned")
+    fs.delete(pendingPath(corpusDir), false)
+    n
+  }
+
+  /** Steps 4–5 of [[append]]: publish the version, then move the staged
+    * data files into its directory. Both skip what is already done, so a
+    * [[repair]] can run them again after a crash anywhere inside.
+    */
+  private def finish(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
+                     corpusDir: String, v: Int, plan: Option[Evolution.Plan]): Unit = {
+    plan.foreach(p => new Evolution(spark, corpusDir).publish(p))
+    reached("published")
+    val dest = new org.apache.hadoop.fs.Path(s"$corpusDir/records/schema_version=$v")
+    fs.mkdirs(dest)
+    fs.listStatus(stagingPath(corpusDir)).map(_.getPath)
+      .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+      .zipWithIndex.foreach { case (f, i) =>
+        if (!fs.rename(f, new org.apache.hadoop.fs.Path(dest, f.getName)))
+          sys.error(s"Corpus.commit: cannot move $f into $dest")
+        if (i == 0) reached("moved-one")
+      }
+    reached("moved")
+  }
+
+  /** Writer-side repair of an interrupted [[compact]] ([[repairCompaction]])
+    * and of an interrupted batch (pending marker up, see [[append]]): a
+    * batch that reached its commit point is rolled forward, any other is
+    * dropped; then the high-water sidecar is rebuilt from the records and
+    * the marker cleared. Every writer runs this first — [[append]],
+    * [[compact]], [[Evolution.evolve]] and [[graft.Pipeline]]'s ingests —
+    * and readers never do. Without a marker it is two `exists` calls; with
+    * one it runs the high-water scan (one job).
+    */
+  private[graft] def repair(spark: SparkSession, corpusDir: String): Unit = {
+    val fs = fsOf(spark, corpusDir)
+    repairCompaction(fs, corpusDir)
+    if (!fs.exists(pendingPath(corpusDir))) return
+    if (fs.exists(commitPath(corpusDir))) {
+      val in = fs.open(commitPath(corpusDir))
+      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+      val nl = txt.indexOf('\n')
+      val v = txt.substring(0, nl).toInt
+      val plan = Some(txt.substring(nl + 1)).filter(_.nonEmpty).map { json =>
+        val p = new Evolution(spark, corpusDir)
+          .planOf(json, Evolution.fieldNamesOfStoredSchema(json))
+        require(p.version == v, s"Corpus.repair: staged batch of version $v, plan $p")
+        p
+      }
+      finish(spark, fs, corpusDir, v, plan)
+    }
+    fs.delete(stagingPath(corpusDir), true)
+    writeHighWater(spark, corpusDir,
+      math.max(maxId(spark, corpusDir), readHighWater(spark, corpusDir)))
     fs.delete(pendingPath(corpusDir), false)
   }
+
+  /** Test seam: the [[commit]] step after which to throw, simulating a
+    * crash there so a spec can run the next writer's [[repair]]. Empty
+    * outside those specs. */
+  @volatile private[graft] var crashAfter: String = ""
+
+  private def reached(step: String): Unit =
+    if (step == crashAfter) throw new IllegalStateException(s"simulated crash after $step")
 
   /** Record-store dirs in PREFERENCE ORDER: live first, then the two
     * crash-recovery names (the complete compaction output, then the
@@ -200,13 +302,15 @@ object Corpus {
     * tmp is never read) and then `_records_old`. Readers never mutate
     * (single-writer discipline, same reasoning as [[maxId]]); the next
     * writer through [[append]]/[[compact]] runs [[repairCompaction]].
+    * The scan is declared with [[CorpusModel.recordsSchema]], so opening
+    * the store runs no footer-inference job.
     */
   def records(spark: SparkSession, corpusDir: String): DataFrame = {
     val fs = fsOf(spark, corpusDir)
     val candidates = storeDirs(corpusDir)
     val dir = candidates.find(d =>
       fs.exists(new org.apache.hadoop.fs.Path(d))).getOrElse(candidates.head)
-    spark.read.parquet(dir)
+    spark.read.schema(CorpusModel.recordsSchema).parquet(dir)
   }
 
   /** Writer-side repair of a [[compact]] interrupted between its two
@@ -244,7 +348,7 @@ object Corpus {
               rowsPerFile: Long = 1000000L): Unit = {
     val fs = new org.apache.hadoop.fs.Path(corpusDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    repairCompaction(fs, corpusDir) // finish/roll back an interrupted run
+    repair(spark, corpusDir) // finish/roll back an interrupted run or batch
     val live = new org.apache.hadoop.fs.Path(s"$corpusDir/records")
     if (!fs.exists(live)) return
     val tmp = new org.apache.hadoop.fs.Path(s"$corpusDir/_records_compacting")
@@ -277,6 +381,12 @@ object Corpus {
 
   private def pendingPath(corpusDir: String) =
     new org.apache.hadoop.fs.Path(s"$corpusDir/_maxid_pending")
+
+  private def stagingPath(corpusDir: String) =
+    new org.apache.hadoop.fs.Path(s"$corpusDir/_staging")
+
+  private def commitPath(corpusDir: String) =
+    new org.apache.hadoop.fs.Path(s"$corpusDir/_staging/_publish")
 
   /** Sidecar read: the persisted id high-water mark, or -1 when absent. */
   private[graft] def readHighWater(spark: SparkSession, corpusDir: String): Long = {
@@ -348,12 +458,13 @@ object Corpus {
   def latestRecords(spark: SparkSession, corpusDir: String, n: Int = 50): DataFrame =
     records(spark, corpusDir).orderBy(desc("id")).limit(n)
 
-  /** Q2 — full schema history ascending (reference `app.py:155-159`). */
+  /** Q2 — full schema history ascending (reference `app.py:155-159`), as
+    * a local relation read and sorted on the driver: no job. */
   def schemaHistory(spark: SparkSession, corpusDir: String): DataFrame =
-    new Evolution(spark, corpusDir).schemaHistory.orderBy(asc("version"))
+    new Evolution(spark, corpusDir).schemaHistory
 
-  /** Q3 — change log, newest first (reference `app.py:162-166`). */
+  /** Q3 — change log, newest first (reference `app.py:162-166`), as a
+    * local relation read and sorted on the driver: no job. */
   def schemaChanges(spark: SparkSession, corpusDir: String): DataFrame =
     new Evolution(spark, corpusDir).schemaChanges
-      .orderBy(desc("created_at"), desc("id"))
 }

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.model.{CorpusModel, JsonSchema}
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import java.time.format.DateTimeFormatter
 import java.time.{Instant, ZoneOffset}
 
@@ -19,6 +19,13 @@ import java.time.{Instant, ZoneOffset}
   * driver-side on purpose (SURVEY §7.4): the data plane (the 100 TB record
   * scan) never touches it except to read the broadcast schema of the current
   * version. Concurrency limit (one writer) is documented, not hidden.
+  *
+  * Publish order: an ingest batch [[plan]]s its version (no write), writes
+  * its records to a hidden staging dir, and only then [[publish]]es — so a
+  * failed write publishes nothing, and a version never exists without the
+  * records that introduced it. [[Corpus.append]] documents the whole
+  * sequence and its crash guarantee; [[evolve]] is `publish(plan(…))` for
+  * callers that write their records afterwards themselves.
   */
 class Evolution(spark: SparkSession, corpusDir: String) {
   import Evolution._
@@ -30,15 +37,55 @@ class Evolution(spark: SparkSession, corpusDir: String) {
   private def fs = new org.apache.hadoop.fs.Path(corpusDir)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def readOrEmpty(path: String, schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) spark.read.schema(schema).parquet(path)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+  /** Every row of a dimension table, read on the driver with
+    * parquet-hadoop — the way [[writeRowFile]] writes them, one small file
+    * per row — so serving the tables runs no Spark job. Hidden files
+    * (`.`/`_` prefixes, e.g. a torn `.part-*.inprogress`) are skipped like
+    * Spark's own path filter does.
+    */
+  private def readRows(dir: String)(toRow: org.apache.parquet.example.data.Group => Row): Seq[Row] = {
+    import org.apache.parquet.hadoop.ParquetReader
+    import org.apache.parquet.hadoop.example.GroupReadSupport
+    val dirPath = new org.apache.hadoop.fs.Path(dir)
+    if (!fs.exists(dirPath)) return Nil
+    fs.listStatus(dirPath).toSeq.map(_.getPath)
+      .filterNot(p => p.getName.startsWith(".") || p.getName.startsWith("_"))
+      .flatMap { p =>
+        val reader = ParquetReader.builder(new GroupReadSupport(), p)
+          .withConf(spark.sparkContext.hadoopConfiguration).build()
+        try Iterator.continually(reader.read()).takeWhile(_ != null).map(toRow).toList
+        finally reader.close()
+      }
   }
 
-  def schemaHistory: DataFrame = readOrEmpty(historyPath, CorpusModel.schemaHistorySchema)
-  def schemaChanges: DataFrame = readOrEmpty(changesPath, CorpusModel.schemaChangesSchema)
+  private def historyRows: Seq[Row] = readRows(historyPath) { g =>
+    Row(g.getInteger("version", 0), g.getString("schema", 0), g.getString("created_at", 0))
+  }
+
+  private def changeLogRows: Seq[Row] = readRows(changesPath) { g =>
+    def names(field: String): Seq[String] = {
+      val list = g.getGroup(field, 0)
+      (0 until list.getFieldRepetitionCount("list"))
+        .map(i => list.getGroup("list", i).getString("element", 0))
+    }
+    Row(g.getLong("id", 0), g.getInteger("old_version", 0), g.getInteger("new_version", 0),
+      names("added_fields"), names("removed_fields"), g.getString("created_at", 0))
+  }
+
+  private def localTable(rows: Seq[Row], schema: org.apache.spark.sql.types.StructType) =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+
+  /** Q2's table: every version, ascending — a local relation sorted on the
+    * driver, so collecting it runs no job. */
+  def schemaHistory: DataFrame =
+    localTable(historyRows.sortBy(_.getInt(0)), CorpusModel.schemaHistorySchema)
+
+  /** Q3's table: the change log, newest first (`created_at`, then `id`) —
+    * a local relation sorted on the driver, like [[schemaHistory]]. */
+  def schemaChanges: DataFrame =
+    localTable(changeLogRows.sortBy(r => (r.getString(5), r.getLong(0)))(
+      Ordering.Tuple2(Ordering.String.reverse, Ordering.Long.reverse)),
+      CorpusModel.schemaChangesSchema)
 
   /** Schema-state sidecar: `(version, change-log row count, schema json)` of
     * the latest version — the O(1) driver-side read serving `latest` and the
@@ -136,20 +183,9 @@ class Evolution(spark: SparkSession, corpusDir: String) {
       g.append("created_at", createdAt)
     }
 
-  /** Change-log row count from the parquet dimension; no job when the log
-    * has never been written (a new corpus). */
-  private def changeRows: Long =
-    if (!fs.exists(new org.apache.hadoop.fs.Path(changesPath))) 0L
-    else schemaChanges.count()
-
-  /** Authoritative latest (version, schema) from the parquet dimension
-    * (no-job short-circuit for a corpus with no history yet).
-    */
-  private def latestScan: Option[(Int, String)] = {
-    if (!fs.exists(new org.apache.hadoop.fs.Path(historyPath))) return None
-    schemaHistory.orderBy(org.apache.spark.sql.functions.desc("version")).limit(1)
-      .collect().headOption.map(r => (r.getInt(0), r.getString(1)))
-  }
+  /** Authoritative latest (version, schema) from the history table. */
+  private def latestScan: Option[(Int, String)] =
+    historyRows.maxByOption(_.getInt(0)).map(r => (r.getInt(0), r.getString(1)))
 
   /** Q1 — latest (version, schema) or None (reference `app.py:144-152`).
     * Served from the schema-state sidecar when present (O(1) file read, no
@@ -160,7 +196,7 @@ class Evolution(spark: SparkSession, corpusDir: String) {
 
   def latestVersion: Int = latest.map(_._1).getOrElse(0)
 
-  /** Writer-side repair of an `evolve` that died mid-publish (pending
+  /** Writer-side repair of a [[publish]] that died midway (pending
     * marker up). The publish order is history row → change row → state
     * sidecar, so the only half-published TABLE state is "history row for
     * version v landed, its change row didn't" — a permanently missing
@@ -168,29 +204,26 @@ class Evolution(spark: SparkSession, corpusDir: String) {
     * is atomic here, `app.py:96-130`). The missing row is synthesized from
     * the last two history rows (their name-set diff and the new row's own
     * timestamp); every other crash point left the tables consistent. Then
-    * the state sidecar is rebuilt from the authoritative scans and the
+    * the state sidecar is rebuilt from the authoritative tables and the
     * marker cleared, restoring O(1) reads. Single-writer discipline makes
     * both the marker and the repair ours; readers never call this
     * ([[readState]] just falls back while the marker is up).
     */
   private def repairPublish(): Unit = {
     if (!fs.exists(statePendingPath)) return
-    val hist = schemaHistory
-      .orderBy(org.apache.spark.sql.functions.desc("version")).limit(2)
-      .collect()
+    val hist = historyRows.sortBy(-_.getInt(0)).take(2)
     if (hist.isEmpty) { fs.delete(statePendingPath, false); return }
     val (vNew, sNew, tsNew) =
       (hist(0).getInt(0), hist(0).getString(1), hist(0).getString(2))
-    var changeCount = changeRows
+    val changes = changeLogRows
+    var changeCount = changes.size.toLong
     if (hist.length == 2) {
       val (vOld, sOld) = (hist(1).getInt(0), hist(1).getString(1))
       val newNames = fieldNamesOfStoredSchema(sNew)
       val oldNames = fieldNamesOfStoredSchema(sOld)
       val added = (newNames -- oldNames).toSeq.sorted
       val removed = (oldNames -- newNames).toSeq.sorted
-      val logged = schemaChanges
-        .filter(org.apache.spark.sql.functions.col("new_version") === vNew)
-        .limit(1).collect().nonEmpty
+      val logged = changes.exists(_.getInt(2) == vNew)
       if ((added.nonEmpty || removed.nonEmpty) && !logged) {
         changeCount += 1
         writeChangeRow(changeCount, vOld, vNew, added, removed, tsNew)
@@ -200,48 +233,80 @@ class Evolution(spark: SparkSession, corpusDir: String) {
     fs.delete(statePendingPath, false)
   }
 
-  /** Store a newly inferred schema if the field-name set changed; returns the
-    * current version number either way (reference `store_schema`,
-    * `app.py:96-130` + trigger `app.py:335-350`).
+  /** What storing `newSchema` would do, without doing it: the version a
+    * batch with this field-name set is stamped with, and its diff against
+    * the latest version (reference trigger, `app.py:335-350`). Reads the
+    * state sidecar (or, while a publish is pending, the tables on the
+    * driver); runs no job and writes nothing.
     */
-  def evolve(newSchema: JsonSchema, newFieldNames: Set[String],
-             now: Instant = Instant.now()): Int = {
-    val ts = isoMicros(now)
-    repairPublish() // writer-side: reconcile a predecessor that died mid-publish
-    val state = readState()
-    val current = state.map { case (v, _, s) => (v, s) }.orElse(latestScan)
+  def plan(newSchema: JsonSchema, newFieldNames: Set[String]): Plan =
+    planOf(newSchema.toJson, newFieldNames)
+
+  private[ops] def planOf(schemaJson: String, newFieldNames: Set[String]): Plan = {
+    val current = latest
     val currentVersion = current.map(_._1).getOrElse(0)
-    val oldNames: Set[String] = current
-      .map(c => fieldNamesOfStoredSchema(c._2)).getOrElse(Set.empty)
+    val oldNames = current.map(c => fieldNamesOfStoredSchema(c._2)).getOrElse(Set.empty)
+    if (current.isDefined && oldNames == newFieldNames)
+      Plan(currentVersion, currentVersion, schemaJson, Nil, Nil)
+    else
+      Plan(currentVersion + 1, currentVersion, schemaJson,
+        (newFieldNames -- oldNames).toSeq.sorted, (oldNames -- newFieldNames).toSeq.sorted)
+  }
 
-    if (current.isDefined && oldNames == newFieldNames) return currentVersion
-
+  /** Carry out a [[plan]] (reference `store_schema`, `app.py:96-130`):
+    * history row → change row (only for v > 1 with a non-empty diff) →
+    * state sidecar, under the `_schema_pending` marker. Idempotent: a plan
+    * that bumps nothing, or whose version is already published, writes
+    * nothing — which is what lets an interrupted batch be rolled forward
+    * (see [[Corpus.append]]). Returns the plan's version.
+    */
+  def publish(p: Plan, now: Instant = Instant.now()): Int = {
+    repairPublish() // writer-side: reconcile a predecessor that died mid-publish
+    if (!p.bumps || latestVersion >= p.version) return p.version
+    val state = readState()
     // writer path: pending marker up for the whole multi-file publish;
     // single-writer discipline (documented) makes the marker ours to clear.
     fs.create(statePendingPath, true).close()
-    val newVersion = currentVersion + 1
+    val ts = isoMicros(now)
     writeRowFile(historyPath, historyParquetType) { g =>
-      g.append("version", newVersion)
-      g.append("schema", newSchema.toJson)
+      g.append("version", p.version)
+      g.append("schema", p.schemaJson)
       g.append("created_at", ts)
     }
-
-    var changeCount = state.map(_._2).getOrElse(changeRows)
-    if (currentVersion > 0) {
-      val added = (newFieldNames -- oldNames).toSeq.sorted
-      val removed = (oldNames -- newFieldNames).toSeq.sorted
-      if (added.nonEmpty || removed.nonEmpty) {
-        changeCount += 1
-        writeChangeRow(changeCount, currentVersion, newVersion, added, removed, ts)
-      }
+    var changeCount = state.map(_._2).getOrElse(changeLogRows.size.toLong)
+    if (p.previous > 0 && (p.added.nonEmpty || p.removed.nonEmpty)) {
+      changeCount += 1
+      writeChangeRow(changeCount, p.previous, p.version, p.added, p.removed, ts)
     }
-    writeState(newVersion, changeCount, newSchema.toJson)
+    writeState(p.version, changeCount, p.schemaJson)
     fs.delete(statePendingPath, false)
-    newVersion
+    p.version
+  }
+
+  /** Store a newly inferred schema if the field-name set changed; returns the
+    * current version number either way: [[publish]] of [[plan]], after the
+    * corpus's writer-side repair (an interrupted batch is finished or
+    * undone first, so the plan sees the version it left).
+    */
+  def evolve(newSchema: JsonSchema, newFieldNames: Set[String],
+             now: Instant = Instant.now()): Int = {
+    Corpus.repair(spark, corpusDir)
+    publish(plan(newSchema, newFieldNames), now)
   }
 }
 
 object Evolution {
+  /** A batch's schema step, planned before its records are written:
+    * `version` is what the batch is stamped with, `previous` the latest
+    * version when planned (0 for a new corpus), and `added`/`removed` the
+    * field names that differ from `previous` (every field for a new
+    * corpus; both empty when nothing changes).
+    */
+  final case class Plan(version: Int, previous: Int, schemaJson: String,
+                        added: Seq[String], removed: Seq[String]) {
+    def bumps: Boolean = version != previous
+  }
+
   /** Parquet message types matching [[CorpusModel.schemaHistorySchema]] /
     * [[CorpusModel.schemaChangesSchema]] exactly (standard 3-level lists —
     * what Spark itself writes and its vectorized reader expects).

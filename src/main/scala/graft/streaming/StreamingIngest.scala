@@ -55,7 +55,7 @@ object StreamingIngest {
     val marker = new org.apache.hadoop.fs.Path(s"$corpusDir/_batches/$batchId")
     val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(marker)) return false
-    if (!batch.isEmpty) Pipeline.ingest(spark, batch, corpusDir)
+    Pipeline.ingest(spark, batch, corpusDir) // an empty batch publishes nothing
     fs.mkdirs(marker.getParent)
     fs.create(marker, true).close()
     true

@@ -29,6 +29,27 @@ class EvolutionSpec extends SparkSpec {
     assert(evo.latestVersion == 1)
   }
 
+  test("plan writes nothing; publish carries it out once") {
+    val dir = tmpDir("evo_")
+    val evo = new Evolution(spark, dir)
+    evo.evolve(schema("a", "b"), Set("a", "b"))
+    def files: Seq[String] = {
+      def walk(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+      walk(new java.io.File(dir)).map(_.getPath).sorted
+    }
+    val before = files
+    val p = evo.plan(schema("a", "c"), Set("a", "c"))
+    assert(p == Evolution.Plan(2, 1, schema("a", "c").toJson, Seq("c"), Seq("b")))
+    assert(files == before && evo.latestVersion == 1, "plan must not write")
+    assert(FinalPlans.jobsDuring(spark)(assert(evo.publish(p) == 2)) == 0)
+    val after = files
+    assert(evo.publish(p) == 2 && files == after, "a published plan publishes nothing again")
+    assert(evo.schemaHistory.count() == 2 && evo.schemaChanges.count() == 1)
+    val same = evo.plan(schema("c", "a"), Set("c", "a"))
+    assert(!same.bumps && same.version == 2 && same.added.isEmpty && same.removed.isEmpty)
+  }
+
   test("identical field set is a version no-op") {
     val dir = tmpDir("evo_")
     val evo = new Evolution(spark, dir)

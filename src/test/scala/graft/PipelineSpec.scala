@@ -339,4 +339,130 @@ class PipelineSpec extends SparkSpec {
     val r2 = Pipeline.ingest(spark, Seq(("z", 3)).toDF("content", "n"), dir)
     assert(r2.recordCount == 1, s"expected per-batch count 1, got ${r2.recordCount}")
   }
+
+  /** What a batch may change: latest version, both schema tables, the id
+    * high-water sidecar, and the stored records. */
+  private def corpusState(dir: String) = (
+    new graft.ops.Evolution(spark, dir).latestVersion,
+    Corpus.schemaHistory(spark, dir).collect().toSeq,
+    Corpus.schemaChanges(spark, dir).collect().toSeq,
+    Corpus.readHighWater(spark, dir),
+    dataFiles(s"$dir/records").sorted,
+    scala.util.Try(Corpus.records(spark, dir).orderBy("id").collect().toSeq).toOption)
+
+  test("an empty batch with a new field set publishes and writes nothing") {
+    val dir = tmpDir("corpus_")
+    Pipeline.ingest(spark, Seq(("a", 1)).toDF("content", "n"), dir)
+    val before = corpusState(dir)
+    val r1 = Pipeline.ingest(spark, Seq.empty[(String, Int)].toDF("other", "m"), dir)
+    val r2 = Pipeline.ingest(spark, spark.range(10).filter(col("id") < 0)
+      .select(col("id").as("m")), dir)
+    val r3 = Pipeline.ingestJson(spark, Seq.empty[String].toDF("j"), "j", dir)
+    for (r <- Seq(r1, r2, r3)) {
+      assert(r.recordCount == 0 && r.version == 1, s"$r")
+      assert(r.addedFields.isEmpty && r.removedFields.isEmpty, s"$r")
+    }
+    assert(corpusState(dir) == before)
+    assert(!new java.io.File(s"$dir/_staging").exists() &&
+      !new java.io.File(s"$dir/_maxid_pending").exists())
+  }
+
+  test("a write that fails inside its tasks publishes no version") {
+    // the new field set would be v1 on a new corpus and v2 on an old one
+    val boom = spark.range(0, 8, 1, 4).select(col("id").cast("string").as("content"),
+      when(col("id") === 6, raise_error(lit("boom"))).otherwise(col("id")).as("m"))
+    for (seeded <- Seq(false, true)) {
+      val dir = tmpDir("corpus_")
+      if (seeded) Pipeline.ingest(spark, Seq(("a", 1)).toDF("content", "n"), dir)
+      val before = corpusState(dir)
+      intercept[Exception](Pipeline.ingest(spark, boom, dir))
+      assert(corpusState(dir) == before, s"seeded=$seeded")
+      // tasks Spark is still cancelling may leave uncommitted attempt dirs
+      // under `_staging/_temporary`; no data file may be staged for a move
+      val staged = Option(new java.io.File(s"$dir/_staging").listFiles()).toSeq.flatten
+        .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
+      assert(staged.isEmpty && !new java.io.File(s"$dir/_maxid_pending").exists(),
+        s"the failed batch must be dropped: $staged")
+    }
+  }
+
+  test("a crash at any commit step leaves the corpus before the batch or with all of it") {
+    // (step, whether the batch survives): before the commit point the next
+    // writer drops the staged batch, from it on it finishes the batch
+    val steps = Seq("marked" -> false, "staged" -> false, "committed" -> true,
+      "published" -> true, "moved-one" -> true, "moved" -> true,
+      "highwater" -> true, "cleaned" -> true)
+    for ((step, kept) <- steps) {
+      val dir = tmpDir("corpus_")
+      Pipeline.ingest(spark, Seq(("a", 1), ("b", 2)).toDF("content", "n"), dir)
+      // a new field set (v2) written by 4 tasks, so the move has 4 files
+      val batch = spark.range(0, 8, 1, 4)
+        .select(col("id").cast("string").as("content"), col("id").as("m"))
+      Corpus.crashAfter = step
+      try intercept[IllegalStateException](Pipeline.ingest(spark, batch, dir))
+      finally Corpus.crashAfter = ""
+      val next = Pipeline.ingest(spark, Seq(("c", 3)).toDF("content", "n"), dir) // repairs
+      val perVersion = Corpus.records(spark, dir).groupBy("schema_version").count()
+        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+      val versions = Corpus.schemaHistory(spark, dir).collect().map(_.getInt(0)).toSeq
+      val changes = Corpus.schemaChanges(spark, dir).collect()
+        .map(r => (r.getInt(1), r.getInt(2))).toSeq.sorted
+      if (kept) {
+        assert(perVersion == Map(1 -> 2L, 2 -> 8L, 3 -> 1L), s"after $step")
+        assert(versions == Seq(1, 2, 3) && changes == Seq((1, 2), (2, 3)), s"after $step")
+        assert(next.version == 3)
+      } else {
+        assert(perVersion == Map(1 -> 3L), s"after $step")
+        assert(versions == Seq(1) && changes.isEmpty, s"after $step")
+        assert(next.version == 1)
+      }
+      val ids = Corpus.records(spark, dir).select("id").collect().map(_.getLong(0))
+      assert(ids.distinct.length == ids.length, s"duplicate ids after $step")
+      assert(Corpus.readHighWater(spark, dir) == ids.max, s"high-water after $step")
+      for (f <- Seq("_staging", "_maxid_pending", "_schema_pending"))
+        assert(!new java.io.File(s"$dir/$f").exists(), s"$f left after $step")
+    }
+  }
+
+  test("a small file batch into an existing corpus runs one job; the browse tables none") {
+    val dir = tmpDir("corpus_")
+    Pipeline.ingest(spark, Seq(("a", 1)).toDF("content", "n"), dir)
+    def csv(header: String, rows: Int) = {
+      val f = java.nio.file.Paths.get(tmpDir("csv_"), "in.csv")
+      java.nio.file.Files.write(f, (header +: (1 to rows).map(i => s"doc $i,$i" +
+        (if (header.count(_ == ',') == 2) s",x$i" else "")))
+        .mkString("", "\n", "\n").getBytes("UTF-8"))
+      graft.ingest.Readers.csv(spark, f.toString) // its header/inference jobs run here
+    }
+    val same = csv("content,n", 20)
+    val bumped = csv("content,n,extra", 20)
+    assert(FinalPlans.jobsDuring(spark)(Pipeline.ingest(spark, same, dir)) == 1)
+    assert(FinalPlans.jobsDuring(spark)(Pipeline.ingest(spark, bumped, dir)) == 1)
+    assert(FinalPlans.jobsDuring(spark)(Corpus.schemaHistory(spark, dir).collect()) == 0)
+    assert(FinalPlans.jobsDuring(spark)(Corpus.schemaChanges(spark, dir).collect()) == 0)
+    assert(FinalPlans.jobsDuring(spark)(Corpus.latestRecords(spark, dir).collect()) == 1)
+    assert(Corpus.records(spark, dir).groupBy("schema_version").count()
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap == Map(1 -> 21L, 2 -> 20L))
+  }
+
+  test("IngestResult names the fields its version added and removed") {
+    val dir = tmpDir("corpus_")
+    val r1 = Pipeline.ingest(spark, Seq(("a", 1)).toDF("content", "n"), dir)
+    assert(r1.addedFields == Seq("_extracted_patterns", "content", "n") && r1.removedFields.isEmpty)
+    assert(Corpus.schemaChanges(spark, dir).count() == 0, "v1 has no change row")
+    val r2 = Pipeline.ingest(spark, Seq(("b", 2L)).toDF("content", "m"), dir)
+    val r3 = Pipeline.ingest(spark, Seq(("c", 3L)).toDF("content", "m"), dir)
+    assert(r3.version == 2 && r3.addedFields.isEmpty && r3.removedFields.isEmpty)
+    val r4 = Pipeline.ingestJson(spark, Seq("""{"m": 1, "z": 2}""").toDF("j"), "j", dir)
+    val logged = Corpus.schemaChanges(spark, dir).collect().map { r =>
+      r.getAs[Int]("new_version") ->
+        (r.getAs[scala.collection.Seq[String]]("added_fields").toSeq,
+          r.getAs[scala.collection.Seq[String]]("removed_fields").toSeq)
+    }.toMap
+    assert(logged == Map(
+      r2.version -> (r2.addedFields, r2.removedFields),
+      r4.version -> (r4.addedFields, r4.removedFields)))
+    assert(r2.addedFields == Seq("m") && r2.removedFields == Seq("n"))
+    assert(r4.version == 3 && r4.addedFields == Seq("z"))
+  }
 }
