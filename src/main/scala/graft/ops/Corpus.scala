@@ -162,9 +162,12 @@ object Corpus {
     * the corpus either as it was before the batch (no commit point: the
     * staged files are dropped) or with the whole batch (commit point
     * present: steps 4–6 run again, each skipping what is already done), and
-    * rebuilds the high-water from the records. A version is therefore never
-    * published without its records. While the marker is up, [[maxId]]
-    * falls back to the authoritative scan.
+    * rebuilds the high-water from the records. The guarantee holds once
+    * that writer has run; readers never repair, so until then a crash
+    * after step 4 and before step 5 ends shows readers version v as
+    * published ([[Evolution.latest]], Q2/Q3) with none or only part of its
+    * records under `records/schema_version=<v>/`. While the marker is up,
+    * [[maxId]] falls back to the authoritative scan.
     */
   def append(stamped: DataFrame, corpusDir: String): Unit = {
     repair(stamped.sparkSession, corpusDir)
@@ -195,7 +198,6 @@ object Corpus {
     // tasks of an earlier failed write that Spark was still cancelling can
     // leave uncommitted attempt dirs in `_staging` after its roll-back
     fs.delete(staging, true)
-    reached("marked")
     val obs = new org.apache.spark.sql.Observation()
     try
       stamped
@@ -205,7 +207,6 @@ object Corpus {
         .observe(obs, count(lit(1)).as("n"), max(col("id")).as("max_id"))
         .write.mode(SaveMode.Append).parquet(staging.toString)
     catch { case e: Throwable => rollBack(); throw e }
-    reached("staged")
     val m = obs.get
     val n = m("n").asInstanceOf[Long]
     if (n == 0) { rollBack(); return 0L }
@@ -215,13 +216,10 @@ object Corpus {
     finally out.close()
     if (!fs.rename(commitTmp, commitPath(corpusDir)))
       sys.error(s"Corpus.commit: cannot publish $commitTmp")
-    reached("committed")
     finish(spark, fs, corpusDir, v, plan)
     val mx = Option(m("max_id")).fold(-1L)(_.asInstanceOf[Long])
     writeHighWater(spark, corpusDir, math.max(mx, readHighWater(spark, corpusDir)))
-    reached("highwater")
     fs.delete(staging, true)
-    reached("cleaned")
     fs.delete(pendingPath(corpusDir), false)
     n
   }
@@ -233,17 +231,14 @@ object Corpus {
   private def finish(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
                      corpusDir: String, v: Int, plan: Option[Evolution.Plan]): Unit = {
     plan.foreach(p => new Evolution(spark, corpusDir).publish(p))
-    reached("published")
     val dest = new org.apache.hadoop.fs.Path(s"$corpusDir/records/schema_version=$v")
     fs.mkdirs(dest)
     fs.listStatus(stagingPath(corpusDir)).map(_.getPath)
       .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
-      .zipWithIndex.foreach { case (f, i) =>
+      .foreach { f =>
         if (!fs.rename(f, new org.apache.hadoop.fs.Path(dest, f.getName)))
           sys.error(s"Corpus.commit: cannot move $f into $dest")
-        if (i == 0) reached("moved-one")
       }
-    reached("moved")
   }
 
   /** Writer-side repair of an interrupted [[compact]] ([[repairCompaction]])
@@ -277,14 +272,6 @@ object Corpus {
       math.max(maxId(spark, corpusDir), readHighWater(spark, corpusDir)))
     fs.delete(pendingPath(corpusDir), false)
   }
-
-  /** Test seam: the [[commit]] step after which to throw, simulating a
-    * crash there so a spec can run the next writer's [[repair]]. Empty
-    * outside those specs. */
-  @volatile private[graft] var crashAfter: String = ""
-
-  private def reached(step: String): Unit =
-    if (step == crashAfter) throw new IllegalStateException(s"simulated crash after $step")
 
   /** Record-store dirs in PREFERENCE ORDER: live first, then the two
     * crash-recovery names (the complete compaction output, then the

@@ -22,10 +22,11 @@ import java.time.{Instant, ZoneOffset}
   *
   * Publish order: an ingest batch [[plan]]s its version (no write), writes
   * its records to a hidden staging dir, and only then [[publish]]es — so a
-  * failed write publishes nothing, and a version never exists without the
-  * records that introduced it. [[Corpus.append]] documents the whole
-  * sequence and its crash guarantee; [[evolve]] is `publish(plan(…))` for
-  * callers that write their records afterwards themselves.
+  * failed write publishes nothing, and after a crash the next writer
+  * finishes or drops the batch as a whole. [[Corpus.append]] documents the
+  * whole sequence, its crash guarantee and the window readers can see
+  * before that writer runs; [[evolve]] is `publish(plan(…))` for callers
+  * that write their records afterwards themselves.
   */
 class Evolution(spark: SparkSession, corpusDir: String) {
   import Evolution._

@@ -387,6 +387,22 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("a crash at any commit step leaves the corpus before the batch or with all of it") {
+    import java.io.File
+    import org.apache.commons.io.FileUtils
+    val base = Seq(("a", 1), ("b", 2)).toDF("content", "n")
+    // a new field set (v2) written by 4 tasks, so the move has 4 files
+    val batch = spark.range(0, 8, 1, 4)
+      .select(col("id").cast("string").as("content"), col("id").as("m"))
+    // Each crash state is built on disk from a twin corpus that took the
+    // batch whole: its v2 data files are the staged batch, its schema
+    // tables the published version, its `_maxid` the advanced high-water.
+    val twin = tmpDir("twin_")
+    Pipeline.ingest(spark, base, twin)
+    Pipeline.ingest(spark, batch, twin)
+    val batchFiles = new File(s"$twin/records/schema_version=2").listFiles()
+      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName).toSeq
+    assert(batchFiles.length == 4)
+    val v2Schema = new graft.ops.Evolution(spark, twin).latest.get._2
     // (step, whether the batch survives): before the commit point the next
     // writer drops the staged batch, from it on it finishes the batch
     val steps = Seq("marked" -> false, "staged" -> false, "committed" -> true,
@@ -394,13 +410,40 @@ class PipelineSpec extends SparkSpec {
       "highwater" -> true, "cleaned" -> true)
     for ((step, kept) <- steps) {
       val dir = tmpDir("corpus_")
-      Pipeline.ingest(spark, Seq(("a", 1), ("b", 2)).toDF("content", "n"), dir)
-      // a new field set (v2) written by 4 tasks, so the move has 4 files
-      val batch = spark.range(0, 8, 1, 4)
-        .select(col("id").cast("string").as("content"), col("id").as("m"))
-      Corpus.crashAfter = step
-      try intercept[IllegalStateException](Pipeline.ingest(spark, batch, dir))
-      finally Corpus.crashAfter = ""
+      Pipeline.ingest(spark, base, dir)
+      def past(s: String) = steps.indexWhere(_._1 == s) <= steps.indexWhere(_._1 == step)
+      val staging = new File(s"$dir/_staging")
+      val dest = new File(s"$dir/records/schema_version=2")
+      new File(s"$dir/_maxid_pending").createNewFile()
+      if (past("staged")) {
+        batchFiles.foreach(FileUtils.copyFileToDirectory(_, staging))
+        new File(staging, "_SUCCESS").createNewFile()
+      }
+      if (past("committed"))
+        FileUtils.writeStringToFile(new File(staging, "_publish"), s"2\n$v2Schema", "UTF-8")
+      // a file or dir of the twin's, with its checksum file
+      def takeFromTwin(name: String): Unit =
+        for (n <- Seq(name, s".$name.crc")) {
+          FileUtils.deleteQuietly(new File(s"$dir/$n"))
+          val from = new File(s"$twin/$n")
+          if (from.isDirectory) FileUtils.copyDirectory(from, new File(s"$dir/$n"))
+          else if (from.exists) FileUtils.copyFile(from, new File(s"$dir/$n"))
+        }
+      if (past("published"))
+        Seq("schema_history", "schema_changes", "_schema_state").foreach(takeFromTwin)
+      val moved = if (past("moved")) 4 else if (past("moved-one")) 1 else 0
+      batchFiles.take(moved).foreach(f =>
+        FileUtils.moveFileToDirectory(new File(staging, f.getName), dest, true))
+      if (past("highwater")) takeFromTwin("_maxid")
+      if (past("cleaned")) FileUtils.deleteDirectory(staging)
+      if (step == "published" || step == "moved-one") {
+        // readers never repair: until the next writer runs they see v2
+        // published with none or only part of its records
+        val v2Rows = Corpus.records(spark, dir).filter(col("schema_version") === 2).count()
+        assert(new graft.ops.Evolution(spark, dir).latestVersion == 2, s"after $step")
+        assert(if (step == "published") v2Rows == 0 else v2Rows > 0 && v2Rows < 8,
+          s"$v2Rows v2 rows visible after $step")
+      }
       val next = Pipeline.ingest(spark, Seq(("c", 3)).toDF("content", "n"), dir) // repairs
       val perVersion = Corpus.records(spark, dir).groupBy("schema_version").count()
         .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
@@ -420,29 +463,51 @@ class PipelineSpec extends SparkSpec {
       assert(ids.distinct.length == ids.length, s"duplicate ids after $step")
       assert(Corpus.readHighWater(spark, dir) == ids.max, s"high-water after $step")
       for (f <- Seq("_staging", "_maxid_pending", "_schema_pending"))
-        assert(!new java.io.File(s"$dir/$f").exists(), s"$f left after $step")
+        assert(!new File(s"$dir/$f").exists(), s"$f left after $step")
     }
   }
 
-  test("a small file batch into an existing corpus runs one job; the browse tables none") {
+  /** A one-file CSV upload; its header and inference jobs run here. */
+  private def csvBatch(header: String, rows: Int, pad: String = "") = {
+    val f = java.nio.file.Paths.get(tmpDir("csv_"), "in.csv")
+    java.nio.file.Files.write(f, (header +: (1 to rows).map(i => s"doc $i$pad,$i" +
+      (if (header.count(_ == ',') == 2) s",x$i" else "")))
+      .mkString("", "\n", "\n").getBytes("UTF-8"))
+    graft.ingest.Readers.csv(spark, f.toString)
+  }
+
+  test("a batch into an existing corpus runs one job plus any spread; the browse tables none") {
     val dir = tmpDir("corpus_")
     Pipeline.ingest(spark, Seq(("a", 1)).toDF("content", "n"), dir)
-    def csv(header: String, rows: Int) = {
-      val f = java.nio.file.Paths.get(tmpDir("csv_"), "in.csv")
-      java.nio.file.Files.write(f, (header +: (1 to rows).map(i => s"doc $i,$i" +
-        (if (header.count(_ == ',') == 2) s",x$i" else "")))
-        .mkString("", "\n", "\n").getBytes("UTF-8"))
-      graft.ingest.Readers.csv(spark, f.toString) // its header/inference jobs run here
-    }
-    val same = csv("content,n", 20)
-    val bumped = csv("content,n,extra", 20)
-    assert(FinalPlans.jobsDuring(spark)(Pipeline.ingest(spark, same, dir)) == 1)
-    assert(FinalPlans.jobsDuring(spark)(Pipeline.ingest(spark, bumped, dir)) == 1)
-    assert(FinalPlans.jobsDuring(spark)(Corpus.schemaHistory(spark, dir).collect()) == 0)
-    assert(FinalPlans.jobsDuring(spark)(Corpus.schemaChanges(spark, dir).collect()) == 0)
-    assert(FinalPlans.jobsDuring(spark)(Corpus.latestRecords(spark, dir).collect()) == 1)
+    val jobs = FinalPlans.jobsDuring(spark) _
+    // in enough splits: the write is the only job
+    val wide = spark.range(1, 21, 1, 4).select(concat(lit("doc "), col("id")).as("content"),
+      col("id").cast("int").as("n"))
+    assert(jobs(Pipeline.ingest(spark, wide, dir)) == 1)
+    // one split, so spread: its shuffle stage, then the write
+    val same = csvBatch("content,n", 20)
+    val bumped = csvBatch("content,n,extra", 20)
+    assert(jobs(Pipeline.ingest(spark, same, dir)) == 2)
+    assert(jobs(Pipeline.ingest(spark, bumped, dir)) == 2)
+    assert(jobs(Corpus.schemaHistory(spark, dir).collect()) == 0)
+    assert(jobs(Corpus.schemaChanges(spark, dir).collect()) == 0)
+    assert(jobs(Corpus.latestRecords(spark, dir).collect()) == 1)
     assert(Corpus.records(spark, dir).groupBy("schema_version").count()
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap == Map(1 -> 21L, 2 -> 20L))
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap == Map(1 -> 41L, 2 -> 20L))
+  }
+
+  test("the spread rule counts splits: a one-split file is spread whatever its size") {
+    // local[4]: a batch in one split is spread over 4 tasks and writes 4
+    // files; one in 2 splits is not spread
+    val dir = tmpDir("corpus_")
+    def filesOf(r: Pipeline.IngestResult) = dataFiles(s"$dir/records/schema_version=${r.version}").size
+    val small = csvBatch("content,n", 20)
+    val large = csvBatch("content,n,extra", 8000, pad = " " + "lorem ipsum " * 10) // ~1 MB
+    assert(small.rdd.getNumPartitions == 1 && large.rdd.getNumPartitions == 1)
+    assert(filesOf(Pipeline.ingest(spark, small, dir)) == 4)
+    assert(filesOf(Pipeline.ingest(spark, large, dir)) == 4)
+    val two = spark.range(0, 400, 1, 2).select(col("id").cast("string").as("content"))
+    assert(filesOf(Pipeline.ingest(spark, two, dir)) == 2)
   }
 
   test("IngestResult names the fields its version added and removed") {
