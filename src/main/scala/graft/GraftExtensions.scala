@@ -11,7 +11,25 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
   * (comma-append if other extensions are configured). Registered functions
   * are then available from SQL and from `functions.call_function`:
   *
-  *   - `graft_dot(a, b)` — codegen'd dot product over array<double>.
+  *   - `graft_dot(a, b)` — codegen'd dot product over array<double>;
+  *   - `graft_doti(a, b)` — the same over array<long> (quantized vectors);
+  *   - `graft_vec_bytes(v)` — canonical binary image of a vector, for
+  *     content-addressing;
+  *   - `graft_quant(v, levels)` — max-scaled integer quantization;
+  *   - `graft_argmax_cos(…)` — nearest centroid by cosine (IVF assignment);
+  *   - `graft_argmin_sq(…)` — nearest centroid by squared distance over
+  *     quantized vectors;
+  *   - `graft_lsh_bucket(…)` — random-hyperplane LSH bucket of a vector;
+  *   - `graft_text_stats(text)` — fused per-document quality counters;
+  *   - `graft_nfc(str)` — Unicode NFC normalization;
+  *   - `graft_minhash(tokens, k, numHashes)` — fused shingle + MinHash
+  *     signature;
+  *   - `graft_simhash(tokens, bits)` — SimHash fingerprint as a long;
+  *   - `graft_shingle_hashes(tokens, k)` — sorted distinct shingle-hash set;
+  *   - `graft_inter_size(a, b)` — |A ∩ B| of two sorted long arrays;
+  *   - `graft_bloom(…)` — Bloom-filter membership probe;
+  *   - `graft_pyjson(value)` — `json.dumps`-parity rendering;
+  *   - `graft_json_types(json)` — per-key JSON type names of an object.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -1694,6 +1694,12 @@ object Queries {
         Dedup.minhashNearDuplicates(docs, "doc_id", "text",
           threshold = 0.9).orderBy("id_a", "id_b")
       },
+      // The oracle's `bands` CTE still keys each band with md5 text, while
+      // the engine keys it with a 64-bit xxhash64 (Dedup.lshBands). The
+      // output pairs agree anyway: both keys are equal exactly when the band
+      // slices are, and a collision of either hash can only propose a
+      // candidate that exact-Jaccard verify then accepts or rejects on its
+      // own. No key reaches the output.
       Some(s"""WITH t AS (
               |  SELECT doc_id, list_transform($dTokensCase,
               |    t -> ('0x' || substr(md5(t), 1, 7))::BIGINT + 1) AS th
@@ -1740,6 +1746,7 @@ object Queries {
         Dedup.minhashRecallStats(
           tbl(s, d, "documents").filter(col("doc_id") < 600), "doc_id", "text",
           threshold = 0.9),
+      // md5 band keys in the oracle: see the q_dedup_minhash note.
       Some(s"""WITH t AS (
               |  SELECT doc_id, list_transform($dTokensCase,
               |    t -> ('0x' || substr(md5(t), 1, 7))::BIGINT + 1) AS th
@@ -1792,6 +1799,7 @@ object Queries {
       (s: SparkSession, d: String) =>
         Dedup.minhashClusters(tbl(s, d, "documents"), "doc_id", "text",
           threshold = 0.9).orderBy("component"),
+      // md5 band keys in the oracle: see the q_dedup_minhash note.
       Some(s"""WITH RECURSIVE t AS (
               |  SELECT doc_id, list_transform($dTokensCase,
               |    t -> ('0x' || substr(md5(t), 1, 7))::BIGINT + 1) AS th
@@ -1923,6 +1931,7 @@ object Queries {
         Dedup.dropNearDuplicatesBy(tbl(s, d, "documents"), "doc_id", "text",
           "n_chars", threshold = 0.9)
           .select("doc_id").orderBy("doc_id"),
+      // md5 band keys in the oracle: see the q_dedup_minhash note.
       Some(s"""WITH RECURSIVE t AS (
               |  SELECT doc_id, list_transform($dTokensCase,
               |    t -> ('0x' || substr(md5(t), 1, 7))::BIGINT + 1) AS th
@@ -2842,6 +2851,7 @@ object Queries {
             "lang", minQuality = 0.65, dupThreshold = 0.9, tokenBudget = 1500L),
           "lang")
           .orderBy("lang"),
+      // md5 band keys in the oracle: see the q_dedup_minhash note.
       Some(s"""WITH RECURSIVE f AS (
               |  SELECT doc_id, lang, text, $dTokens AS toks, length(text) AS nc
               |  FROM documents),

@@ -12,8 +12,11 @@ import org.apache.spark.sql.expressions.Window
   *  - near-dup goes through MinHash+LSH banding so candidate generation is a
   *    *band-bucket equi-join*, never an O(n²) cross join — the only all-pairs
   *    work happens inside buckets, whose size LSH keeps small;
-  *  - all hashing is md5-based and engine-portable, so every stage is
-  *    verifiable against a DuckDB oracle running the same logical SQL.
+  *  - the hashes that decide an output (token hashes, signatures,
+  *    fingerprints) are md5-based and engine-portable, so every stage is
+  *    verifiable against a DuckDB oracle running the same logical SQL;
+  *    keys that only route rows (LSH band keys, content-group keys) are
+  *    as narrow as their job allows and never change which rows come out.
   */
 object Dedup {
 
@@ -88,20 +91,32 @@ object Dedup {
     call_function("graft_minhash", tokens(text), lit(shingleSize), lit(numHashes))
 
   /** LSH band keys: split the signature into `bands` bands of H/bands rows;
-    * band key = md5 of the concatenated band slice. Two docs collide on a
-    * band iff that band of their signatures is identical.
+    * band key = `xxhash64(b, band slice)`, a 64-bit long computed inside
+    * the projection that already builds the signature. A null signature
+    * (null text) gets null keys, which never join: `xxhash64` skips null
+    * inputs, so unguarded it would put every null-text doc in one bucket
+    * per band.
+    *
+    * Why candidates stay exact: equal band slices always give equal keys,
+    * so no pair that agrees on a band is lost. A 64-bit collision between
+    * different slices can only ADD a candidate, and verify computes exact
+    * Jaccard on every candidate, so it drops the pair unless the pair is
+    * a genuine near-duplicate at the threshold. Expected collisions are
+    * (bucket rows per band)² / 2^65: ~3e-8 per band at 10^6 docs, ~0.03
+    * at 10^9.
     */
   def lshBands(signature: Column, numHashes: Int, bands: Int): Column = {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
     val rows = numHashes / bands
     array((0 until bands).map { b =>
-      md5(concat(lit(s"$b:"), array_join(slice(signature, b * rows + 1, rows), "|")))
+      when(signature.isNotNull,
+        xxhash64(lit(b), slice(signature, b * rows + 1, rows)))
     }: _*)
   }
 
   /** The (id, band, bkey) LSH bucket table for a corpus — the shared prefix
-    * of every LSH consumer. Computed in one pass (signature fold → band keys
-    * → posexplode).
+    * of every LSH consumer; `bkey` is the bigint key of [[lshBands]].
+    * Computed in one pass (signature fold → band keys → posexplode).
     */
   def lshBuckets(df: DataFrame, idCol: String, textCol: String,
                  numHashes: Int, bands: Int, shingleSize: Int): DataFrame = {
@@ -113,11 +128,11 @@ object Dedup {
   /** Candidate near-duplicate pairs via MinHash LSH.
     * Plan shape: map (signature) → explode bands → *self equi-join* on the
     * (band, bucket-key) pair with `id_a < id_b` → first-agreeing-band
-    * ownership filter. The shuffle key is the md5 band key (uniform space —
-    * no planned skew), and a degenerate bucket (e.g. millions of
-    * empty/boilerplate docs sharing a signature) stays a join-skew problem
-    * AQE splits across tasks — never an unbounded `collect_set` array on
-    * one executor.
+    * ownership filter. The shuffle key is the (int band, 64-bit band key)
+    * pair (uniform space — no planned skew), and a degenerate bucket (e.g.
+    * millions of empty/boilerplate docs sharing a signature) stays a
+    * join-skew problem AQE splits across tasks — never an unbounded
+    * `collect_set` array on one executor.
     *
     * The bucket table is persisted through [[Materialize.persist]]; its
     * lifetime is the caller's scope (see [[Materialize.tracked]]).
@@ -125,10 +140,21 @@ object Dedup {
   def minhashCandidatePairs(df: DataFrame, idCol: String, textCol: String,
                             numHashes: Int = 16, bands: Int = 4,
                             shingleSize: Int = 5): DataFrame = {
+    val sig = minhashSignature(col(textCol), numHashes, shingleSize)
+    bandCandidatePairs(df.select(col(idCol).as("id"),
+      lshBands(sig, numHashes, bands).as("__bands")), bands)
+  }
+
+  /** The bucket self-join of [[minhashCandidatePairs]] over (`id`,
+    * `__bands`) rows, `__bands` holding each doc's `bands` band keys in
+    * band order: (`id_a`, `id_b`) for every pair that agrees on some band,
+    * each pair once. Generic in the key type.
+    */
+  private[graft] def bandCandidatePairs(keyed: DataFrame, bands: Int): DataFrame = {
     // The bucket table feeds BOTH sides of the self-join; without an explicit
     // materialization Spark recomputes the whole signature scan twice (alias
     // differences below the exchange defeat ReuseExchange). It is the small
-    // derived table of the pipeline — bands rows of (long, int, 32-char key)
+    // derived table of the pipeline — bands rows of (long, int, long key)
     // per doc, orders of magnitude under the corpus — so persist it.
     //
     // `__prior` carries the band keys BEFORE this row's band (slice of the
@@ -136,9 +162,7 @@ object Dedup {
     // pure filter instead of a full pair exchange (r22) — avg extra width
     // (bands−1)/2 keys per bucket row against the removed
     // corpus×multiplicity shuffle.
-    val sig = minhashSignature(col(textCol), numHashes, shingleSize)
-    val banded = Materialize.persist(df
-      .select(col(idCol).as("id"), lshBands(sig, numHashes, bands).as("__bands"))
+    val banded = Materialize.persist(keyed
       .select(col("id"), col("__bands"),
         posexplode(col("__bands")).as(Seq("band", "bkey")))
       .select(col("id"), col("band"), col("bkey"),
@@ -157,8 +181,10 @@ object Dedup {
     // agreed: emitted exactly once, at its minimal agreeing band, by a
     // codegen filter. `get()` (never-throwing element_at) keeps the terms
     // ANSI-safe; `band <= j` short-circuits the out-of-range probes, so
-    // every evaluated access is in range and non-null (band keys are md5
-    // hex of non-null slices).
+    // every evaluated access is in range. A null-text doc's keys are null,
+    // but it never gets here: null keys match nothing in the join. A
+    // 64-bit key collision is seen identically by the join and by this
+    // filter, so the pair is still emitted once.
     val noEarlierAgree = (0 until bands - 1).map { j =>
       col("band") <= j ||
         get(col("__pa"), lit(j)) =!= get(col("__pb"), lit(j))
@@ -421,7 +447,7 @@ object Dedup {
     * content, the membership join would shuffle the whole corpus with
     * multi-KB strings or arrays as the join key — at 100 TB a corpus-sized
     * content shuffle for what is logically an (id → group) lookup. With
-    * the hash the membership join ships (64-char key, id) rows only; the
+    * the hash the membership join ships (key, id) rows only; the
     * sole content that still moves is ONE representative per distinct
     * content inside the aggregate (`first()` after map-side partial agg —
     * any member's content works because same-content rows are identical
@@ -432,7 +458,9 @@ object Dedup {
     * documents would silently merge into one group and one would be
     * dropped as a dup). SHA-256 has no known collision; its 256-bit
     * random birthday bound at 10^10 docs is ~1e-58. (A 64-bit non-crypto
-    * hash fails even the random bound at that scale.)
+    * hash fails even the random bound at that scale.) Text keys are the
+    * 32 raw digest bytes (`unhex(sha2(…))`), half the width of the hex
+    * rendering; only the encoding differs, not the hash.
     */
   private[graft] def contentGroups(keyed: DataFrame, key: Column,
                                    carry: Column*): (DataFrame, DataFrame) = {
@@ -456,7 +484,7 @@ object Dedup {
                                          numHashes: Int, bands: Int,
                                          shingleSize: Int,
                                          materializePairs: Boolean = false): CollapsedRep = {
-    val (hashed, reps) = contentGroups(keyed, sha2(col("__text"), 256),
+    val (hashed, reps) = contentGroups(keyed, unhex(sha2(col("__text"), 256)),
       first(col("__text")).as("__text"))
     val membership = contentMembership(hashed, reps)
     // verified edges between distinct texts: the per-document chain, run
@@ -1276,11 +1304,12 @@ object Dedup {
     // the winner coordinates are unique so the semi-join key never skews.
     // CONTENT-ADDRESSED: the aggregate groups on sha2(para) — the
     // paragraph text is never needed after the agg (only the winner
-    // coordinates are), so the post-combine shuffle ships (64-char key,
-    // 12-byte struct) rows instead of multi-hundred-byte paragraphs as
-    // grouping keys (the argument on [[contentGroups]]; sha2-256 is the
-    // collision-resistant equality proxy safe on untrusted corpora).
-    val winners = paras.groupBy(sha2(col("para"), 256))
+    // coordinates are), so the post-combine shuffle ships (32-byte raw
+    // digest, 12-byte struct) rows instead of multi-hundred-byte
+    // paragraphs as grouping keys (the argument on [[contentGroups]];
+    // sha2-256 is the collision-resistant equality proxy safe on
+    // untrusted corpora).
+    val winners = paras.groupBy(unhex(sha2(col("para"), 256)))
       .agg(min(struct(col("id"), col("pidx"))).as("w"))
       .select(col("w.id").as("id"), col("w.pidx").as("pidx"))
     paras.join(winners.hint("shuffle_hash"), Seq("id", "pidx"), "leftsemi")

@@ -15,7 +15,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *
   * Standing state is a parquet dedup INDEX, not the corpus text:
   *   - `indexDir/fp`:      (id, fp)            — md5 content fingerprints
-  *   - `indexDir/buckets`: (id, band, bkey)    — LSH band keys
+  *   - `indexDir/buckets`: (id, band, bkey)    — LSH band keys (bigint)
   *   - `indexDir/sig`:     (id, sig)           — full MinHash signatures
   * so the per-document state is a few hundred bytes however large the
   * documents are. Admission per micro-batch:
@@ -52,12 +52,19 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * classic small-files curve), and [[compactIndex]] periodically folds the
   * live tail into big-file base tables (`fp_c`/`buckets_c`/`sig_c`);
   * admission reads the union. The bucket base is additionally partitioned
-  * by `bp = crc32(bkey) mod pruneBuckets`, and admission filters the base
+  * by `bp = pmod(bkey, pruneBuckets)`, and admission filters the base
   * read to the batch's own `bp` values — genuine partition pruning, so a
   * trickle batch (the steady-state crawl shape) opens ~|batch bps| of the
   * base's `pruneBuckets` partitions instead of the whole corpus index; a
   * bulk batch degrades gracefully to the full scan its size already
   * amortizes.
+  *
+  * Index format: `bkey` is the 64-bit key of [[graft.ops.Dedup.lshBands]].
+  * An index written while band keys were md5 hex strings (bucket base
+  * partitioned by `crc32(bkey)`) is refused by admission — its keys can
+  * never equal a 64-bit key: the probe would fail casting md5 hex to
+  * bigint under ANSI, or match nothing and admit every near-duplicate
+  * without it — and [[compactIndex]] upgrades it in place.
   */
 object StreamingDedup {
 
@@ -69,7 +76,11 @@ object StreamingDedup {
     new org.apache.hadoop.fs.Path(s"$bucketsBase/_prune_buckets")
 
   private def bpCol(bkey: org.apache.spark.sql.Column, n: Int) =
-    pmod(crc32(bkey), lit(n.toLong))
+    pmod(bkey, lit(n.toLong))
+
+  /** True for a bucket table written with md5 hex band keys. */
+  private def textKeyed(buckets: DataFrame): Boolean =
+    buckets.schema("bkey").dataType == org.apache.spark.sql.types.StringType
 
   /** Read a parquet dir, deciding "no committed rows" by LOOKING, not by
     * catching: a dir holding only an uncommitted write attempt
@@ -104,9 +115,15 @@ object StreamingDedup {
     * anti-join against its own fingerprints; same single-writer discipline
     * as [[graft.ops.Corpus.compact]]). `fp_c`/`sig_c` are
     * rewritten as ~`rowsPerFile`-row files; `buckets_c` is partitioned by
-    * `bp = crc32(bkey) mod pruneBuckets` and sorted by `bkey` within
+    * `bp = pmod(bkey, pruneBuckets)` and sorted by `bkey` within
     * partitions so admission prunes partitions AND row-group stats stay
     * tight.
+    *
+    * Format upgrade: when either bucket table still holds md5 hex band keys
+    * (see the object doc), the bucket rows are rebuilt from the signature
+    * tables instead of merged — the index stores every full signature, so
+    * no text is needed — and `buckets_c` is written in the bigint format
+    * with a fresh prune sidecar. The band count comes from the old rows.
     *
     * Crash safety leans on admission semantics plus an explicit rollback,
     * not locking: the publish order per table is write-tmp → move base
@@ -136,8 +153,29 @@ object StreamingDedup {
     // run would bake those duplicates into the base permanently, and
     // repeated crash cycles would compound index size (admission is
     // decision-insensitive to duplicates, but not cost-insensitive).
-    def merged(live: String, base: String, key: Seq[String]): Option[DataFrame] =
-      unionOpt(readAll(live), readAll(base)).map(_.dropDuplicates(key))
+    def merged(parts: Seq[DataFrame], key: Seq[String]): Option[DataFrame] =
+      parts.reduceOption(_ unionByName _).map(_.dropDuplicates(key))
+    def liveAndBase(t: String): Seq[DataFrame] =
+      Seq(readAll(s"$indexDir/$t"), readAll(s"$indexDir/${t}_c")).flatten
+    def rebuiltBuckets(parts: Seq[DataFrame]): Option[DataFrame] = {
+      val sigs = merged(liveAndBase("sig"), Seq("id"))
+      val numHashes = sigs.flatMap(_.select(size(col("sig"))).head(1).headOption)
+        .map(_.getInt(0))
+      val bands = parts.map(_.agg(max(col("band"))).head())
+        .filterNot(_.isNullAt(0)).map(_.getInt(0) + 1).maxOption
+      (sigs, numHashes, bands) match {
+        case (Some(sg), Some(h), Some(b)) =>
+          Some(sg.select(col("id"),
+            posexplode(Dedup.lshBands(col("sig"), h, b)).as(Seq("band", "bkey"))))
+        case (_, None, None) => // no rows on either side: an empty new-format table
+          Some(parts.head.select(col("id"), col("band"),
+            lit(null).cast("bigint").as("bkey")).limit(0))
+        case _ => throw new IllegalStateException(
+          s"dedup index at $indexDir is inconsistent: its text-keyed bucket " +
+            s"rows cannot be rebuilt without both bucket and signature rows — " +
+            s"rebuild the index or restore $indexDir/sig")
+      }
+    }
     def publish(df: DataFrame, base: String, partitioned: Boolean): Unit = {
       val tmp = new org.apache.hadoop.fs.Path(base + "_compacting")
       val old = new org.apache.hadoop.fs.Path(base + "_old")
@@ -180,7 +218,9 @@ object StreamingDedup {
         if (!fs.exists(baseP) && fs.exists(oldP) &&
           !fs.rename(oldP, baseP))
           sys.error(s"compactIndex: cannot roll back $oldP to $baseP")
-        merged(s"$indexDir/$t", base, key).foreach { df =>
+        val parts = liveAndBase(t)
+        (if (part && parts.exists(textKeyed)) rebuiltBuckets(parts)
+         else merged(parts, key)).foreach { df =>
           publish(df, base, part)
           fs.delete(new org.apache.hadoop.fs.Path(s"$indexDir/$t"), true)
         }
@@ -277,8 +317,18 @@ object StreamingDedup {
         readBase("buckets", Some(col("bp").isin(bps: _*)))
       case None => readBase("buckets")
     }
-    val survivors = (unionOpt(readIf(bucketDir), prunedBase),
-        unionOpt(readIf(sigDir), readBase("sig"))) match {
+    val idxBucketParts = Seq(readIf(bucketDir), prunedBase).flatten
+    val idxSigOpt = unionOpt(readIf(sigDir), readBase("sig"))
+    // Text band keys never equal a 64-bit key (see the object doc). Buckets
+    // without signatures fall through to the inconsistency error below:
+    // compactIndex cannot rebuild those.
+    if (idxSigOpt.isDefined && idxBucketParts.exists(textKeyed))
+      throw new IllegalStateException(
+        s"dedup index at $indexDir stores md5 text band keys, an older " +
+          s"format that 64-bit band keys cannot probe — run " +
+          s"StreamingDedup.compactIndex on it to rebuild its buckets")
+    val survivors = (idxBucketParts.reduceOption(_ unionByName _),
+        idxSigOpt) match {
       case (Some(idxBuckets), Some(idxSig)) =>
         val bBuckets = batchBuckets
         val cand = idxBuckets

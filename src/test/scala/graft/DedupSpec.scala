@@ -486,4 +486,80 @@ class DedupSpec extends SparkSpec {
     assert(caches.forall(_.storageLevel ==
       org.apache.spark.storage.StorageLevel.NONE))
   }
+
+  test("null texts get null band keys and never meet in a bucket") {
+    // xxhash64 skips null inputs, so an unguarded band key would put all 50
+    // null-text docs in one bucket per band: 50·49/2 = 1,225 candidate pairs
+    val near = "alpha beta gamma delta epsilon zeta eta theta iota kappa " +
+      "lambda mu nu xi omicron pi rho sigma tau upsilon phi chi psi omega " +
+      "one two three four five six"
+    val df = ((1L to 50L).map(i => (i, Option.empty[String])) ++
+      Seq((101L, Some(near)), (102L, Some(near.replaceAll("six$", "seven")))))
+      .toDF("id", "text")
+    val pairs = graft.ops.Materialize.scoped(
+      Dedup.minhashCandidatePairs(df, "id", "text").as[(Long, Long)].collect())
+    val n = pairs.length
+    assert(n == 1 && pairs.head == (101L, 102L),
+      s"$n candidates, first ${pairs.take(5).toSeq}")
+    val buckets = Dedup.lshBuckets(df, "id", "text", 16, 4, 5)
+    assert(buckets.filter(col("id") <= 50L).count() == 200L)
+    assert(buckets.filter(col("id") <= 50L && col("bkey").isNotNull).isEmpty)
+    val matched = buckets.as("a").join(buckets.as("b"), Seq("band", "bkey"))
+      .select(col("a.id")).as[Long].collect().toSet
+    assert(matched == Set(101L, 102L), s"ids meeting in a bucket: $matched")
+  }
+
+  test("64-bit band keys propose exactly the md5-key candidates, each pair once") {
+    // Random 16-long signatures (4 bands of 4) with planted agreement:
+    // pairs sharing one band, pairs sharing several, triples sharing a
+    // band, and null signatures. Both key kinds run the same bucket join.
+    def pairsOf(bandKeys: org.apache.spark.sql.DataFrame) =
+      graft.ops.Materialize.scoped(
+        Dedup.bandCandidatePairs(bandKeys, 4).as[(Long, Long)].collect().toSeq)
+    (1 to 4).foreach { seed =>
+      val rnd = new scala.util.Random(seed)
+      val sigs = Array.fill(120)(Array.fill(16)(rnd.nextInt(Int.MaxValue).toLong))
+      def plant(from: Int, to: Int, band: Int): Unit =
+        System.arraycopy(sigs(from), band * 4, sigs(to), band * 4, 4)
+      (0 until 20).foreach(_ => plant(rnd.nextInt(120), rnd.nextInt(120), rnd.nextInt(4)))
+      (0 until 10).foreach { _ =>
+        val (a, b) = (rnd.nextInt(120), rnd.nextInt(120))
+        rnd.shuffle((0 until 4).toList).take(2 + rnd.nextInt(3)).foreach(plant(a, b, _))
+      }
+      (0 until 5).foreach { _ =>
+        val (a, band) = (rnd.nextInt(120), rnd.nextInt(4))
+        plant(a, rnd.nextInt(120), band); plant(a, rnd.nextInt(120), band)
+      }
+      val nulls = (0 until 120).filter(_ => rnd.nextInt(20) == 0).toSet
+      val df = sigs.zipWithIndex.map { case (s, i) =>
+        (i.toLong, if (nulls(i)) None else Some(s.toSeq))
+      }.toSeq.toDF("id", "sig")
+      val truth = (for {
+        a <- 0 until 120; b <- a + 1 until 120
+        if !nulls(a) && !nulls(b) &&
+          (0 until 4).exists(k => sigs(a).slice(k * 4, k * 4 + 4).sameElements(
+            sigs(b).slice(k * 4, k * 4 + 4)))
+      } yield (a.toLong, b.toLong)).toSet
+      val hashed = pairsOf(df.select(col("id"),
+        Dedup.lshBands(col("sig"), 16, 4).as("__bands")))
+      val md5ed = pairsOf(df.select(col("id"), Md5BandKeys(col("sig")).as("__bands")))
+      assert(truth.size > 30, s"seed $seed planted too little: ${truth.size}")
+      assert(hashed.size == hashed.toSet.size, s"seed $seed: a pair emitted twice")
+      assert(md5ed.size == md5ed.toSet.size, s"seed $seed: a pair emitted twice (md5)")
+      assert(hashed.toSet == md5ed.toSet,
+        s"seed $seed: ${hashed.toSet.diff(md5ed.toSet)} vs ${md5ed.toSet.diff(hashed.toSet)}")
+      assert(hashed.toSet == truth, s"seed $seed: differs from band agreement")
+    }
+  }
+}
+
+/** The band keys engines wrote before keys were 64-bit: md5 hex of `b:`
+  * and the band's slice joined by `|`, for 16 hashes in 4 bands. The
+  * reference for the candidate-equivalence and index-upgrade specs.
+  */
+object Md5BandKeys {
+  def apply(sig: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    array((0 until 4).map { b =>
+      md5(concat(lit(s"$b:"), array_join(slice(sig, b * 4 + 1, 4), "|")))
+    }: _*)
 }

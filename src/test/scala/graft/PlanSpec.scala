@@ -392,6 +392,37 @@ class PlanSpec extends SparkSpec {
         plan.take(3000))
   }
 
+  test("minhash bucket self-join keys on (int, bigint); no string crosses its exchange") {
+    // Band keys are 64-bit hashes, not md5 text: the join keys are (band,
+    // bkey) as (int, bigint), and neither side's exchange carries a string
+    // (the key, the id, or the `__prior` keys of earlier bands).
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
+    import org.apache.spark.sql.types._
+    def hasString(t: DataType): Boolean = t match {
+      case ArrayType(e, _) => hasString(e)
+      case _ => t.isInstanceOf[StringType]
+    }
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val (pairs, cached) = graft.ops.Materialize.tracked(
+      graft.ops.Dedup.minhashCandidatePairs(docs, "doc_id", "text"))
+    try {
+      val plan = pairs.queryExecution.executedPlan
+      val joins = FinalPlans.collect(plan) { case j: ShuffledHashJoinExec => j }
+      assert(joins.size == 1, s"expected the one bucket self-join:\n$plan")
+      val j = joins.head
+      assert(j.leftKeys.map(_.dataType) == Seq(IntegerType, LongType) &&
+        j.rightKeys.map(_.dataType) == Seq(IntegerType, LongType),
+        s"band self-join keys: ${j.leftKeys} / ${j.rightKeys}")
+      val crossing = j.children.flatMap(c =>
+        FinalPlans.collect(c) { case e: ShuffleExchangeExec => e.output }).flatten
+      assert(crossing.map(_.name).toSet.contains("bkey"),
+        s"both sides should shuffle on the band key:\n$plan")
+      assert(!crossing.exists(a => hasString(a.dataType)),
+        s"string columns cross the exchange: ${crossing.filter(a => hasString(a.dataType))}")
+    } finally cached.foreach(_.unpersist(blocking = true))
+  }
+
   test("saltedJoin stays pinned shuffle-hash (no replicated-dim broadcast)") {
     // Same design rule, r16 vintage: Catalyst cannot see the salts×
     // explode in its size estimate, so near the broadcast threshold the

@@ -141,6 +141,65 @@ class StreamingDedupSpec extends SparkSpec {
     assert(again.isEmpty, s"fully-compacted index must drop the whole replayed probe: ${again.toSeq}")
   }
 
+  test("compactIndex upgrades an index with md5 text band keys; admission refuses it until then") {
+    // Two indexes fed the same batches (one compaction between them). One
+    // is then rewritten in the format of engines that keyed bands with md5
+    // text: string `bkey`s in the live tail and in a base partitioned by
+    // crc32(bkey) mod 8.
+    val fresh = tmpDir("dedupidx_")
+    val old = tmpDir("dedupidx_")
+    Seq(fresh, old).foreach { d =>
+      StreamingDedup.admitBatch(spark, Seq((1L, docA), (2L, docB)).toDF("id", "text"),
+        "id", "text", d, 0.5, batchId = Some(0L)).count()
+      StreamingDedup.compactIndex(spark, d, pruneBuckets = 8)
+      StreamingDedup.admitBatch(spark, Seq((11L, docC)).toDF("id", "text"),
+        "id", "text", d, 0.5, batchId = Some(1L)).count()
+    }
+    def md5Buckets(sigs: org.apache.spark.sql.DataFrame, keep: String*) =
+      sigs.select(keep.map(col) :+ col("id") :+
+        posexplode(Md5BandKeys(col("sig"))).as(Seq("band", "bkey")): _*)
+    md5Buckets(spark.read.parquet(s"$old/sig_c"))
+      .withColumn("bp", pmod(crc32(col("bkey")), lit(8L)))
+      .write.mode("overwrite").partitionBy("bp").parquet(s"$old/buckets_c")
+    Files.write(Paths.get(old, "buckets_c", "_prune_buckets"),
+      "8".getBytes(StandardCharsets.UTF_8))
+    md5Buckets(spark.read.parquet(s"$old/sig"), "bid")
+      .write.mode("overwrite").partitionBy("bid").parquet(s"$old/buckets")
+    Seq("buckets", "buckets_c").foreach { t =>
+      assert(spark.read.parquet(s"$old/$t").schema("bkey").dataType ==
+        org.apache.spark.sql.types.StringType)
+    }
+
+    // exact dup of 1 (via fp), near dup of 1 (via the bucket join only),
+    // exact dup of 11, and one novel doc
+    val probe = Seq((21L, docA), (22L, nearA), (23L, docC),
+      (24L, "garden soil needs compost mulch seeds water and patient hands every spring"))
+      .toDF("id", "text")
+    def admit(d: String) = StreamingDedup.admitBatch(spark, probe, "id", "text",
+      d, 0.5, batchId = Some(2L)).select("id").as[Long].collect().sorted.toSeq
+    val ex = intercept[IllegalStateException](admit(old))
+    assert(ex.getMessage.contains("compactIndex"), ex.getMessage)
+    assert(!Files.exists(Paths.get(old, "fp", "bid=2")), "a refused batch must write nothing")
+
+    StreamingDedup.compactIndex(spark, old, pruneBuckets = 8)
+    assert(!Files.exists(Paths.get(old, "buckets")), "live tail must fold")
+    assert(new String(Files.readAllBytes(Paths.get(old, "buckets_c", "_prune_buckets")),
+      StandardCharsets.UTF_8).trim == "8")
+    val upgraded = spark.read.parquet(s"$old/buckets_c")
+    assert(upgraded.schema("bkey").dataType == org.apache.spark.sql.types.LongType)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("id", "band", "bkey").as[(Long, Int, Long)].collect().toSet
+    val freshRows = rows(spark.read.parquet(s"$fresh/buckets_c")) ++
+      rows(spark.read.parquet(s"$fresh/buckets"))
+    assert(rows(upgraded) == freshRows, "upgraded buckets must equal a fresh index's")
+    assert(upgraded.filter(col("bp") =!= pmod(col("bkey"), lit(8L))).isEmpty,
+      "the base must be partitioned by pmod(bkey, 8)")
+
+    val fromFresh = admit(fresh)
+    assert(fromFresh == Seq(24L), s"fresh index admitted $fromFresh")
+    assert(admit(old) == fromFresh, "the upgraded index must decide as a fresh one")
+  }
+
   test("compactIndex: is idempotent and duplicate-tolerant (crash repair = re-run)") {
     val indexDir = tmpDir("dedupidx_")
     StreamingDedup.admitBatch(spark,
