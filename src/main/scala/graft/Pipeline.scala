@@ -19,11 +19,14 @@ import org.apache.spark.sql.functions._
   * [[Evolution.publish]] (sidecar and one-row-file reads and writes), the
   * id seed (the high-water sidecar) and the move of the staged files. Jobs
   * that can come on top, per batch:
-  *  - whatever the reader runs before `batch` exists (e.g. a CSV header
-  *    and `inferSchema` pass, a JSON or parquet schema pass);
+  *  - whatever the reader runs before `batch` exists (e.g. the one
+  *    inference job of [[graft.ingest.Readers.csv]], a JSON or parquet
+  *    schema pass);
   *  - for a batch the spread rule below repartitions (at most one split
   *    per 4 cores, e.g. a one-file CSV or JSON upload), its shuffle stage;
-  *  - in `ingestJson`, the key-presence inference jobs;
+  *  - in `ingestJson`, the key-presence inference fold: one job, which
+  *    also fills the batch's cache, so a ragged batch runs that job and
+  *    the write;
   *  - after a crash, one high-water scan in the next writer's repair.
   *
   * Schema inference on this path is CONSTANT, not a scan: a DataFrame batch
@@ -32,7 +35,7 @@ import org.apache.spark.sql.functions._
   * columns — properties = columns, required = all of them, types "string"
   * (strict parity: the reference stringifies before genson, app.py:253-261,
   * and its dict records always carry every key). The distributed
-  * key-presence aggregation ([[graft.ops.InferSchema]]) remains the
+  * key-presence fold ([[graft.ops.InferSchema]]) remains the
   * schema-on-read API for genuinely ragged JSON input.
   */
 object Pipeline {
@@ -112,9 +115,10 @@ object Pipeline {
   }
 
   /** Schema-on-read ingest for genuinely ragged JSON records (one string
-    * column of JSON objects): distributed key-presence inference, then the
-    * same validate/stamp/store chain. This is the path where records may
-    * disagree on their key sets, so quality issues can be non-empty.
+    * column of JSON objects): the one-job key-presence fold of
+    * [[InferSchema.infer]], then the same validate/stamp/store chain. This
+    * is the path where records may disagree on their key sets, so quality
+    * issues can be non-empty.
     */
   def ingestJson(spark: SparkSession, records: DataFrame, jsonCol: String,
                  corpusDir: String, idCol: Option[String] = None): IngestResult = {

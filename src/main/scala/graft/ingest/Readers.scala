@@ -1,7 +1,12 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.datasources.{FileScanRDD, HadoopFileLinesReader}
+import org.apache.spark.sql.execution.datasources.csv.TextInputCSVDataSource
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import java.io.ByteArrayInputStream
 import java.nio.charset.StandardCharsets
@@ -91,9 +96,46 @@ object Readers {
     } else spark.read.format("binaryFile").load(path)
   }
 
-  /** S1 — CSV with header + type inference (reference `app.py:178-179`). */
-  def csv(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("header", "true").option("inferSchema", "true").csv(path)
+  /** S1 — CSV with header + type inference (reference `app.py:178-179`),
+    * in ONE Spark job: Spark's own inference aggregate over the text lines
+    * (`TextInputCSVDataSource.inferFromDataset`), so the schema is the one
+    * `option("inferSchema", "true")` gives. The header that inference
+    * needs is read on the driver, not by a `take(1)` job: it is the first
+    * line that is not all spaces in the text scan's order — its partitions'
+    * files, largest split first — read with the scan's own line reader
+    * (`HadoopFileLinesReader`: skips a UTF-8 BOM, ends lines at `\n`,
+    * `\r\n` or `\r`, decompresses through Hadoop codecs). The returned
+    * reader declares the inferred schema, so opening it runs no job.
+    */
+  def csv(spark: SparkSession, path: String): DataFrame = {
+    val lines = spark.read.textFile(path)
+    val conf = spark.sessionState.conf
+    val options = new CSVOptions(Map("header" -> "true", "inferSchema" -> "true"),
+      conf.csvColumnPruning, conf.sessionLocalTimeZone, conf.columnNameOfCorruptRecord)
+    val schema =
+      TextInputCSVDataSource.inferFromDataset(spark, lines, csvHeader(spark, lines), options)
+    spark.read.option("header", "true").schema(schema).csv(path)
+  }
+
+  /** The first non-blank line of `lines` in scan order, read on the
+    * driver — the line `CSVUtils.filterCommentAndEmpty(lines).take(1)`
+    * returns (blank as SQL `trim` sees it: spaces only). A path that
+    * lists no file fails as the inferring reader does.
+    */
+  private def csvHeader(spark: SparkSession, lines: Dataset[String]): Option[String] = {
+    val scan =
+      lines.queryExecution.sparkPlan.collectFirst { case s: FileSourceScanExec => s }.get
+    if (scan.relation.location.inputFiles.isEmpty)
+      throw new AnalysisException("UNABLE_TO_INFER_SCHEMA", Map("format" -> "CSV"))
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    scan.inputRDD.asInstanceOf[FileScanRDD].filePartitions.iterator.flatMap(_.files)
+      .flatMap { file =>
+        val reader = new HadoopFileLinesReader(file, hadoopConf)
+        try reader.map(t => UTF8String.fromBytes(t.getBytes, 0, t.getLength))
+          .find(_.trim().numBytes() > 0).map(_.toString)
+        finally reader.close()
+      }.nextOption()
+  }
 
   /** S2 — JSON array-of-objects (reference `app.py:182-183`). */
   def json(spark: SparkSession, path: String): DataFrame =

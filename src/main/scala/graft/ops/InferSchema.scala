@@ -2,7 +2,10 @@ package graft.ops
 
 import graft.model.JsonSchema
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+
+import scala.collection.mutable
 
 /** A1 — dynamic schema inference over a batch of JSON records (reference
   * `app.py:250-263`, genson-based).
@@ -12,14 +15,16 @@ import org.apache.spark.sql.functions._
   * = field names present in every record; leaf types all `"string"` in
   * strict-parity mode (the reference stringifies every value first).
   *
-  * Spark-first design: this is a single key-presence aggregation —
-  * `explode(json_object_keys(data))` → `groupBy(key).count()` — one shuffle
-  * whose key cardinality is the number of *distinct field names* (tiny), so
-  * the map-side partial aggregation collapses ~all the data before the
-  * shuffle. The collected state is a few KB of (field, count) pairs — the only
-  * legitimately driver-side step, exactly like the reference's single-writer
-  * schema control plane. Scales to 100 TB: the wide fact scan stays
-  * distributed; nothing per-record ever reaches the driver.
+  * Spark-first design: [[infer]] is ONE job, a `treeAggregate` fold over
+  * the batch's per-record keys. Each partition folds its records into the
+  * record total and, per field name, its occurrences and the JSON types
+  * voted for it; the partials merge pairwise, so the driver receives a few
+  * KB however many partitions the batch has — the only legitimately
+  * driver-side step, exactly like the reference's single-writer schema
+  * control plane. No SQL shuffle and no hash-aggregate page: the state is
+  * sized by the number of *distinct field names* (tiny). Scales to 100 TB:
+  * the wide fact scan stays distributed; nothing per-record ever reaches
+  * the driver.
   *
   * We use `json_object_keys` (not `from_json`) so an absent key and an
   * explicit JSON null stay distinguishable — genson treats `{"a": null}` as
@@ -27,9 +32,9 @@ import org.apache.spark.sql.functions._
   */
 object InferSchema {
 
-  /** Per-field presence counts as a DataFrame — the distributed core of
-    * inference; also exposed directly as an oracle-checked query.
-    * Output: (field: string, n_present: long).
+  /** Per-field presence counts as a DataFrame — the same counts [[infer]]'s
+    * fold takes, exposed as an oracle-checked query (and the reference the
+    * fold is specced against). Output: (field: string, n_present: long).
     */
   def fieldPresence(records: DataFrame, jsonCol: String): DataFrame =
     records
@@ -45,15 +50,18 @@ object InferSchema {
     * nested values, no JsonNode allocation), with readTree's record-level
     * semantics pinned in the kernel's scaladoc and InferSchemaSpec:
     * malformed / non-object / null-parse records yield an empty array (no
-    * rows after the explode), a NULL input column null-propagates (the
-    * explode drops it identically), and duplicate keys collapse to
-    * first-position/last-type exactly as readTree's ObjectNode did.
+    * votes), a NULL input column null-propagates (no votes either), and
+    * duplicate keys collapse to first-position/last-type exactly as
+    * readTree's ObjectNode did.
     */
   private def fieldJsonTypes(c: Column): Column =
     call_function("graft_json_types", c)
 
-  /** Full inference: one distributed aggregation, then a tiny driver-side
-    * collect of (field, presence, type-votes).
+  /** Full inference: one distributed fold, then the type vote on the
+    * driver. A field's occurrences count each key, so a record that
+    * repeats a key counts it twice, exactly as [[fieldPresence]] does; it
+    * is `required` when its occurrences equal the record total, which
+    * counts every record, null and malformed ones included.
     *
     * @param parityStringify strict-parity mode: every leaf type is "string"
     *        (reference `app.py:253-261`); structured mode keeps real types
@@ -61,65 +69,69 @@ object InferSchema {
     */
   def infer(records: DataFrame, jsonCol: String = "data",
             parityStringify: Boolean = true): Option[JsonSchema] = {
-    // The record total (the `required` denominator) rides the SAME job as
-    // the presence aggregation via observe() — a records.count() here would
-    // scan the batch twice (and in typed mode pay the Jackson parse twice).
-    val obs = new org.apache.spark.sql.Observation()
-    val observed = records.observe(obs, count(lit(1)).as("total"))
-
-    val presence =
-      if (parityStringify) {
-        fieldPresence(observed, jsonCol)
-          .withColumn("types", array(lit("string")))
-      } else {
-        observed
-          .select(explode(fieldJsonTypes(col(jsonCol))).as("kv"))
-          .select(col("kv.field").as("field"), col("kv.t").as("t"))
-          .groupBy("field")
-          .agg(count(lit(1)).as("n_present"), collect_set(col("t")).as("types"))
-      }
-
-    val rows = presence.collect() // tiny: one row per distinct field name
-    // PropagateEmptyRelation can optimize the CollectMetrics node away
-    // entirely (empty batch -> empty LocalRelation), leaving the observation
-    // unfired; the count() fallback is free in exactly that case.
-    val total = scala.util.Try(obs.get("total").asInstanceOf[Long])
-      .getOrElse(records.count())
-    if (total == 0) return None
-    val props = rows.map { r =>
-      // Spark returns array columns as mutable.ArraySeq on Scala 2.13 —
-      // request the cross-package supertype, then normalize.
-      val types = r.getAs[scala.collection.Seq[String]]("types")
-        .toSeq.filterNot(_ == "null")
-      val t = types match {
-        case Seq(single) => single
-        case ts if ts.toSet == Set("integer", "number") => "number"
-        case Seq() => "null"
+    val v = votes(records, jsonCol, parityStringify)
+    if (v.total == 0) return None
+    val props = v.fields.map { case (field, (_, types)) =>
+      val t = types - "null" match {
+        case ts if ts.size == 1 => ts.head
+        case ts if ts == Set("integer", "number") => "number"
+        case ts if ts.isEmpty => "null"
         case _ => "string"
       }
-      r.getAs[String]("field") -> t
+      field -> t
     }.toMap
-    val required = rows.filter(_.getAs[Long]("n_present") == total)
-      .map(_.getAs[String]("field")).toSeq.sorted
+    val required = v.fields.collect { case (field, (n, _)) if n == v.total => field }
+      .toSeq.sorted
     Some(JsonSchema(props, required))
   }
 
-  /** Inference over an already-structured DataFrame (e.g. a fresh CSV read):
-    * field presence = non-null count per column in parity with the reference,
-    * where a parsed record simply lacks absent keys. Columns are the union by
-    * construction; required = columns with zero nulls.
+  /** [[infer]]'s one job: the batch folded into [[Votes]]. `toRdd` runs
+    * the key projection under the session's SQL conf; a batch of no
+    * partitions runs no job at all.
     */
-  def inferStructured(df: DataFrame): Option[JsonSchema] = {
-    // total and per-column non-null counts in ONE aggregation job
-    val counts = df.select(
-      (count(lit(1)).as("__total") +:
-        df.columns.map(c => count(col(c)).as(c))).toSeq: _*).collect()(0)
-    val total = counts.getLong(0)
-    if (total == 0) return None
-    val props = df.schema.fields.map { f => f.name -> "string" }.toMap
-    val required = df.columns.zipWithIndex
-      .filter { case (_, i) => counts.getLong(i + 1) == total }
-      .map(_._1).toSeq.sorted
-    Some(JsonSchema(props, required))
+  private[graft] def votes(records: DataFrame, jsonCol: String,
+                           parityStringify: Boolean): Votes = {
+    val keys =
+      if (parityStringify) json_object_keys(col(jsonCol)) else fieldJsonTypes(col(jsonCol))
+    records.select(keys).queryExecution.toRdd
+      .treeAggregate(new Votes)((v, row) => v.add(row, parityStringify), _ merge _)
   }
+
+  /** The fold state of [[infer]]: the record total and, per field, its
+    * occurrences and the JSON types voted for it (`"string"` in parity
+    * mode).
+    */
+  private[graft] final class Votes extends Serializable {
+    var total = 0L
+    val fields = mutable.HashMap.empty[String, (Long, Set[String])]
+
+    private def vote(field: String, n: Long, types: Set[String]): Unit = {
+      val (m, ts) = fields.getOrElse(field, (0L, Set.empty[String]))
+      fields(field) = (m + n, ts ++ types)
+    }
+
+    /** Folds one projected record: its keys (parity) or `(field, t)` pairs. */
+    def add(row: InternalRow, parity: Boolean): Votes = {
+      total += 1
+      if (!row.isNullAt(0)) {
+        val a = row.getArray(0)
+        (0 until a.numElements()).foreach { i =>
+          if (parity) vote(a.getUTF8String(i).toString, 1L, AsString)
+          else {
+            val kv = a.getStruct(i, 2)
+            vote(kv.getUTF8String(0).toString, 1L, Set(kv.getUTF8String(1).toString))
+          }
+        }
+      }
+      this
+    }
+
+    def merge(o: Votes): Votes = {
+      total += o.total
+      o.fields.foreach { case (field, (n, ts)) => vote(field, n, ts) }
+      this
+    }
+  }
+
+  private val AsString: Set[String] = Set("string")
 }

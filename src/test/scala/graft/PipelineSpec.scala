@@ -467,7 +467,7 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
-  /** A one-file CSV upload; its header and inference jobs run here. */
+  /** A one-file CSV upload; its one inference job runs here. */
   private def csvBatch(header: String, rows: Int, pad: String = "") = {
     val f = java.nio.file.Paths.get(tmpDir("csv_"), "in.csv")
     java.nio.file.Files.write(f, (header +: (1 to rows).map(i => s"doc $i$pad,$i" +
@@ -494,6 +494,21 @@ class PipelineSpec extends SparkSpec {
     assert(jobs(Corpus.latestRecords(spark, dir).collect()) == 1)
     assert(Corpus.records(spark, dir).groupBy("schema_version").count()
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap == Map(1 -> 41L, 2 -> 20L))
+  }
+
+  test("a ragged JSON batch into an existing corpus runs two jobs: the inference fold and the write") {
+    val dir = tmpDir("corpus_")
+    Pipeline.ingest(spark, Seq(("a", 1)).toDF("content", "n"), dir)
+    val f = java.nio.file.Paths.get(tmpDir("jsonl_"), "in.jsonl")
+    java.nio.file.Files.write(f, (1 to 40).map(i =>
+      if (i % 3 == 0) s"""{"content": "doc $i"}""" else s"""{"content": "doc $i", "n": $i}""")
+      .mkString("", "\n", "\n").getBytes("UTF-8"))
+    val batch = graft.ingest.Readers.txt(spark, f.toString)
+    var r: Pipeline.IngestResult = null
+    val jobs = FinalPlans.jobsDuring(spark) { r = Pipeline.ingestJson(spark, batch, "content", dir) }
+    assert(jobs == 2)
+    assert(r.recordCount == 40 && r.flaggedCount == 13)
+    assert(r.schema.required == Seq("content"))
   }
 
   test("the spread rule counts splits: a one-split file is spread whatever its size") {

@@ -38,6 +38,57 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  /** A ragged record: an object (its keys drawn with repeats, so some
+    * records repeat a key), or a malformed line, non-object JSON or null. */
+  private val raggedGen: Gen[String] = {
+    val value = Gen.oneOf("1", "2.5", "\"s\"", "true", "null", "[1]", "{\"x\": 1}")
+    val pair = Gen.zip(Gen.oneOf("a", "b", "c", "d", "e"), value)
+    val obj = Gen.choose(0, 7).flatMap(Gen.listOfN(_, pair))
+      .map(_.map { case (k, v) => s""""$k": $v""" }.mkString("{", ", ", "}"))
+    Gen.frequency(20 -> obj, 1 -> Gen.oneOf("""{"a": """, "not json", ""),
+      1 -> Gen.oneOf("[1, 2]", "42", "\"str\"", "null"), 1 -> Gen.const(null: String))
+  }
+
+  /** Typed inference as the collect_set vote computed it before the fold. */
+  private def collectSetVote(df: org.apache.spark.sql.DataFrame): Option[JsonSchema] = {
+    import org.apache.spark.sql.functions.{collect_set, count, lit}
+    val total = df.count()
+    if (total == 0) return None
+    val rows = df.selectExpr("explode(graft_json_types(data)) AS kv")
+      .groupBy($"kv.field".as("field"))
+      .agg(count(lit(1)).as("n"), collect_set($"kv.t").as("types")).collect()
+    val props = rows.map { r =>
+      val t = r.getAs[scala.collection.Seq[String]]("types").toSeq.filterNot(_ == "null") match {
+        case Seq(single) => single
+        case ts if ts.toSet == Set("integer", "number") => "number"
+        case Seq() => "null"
+        case _ => "string"
+      }
+      r.getString(0) -> t
+    }.toMap
+    Some(JsonSchema(props, rows.filter(_.getLong(1) == total).map(_.getString(0)).toSeq.sorted))
+  }
+
+  test("inference fold: presence equals fieldPresence, typed vote equals collect_set") {
+    val gen = Gen.zip(Gen.choose(0, 16).flatMap(Gen.listOfN(_, raggedGen)), Gen.choose(1, 8))
+    val typed = samples(gen, 40).map { case (batch, parts) =>
+      val df = batch.toDF("data").repartition(parts)
+      val fold = InferSchema.votes(df, "data", parityStringify = true)
+      val presence = InferSchema.fieldPresence(df, "data").collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(fold.total == batch.size, s"batch $batch")
+      assert(fold.fields.map { case (f, (n, _)) => f -> n }.toMap == presence, s"batch $batch")
+      val schema = InferSchema.infer(df, "data", parityStringify = false)
+      assert(schema == collectSetVote(df), s"batch $batch")
+      schema
+    }
+    // the generator reaches batches with required fields
+    assert(typed.exists(_.exists(_.required.nonEmpty)))
+    val empty = Seq.empty[String].toDF("data")
+    assert(InferSchema.infer(empty, "data").isEmpty)
+    assert(InferSchema.infer(empty.repartition(3), "data", parityStringify = false).isEmpty)
+  }
+
   test("schema diff: added/removed partition the symmetric difference") {
     samples(Gen.zip(Gen.listOf(fieldGen), Gen.listOf(fieldGen)), 200).foreach {
       case (oldF, newF) =>

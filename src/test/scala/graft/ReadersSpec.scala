@@ -608,6 +608,66 @@ class ReadersSpec extends SparkSpec {
     assert(rows.length == 3, s"malformed row must not drop the batch: ${rows.toSeq}")
   }
 
+  private def gzip(text: String): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream
+    val gz = new java.util.zip.GZIPOutputStream(out)
+    gz.write(text.getBytes(StandardCharsets.UTF_8)); gz.close()
+    out.toByteArray
+  }
+
+  /** CSV upload fixtures: each is a directory of (file name, bytes). */
+  private val csvFixtures: Seq[(String, Seq[(String, Array[Byte])])] = {
+    def utf8(s: String) = s.getBytes(StandardCharsets.UTF_8)
+    Seq(
+      "single file" -> Seq("a.csv" -> utf8("id,name,score\n1,ann,1.5\n2,bob,\n3,cy,7\n")),
+      "several files and an empty one" -> Seq(
+        "a.csv" -> utf8("id,name\n1,ann\n2,bob\n"),
+        "b.csv" -> utf8("id,name\n3,cy\n4,dee\n5,eve\n6,fay\n"),
+        "c.csv" -> utf8("id,name\n7,x\n"),
+        "empty.csv" -> Array.emptyByteArray),
+      // the largest file's header names the columns
+      "files that disagree on the header" -> Seq(
+        "small.csv" -> utf8("p,q\n1,2\n"),
+        "large.csv" -> utf8("x,y\n10,20\n30,40\n50,60\n")),
+      "UTF-8 BOM" -> Seq("bom.csv" -> utf8("\uFEFFid,name\n1,ann\n2,bob\n")),
+      "CRLF line ends" -> Seq("crlf.csv" -> utf8("id,name\r\n1,ann\r\n2,bob\r\n")),
+      "CR line ends" -> Seq("cr.csv" -> utf8("id,name\r1,ann\r2,bob\r")),
+      "leading blank lines" -> Seq("blank.csv" -> utf8("\n   \n\nid,name\n1,ann\n\n2,bob\n")),
+      "header only" -> Seq("h.csv" -> utf8("id,name\n")),
+      "gzip" -> Seq("g.csv.gz" -> gzip("id,when,v\n1,2024-01-02,0.5\n2,2024-03-04,1\n")),
+      "quoted header with a comma" -> Seq("q.csv" -> utf8("\"last, first\",n\n\"doe, j\",1\n")),
+      "too many fields (PERMISSIVE)" -> Seq(
+        "d.csv" -> utf8("a,b\n1,x\n2,y,EXTRA,FIELDS\n3,z\n")))
+  }
+
+  test("csv: schema, names and rows equal Spark's inferring reader on every fixture") {
+    csvFixtures.foreach { case (name, files) =>
+      val dir = tmpDir("csvparity_")
+      files.foreach { case (f, bytes) => write(dir, f, bytes) }
+      val got = Readers.csv(spark, dir)
+      val want = spark.read.option("header", "true").option("inferSchema", "true").csv(dir)
+      assert(got.schema == want.schema, s"$name: schema")
+      assert(got.columns.toSeq == want.columns.toSeq, s"$name: column names")
+      assert(got.collect().toSeq == want.collect().toSeq, s"$name: rows")
+    }
+  }
+
+  test("csv: a one-file upload runs one job, its inference") {
+    val dir = tmpDir("csvjobs_")
+    val f = write(dir, "in.csv", "id,name\n1,ann\n2,bob\n".getBytes(StandardCharsets.UTF_8))
+    val jobs = FinalPlans.jobsDuring(spark) _
+    assert(jobs(Readers.csv(spark, f)) == 1)
+    assert(jobs(spark.read.option("header", "true").option("inferSchema", "true").csv(f)) == 2)
+  }
+
+  test("csv: a path that lists no file fails like the inferring reader") {
+    val dir = tmpDir("csvnone_")
+    val e = intercept[org.apache.spark.sql.AnalysisException](Readers.csv(spark, dir))
+    val ref = intercept[org.apache.spark.sql.AnalysisException](
+      spark.read.option("header", "true").option("inferSchema", "true").csv(dir))
+    assert(e.getCondition == ref.getCondition)
+  }
+
   test("html: script/style/comments dropped, tags stripped, entities decoded") {
     val dir = tmpDir("html_")
     write(dir, "p.html",
