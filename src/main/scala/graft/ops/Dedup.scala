@@ -130,12 +130,19 @@ object Dedup {
     * (band, bucket-key) pair with `id_a < id_b` → first-agreeing-band
     * ownership filter. The shuffle key is the (int band, 64-bit band key)
     * pair (uniform space — no planned skew), and a degenerate bucket (e.g.
-    * millions of empty/boilerplate docs sharing a signature) stays a
-    * join-skew problem AQE splits across tasks — never an unbounded
-    * `collect_set` array on one executor.
+    * millions of empty/boilerplate docs sharing a signature) is one bucket
+    * of the hash join — never an unbounded `collect_set` array on one
+    * executor.
     *
-    * The bucket table is persisted through [[Materialize.persist]]; its
-    * lifetime is the caller's scope (see [[Materialize.tracked]]).
+    * The bucket table is persisted through [[Materialize.persist]] already
+    * hash-partitioned on (band, bucket key): it is shuffled once, inside
+    * the cache fill, and neither join side has an exchange. Its lifetime
+    * is the caller's scope (see [[Materialize.tracked]]). The trade-off:
+    * with no exchange at the join, AQE cannot split a skewed bucket there.
+    * That split only fires once one input partition reaches
+    * `skewedPartitionThresholdInBytes` (256 MB by default), about 4–5 M
+    * bucket rows; one bucket that size proposes ~10^13 candidate pairs, so
+    * the split never rescued a run that could otherwise finish.
     */
   def minhashCandidatePairs(df: DataFrame, idCol: String, textCol: String,
                             numHashes: Int = 16, bands: Int = 4,
@@ -151,11 +158,13 @@ object Dedup {
     * each pair once. Generic in the key type.
     */
   private[graft] def bandCandidatePairs(keyed: DataFrame, bands: Int): DataFrame = {
-    // The bucket table feeds BOTH sides of the self-join; without an explicit
-    // materialization Spark recomputes the whole signature scan twice (alias
-    // differences below the exchange defeat ReuseExchange). It is the small
-    // derived table of the pipeline — bands rows of (long, int, long key)
-    // per doc, orders of magnitude under the corpus — so persist it.
+    // The bucket table feeds BOTH sides of the self-join. It is persisted
+    // already hash-partitioned on the join key: the one shuffle runs inside
+    // the cache fill, and both join sides read co-partitioned blocks with
+    // no exchange (persisted plainly, each side would get its own exchange,
+    // and the two never merge: the rule on [[Materialize]]). It is the
+    // small derived table of the pipeline — bands rows of (long, int, long
+    // key) per doc, orders of magnitude under the corpus.
     //
     // `__prior` carries the band keys BEFORE this row's band (slice of the
     // per-doc band array) so the self-join below can dedup pairs with a
@@ -166,7 +175,8 @@ object Dedup {
       .select(col("id"), col("__bands"),
         posexplode(col("__bands")).as(Seq("band", "bkey")))
       .select(col("id"), col("band"), col("bkey"),
-        slice(col("__bands"), lit(1), col("band")).as("__prior")))
+        slice(col("__bands"), lit(1), col("band")).as("__prior"))
+      .repartition(col("band"), col("bkey")))
     // Pin the self-join to shuffle-hash: both sides are the SAME
     // corpus-proportional table, so a broadcast is never right at scale,
     // and letting the planner flip to one on borderline size estimates
@@ -387,22 +397,26 @@ object Dedup {
                                    numHashes: Int, bands: Int,
                                    shingleSize: Int,
                                    materializePairs: Boolean = false): DataFrame = {
-    // pairs feed three consumers (id collection + two verify joins), so
-    // they are persisted. With `materializePairs` the cache is filled here,
-    // before the verify plan exists, so the planner sizes `candIds` from
-    // the real pair count: a small candidate set broadcasts into the
-    // semi-join and no corpus text is shuffled, while a corpus-scale one
-    // still exceeds the broadcast threshold and shuffles. An unfilled
-    // cache reports the bucket self-join's far larger estimate, so the
-    // semi-join exchanges every (id, text) row before AQE switches it to
-    // a broadcast.
+    // pairs feed two consumers (the id collection behind `sets` and the
+    // first verify join), so they are persisted. With `materializePairs`
+    // the cache is filled here, before the verify plan exists, so the
+    // planner sizes `candIds` from the real pair count: a small candidate
+    // set broadcasts into the semi-join and no corpus text is shuffled,
+    // while a corpus-scale one still exceeds the broadcast threshold and
+    // shuffles. An unfilled cache reports the bucket self-join's far
+    // larger estimate, so the semi-join exchanges every (id, text) row
+    // before AQE switches it to a broadcast.
     val pairs = Materialize.persist(
       minhashCandidatePairs(keyed, "id", "__text", numHashes, bands, shingleSize))
     if (materializePairs) pairs.count()
     val candIds = pairs.select(explode(array(col("id_a"), col("id_b"))).as("id")).distinct()
-    val sets = keyed
+    // Both verify joins read `sets`, so it is persisted already partitioned
+    // on `id` (the rule on [[Materialize]]): candidates are shingled once,
+    // and the sets are shuffled once, inside the cache fill.
+    val sets = Materialize.persist(keyed
       .join(candIds, Seq("id"), "leftsemi") // filter BEFORE shingling
       .select(col("id"), shingleHashSet(col("__text"), shingleSize).as("sh"))
+      .repartition(col("id")))
     // The sets side carries the shingle-hash ARRAYS — Catalyst's size
     // estimate for array columns runs low, so left to itself the planner
     // sometimes broadcasts a corpus-proportional HashedRelation of shingle
@@ -969,6 +983,29 @@ object Dedup {
     }
   }
 
+  /** The distinct directed edge table of `pairs` (`src`, `dst`),
+    * materialized by `ckpt`, and its row count. Both directions of every
+    * pair come from one scan: a union of two projections would run the
+    * input plan once per branch. `ReuseExchange` could share at most the
+    * exchanges inside it, and those above reads of a persisted frame never
+    * match (see [[Materialize]]). The count is an `Observation` on the
+    * plan `ckpt` runs, so it rides the checkpoint job instead of running
+    * an aggregate job of its own; an empty `pairs` counts 0.
+    */
+  private[graft] def directedEdges(pairs: DataFrame,
+                                   ckpt: DataFrame => DataFrame): (DataFrame, Long) = {
+    // a fresh Observation per call: one can observe only one Dataset
+    val counted = new org.apache.spark.sql.Observation()
+    val edges = ckpt(pairs
+      .select(explode(array(
+        struct(col("id_a").as("src"), col("id_b").as("dst")),
+        struct(col("id_b").as("src"), col("id_a").as("dst")))).as("__e"))
+      .select(col("__e.src").as("src"), col("__e.dst").as("dst"))
+      .distinct()
+      .observe(counted, count(lit(1)).as("n")))
+    (edges, counted.get("n").asInstanceOf[Long])
+  }
+
   /** Connected components over an undirected pair list — the CLUSTER step
     * of near-dup dedup (pairs → clusters → one canonical survivor per
     * cluster; the reference stops at ingest, this is the extension mandate's
@@ -1043,15 +1080,7 @@ object Dedup {
         df => df.checkpoint()
       case None => df => df.localCheckpoint()
     }
-    // one scan for both directions: a union of two projections would run
-    // the input plan twice (the branches' exchanges differ by alias, so
-    // ReuseExchange does not merge them)
-    val edges = ckpt(pairs
-      .select(explode(array(
-        struct(col("id_a").as("src"), col("id_b").as("dst")),
-        struct(col("id_b").as("src"), col("id_a").as("dst")))).as("__e"))
-      .select(col("__e.src").as("src"), col("__e.dst").as("dst"))
-      .distinct())
+    val (edges, edgeCount) = directedEdges(pairs, ckpt)
     val idType = edges.schema("src").dataType
     // Adaptive small-graph path: verified near-dup pair graphs are usually
     // a tiny fraction of the corpus, and each distributed round costs two
@@ -1071,7 +1100,6 @@ object Dedup {
     // (one cheap agg over the checkpoint blocks) and non-Long/Int/String id
     // types always take the distributed loop (their driver ordering isn't
     // guaranteed to match min(lbl)). Pass driverCutoff = 0 to force the loop.
-    val edgeCount = edges.count() // cheap scan of the checkpoint blocks
     lazy val avgStrLen: Double = edges
       .agg(avg(length(col("src").cast("string")))).head().getDouble(0)
     if (driverPathAllowed(edgeCount, idType, avgStrLen,

@@ -18,6 +18,16 @@ import org.apache.spark.storage.StorageLevel
   * Scopes sit on a per-thread stack (a plain, non-inheritable
   * `ThreadLocal`), so a thread started inside a scope never registers into
   * it.
+  *
+  * A frame that one query reads twice through the same exchange (both
+  * sides of a self-join, two joins on the same key) is persisted already
+  * partitioned on that key: `persist(df.repartition(key))`. Under AQE each
+  * read of a persisted frame is its own table-cache query stage, and two
+  * exchanges above two such reads never canonicalize alike, so
+  * `ReuseExchange` does not merge them and the frame is shuffled once per
+  * read. (A self-join of an UNcached frame does reuse its exchange.) Cached
+  * hash-partitioned, the frame is shuffled once, inside the cache fill,
+  * and the reads need no exchange.
   */
 object Materialize {
 

@@ -174,6 +174,114 @@ class DedupSpec extends SparkSpec {
     assert(textual.isEmpty, s"exchanges carrying text: $textual")
   }
 
+  /** 400 distinct 30-token docs plus 20 copies with the last token redrawn
+    * (Jaccard 25/27, kept at 0.9), 20 with the last two redrawn (24/28,
+    * usually candidates, dropped by verify at 0.9) and 10 exact copies.
+    */
+  private lazy val nearDupCorpus = {
+    val rnd = new scala.util.Random(23)
+    def word() = s"w${rnd.nextInt(5000)}"
+    val base = (1 to 400).map(i => (i.toLong, Seq.fill(30)(word())))
+    def redraw(toks: Seq[String], n: Int) = toks.dropRight(n) ++ Seq.fill(n)(word())
+    val rows = base ++
+      base.slice(0, 20).map { case (i, t) => (1000L + i, redraw(t, 1)) } ++
+      base.slice(20, 40).map { case (i, t) => (2000L + i, redraw(t, 2)) } ++
+      base.slice(40, 50).map { case (i, t) => (3000L + i, t) }
+    rows.map { case (i, t) => (i, t.mkString(" ")) }.toDF("id", "text")
+  }
+
+  test("directedEdges counts its edges inside the checkpoint job: local, reliable, empty") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (2L, 1L))
+      .toDF("id_a", "id_b")
+    val empty = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
+    // the same rows as directedEdges' table, checkpointed without a count
+    def bare(p: org.apache.spark.sql.DataFrame) = p
+      .select(explode(array(struct(col("id_a").as("s"), col("id_b").as("d")),
+        struct(col("id_b").as("s"), col("id_a").as("d")))).as("e"))
+      .select(col("e.*")).distinct()
+    spark.sparkContext.setCheckpointDir(
+      java.nio.file.Files.createTempDirectory("graft_cc_observe").toString)
+    val modes = Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
+      "localCheckpoint" -> (_.localCheckpoint()), "checkpoint" -> (_.checkpoint()))
+    for ((mode, ckpt) <- modes) {
+      var counted = -1L
+      var edges: org.apache.spark.sql.DataFrame = null
+      val jobs = FinalPlans.jobsDuring(spark) {
+        val r = Dedup.directedEdges(pairs, ckpt); edges = r._1; counted = r._2
+      }
+      assert(counted == 8L && edges.count() == 8L, s"$mode: counted $counted")
+      val bareJobs = FinalPlans.jobsDuring(spark)(ckpt(bare(pairs)))
+      assert(jobs == bareJobs,
+        s"$mode: the count ran ${jobs - bareJobs} jobs beyond the checkpoint")
+      // an empty pair list still reports its metrics: 0, and no hang
+      val none = Await.result(Future(Dedup.directedEdges(empty, ckpt)._2), 60.seconds)
+      assert(none == 0L, s"$mode: empty pair list counted $none")
+    }
+  }
+
+  test("dropNearDuplicates job count: each shared dedup table is built once") {
+    // per-doc path on a corpus with candidate pairs. With a separate edge
+    // count and the shingle sets rebuilt for each verify join this ran 23
+    // jobs: the count's aggregate and result, and a second candidate-id
+    // distinct and broadcast
+    spark.catalog.clearCache()
+    var kept = 0
+    val jobs = FinalPlans.jobsDuring(spark) {
+      kept = Dedup.dropNearDuplicates(nearDupCorpus, "id", "text", 0.9,
+        collapse = Some(false)).collect().length
+    }
+    assert(kept == 420, s"expected the 20 one-token and 10 exact copies dropped, kept $kept")
+    assert(jobs == 19, s"dropNearDuplicates ran $jobs jobs")
+  }
+
+  test("dedup rows do not depend on shuffle partitions or cached-plan repartitioning") {
+    // The bucket table and the shingle sets are cached hash-partitioned on
+    // their join keys; with another partition count, or with AQE allowed to
+    // coalesce cached plans (so the joins may shuffle again), every candidate
+    // pair, verified pair and survivor must stay the same.
+    val t = 0.9
+    def run(): (Set[(Long, Long)], Seq[Set[(Long, Long, Double)]], Seq[Seq[Long]]) = {
+      spark.catalog.clearCache()
+      val (cand, bucketCache) = graft.ops.Materialize.tracked(
+        Dedup.minhashCandidatePairs(nearDupCorpus, "id", "text"))
+      val candidates = cand.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      bucketCache.foreach(_.unpersist(blocking = true))
+      val collapses = Seq(Some(false), Some(true))
+      val verified = collapses.map { c =>
+        val (v, cached) = graft.ops.Materialize.tracked(
+          Dedup.minhashNearDuplicates(nearDupCorpus, "id", "text", t, collapse = c))
+        try v.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+        finally cached.foreach(_.unpersist(blocking = true))
+      }
+      val survivors = collapses.map(c =>
+        Dedup.dropNearDuplicates(nearDupCorpus, "id", "text", t, collapse = c)
+          .select("id").collect().map(_.getLong(0)).sorted.toSeq)
+      (candidates, verified, survivors)
+    }
+    def under(key: String, value: String)(body: => Unit): Unit = {
+      val old = spark.conf.getOption(key)
+      spark.conf.set(key, value)
+      try body finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+    val reference = run()
+    // verify must judge: some candidates (two-token redraws) fail it
+    assert(reference._1.size > 30, s"only ${reference._1.size} candidate pairs")
+    assert(reference._2.forall(_.size == 30), s"verified: ${reference._2.map(_.size)}")
+    assert(reference._3.forall(_.size == 420))
+    val settings = Seq("spark.sql.shuffle.partitions" -> "1",
+      "spark.sql.shuffle.partitions" -> "3", "spark.sql.shuffle.partitions" -> "8",
+      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true")
+    for ((k, v) <- settings) under(k, v) {
+      val got = run()
+      assert(got._1 == reference._1, s"$k=$v: candidate pairs differ")
+      assert(got._2 == reference._2, s"$k=$v: verified pairs differ")
+      assert(got._3 == reference._3, s"$k=$v: survivors differ")
+    }
+  }
+
   test("minhashRecallStats: found pairs are a subset of exact, recall exact-integer") {
     // two exact-dup pairs plus unique docs: banding cannot miss identical
     // signatures, so recall must be 1e6 exactly; with no dups, 0 not a crash

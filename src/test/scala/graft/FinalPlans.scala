@@ -5,6 +5,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -56,4 +57,27 @@ object FinalPlans extends AdaptiveSparkPlanHelper {
     plans.flatMap(p => collectWithSubqueries(p) {
       case e: ShuffleExchangeExec => e.output.map(_.name)
     })
+
+  /** Every physical node of `plans`, descending into AQE query stages,
+    * subqueries and the cached plans behind in-memory table scans. A node
+    * is listed once however many plans reach it, so an exchange inside a
+    * cache that several queries read counts once, as it runs once.
+    */
+  def nodesWithCaches(plans: Seq[SparkPlan]): Seq[SparkPlan] = {
+    val seen = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean])
+    val out = Seq.newBuilder[SparkPlan]
+    def visit(p: SparkPlan): Unit =
+      collectWithSubqueries(p) { case n => n }.foreach { n =>
+        if (seen.add(n)) {
+          out += n
+          n match {
+            case s: InMemoryTableScanExec => visit(s.relation.cachedPlan)
+            case _ =>
+          }
+        }
+      }
+    plans.foreach(visit)
+    out.result()
+  }
 }

@@ -423,6 +423,33 @@ class PlanSpec extends SparkSpec {
     } finally cached.foreach(_.unpersist(blocking = true))
   }
 
+  test("minhash dedup shuffles each shared table once: bucket rows and shingle sets") {
+    // Each read of a persisted frame is its own AQE table-cache stage, so
+    // two exchanges above two reads of one cache never merge. The bucket
+    // table (both sides of the bucket self-join) and the candidate shingle
+    // sets (both verify joins) are persisted already partitioned on their
+    // join key: the bucket rows cross one exchange, the cache fill's, and
+    // the sets are built once. Cached plans are searched too, each once.
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    spark.catalog.clearCache()
+    val plans = FinalPlans.during(spark) {
+      graft.ops.Dedup.dropNearDuplicates(docs, "doc_id", "text", 0.9).collect()
+    }
+    val nodes = FinalPlans.nodesWithCaches(plans)
+    val bucketExchanges = nodes.collect {
+      case e: ShuffleExchangeExec if e.output.exists(_.name == "bkey") => e
+    }
+    assert(bucketExchanges.size == 1,
+      s"bucket rows crossed ${bucketExchanges.size} exchanges:\n" +
+        bucketExchanges.mkString("\n"))
+    val shingling = nodes.filter(_.expressions.exists(
+      _.exists(_.isInstanceOf[graft.functions.ShingleHashes])))
+    assert(shingling.size == 1,
+      s"shingle sets built by ${shingling.size} operators:\n" +
+        shingling.map(_.simpleString(200)).mkString("\n"))
+  }
+
   test("saltedJoin stays pinned shuffle-hash (no replicated-dim broadcast)") {
     // Same design rule, r16 vintage: Catalyst cannot see the salts×
     // explode in its size estimate, so near the broadcast threshold the
