@@ -1,8 +1,12 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.InterpretedOrdering
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
 
 /** End-to-end training-set assembly — the composite the individual curation
   * operators exist FOR (extension mandate; the reference stops at ingest):
@@ -12,10 +16,12 @@ import org.apache.spark.sql.functions._
   * Every stage is the already-proven distributed shape: the quality gate is
   * map-only ([[TextAnalysis.withQualityFeatures]]); near-dup removal is
   * MinHash banding + connected components + a broadcast-able anti-join
-  * ([[Dedup.dropNearDuplicates]]); the budget cap is one shuffle per
-  * language partition with a streaming running-sum window over md5(id)
-  * order (deterministic across engines, no full sort). Nothing is
-  * driver-bound and nothing is quadratic — the chain holds at corpus scale
+  * ([[Dedup.dropNearDuplicates]]); the budget cap is a prefix cut in
+  * md5(id) order ([[budgetCut]]): one small per-(language, md5-bucket)
+  * aggregate decides every bucket but the one each budget falls in, the
+  * driver replays that bucket's keys, and the curated rows come out of one
+  * map-only filter that no exchange touches. Nothing is quadratic and no
+  * document text reaches the driver — the chain holds at corpus scale
   * because each piece already does.
   */
 object Curate {
@@ -24,9 +30,13 @@ object Curate {
     * order within `partCol` partitions — the scalable replacement for
     * `sum().over(Window.partitionBy(part).orderBy(md5(id), id))`, whose
     * single task per partition value is the one non-scalable shape a
-    * running budget/packing cut otherwise forces: a low-cardinality
-    * partition column (language!) funnels the whole corpus through a
-    * handful of sequential window tasks.
+    * running packing cut otherwise forces: a low-cardinality partition
+    * column (language!) funnels the whole corpus through a handful of
+    * sequential window tasks. It serves callers that need EVERY row's
+    * running sum — [[packSequences]] and the oracle-checked
+    * `q_budget_cumsum_nulls` — and is the reference [[budgetCut]] is
+    * checked against; the budget cut itself needs only the prefix the sum
+    * stays within, so it does not shuffle every row through this window.
     *
     * Exactness: the bucket is the first two hex chars of md5(id) — a
     * PREFIX of the ordering key — so the global (md5, id) order equals
@@ -91,6 +101,117 @@ object Curate {
         "__g_off", "__g_nnb", "__g_nn")
   }
 
+  /** The rows of `df` whose INCLUSIVE running sum of `valCol` in (md5(id),
+    * id) order within `partCol` is non-null and ≤ `budget` — row for row
+    * what `bucketedRunningSum(df, partCol, idCol, valCol, c).filter(c <=
+    * budget)` keeps, without putting any row through an exchange.
+    *
+    * Values are ≥ 0, so a part's running sum never falls and its kept rows
+    * are one run in (md5(id), id) order. Per-bucket sums (the bucket is the
+    * md5 prefix [[bucketedRunningSum]] uses) place that run to the bucket:
+    *
+    *   1. one aggregate per (part, bucket) — value sum, non-null count, row
+    *      count, min value — collected on the driver: ≤ parts × 257 rows,
+    *      the bound of [[bucketedRunningSum]]'s offsets table;
+    *   2. walking each part's buckets in order, null bucket first, a bucket
+    *      is KEPT whole when the sum at its end is within the budget and
+    *      none of its rows can have a null running sum; DROPPED when the
+    *      sum before it is already over, or no non-null value has been
+    *      seen by its end; otherwise it is a BOUNDARY bucket: the one the
+    *      budget falls in, or the first bucket with a value when nulls in it
+    *      may precede that value. The null bucket holds exactly the null-id
+    *      rows, RANGE-frame peers that share one running sum, so the
+    *      aggregate decides it and it is never a boundary;
+    *   3. the boundary buckets' (md5, id, value) triples — at most two
+    *      buckets per part, ≈ 1/256 of it each — are collected by one job
+    *      without a shuffle, run only when some part has one, and replayed
+    *      on the driver under Catalyst's own ordering of the window's keys,
+    *      peers together, leaving one (md5, id) key range per bucket.
+    *
+    * The result is a single map-only filter: per part (matched null-safely),
+    * its run of kept buckets or a boundary bucket's key range.
+    *
+    * PRECONDITION: `valCol` is never negative (token counts are not). The
+    * aggregate's min checks it at no extra job and a negative value fails.
+    * `partCol` is low-cardinality, as for [[bucketedRunningSum]].
+    */
+  private[graft] def budgetCut(df: DataFrame, partCol: String, idCol: String,
+                               valCol: Column, budget: Long): DataFrame = {
+    val keyed = df.withColumn("__g_md5", md5(col(idCol).cast("string")))
+      .withColumn("__g_bkt", substring(col("__g_md5"), 1, 2))
+    val v = valCol.cast("long")
+    val buckets = keyed.groupBy(col(partCol), col("__g_bkt"))
+      .agg(coalesce(sum(v), lit(0L)), count(v), count(lit(1)), min(v))
+      .collect()
+    buckets.find(r => !r.isNullAt(5) && r.getLong(5) < 0).foreach { r =>
+      throw new IllegalArgumentException(s"budgetCut needs non-negative " +
+        s"values; $partCol = ${r.get(0)} holds ${r.getLong(5)}")
+    }
+    def partIs(p: Any): Column =
+      if (p == null) col(partCol).isNull else col(partCol) === lit(p)
+    val bkt = col("__g_bkt")
+    val kept = Seq.newBuilder[Column]
+    // (part, bucket) -> (sum before the bucket, non-null values before it)
+    val boundary = Map.newBuilder[(Any, String), (Long, Long)]
+    buckets.groupBy(_.get(0)).foreach { case (p, bs) =>
+      var off, nnBefore = 0L
+      val run = Seq.newBuilder[String]
+      bs.sortBy(r => Option(r.getString(1))).foreach { r =>
+        val (b, bsum, nn, n) = (r.getString(1), r.getLong(2), r.getLong(3), r.getLong(4))
+        if (off <= budget && nnBefore + nn > 0) {
+          if (off + bsum <= budget && (b == null || nnBefore > 0 || nn == n)) run += b
+          else if (b != null) boundary += (p, b) -> (off, nnBefore)
+        }
+        off += bsum
+        nnBefore += nn
+      }
+      // the running sum never falls, so the kept buckets are one run
+      val (nulls, named) = run.result().partition(_ == null)
+      val inRun = named.headOption.map(bkt.between(_, named.last)) ++
+        nulls.headOption.map(_ => bkt.isNull)
+      if (inRun.nonEmpty) kept += partIs(p) && inRun.reduce(_ || _)
+    }
+    val bounds = boundary.result()
+    val ranges = if (bounds.isEmpty) Nil else {
+      val idType = df.select(col(idCol)).schema.head.dataType
+      val toCatalyst = CatalystTypeConverters.createToCatalystConverter(idType)
+      val order = InterpretedOrdering.forSchema(Seq(StringType, idType))
+      def key(m: String, id: Any): InternalRow =
+        InternalRow(UTF8String.fromString(m), toCatalyst(id))
+      def atLeast(m: String, id: Any) =
+        col("__g_md5") > m || (col("__g_md5") === m && col(idCol) >= lit(id))
+      def atMost(m: String, id: Any) =
+        col("__g_md5") < m || (col("__g_md5") === m && col(idCol) <= lit(id))
+      keyed.filter(bounds.keys.map { case (p, b) => partIs(p) && bkt === b }.reduce(_ || _))
+        .select(col(partCol), bkt, col("__g_md5"), col(idCol), v).collect()
+        .groupBy(r => (r.get(0), r.getString(1))).toSeq.flatMap { case ((p, b), rows) =>
+          var (cum, nn) = bounds((p, b))
+          var lo, hi: Option[(String, Any)] = None
+          val sorted = rows.map(r => (key(r.getString(2), r.get(3)), r)).sortBy(_._1)(order)
+          // RANGE frame: a row's sum includes its peers (equal keys)
+          var i = 0
+          while (i < sorted.length) {
+            var j = i
+            while (j < sorted.length && order.equiv(sorted(j)._1, sorted(i)._1)) {
+              val r = sorted(j)._2
+              if (!r.isNullAt(4)) { cum += r.getLong(4); nn += 1 }
+              j += 1
+            }
+            if (nn > 0 && cum <= budget) {
+              val k = (sorted(i)._2.getString(2), sorted(i)._2.get(3))
+              if (lo.isEmpty) lo = Some(k)
+              hi = Some(k)
+            }
+            i = j
+          }
+          for (l <- lo; h <- hi) yield partIs(p) && bkt === b &&
+            atLeast(l._1, l._2) && atMost(h._1, h._2)
+        }
+    }
+    keyed.filter((kept.result() ++ ranges).reduceOption(_ || _).getOrElse(lit(false)))
+      .drop("__g_md5", "__g_bkt")
+  }
+
   /** The curated document set: rows of `df` that (1) score at least
     * `minQuality`, (2) survive near-dup clustering as their cluster's
     * canonical (min-id) member, and (3) fit the per-`langCol` running token
@@ -99,7 +220,17 @@ object Curate {
     * other q_* features) to the surviving rows.
     *
     * `langCol` must be low-cardinality (it is a language) — see the
-    * broadcast-offsets precondition on [[bucketedRunningSum]].
+    * precondition on [[budgetCut]].
+    *
+    * The budget is a prefix cut ([[budgetCut]]): construction runs one
+    * small aggregate over the survivors (per language and md5 bucket,
+    * collected on the driver) and, when some language's budget falls
+    * inside a bucket, one job without a shuffle that collects that
+    * bucket's (md5, id, token count) keys. The returned frame is a single
+    * map-only filter of the checkpointed survivors: no curated row crosses
+    * an exchange, however many of its columns the caller keeps. Token
+    * counts are never negative, which the cut's exactness relies on; a
+    * negative one would fail at construction.
     *
     * The survivor anti-join runs at construction (it is checkpointed) and
     * follows [[Dedup.dropNearDuplicates]]: it broadcasts the near-dup
@@ -129,14 +260,10 @@ object Curate {
       Dedup.dropNearDuplicates(gated, idCol, textCol, dupThreshold)
         .localCheckpoint()
     }
-    // Bucket-parallel running budget (see [[bucketedRunningSum]]): the bare
-    // per-language window is one sequential task per language — the
-    // bucketed shape keeps the same (md5(id), id) order at 256× the
-    // parallelism, so the cut scales with executors, not languages.
-    bucketedRunningSum(deduped, langCol, idCol,
-        col("q_n_tokens").cast("long"), "__cum")
-      .filter(col("__cum") <= tokenBudget)
-      .drop("__cum")
+    // The running budget keeps a prefix in (md5(id), id) order, so per-bucket
+    // sums answer it and only the bucket it falls in is replayed (see
+    // [[budgetCut]]): the survivors are filtered where they lie.
+    budgetCut(deduped, langCol, idCol, col("q_n_tokens"), tokenBudget)
   }
 
   /** Per-language summary of a curated set: document and token counts. */

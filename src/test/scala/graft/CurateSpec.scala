@@ -37,8 +37,9 @@ class CurateSpec extends SparkSpec {
     // A mostly distinct corpus (the probe keeps the per-document path) with
     // 20 last-token near-dups: 20 losers against 420 gated rows, so the
     // anti-join inside curateCorpus must broadcast the losers rather than
-    // shuffle the gated corpus. Only construction is captured — the
-    // budget window that shuffles the survivors runs later, lazily.
+    // shuffle the gated corpus. Only construction is captured, which
+    // includes the budget cut's per-bucket aggregate; the curated rows are
+    // a map-only filter of the survivors (pinned below).
     val rnd = new scala.util.Random(13)
     def doc() = Seq.fill(30)(s"w${rnd.nextInt(5000)}").mkString(" ")
     val base = (1 to 400).map(i => (i.toLong, doc(), "en"))
@@ -67,6 +68,89 @@ class CurateSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getLong(1))).toMap
     assert(byLang.getOrElse("fr", 0L) == 1L, s"got $byLang")
     assert(byLang.getOrElse("en", 0L) == 1L, s"got $byLang")
+  }
+
+  test("curateCorpus: no curated row crosses an exchange, even with every column kept") {
+    // The anti-join spec's corpus with every tenth document in fr: 360 en
+    // survivors of 30 tokens each, 40 fr. A budget of 3000 cuts en inside
+    // an md5 bucket and keeps all of fr. Construction and a full-row
+    // collect must shuffle neither text nor any q_* feature column.
+    val rnd = new scala.util.Random(13)
+    def doc() = Seq.fill(30)(s"w${rnd.nextInt(5000)}").mkString(" ")
+    val base = (1 to 400).map(i => (i.toLong, doc(), if (i % 10 == 0) "fr" else "en"))
+    val near = base.take(20).map { case (i, t, l) => (1000L + i, t + " tail", l) }
+    val corpus = (base ++ near).toDF("doc_id", "text", "lang")
+    var rows = Array.empty[org.apache.spark.sql.Row]
+    val plans = FinalPlans.during(spark) {
+      rows = Curate.curateCorpus(corpus, "doc_id", "text", "lang",
+        minQuality = 0.0, dupThreshold = 0.9, tokenBudget = 3000L).collect()
+    }
+    val wide = FinalPlans.shuffleOutputs(plans)
+      .filter(_.exists(c => c == "text" || c.startsWith("q_")))
+    assert(wide.isEmpty, s"exchanges carrying document columns: $wide")
+    val byLang = rows.groupBy(_.getAs[String]("lang")).view.mapValues(_.length).toMap
+    assert(byLang == Map("en" -> 100, "fr" -> 40), s"got $byLang")
+  }
+
+  test("curateCorpus job count: the budget is cut from per-bucket sums") {
+    // en's budget of 40 keeps one of its two survivors (30 and 38 tokens),
+    // so the cut falls inside an md5 bucket. Cut by the running-sum window
+    // with its broadcast offsets table, this ran 36 jobs
+    spark.catalog.clearCache()
+    var summary = Seq.empty[(String, Long)]
+    val jobs = FinalPlans.jobsDuring(spark) {
+      summary = Curate.curationSummary(Curate.curateCorpus(docs, "doc_id", "text",
+        "lang", minQuality = 0.5, dupThreshold = 0.9, tokenBudget = 40L), "lang")
+        .collect().map(r => (r.getString(0), r.getLong(1))).toSeq.sorted
+    }
+    assert(summary == Seq(("en", 1L), ("fr", 1L)), s"got $summary")
+    assert(jobs == 35, s"curateCorpus + curationSummary ran $jobs jobs")
+  }
+
+  test("budgetCut keeps exactly the rows the running-sum window keeps") {
+    // Random batches at 1-8 partitions: null parts, null ids (the null
+    // bucket), duplicate ids (RANGE-frame peers), null and zero values, and
+    // a part whose values are mostly null, so that nulls precede its first
+    // value inside the bucket holding that value. Budgets: 0, exactly a
+    // bucket's end sum, exactly a row's sum, and above everything.
+    val rnd = new scala.util.Random(7)
+    val parts = Seq("en", "fr", "sparse", null)
+    for (trial <- 0 until 10) {
+      val n = 1 + rnd.nextInt(2000)
+      val rows = (0 until n).map { i =>
+        val part = parts(rnd.nextInt(parts.size))
+        // sparse has no null ids: a null bucket with a value would precede
+        // its first non-null bucket, which must start with nulls
+        val id = if (part != "sparse" && rnd.nextInt(15) == 0) null
+          else java.lang.Long.valueOf(rnd.nextInt(n).toLong)
+        val nullsIn10 = if (part == "sparse") 6 else 1
+        val v = if (rnd.nextInt(10) < nullsIn10) null
+          else java.lang.Long.valueOf(if (rnd.nextInt(4) == 0) 0L else rnd.nextInt(50).toLong)
+        (i.toLong, part, id, v)
+      }
+      val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1 + trial % 8))
+        .toDF("rid", "part", "idc", "v")
+      val sums = Curate.bucketedRunningSum(df, "part", "idc", col("v"), "c")
+        .withColumn("b", substring(md5(col("idc").cast("string")), 1, 2))
+      def cum(r: org.apache.spark.sql.Row) = if (r.isNullAt(4)) None else Some(r.getLong(4))
+      val all = sums.collect()
+      val rowSums = all.flatMap(cum).toSeq
+      val bucketEnds = all.groupBy(r => (r.get(1), r.get(5))).values
+        .flatMap(_.flatMap(cum).maxOption).toSeq
+      val budgets = Seq(0L, rowSums.maxOption.getOrElse(0L) + 1) ++
+        Seq(rowSums, bucketEnds).filter(_.nonEmpty).map(xs => xs(rnd.nextInt(xs.size)))
+      def sorted(d: org.apache.spark.sql.DataFrame) =
+        d.collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
+      for (budget <- budgets) {
+        val want = sorted(sums.filter(col("c") <= budget).drop("c", "b"))
+        val got = sorted(Curate.budgetCut(df, "part", "idc", col("v"), budget))
+        assert(got == want, s"trial $trial, budget $budget: ${got.size} rows vs ${want.size}")
+      }
+    }
+    val negative = Seq((1L, "en", 1L, 3L), (2L, "en", 2L, -1L)).toDF("rid", "part", "idc", "v")
+    val e = intercept[IllegalArgumentException](
+      Curate.budgetCut(negative, "part", "idc", col("v"), 10L))
+    assert(e.getMessage.contains("non-negative"), e.getMessage)
   }
 
   test("packSequences: concat-and-chunk manifest, doc attributed to its start chunk") {
