@@ -127,8 +127,8 @@ object Dedup {
 
   /** Candidate near-duplicate pairs via MinHash LSH.
     * Plan shape: map (signature) → explode bands → *self equi-join* on the
-    * (band, bucket-key) pair with `id_a < id_b` → first-agreeing-band
-    * ownership filter. The shuffle key is the (int band, 64-bit band key)
+    * (band, bucket-key) pair with `id_a < id_b` → pair dedup on an `id_a`
+    * exchange. The bucket shuffle key is the (int band, 64-bit band key)
     * pair (uniform space — no planned skew), and a degenerate bucket (e.g.
     * millions of empty/boilerplate docs sharing a signature) is one bucket
     * of the hash join — never an unbounded `collect_set` array on one
@@ -143,21 +143,41 @@ object Dedup {
     * `skewedPartitionThresholdInBytes` (256 MB by default), about 4–5 M
     * bucket rows; one bucket that size proposes ~10^13 candidate pairs, so
     * the split never rescued a run that could otherwise finish.
+    *
+    * The pairs come out hash-partitioned on `id_a`, so a consumer that
+    * joins them on `id_a` against a table partitioned the same way (the
+    * verify join in [[minhashPerDoc]]) adds no exchange.
     */
   def minhashCandidatePairs(df: DataFrame, idCol: String, textCol: String,
                             numHashes: Int = 16, bands: Int = 4,
                             shingleSize: Int = 5): DataFrame = {
     val sig = minhashSignature(col(textCol), numHashes, shingleSize)
     bandCandidatePairs(df.select(col(idCol).as("id"),
-      lshBands(sig, numHashes, bands).as("__bands")), bands)
+      lshBands(sig, numHashes, bands).as("__bands")))
   }
 
   /** The bucket self-join of [[minhashCandidatePairs]] over (`id`,
-    * `__bands`) rows, `__bands` holding each doc's `bands` band keys in
-    * band order: (`id_a`, `id_b`) for every pair that agrees on some band,
-    * each pair once. Generic in the key type.
+    * `__bands`) rows, `__bands` holding each doc's band keys in band order:
+    * (`id_a`, `id_b`) for every pair that agrees on some band, each pair
+    * once, hash-partitioned on `id_a`. Generic in the key type.
+    *
+    * A pair that agrees on k bands meets in k buckets, so the join emits
+    * it k times and an aggregate keeps one. That aggregate runs on an
+    * `id_a` exchange, which also serves the consumer's `id_a` join. The
+    * alternative is a first-agreeing-band filter after the join, which
+    * needs each bucket row to carry the keys of its earlier bands. The
+    * break-even: each extra agreeing band costs one (long, long) pair row
+    * through the `id_a` exchange, while the filter costs about
+    * (bands − 1)/2 longs plus an array header on EVERY bucket row — about
+    * the same bytes as one pair row. So this shape ships less while the
+    * join emits fewer surplus pair rows (raw minus distinct) than there
+    * are bucket rows, and nearly all bucket rows are singletons that
+    * never pair. Measured at 16 hashes in 4 bands: a mostly distinct
+    * corpus of 4,900 docs has 19,600 bucket rows and 3,092 surplus rows;
+    * 40 clusters of 50 docs that differ in one token have 8,000 bucket
+    * rows and 93,753 surplus rows, and ship about 19 % more.
     */
-  private[graft] def bandCandidatePairs(keyed: DataFrame, bands: Int): DataFrame = {
+  private[graft] def bandCandidatePairs(keyed: DataFrame): DataFrame = {
     // The bucket table feeds BOTH sides of the self-join. It is persisted
     // already hash-partitioned on the join key: the one shuffle runs inside
     // the cache fill, and both join sides read co-partitioned blocks with
@@ -165,47 +185,27 @@ object Dedup {
     // and the two never merge: the rule on [[Materialize]]). It is the
     // small derived table of the pipeline — bands rows of (long, int, long
     // key) per doc, orders of magnitude under the corpus.
-    //
-    // `__prior` carries the band keys BEFORE this row's band (slice of the
-    // per-doc band array) so the self-join below can dedup pairs with a
-    // pure filter instead of a full pair exchange (r22) — avg extra width
-    // (bands−1)/2 keys per bucket row against the removed
-    // corpus×multiplicity shuffle.
     val banded = Materialize.persist(keyed
-      .select(col("id"), col("__bands"),
-        posexplode(col("__bands")).as(Seq("band", "bkey")))
-      .select(col("id"), col("band"), col("bkey"),
-        slice(col("__bands"), lit(1), col("band")).as("__prior"))
+      .select(col("id"), posexplode(col("__bands")).as(Seq("band", "bkey")))
       .repartition(col("band"), col("bkey")))
     // Pin the self-join to shuffle-hash: both sides are the SAME
     // corpus-proportional table, so a broadcast is never right at scale,
     // and letting the planner flip to one on borderline size estimates
     // made the whole minhash family bimodal across clean runs (see the
-    // verify-join note in minhashPerDoc).
+    // verify-join note in minhashPerDoc). Null keys (null-text docs) match
+    // nothing in the join.
     //
-    // FIRST-AGREEING-BAND ownership (r22, the fuzzy_join r21 move): a pair
-    // colliding in several bands used to be deduplicated with
-    // `.distinct()` — a full exchange + two hash aggregates over every
-    // candidate pair. Both sides meet at the SAME band index (band is a
-    // join key), so the pair is kept only where no EARLIER band already
-    // agreed: emitted exactly once, at its minimal agreeing band, by a
-    // codegen filter. `get()` (never-throwing element_at) keeps the terms
-    // ANSI-safe; `band <= j` short-circuits the out-of-range probes, so
-    // every evaluated access is in range. A null-text doc's keys are null,
-    // but it never gets here: null keys match nothing in the join. A
-    // 64-bit key collision is seen identically by the join and by this
-    // filter, so the pair is still emitted once.
-    val noEarlierAgree = (0 until bands - 1).map { j =>
-      col("band") <= j ||
-        get(col("__pa"), lit(j)) =!= get(col("__pb"), lit(j))
-    }.reduceOption(_ && _).getOrElse(lit(true))
-    banded.select(col("band"), col("bkey"), col("id").as("id_a"),
-        col("__prior").as("__pa"))
-      .join(banded.select(col("band"), col("bkey"), col("id").as("id_b"),
-          col("__prior").as("__pb"))
+    // Pair dedup: hash(id_a) already clusters the (id_a, id_b) aggregate,
+    // so `distinct` plans no exchange of its own, and the pairs leave
+    // partitioned on id_a — the key of the first verify join, whose pairs
+    // side then needs no exchange either.
+    banded.select(col("band"), col("bkey"), col("id").as("id_a"))
+      .join(banded.select(col("band"), col("bkey"), col("id").as("id_b"))
         .hint("shuffle_hash"), Seq("band", "bkey"))
-      .filter(col("id_a") < col("id_b") && noEarlierAgree)
+      .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b")
+      .repartition(col("id_a"))
+      .distinct()
   }
 
   /** Candidate pairs + exact shingle-set Jaccard, filtered at `threshold`.
@@ -398,7 +398,10 @@ object Dedup {
                                    shingleSize: Int,
                                    materializePairs: Boolean = false): DataFrame = {
     // pairs feed two consumers (the id collection behind `sets` and the
-    // first verify join), so they are persisted. With `materializePairs`
+    // first verify join), so they are persisted. They are cached already
+    // partitioned on `id_a` (the pair dedup's exchange, see
+    // [[bandCandidatePairs]]), and `sets` on `id` with the same partition
+    // count, so the first verify join has no exchange. With `materializePairs`
     // the cache is filled here, before the verify plan exists, so the
     // planner sizes `candIds` from the real pair count: a small candidate
     // set broadcasts into the semi-join and no corpus text is shuffled,

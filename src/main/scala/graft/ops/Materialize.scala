@@ -27,7 +27,11 @@ import org.apache.spark.storage.StorageLevel
   * `ReuseExchange` does not merge them and the frame is shuffled once per
   * read. (A self-join of an UNcached frame does reuse its exchange.) Cached
   * hash-partitioned, the frame is shuffled once, inside the cache fill,
-  * and the reads need no exchange.
+  * and the reads need no exchange. A frame joined with such a frame on
+  * its key is cached partitioned the same way, with the same partition
+  * count, so the join has no exchange on either side. The minhash chain
+  * keeps three caches so: the LSH bucket table on (`band`, `bkey`), the
+  * candidate pairs on `id_a` and the verify shingle sets on `id`.
   */
 object Materialize {
 

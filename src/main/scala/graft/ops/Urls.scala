@@ -164,13 +164,6 @@ object Urls {
     (rules, agents)
   }
 
-  /** Parse robots.txt bodies into flat per-agent rules: one row per
-    * (host, agent, rule_type, path_pattern, ln) — the rules half of
-    * [[parsedRobots]] (see there for the RFC 9309 group semantics).
-    */
-  def robotsRules(robots: DataFrame, hostCol: String, bodyCol: String): DataFrame =
-    parsedRobots(robots, hostCol, bodyCol)._1
-
   /** A robots path pattern as a SQL LIKE pattern: `%`/`_`/`\` escaped, `*`
     * → `%`, a terminal `$` anchors the end (a LIKE with no trailing `%` is
     * already end-anchored), otherwise the prefix match gets a trailing `%`.

@@ -261,11 +261,6 @@ class DedupSpec extends SparkSpec {
           .select("id").collect().map(_.getLong(0)).sorted.toSeq)
       (candidates, verified, survivors)
     }
-    def under(key: String, value: String)(body: => Unit): Unit = {
-      val old = spark.conf.getOption(key)
-      spark.conf.set(key, value)
-      try body finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-    }
     val reference = run()
     // verify must judge: some candidates (two-token redraws) fail it
     assert(reference._1.size > 30, s"only ${reference._1.size} candidate pairs")
@@ -617,37 +612,89 @@ class DedupSpec extends SparkSpec {
     assert(matched == Set(101L, 102L), s"ids meeting in a bucket: $matched")
   }
 
+  /** 120 random 16-long signatures (4 bands of 4), ids 0–119, with
+    * planted agreement: pairs sharing one band, pairs sharing several,
+    * triples sharing a band, and null signatures (`None`).
+    */
+  private def plantedSignatures(seed: Int): Seq[(Long, Option[Seq[Long]])] = {
+    val rnd = new scala.util.Random(seed)
+    val sigs = Array.fill(120)(Array.fill(16)(rnd.nextInt(Int.MaxValue).toLong))
+    def plant(from: Int, to: Int, band: Int): Unit =
+      System.arraycopy(sigs(from), band * 4, sigs(to), band * 4, 4)
+    (0 until 20).foreach(_ => plant(rnd.nextInt(120), rnd.nextInt(120), rnd.nextInt(4)))
+    (0 until 10).foreach { _ =>
+      val (a, b) = (rnd.nextInt(120), rnd.nextInt(120))
+      rnd.shuffle((0 until 4).toList).take(2 + rnd.nextInt(3)).foreach(plant(a, b, _))
+    }
+    (0 until 5).foreach { _ =>
+      val (a, band) = (rnd.nextInt(120), rnd.nextInt(4))
+      plant(a, rnd.nextInt(120), band); plant(a, rnd.nextInt(120), band)
+    }
+    val nulls = (0 until 120).filter(_ => rnd.nextInt(20) == 0).toSet
+    sigs.zipWithIndex.map { case (s, i) =>
+      (i.toLong, if (nulls(i)) None else Some(s.toSeq))
+    }.toSeq
+  }
+
+  /** `body` with one session conf set, restored afterwards. */
+  private def under(key: String, value: String)(body: => Unit): Unit = {
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("bandCandidatePairs is exactly band agreement, each pair once, under every plan") {
+    // A pair that agrees on k bands leaves the bucket join k times, and
+    // the pair dedup keeps one. The reference is brute force on the
+    // driver over the collected band keys: every id_a < id_b pair sharing
+    // a non-null key at some band index.
+    val keyed = (1 to 3).map(seed => plantedSignatures(seed).toDF("id", "sig")
+      .select(col("id"), Dedup.lshBands(col("sig"), 16, 4).as("__bands")))
+    val truths = keyed.map { k =>
+      val rows = k.collect().map(r =>
+        (r.getLong(0), r.getAs[scala.collection.Seq[Any]](1).toIndexedSeq))
+      (for {
+        (a, ka) <- rows.toSeq; (b, kb) <- rows.toSeq
+        if a < b
+        agree = ka.indices.count(i => ka(i) != null && ka(i) == kb(i))
+        if agree > 0
+      } yield ((a, b), agree)).toMap
+    }
+    truths.foreach { t =>
+      assert(t.size > 30 && t.values.count(_ >= 2) >= 5,
+        s"too little planted: ${t.size} pairs, ${t.values.count(_ >= 2)} multi-band")
+    }
+    val settings = Seq("spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.shuffle.partitions" -> "1",
+      "spark.sql.shuffle.partitions" -> "3", "spark.sql.shuffle.partitions" -> "8",
+      "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true")
+    for ((k, v) <- settings) under(k, v) {
+      keyed.zip(truths).zipWithIndex.foreach { case ((df, truth), i) =>
+        val got = graft.ops.Materialize.scoped(
+          Dedup.bandCandidatePairs(df).as[(Long, Long)].collect().toSeq)
+        val twice = got.diff(got.distinct)
+        assert(twice.isEmpty, s"$k=$v, seed ${i + 1}: pairs emitted twice")
+        assert(got.toSet == truth.keySet, s"$k=$v, seed ${i + 1}: " +
+          s"extra ${got.toSet.diff(truth.keySet)}, missing ${truth.keySet.diff(got.toSet)}")
+      }
+    }
+  }
+
   test("64-bit band keys propose exactly the md5-key candidates, each pair once") {
-    // Random 16-long signatures (4 bands of 4) with planted agreement:
-    // pairs sharing one band, pairs sharing several, triples sharing a
-    // band, and null signatures. Both key kinds run the same bucket join.
+    // Random signatures with planted agreement (see plantedSignatures).
+    // Both key kinds run the same bucket join.
     def pairsOf(bandKeys: org.apache.spark.sql.DataFrame) =
       graft.ops.Materialize.scoped(
-        Dedup.bandCandidatePairs(bandKeys, 4).as[(Long, Long)].collect().toSeq)
+        Dedup.bandCandidatePairs(bandKeys).as[(Long, Long)].collect().toSeq)
     (1 to 4).foreach { seed =>
-      val rnd = new scala.util.Random(seed)
-      val sigs = Array.fill(120)(Array.fill(16)(rnd.nextInt(Int.MaxValue).toLong))
-      def plant(from: Int, to: Int, band: Int): Unit =
-        System.arraycopy(sigs(from), band * 4, sigs(to), band * 4, 4)
-      (0 until 20).foreach(_ => plant(rnd.nextInt(120), rnd.nextInt(120), rnd.nextInt(4)))
-      (0 until 10).foreach { _ =>
-        val (a, b) = (rnd.nextInt(120), rnd.nextInt(120))
-        rnd.shuffle((0 until 4).toList).take(2 + rnd.nextInt(3)).foreach(plant(a, b, _))
-      }
-      (0 until 5).foreach { _ =>
-        val (a, band) = (rnd.nextInt(120), rnd.nextInt(4))
-        plant(a, rnd.nextInt(120), band); plant(a, rnd.nextInt(120), band)
-      }
-      val nulls = (0 until 120).filter(_ => rnd.nextInt(20) == 0).toSet
-      val df = sigs.zipWithIndex.map { case (s, i) =>
-        (i.toLong, if (nulls(i)) None else Some(s.toSeq))
-      }.toSeq.toDF("id", "sig")
+      val sigs = plantedSignatures(seed)
+      val df = sigs.toDF("id", "sig")
       val truth = (for {
-        a <- 0 until 120; b <- a + 1 until 120
-        if !nulls(a) && !nulls(b) &&
-          (0 until 4).exists(k => sigs(a).slice(k * 4, k * 4 + 4).sameElements(
-            sigs(b).slice(k * 4, k * 4 + 4)))
-      } yield (a.toLong, b.toLong)).toSet
+        (a, Some(sa)) <- sigs; (b, Some(sb)) <- sigs
+        if a < b && (0 until 4).exists(k => sa.slice(k * 4, k * 4 + 4) ==
+          sb.slice(k * 4, k * 4 + 4))
+      } yield (a, b)).toSet
       val hashed = pairsOf(df.select(col("id"),
         Dedup.lshBands(col("sig"), 16, 4).as("__bands")))
       val md5ed = pairsOf(df.select(col("id"), Md5BandKeys(col("sig")).as("__bands")))

@@ -395,9 +395,9 @@ class PlanSpec extends SparkSpec {
   test("minhash bucket self-join keys on (int, bigint); no string crosses its exchange") {
     // Band keys are 64-bit hashes, not md5 text: the join keys are (band,
     // bkey) as (int, bigint), and the one exchange bucket rows cross (the
-    // cache fill) carries no string (the key, the id, or the `__prior`
-    // keys of earlier bands). Final plans of a run are read, cached plans
-    // included, since the initial plan still shows exchanges that never run.
+    // cache fill) carries no string, neither as the key nor as the id.
+    // Final plans of a run are read, cached plans included, since the
+    // initial plan still shows exchanges that never run.
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
     import org.apache.spark.sql.types._
@@ -451,6 +451,53 @@ class PlanSpec extends SparkSpec {
     assert(shingling.size == 1,
       s"shingle sets built by ${shingling.size} operators:\n" +
         shingling.map(_.simpleString(200)).mkString("\n"))
+  }
+
+  test("minhash buckets ship (id, band, bkey); pairs cross one id_a exchange to verify") {
+    // The bucket cache fill carries the three bucket columns and no array.
+    // A pair agreeing on several bands leaves the bucket join once per
+    // band; it is deduplicated on an id_a exchange, and that exchange is
+    // the only one candidate pairs cross before the first verify join
+    // (keyed on id_a) reads them. A pair dedup with an exchange of its own,
+    // on (id_a, id_b), would make two.
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
+    import org.apache.spark.sql.types.ArrayType
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    spark.catalog.clearCache()
+    val nodes = FinalPlans.nodesWithCaches(FinalPlans.during(spark) {
+      graft.ops.Dedup.dropNearDuplicates(docs, "doc_id", "text", 0.9,
+        collapse = Some(false)).collect()
+    })
+    val fills = nodes.collect {
+      case e: ShuffleExchangeExec if e.output.exists(_.name == "bkey") => e.output
+    }
+    assert(fills.map(_.map(_.name)) == Seq(Seq("id", "band", "bkey")),
+      s"bucket fill exchanges: $fills")
+    assert(!fills.head.exists(_.dataType.isInstanceOf[ArrayType]),
+      s"an array crosses the bucket fill: ${fills.head}")
+    val pairExchanges = nodes.collect {
+      case e: ShuffleExchangeExec if e.output.map(_.name) == Seq("id_a", "id_b") => e
+    }
+    assert(pairExchanges.size == 1,
+      s"candidate pairs crossed ${pairExchanges.size} exchanges:\n" +
+        pairExchanges.mkString("\n"))
+    val keys = pairExchanges.head.outputPartitioning match {
+      case h: HashPartitioning => h.expressions.map(_.references.map(_.name).toSeq)
+      case other => fail(s"pair exchange is not hash-partitioned: $other")
+    }
+    assert(keys == Seq(Seq("id_a")), s"pair exchange keys: $keys")
+    val bucketJoins = FinalPlans.collect(pairExchanges.head.child) {
+      case j: ShuffledHashJoinExec if j.leftKeys.size == 2 => j
+    }
+    assert(bucketJoins.size == 1,
+      s"the pair exchange does not sit above the bucket join:\n${pairExchanges.head}")
+    val verify = nodes.collect {
+      case j: ShuffledHashJoinExec if j.leftKeys.map(_.references.map(_.name).toSeq) ==
+        Seq(Seq("id_a")) => j
+    }
+    assert(verify.size == 1, s"first verify joins: ${verify.size}")
   }
 
   test("saltedJoin stays pinned shuffle-hash (no replicated-dim broadcast)") {
