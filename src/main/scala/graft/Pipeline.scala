@@ -23,7 +23,8 @@ import org.apache.spark.sql.functions._
   *    inference job of [[graft.ingest.Readers.csv]], a JSON or parquet
   *    schema pass);
   *  - for a batch the spread rule below repartitions (at most one split
-  *    per 4 cores, e.g. a one-file CSV or JSON upload), its shuffle stage;
+  *    per 4 cores and an estimated size of at least the spread floor, e.g.
+  *    a one-file CSV upload of 1 MB), its shuffle stage;
   *  - in `ingestJson`, the key-presence inference fold: one job, which
   *    also fills the batch's cache, so a ragged batch runs that job and
   *    the write;
@@ -55,6 +56,26 @@ object Pipeline {
       addedFields: Seq[String],
       removedFields: Seq[String])
 
+  /** Size estimate below which [[ingest]] leaves a narrow batch in its
+    * one split. Set at the measured break-even: one-file CSV uploads of
+    * ~125 B rows, `Readers.csv` + `ingest` into an empty corpus, on 4 cores
+    * (local[4]), the spread and the unspread rule alternating in one JVM,
+    * 10 pairs per size in each of two runs; medians in s of the second
+    * run, and the pairs the unspread upload won in each run:
+    * {{{
+    *   size     spread  unspread  unspread faster
+    *   30 KB    0.358   0.334     10/10,  9/10
+    *   64 KB    0.405   0.376      9/10,  9/10
+    *   128 KB   0.400   0.376      7/10,  4/10
+    *   256 KB   0.470   0.513      3/10,  4/10
+    *   512 KB   0.440   0.512      1/10,  3/10
+    *   1 MB     0.531   0.679      0/10,  0/10
+    *   2 MB     0.612   0.999      0/10,  0/10
+    *   4 MB     0.944   1.757      0/10,  0/10
+    * }}}
+    */
+  private val SpreadFloorBytes: BigInt = 128 * 1024
+
   /** Run the full ingest pipeline for one batch of records.
     *
     * @param batch records as a DataFrame (any reader output); a `content`
@@ -66,22 +87,26 @@ object Pipeline {
     */
   def ingest(spark: SparkSession, batch: DataFrame, corpusDir: String,
              idCol: Option[String] = None): IngestResult = {
-    // Spread a narrow batch before the render+write: a small file arrives
-    // as one or a few input splits, which would serialize the whole
+    // Spread a narrow batch before the render+write: a file of a few MB
+    // arrives as one or a few input splits, which would serialize the whole
     // extract -> blob-render -> write chain on one core while the rest
-    // idle. The rule counts splits, not rows or bytes: a CSV or JSON file
-    // that is one split gets spread over every core, while a
+    // idle. A batch is spread when it arrives in at most one split per 4
+    // cores AND its size estimate reaches [[SpreadFloorBytes]]; below that
+    // the spread's shuffle stage costs more than the cores it frees. The
+    // estimate is the optimizer's `sizeInBytes`, read without a job: bytes
+    // on disk for a file scan (so a compressed `.csv.gz` reads small), the
+    // exact size of a local relation, and a huge "unknown" for an RDD-backed
+    // frame or a join, which is therefore spread as before. A
     // single-row-group parquet file of a few MB already arrives as 2 splits
-    // (one of them empty) and, on 4 cores, is not spread. A size floor
-    // would save the spread's shuffle stage on a batch of a few hundred
-    // rows, but on 4 cores a one-split CSV upload of 1-3.5 MB ran 14-45%
-    // slower unspread, so the rule keeps spreading them. The repartition
+    // (one of them empty) and, on 4 cores, is not spread. The repartition
     // shuffles only the raw batch (cheap at batch sizes) and is skipped
     // when the source already carries enough splits — at warehouse scale
     // it always does, so this never shuffles 100 TB.
     val par = spark.sparkContext.defaultParallelism
     val spread =
-      if (batch.rdd.getNumPartitions * 4 <= par) batch.repartition(par)
+      if (batch.rdd.getNumPartitions * 4 <= par &&
+          batch.queryExecution.optimizedPlan.stats.sizeInBytes >= SpreadFloorBytes)
+        batch.repartition(par)
       else batch
 
     // F2 — extract patterns from content (empty struct when none)

@@ -1,6 +1,7 @@
 package graft
 
 import graft.ingest.Readers
+import graft.model.JsonSchema
 import graft.ops.{Bloom, Bpe, Bucketing, Chunking, Corpus, Curate, Dedup, InferSchema, Layout, Multimodal, Nums, Similarity, Sketches, SubstringDedup, TextAnalysis, Urls, Validate, Warehouse}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -1394,11 +1395,12 @@ object Queries {
 
     ("q_validate",
       (s: SparkSession, d: String) =>
-        tbl(s, d, "events")
-          .withColumn("j", validateJson)
+        // the issues are projected once, from one parse of each record
+        Validate.withQualityIssues(tbl(s, d, "events").withColumn("j", validateJson),
+            JsonSchema(Map("k" -> "string"), Seq("k")), "j")
           .select(col("event_id"),
-            array_join(Validate.qualityIssues(col("j"), Seq("k")), "|").as("issues"),
-            size(Validate.qualityIssues(col("j"), Seq("k"))).as("n_issues"))
+            array_join(col("_quality_issues"), "|").as("issues"),
+            size(col("_quality_issues")).as("n_issues"))
           .orderBy("event_id"),
       Some(s"""WITH r AS (SELECT event_id, $dValidateJson AS j FROM events),
               |k AS (SELECT event_id, json_keys(j) AS record_keys FROM r)

@@ -21,21 +21,11 @@ object Validate {
   /** Quality-issue array for a JSON record column, against a fixed schema
     * field list. `schemaFields` ordering is preserved for the "Missing field"
     * issues (the reference iterates schema properties in dict order).
+    * Inline, `json_object_keys` runs once per use of the keys (three
+    * times); [[withQualityIssues]] projects them first, one parse a record.
     */
-  def qualityIssues(jsonCol: Column, schemaFields: Seq[String]): Column = {
-    val schemaArr = array(schemaFields.map(lit): _*).cast("array<string>")
-    val recordKeys = json_object_keys(jsonCol)
-    val extra = transform(
-      array_except(recordKeys, schemaArr),
-      k => concat(lit("Field '"), k, lit("' not in schema")))
-    val missing = transform(
-      array_except(schemaArr, recordKeys),
-      k => concat(lit("Missing field: '"), k, lit("'")))
-    // json_object_keys is null for non-object/invalid JSON; the reference
-    // would throw on those upstream — we flag instead of failing the batch.
-    when(recordKeys.isNull, array(lit("Invalid record: not a JSON object")))
-      .otherwise(concat(extra, missing))
-  }
+  def qualityIssues(jsonCol: Column, schemaFields: Seq[String]): Column =
+    qualityIssuesFromKeys(json_object_keys(jsonCol), schemaFields)
 
   /** `qualityIssues` over an already-extracted key array (no JSON parse). */
   def qualityIssuesFromKeys(recordKeys: Column, schemaFields: Seq[String]): Column = {
@@ -46,6 +36,8 @@ object Validate {
     val missing = transform(
       array_except(schemaArr, recordKeys),
       k => concat(lit("Missing field: '"), k, lit("'")))
+    // json_object_keys is null for non-object/invalid JSON; the reference
+    // would throw on those upstream — we flag instead of failing the batch.
     when(recordKeys.isNull, array(lit("Invalid record: not a JSON object")))
       .otherwise(concat(extra, missing))
   }
@@ -68,16 +60,5 @@ object Validate {
       .withColumn("__record_keys", json_object_keys(col(jsonCol)))
       .withColumn("_quality_issues", qualityIssuesFromKeys(col("__record_keys"), fields))
       .drop("__record_keys")
-  }
-
-  /** V2 — batch counters: (clean, flagged) record counts (reference
-    * `app.py:352-366`). Single partial-aggregated pass.
-    */
-  def qualityCounts(records: DataFrame, issuesCol: String = "_quality_issues"): (Long, Long) = {
-    val r = records.agg(
-      count(when(size(col(issuesCol)) === 0, 1)).as("clean"),
-      count(when(size(col(issuesCol)) > 0, 1)).as("flagged")
-    ).collect()(0)
-    (r.getLong(0), r.getLong(1))
   }
 }

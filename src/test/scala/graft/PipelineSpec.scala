@@ -1,7 +1,9 @@
 package graft
 
 import graft.ops.Corpus
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 
 /** End-to-end pipeline semantics (reference `app.py:296-366`): cross-batch id
   * monotonicity (AUTOINCREMENT contract), Q4 latest-N ordering, blob key
@@ -484,11 +486,11 @@ class PipelineSpec extends SparkSpec {
     val wide = spark.range(1, 21, 1, 4).select(concat(lit("doc "), col("id")).as("content"),
       col("id").cast("int").as("n"))
     assert(jobs(Pipeline.ingest(spark, wide, dir)) == 1)
-    // one split, so spread: its shuffle stage, then the write
+    // one split, but below the spread floor: the write is the only job
     val same = csvBatch("content,n", 20)
     val bumped = csvBatch("content,n,extra", 20)
-    assert(jobs(Pipeline.ingest(spark, same, dir)) == 2)
-    assert(jobs(Pipeline.ingest(spark, bumped, dir)) == 2)
+    assert(jobs(Pipeline.ingest(spark, same, dir)) == 1)
+    assert(jobs(Pipeline.ingest(spark, bumped, dir)) == 1)
     assert(jobs(Corpus.schemaHistory(spark, dir).collect()) == 0)
     assert(jobs(Corpus.schemaChanges(spark, dir).collect()) == 0)
     assert(jobs(Corpus.latestRecords(spark, dir).collect()) == 1)
@@ -511,18 +513,35 @@ class PipelineSpec extends SparkSpec {
     assert(r.schema.required == Seq("content"))
   }
 
-  test("the spread rule counts splits: a one-split file is spread whatever its size") {
-    // local[4]: a batch in one split is spread over 4 tasks and writes 4
-    // files; one in 2 splits is not spread
+  test("the spread floor: a one-split batch is spread only at or above it") {
+    // local[4]: a spread batch is written by 4 tasks, so as 4 files
     val dir = tmpDir("corpus_")
     def filesOf(r: Pipeline.IngestResult) = dataFiles(s"$dir/records/schema_version=${r.version}").size
     val small = csvBatch("content,n", 20)
     val large = csvBatch("content,n,extra", 8000, pad = " " + "lorem ipsum " * 10) // ~1 MB
     assert(small.rdd.getNumPartitions == 1 && large.rdd.getNumPartitions == 1)
-    assert(filesOf(Pipeline.ingest(spark, small, dir)) == 4)
+    // below the floor: no shuffle stage, one job, one file
+    var r: Pipeline.IngestResult = null
+    var plans: Seq[org.apache.spark.sql.execution.SparkPlan] = Nil
+    val jobs = FinalPlans.jobsDuring(spark) {
+      plans = FinalPlans.during(spark) { r = Pipeline.ingest(spark, small, dir) }
+    }
+    assert(jobs == 1 && filesOf(r) == 1)
+    val exchanges = plans.flatMap(p => FinalPlans.collectWithSubqueries(p) {
+      case e: org.apache.spark.sql.execution.exchange.Exchange => e
+    })
+    assert(plans.nonEmpty && exchanges.isEmpty, s"unexpected exchange:\n${plans.mkString("\n")}")
+    // above it: spread over every core
     assert(filesOf(Pipeline.ingest(spark, large, dir)) == 4)
+    // enough splits already: not spread
     val two = spark.range(0, 400, 1, 2).select(col("id").cast("string").as("content"))
     assert(filesOf(Pipeline.ingest(spark, two, dir)) == 2)
+    // an unknown size (an RDD-backed frame) is spread, as it was before the floor
+    val rows = spark.sparkContext.parallelize((1 to 20).map(i => Row(s"doc $i", i)), 1)
+    val unknown = spark.createDataFrame(rows, StructType(Seq(
+      StructField("content", StringType), StructField("n", IntegerType))))
+    assert(unknown.rdd.getNumPartitions == 1)
+    assert(filesOf(Pipeline.ingest(spark, unknown, dir)) == 4)
   }
 
   test("IngestResult names the fields its version added and removed") {

@@ -1,8 +1,9 @@
 package graft
 
-import graft.model.JsonSchema
 import graft.ops.Validate
 import org.apache.spark.sql.functions._
+
+import scala.jdk.CollectionConverters._
 
 /** V1/V2 — issue strings must match the reference byte-for-byte
   * (`app.py:267-276`): extra key → "Field 'x' not in schema", absent schema
@@ -37,10 +38,17 @@ class ValidateSpec extends SparkSpec {
     assert(issues("""[1,2]""", Seq("a")) == Seq("Invalid record: not a JSON object"))
   }
 
-  test("qualityCounts splits clean vs flagged") {
-    val df = Seq("""{"a": 1}""", """{"a": 1, "b": 2}""", """{"c": 3}""").toDF("data")
-    val validated = Validate.withQualityIssues(df, JsonSchema(Map("a" -> "string"), Seq("a")), "data")
-    val (clean, flagged) = Validate.qualityCounts(validated)
-    assert((clean, flagged) == (1L, 2L))
+  test("ingestJson's IngestResult splits clean vs flagged like a driver-side count") {
+    // inference makes every key seen a schema property, so a record is
+    // clean exactly when it carries all of them
+    val records = Seq("""{"a": 1, "b": 2}""", """{"a": 1}""", """{"b": 3, "a": 4}""",
+      """{"b": 5}""", """{"a": 6, "b": 7}""")
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val keys = records.map(r => mapper.readTree(r).fieldNames().asScala.toSet)
+    val all = keys.reduce(_ ++ _)
+    val clean = keys.count(_ == all).toLong
+    val r = Pipeline.ingestJson(spark, records.toDF("j"), "j", tmpDir("corpus_"))
+    assert(clean > 0 && clean < records.size)
+    assert((r.cleanCount, r.flaggedCount) == (clean, records.size - clean))
   }
 }
