@@ -3,6 +3,8 @@ package graft
 import graft.model.JsonSchema
 import graft.ops.{Corpus, Evolution, Extract, InferSchema, Materialize, Validate}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan, UnionExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 
 /** The reference's main entry point, end to end (`app.py:296-366`, SURVEY
@@ -96,15 +98,18 @@ object Pipeline {
     // estimate is the optimizer's `sizeInBytes`, read without a job: bytes
     // on disk for a file scan (so a compressed `.csv.gz` reads small), the
     // exact size of a local relation, and a huge "unknown" for an RDD-backed
-    // frame or a join, which is therefore spread as before. A
-    // single-row-group parquet file of a few MB already arrives as 2 splits
-    // (one of them empty) and, on 4 cores, is not spread. The repartition
-    // shuffles only the raw batch (cheap at batch sizes) and is skipped
-    // when the source already carries enough splits — at warehouse scale
-    // it always does, so this never shuffles 100 TB.
+    // frame or a join. The split count is read from the physical plan, also
+    // without a job ([[splitCount]]): a batch that already shuffles (a
+    // caller's repartition, a shuffled join) counts its planned shuffle
+    // partitions, so it is not spread a second time. A single-row-group
+    // parquet file of a few MB already arrives as 2 splits (one of them
+    // empty) and, on 4 cores, is not spread. The repartition shuffles only
+    // the raw batch (cheap at batch sizes) and is skipped when the source
+    // already carries enough splits — at warehouse scale it always does, so
+    // this never shuffles 100 TB.
     val par = spark.sparkContext.defaultParallelism
     val spread =
-      if (batch.rdd.getNumPartitions * 4 <= par &&
+      if (splitCount(batch.queryExecution.executedPlan) * 4 <= par &&
           batch.queryExecution.optimizedPlan.stats.sizeInBytes >= SpreadFloorBytes)
         batch.repartition(par)
       else batch
@@ -137,6 +142,24 @@ object Pipeline {
       Corpus.stampAndSerialize(observed, version,
         idBase = idBase, idCol = idCol, native = nativeRender)
     }
+  }
+
+  /** The number of splits `plan` produces, read without running it.
+    * `Dataset.rdd` would execute an adaptive plan's shuffles to learn its
+    * final partition count, and the write then runs them again. Here an
+    * exchange (or any node with a known partitioning) reports its planned
+    * count — before AQE coalescing, so a shuffled batch reads as wide — a
+    * union the sum of its inputs, and a leaf the splits of its input RDD,
+    * which a file scan builds from its file listing, with no job.
+    */
+  private def splitCount(plan: SparkPlan): Int = plan match {
+    case a: AdaptiveSparkPlanExec => splitCount(a.initialPlan)
+    case p if p.outputPartitioning.numPartitions > 0 => p.outputPartitioning.numPartitions
+    case u: UnionExec => u.children.map(splitCount).sum
+    case leaf: LeafExecNode =>
+      if (leaf.supportsColumnar) leaf.executeColumnar().getNumPartitions
+      else leaf.execute().getNumPartitions
+    case p => p.children.map(splitCount).max
   }
 
   /** Schema-on-read ingest for genuinely ragged JSON records (one string

@@ -481,9 +481,9 @@ object Queries {
        | ELSE list_transform(generate_series(1, len($toks) - ${k - 1}),
        |   i -> array_to_string(($toks)[i:i+${k - 1}], ' ')) END""".stripMargin
 
-  /** DuckDB: 16-bit simhash of `text` as a '0'/'1' string — mirrors
-    * `Dedup.simhash(col, 16)`: bit j votes on the high bit of the j-th hex
-    * digit of md5(token).
+  /** DuckDB: 16-bit simhash of `text` as a '0'/'1' string, most significant
+    * bit first — `Dedup.simhashLong(col, 16)` in binary: bit j votes on the
+    * high bit of the j-th hex digit of md5(token).
     */
   private def dSimhash(bits: Int): String = {
     val bitExprs = (1 to bits).map { j =>
@@ -3058,9 +3058,9 @@ object Queries {
     // (128²·n)) is a post-hoc scalar). The WAV samples ARE the utf-8 bytes
     // of the text, and the documents corpus is pure ASCII (max code point
     // 121, checked at both sf), so DuckDB's per-CHARACTER ascii() replays
-    // the per-BYTE sample values exactly. The float32 RMS sibling
-    // (withFeatures) stays ScalaTest-pinned — float accumulation is not
-    // replicable in DuckDB's double-only list math.
+    // the per-BYTE sample values exactly. A float32 RMS
+    // (MediaCodecs.wavWindowRms) would not replay — float accumulation is
+    // not replicable in DuckDB's double-only list math.
     ("q_multimodal_features",
       (s: SparkSession, d: String) =>
         Multimodal.windowEnergy(s,

@@ -12,10 +12,8 @@ package graft.functions
   *     codecs that SHIP IN THE JDK, so "no external libraries" still holds
   *
   * These make the multimodal decode path REAL for PCM / μ-law / IMA-ADPCM
-  * audio and for all common image formats (video via MJPEG-in-AVI below).
-  * Only perceptual compressed codecs (MP3/AAC/H.264...) remain behind the
-  * labeled stub — the JDK genuinely has none; swapping the stub for a
-  * JNI/javacv decoder changes one function.
+  * audio and for all common image formats. Perceptual compressed codecs
+  * (MP3/AAC/H.264...) are not decoded — the JDK genuinely has none.
   *
   * Encoders exist so tests and fixtures can synthesize valid payloads
   * deterministically; decoders never throw on malformed input (None).
@@ -607,96 +605,6 @@ object MediaCodecs {
         // not silently drop the image
       } catch { case scala.util.control.NonFatal(_) => None }
     }
-
-  // ------------------------------------------------------------------ AVI
-
-  /** Synthesize a minimal MJPEG-in-AVI: RIFF('AVI ') with a LIST('hdrl')
-    * (avih + one 'vids'/'MJPG' stream) and a LIST('movi') holding one
-    * '00dc' chunk per JPEG frame. Enough structure for any MJPEG-aware
-    * reader; fixture generation for the compressed-video decode path.
-    */
-  def encodeAviMjpeg(width: Int, height: Int, jpegFrames: Array[Array[Byte]],
-                     fps: Int = 10): Array[Byte] = {
-    def chunk(id: String, body: Array[Byte]): Array[Byte] = {
-      val pad = body.length & 1
-      val buf = java.nio.ByteBuffer.allocate(8 + body.length + pad)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      buf.put(id.getBytes("ASCII")).putInt(body.length).put(body)
-      buf.array()
-    }
-    def list(listType: String, body: Array[Byte]): Array[Byte] =
-      chunk("LIST", listType.getBytes("ASCII") ++ body)
-    val maxFrame = if (jpegFrames.isEmpty) 0 else jpegFrames.map(_.length).max
-    val avih = java.nio.ByteBuffer.allocate(56).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      .putInt(1000000 / fps).putInt(0).putInt(0).putInt(0)
-      .putInt(jpegFrames.length).putInt(0).putInt(1).putInt(maxFrame)
-      .putInt(width).putInt(height).putInt(0).putInt(0).putInt(0).putInt(0)
-      .array()
-    val strh = java.nio.ByteBuffer.allocate(56).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      .put("vids".getBytes("ASCII")).put("MJPG".getBytes("ASCII"))
-      .putInt(0).putShort(0.toShort).putShort(0.toShort).putInt(0)
-      .putInt(1).putInt(fps).putInt(0).putInt(jpegFrames.length)
-      .putInt(maxFrame).putInt(-1).putInt(0)
-      .putShort(0.toShort).putShort(0.toShort)
-      .putShort(width.toShort).putShort(height.toShort)
-      .array()
-    val strf = java.nio.ByteBuffer.allocate(40).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      .putInt(40).putInt(width).putInt(height)
-      .putShort(1.toShort).putShort(24.toShort)
-      .put("MJPG".getBytes("ASCII")).putInt(width * height * 3)
-      .putInt(0).putInt(0).putInt(0).putInt(0)
-      .array()
-    val hdrl = list("hdrl", chunk("avih", avih) ++
-      list("strl", chunk("strh", strh) ++ chunk("strf", strf)))
-    val movi = list("movi", jpegFrames.flatMap(f => chunk("00dc", f)))
-    chunk("RIFF", "AVI ".getBytes("ASCII") ++ hdrl ++ movi)
-  }
-
-  /** Decode the frames of an MJPEG-in-AVI payload: walk the RIFF chunk list
-    * (same discipline as [[decodeWav]] — unknown chunks skipped), find
-    * LIST('movi'), and feed every video-data subchunk ('##dc'/'##db')
-    * through the existing JDK ImageIO JPEG path. Undecodable frames are
-    * skipped, not fatal. Returns (frame_no, info) per decoded frame; None
-    * when the payload is not a RIFF/AVI at all.
-    */
-  def decodeAviFrames(bytes: Array[Byte]): Option[Seq[(Int, BmpInfo)]] = {
-    if (bytes == null || bytes.length < 12) return None
-    val b = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    def tag(off: Int) = new String(bytes, off, 4, "ASCII")
-    if (tag(0) != "RIFF" || tag(8) != "AVI ") return None
-    // locate LIST('movi') among the top-level chunks
-    var off = 12
-    var movi: Option[(Int, Int)] = None // (body offset past 'movi' tag, end)
-    while (off + 8 <= bytes.length && movi.isEmpty) {
-      val id = tag(off)
-      val len = b.getInt(off + 4)
-      if (len < 0 || off + 8 + len > bytes.length) return Some(Seq.empty)
-      if (id == "LIST" && len >= 4 && tag(off + 8) == "movi")
-        movi = Some((off + 12, off + 8 + len))
-      off += 8 + len + (len & 1)
-    }
-    movi.map { case (start, end) =>
-      val frames = scala.collection.mutable.ArrayBuffer.empty[(Int, BmpInfo)]
-      var o = start
-      var frameNo = 0
-      var truncated = false
-      while (o + 8 <= end && !truncated) {
-        val id = tag(o)
-        val len = b.getInt(o + 4)
-        if (len < 0 || o + 8 + len > end) truncated = true
-        else {
-          if (id.endsWith("dc") || id.endsWith("db")) {
-            val frame = java.util.Arrays.copyOfRange(bytes, o + 8, o + 8 + len)
-            decodeImage(frame).map(_._2).orElse(decodeBmp(frame))
-              .foreach(info => frames += ((frameNo, info)))
-            frameNo += 1
-          }
-          o += 8 + len + (len & 1)
-        }
-      }
-      frames.toSeq
-    }
-  }
 
   /** Synthesize a JPEG via the JDK encoder (fixture generation). */
   def encodeJpeg(width: Int, height: Int, rgb: Array[(Byte, Byte, Byte)]): Array[Byte] = {

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
 /** SimHash kernel, semantics identical to the SQL-expressible definition the
-  * DuckDB oracle replays (see `Dedup.simhash`): per token, bit j votes +1
+  * DuckDB oracle replays (see `Queries.dSimhash`): per token, bit j votes +1
   * iff hex digit j+1 of md5(token) has its high bit set (digit in 8..f),
   * else -1; fingerprint bit j = 1 iff the vote sum is positive.
   *

@@ -14,16 +14,6 @@ import org.apache.spark.sql.types._
   */
 object CorpusModel {
 
-  /** `_extracted_patterns` struct — reference `app.py:241-246`:
-    * four string arrays extracted from the record's `content` text.
-    */
-  val extractedPatternsType: StructType = StructType(Seq(
-    StructField("emails", ArrayType(StringType, containsNull = false)),
-    StructField("phones", ArrayType(StringType, containsNull = false)),
-    StructField("dates", ArrayType(StringType, containsNull = false)),
-    StructField("numbers", ArrayType(StringType, containsNull = false))
-  ))
-
   /** Corpus fact table — reference `records` DDL `app.py:67-75`.
     * `data` is the canonical-JSON record blob (schema-on-read);
     * `ingested_at` is kept both typed (for pruning/windowing) and as the
@@ -84,9 +74,6 @@ object JsonSchema {
     * added = new - old, removed = old - new, compared on field names only
     * (type changes are invisible, matching `app.py:339-342`).
     */
-  def diff(oldSchema: JsonSchema, newSchema: JsonSchema): (Seq[String], Seq[String]) = {
-    val added = (newSchema.fieldNames -- oldSchema.fieldNames).toSeq.sorted
-    val removed = (oldSchema.fieldNames -- newSchema.fieldNames).toSeq.sorted
-    (added, removed)
-  }
+  def diff(oldNames: Set[String], newNames: Set[String]): (Seq[String], Seq[String]) =
+    ((newNames -- oldNames).toSeq.sorted, (oldNames -- newNames).toSeq.sorted)
 }

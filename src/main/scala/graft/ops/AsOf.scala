@@ -35,7 +35,7 @@ object AsOf {
                    leftTime: String, rightTime: String,
                    rightVals: Seq[String]): DataFrame =
     joinImpl(left, right, on, leftTime, rightTime, rightVals,
-      forward = false, tolerance = None)
+      forward = false)
 
   /** Forward as-of: the single right row with the SMALLEST `rightTime` >=
     * the left row's time, per key (ties included). Same union+window plan,
@@ -45,31 +45,17 @@ object AsOf {
                   leftTime: String, rightTime: String,
                   rightVals: Seq[String]): DataFrame =
     joinImpl(left, right, on, leftTime, rightTime, rightVals,
-      forward = true, tolerance = None)
-
-  /** As-of with a match-window bound: right values null out when the
-    * matched right time is more than `tolerance` away from the left time
-    * (requires numeric time columns — epoch micros in this engine).
-    */
-  def joinWithTolerance(left: DataFrame, right: DataFrame, on: Seq[String],
-                        leftTime: String, rightTime: String,
-                        rightVals: Seq[String], tolerance: Long,
-                        forward: Boolean = false): DataFrame =
-    joinImpl(left, right, on, leftTime, rightTime, rightVals,
-      forward, Some(tolerance))
+      forward = true)
 
   private def joinImpl(left: DataFrame, right: DataFrame, on: Seq[String],
                        leftTime: String, rightTime: String,
-                       rightVals: Seq[String], forward: Boolean,
-                       tolerance: Option[Long]): DataFrame = {
+                       rightVals: Seq[String], forward: Boolean): DataFrame = {
     require(rightVals.nonEmpty, "rightVals must name at least one column")
     val leftCols = left.columns.toSeq
     val nullOf: ((String, org.apache.spark.sql.types.DataType)) => Column = {
       case (n, t) => lit(null).cast(t).as(n)
     }
-    // "__asof_rt" carries the matched right TIME so tolerance can bound it
-    val rightTypes = rightVals.map(v => v -> right.schema(v).dataType) :+
-      ("__asof_rt" -> right.schema(rightTime).dataType)
+    val rightTypes = rightVals.map(v => v -> right.schema(v).dataType)
     val leftTypes = leftCols.filterNot(on.contains).map(c =>
       c -> left.schema(c).dataType)
 
@@ -82,8 +68,7 @@ object AsOf {
       .select((on.map(col) ++
         Seq(col(rightTime).as("__t"), lit(0).as("__side")) ++
         leftTypes.map(nullOf) ++
-        rightVals.map(n => col(n).as(s"__r_$n")) :+
-        col(rightTime).as("__r___asof_rt")): _*)
+        rightVals.map(n => col(n).as(s"__r_$n"))): _*)
 
     // right rows sort before a left row at the same time -> inclusive match
     // (both directions); forward scans time descending so "last seen right"
@@ -96,18 +81,7 @@ object AsOf {
         rightTypes.map { case (n, _) =>
           last(col(s"__r_$n"), ignoreNulls = true).over(w).as(n)
         }): _*)
-    val matched = carried.filter(col("__side") === 1)
-    val bounded = tolerance match {
-      case None => matched
-      case Some(tol) =>
-        val dist =
-          if (forward) col("__asof_rt") - col("__t")
-          else col("__t") - col("__asof_rt")
-        val ok = col("__asof_rt").isNotNull && dist <= tol
-        matched.select((matched.columns.filterNot(rightVals.contains).map(col) ++
-          rightVals.map(n => when(ok, col(n)).as(n))): _*)
-    }
-    bounded
+    carried.filter(col("__side") === 1)
       .select((on.map(col) ++
         Seq(col("__t").as(leftTime)) ++
         leftCols.filterNot(c => on.contains(c) || c == leftTime).map(col) ++

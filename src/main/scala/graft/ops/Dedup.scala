@@ -630,12 +630,6 @@ object Dedup {
   def simhashLong(text: Column, bits: Int = 16): Column =
     call_function("graft_simhash", tokens(text), lit(bits))
 
-  /** SimHash as the oracle's `bits`-char '0'/'1' string (bit j of the string
-    * = md5 hex digit j's vote — same rendering `lpad(bin(long))` gives).
-    */
-  def simhash(text: Column, bits: Int = 16): Column =
-    lpad(bin(simhashLong(text, bits)), bits, "0")
-
   /** Hamming distance between two simhash longs: popcount of the xor. */
   def hammingDistance(a: Column, b: Column): Column =
     bit_count(a.bitwiseXOR(b))
@@ -1255,26 +1249,6 @@ object Dedup {
       .filter(col("id") =!= col("component"))
       .select(col("id").as(idCol))
     df.join(losers, Seq(idCol), "left_anti")
-  }
-
-  /** Survivor-oriented MinHash dedup: one `(survivor, dropped_id)` row per
-    * NON-survivor member of each near-dup cluster — the same output shape
-    * as [[simhashDedupIds]] and `Similarity.embeddingDedupIds`, so all
-    * three near-dup families expose the linear 100 TB dedup surface.
-    * Labels come from [[minhashLabels]] (connected components over the
-    * distinct-content rep graph + one membership join — no within-group
-    * pair expansion), and the survivor is the component label itself
-    * (min id per cluster). Spec-pinned row-equal to dropping non-min ids
-    * over the transitive closure of the pair API's output.
-    */
-  def minhashDedupIds(df: DataFrame, idCol: String, textCol: String,
-                      threshold: Double, numHashes: Int = 16, bands: Int = 4,
-                      shingleSize: Int = 5,
-                      collapse: Option[Boolean] = None): DataFrame = {
-    Materialize.scoped(minhashLabels(df, idCol, textCol,
-        threshold, numHashes, bands, shingleSize, collapse))
-      .filter(col("id") =!= col("component"))
-      .select(col("component").as("survivor"), col("id").as("dropped_id"))
   }
 
   /** Line-level boilerplate removal (the C4/RefinedWeb-family step): drop

@@ -220,10 +220,8 @@ class Evolution(spark: SparkSession, corpusDir: String) {
     var changeCount = changes.size.toLong
     if (hist.length == 2) {
       val (vOld, sOld) = (hist(1).getInt(0), hist(1).getString(1))
-      val newNames = fieldNamesOfStoredSchema(sNew)
-      val oldNames = fieldNamesOfStoredSchema(sOld)
-      val added = (newNames -- oldNames).toSeq.sorted
-      val removed = (oldNames -- newNames).toSeq.sorted
+      val (added, removed) = JsonSchema.diff(
+        fieldNamesOfStoredSchema(sOld), fieldNamesOfStoredSchema(sNew))
       val logged = changes.exists(_.getInt(2) == vNew)
       if ((added.nonEmpty || removed.nonEmpty) && !logged) {
         changeCount += 1
@@ -249,9 +247,10 @@ class Evolution(spark: SparkSession, corpusDir: String) {
     val oldNames = current.map(c => fieldNamesOfStoredSchema(c._2)).getOrElse(Set.empty)
     if (current.isDefined && oldNames == newFieldNames)
       Plan(currentVersion, currentVersion, schemaJson, Nil, Nil)
-    else
-      Plan(currentVersion + 1, currentVersion, schemaJson,
-        (newFieldNames -- oldNames).toSeq.sorted, (oldNames -- newFieldNames).toSeq.sorted)
+    else {
+      val (added, removed) = JsonSchema.diff(oldNames, newFieldNames)
+      Plan(currentVersion + 1, currentVersion, schemaJson, added, removed)
+    }
   }
 
   /** Carry out a [[plan]] (reference `store_schema`, `app.py:96-130`):

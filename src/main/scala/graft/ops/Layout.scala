@@ -1,10 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Data-layout operators (extension mandate, SURVEY §2.3): Z-order
-  * clustering — the multi-dimensional sort key that makes min/max zone
+/** Data-layout operators (extension mandate, SURVEY §2.3): the Z-order
+  * key — the multi-dimensional sort key that makes min/max zone
   * pruning work for MORE than one predicate column at 100 TB. Writing a
   * fact table range-partitioned + sorted by the interleaved key gives every
   * file a tight bounding box in ALL interleaved dimensions, so a filter on
@@ -40,19 +40,5 @@ object Layout {
       shiftleft(bit, i * n + j)
     }
     terms.reduce(_.bitwiseOR(_)).as("zkey")
-  }
-
-  /** `df` re-clustered for multi-dimensional pruning: range-partitioned and
-    * sorted-within-partitions by the Z-key of `dims` — exactly the shape a
-    * partitioned parquet write wants (one shuffle; each output file gets a
-    * contiguous Z-range, i.e. a tight per-file bounding box in every
-    * interleaved dimension).
-    */
-  def clusterByZOrder(df: DataFrame, dims: Seq[String], bits: Int,
-                      numPartitions: Int): DataFrame = {
-    val keyed = df.withColumn("__zkey", zOrderKey(dims.map(col), bits))
-    keyed.repartitionByRange(numPartitions, col("__zkey"))
-      .sortWithinPartitions("__zkey")
-      .drop("__zkey")
   }
 }

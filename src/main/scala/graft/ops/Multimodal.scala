@@ -5,37 +5,21 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Multimodal column plumbing (extension mandate, SURVEY §2.3): image /
-  * audio / video payloads as opaque `binary` columns beside a typed metadata
-  * struct, with decode / feature-extraction / resize / frame-sampling
+  * audio payloads as opaque `binary` columns beside a typed metadata
+  * struct, with decode / windowed-energy / resize / frame-sampling
   * operators shaped for distributed batch execution.
   *
   * Decode is REAL for WAV (RIFF — PCM, G.711 μ-law, mono IMA ADPCM) and BMP
   * (parsed directly), for the compressed image formats — PNG/JPEG/GIF — via
-  * the JDK's own `javax.imageio` (zero external dependencies), AND for
-  * compressed video as MJPEG-in-AVI (the RIFF walker feeds each '00dc' JPEG
-  * frame through the ImageIO path — [[videoFrames]]), all through
+  * the JDK's own `javax.imageio` (zero external dependencies), all through
   * [[graft.functions.MediaCodecs]], and for FLAC (full decoder:
   * FIXED/LPC/Rice/stereo-decorrelation, [[graft.functions.Flac]]).
-  * Only PERCEPTUAL compressed-audio codecs
-  * (MP3/AAC...) remain behind the labeled `decodeStub` — the JDK genuinely
-  * ships none; swapping the stub for a JNI/javacv decoder changes one
-  * function, and the batch iteration shape (mapPartitions, per-partition
-  * init, no per-row driver work) is shared with the real paths.
+  * PERCEPTUAL compressed-audio codecs (MP3/AAC...) are not decoded — the
+  * JDK genuinely ships none — and [[decodeMedia]] flags such payloads
+  * `unknown`. Every decode path shares one batch shape: mapPartitions,
+  * per-partition init, no per-row driver work.
   */
 object Multimodal {
-
-  val mediaMetaType: StructType = StructType(Seq(
-    StructField("format", StringType),
-    StructField("width", IntegerType),
-    StructField("height", IntegerType),
-    StructField("n_frames", IntegerType)
-  ))
-
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("payload", BinaryType),
-    StructField("meta", mediaMetaType)
-  ))
 
   /** Demo media table derived from any (id, text) table: payload = utf-8
     * bytes, metadata derived deterministically. Stands in for a real
@@ -208,104 +192,6 @@ object Multimodal {
     }(enc)
   }
 
-  /** ======= STUB ======= deterministic fake "decode": bytes → k floats in
-    * [0,1) (rolling sum over the byte stream). Replace with a real codec for
-    * production; the call shape (whole payload in, fixed-size feature vector
-    * out) is what a real decoder needs.
-    */
-  private[ops] def decodeStub(payload: Array[Byte], k: Int): Array[Float] = {
-    val out = new Array[Float](k)
-    if (payload == null || payload.isEmpty) return out
-    var acc = 7L
-    var i = 0
-    while (i < payload.length) {
-      acc = (acc * 31 + (payload(i) & 0xff)) % 1000003L
-      out(i % k) = ((out(i % k) + acc.toFloat / 1000003f) % 1f)
-      i += 1
-    }
-    out
-  }
-
-  /** Feature extraction over the payload column via mapPartitions: the
-    * executor-side batch loop a real decoder would use (per-partition codec
-    * init amortized across rows — the pattern that matters at scale; a UDF
-    * would re-enter the codec per row). WAV payloads get REAL features
-    * (per-window RMS over the decoded samples); other payloads fall back to
-    * the deterministic stub.
-    */
-  def withFeatures(spark: SparkSession, media: DataFrame, k: Int = 8): DataFrame = {
-    import graft.functions.MediaCodecs
-    val outSchema = StructType(media.schema.fields :+
-      StructField("features", ArrayType(FloatType, containsNull = false)))
-    val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    val payloadIdx = media.schema.fieldIndex("payload")
-    media.mapPartitions { rows =>
-      // per-partition decoder init would go here (once, not per row)
-      rows.map { r =>
-        val bytes = r.getAs[Array[Byte]](payloadIdx)
-        val feats =
-          if (MediaCodecs.decodeWav(bytes).isDefined) MediaCodecs.wavWindowRms(bytes, k)
-          else decodeStub(bytes, k)
-        Row.fromSeq(r.toSeq :+ feats.toSeq)
-      }
-    }(enc)
-  }
-
-  /** Demo VIDEO table: each row's text drives a small REAL MJPEG-in-AVI —
-    * `2 + len(text) % 4` solid-color 16×16 JPEG frames whose colors derive
-    * deterministically from (media_id, frame_no). A valid payload any
-    * MJPEG-aware reader decodes; synthesis is a fixture generator (UDF is
-    * fine off the hot path), decode is the operator under test.
-    */
-  def demoAviTable(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val avi = udf { (id: Long, t: String) =>
-      val n = 2 + (t.length % 4)
-      val frames = Array.tabulate(n) { f =>
-        val r = ((id * 31 + f * 97) % 256).toByte
-        val g = ((id * 57 + f * 13) % 256).toByte
-        val b = ((id * 11 + f * 71) % 256).toByte
-        graft.functions.MediaCodecs.encodeJpeg(16, 16,
-          Array.fill(256)((r, g, b)))
-      }
-      graft.functions.MediaCodecs.encodeAviMjpeg(16, 16, frames)
-    }
-    df.select(col(idCol).cast("long").as("media_id"),
-      avi(col(idCol).cast("long"), col(textCol)).as("payload"))
-  }
-
-  val videoFrameSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("frame_no", IntegerType, nullable = false),
-    StructField("width", IntegerType, nullable = false),
-    StructField("height", IntegerType, nullable = false),
-    StructField("mean_r", DoubleType, nullable = false),
-    StructField("mean_g", DoubleType, nullable = false),
-    StructField("mean_b", DoubleType, nullable = false)
-  ))
-
-  /** REAL compressed-video frame decode: MJPEG-in-AVI payloads → one row
-    * per decoded frame (dims + channel means), via the RIFF 'movi' walk +
-    * JDK ImageIO ([[graft.functions.MediaCodecs.decodeAviFrames]]). Same
-    * mapPartitions batch shape as every decode path here — frames never
-    * transit the driver; non-AVI payloads yield no rows.
-    */
-  def videoFrames(spark: SparkSession, media: DataFrame): DataFrame = {
-    import graft.functions.MediaCodecs
-    val enc = org.apache.spark.sql.Encoders.row(videoFrameSchema)
-    val idIdx = media.schema.fieldIndex("media_id")
-    val payloadIdx = media.schema.fieldIndex("payload")
-    media.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val id = r.getLong(idIdx)
-        val bytes = r.getAs[Array[Byte]](payloadIdx)
-        MediaCodecs.decodeAviFrames(bytes).getOrElse(Seq.empty).iterator.map {
-          case (f, info) =>
-            Row(id, f, info.width, info.height, info.meanR, info.meanG, info.meanB)
-        }
-      }
-    }(enc)
-  }
-
   val windowEnergySchema: StructType = StructType(Seq(
     StructField("media_id", LongType, nullable = false),
     StructField("window", IntegerType, nullable = false),
@@ -313,11 +199,11 @@ object Multimodal {
     StructField("n_samples", LongType, nullable = false)
   ))
 
-  /** Integer-exact windowed audio energy — the oracle-checkable sibling of
-    * [[withFeatures]]' float RMS: for each 8-bit-PCM WAV payload, `k` rows of
-    * (window, Σ(sample−128)², sample count). Pure integer arithmetic
-    * ([[graft.functions.MediaCodecs.wavWindowEnergy]]), so — unlike the FP
-    * RMS, whose float32 accumulation no SQL engine replays — a DuckDB oracle
+  /** Integer-exact windowed audio energy: for each 8-bit-PCM WAV payload,
+    * `k` rows of (window, Σ(sample−128)², sample count). Pure integer
+    * arithmetic ([[graft.functions.MediaCodecs.wavWindowEnergy]]), so —
+    * unlike a float RMS, whose float32 accumulation no SQL engine replays
+    * ([[graft.functions.MediaCodecs.wavWindowRms]]) — a DuckDB oracle
     * recomputes it bit-identically (rms_w = sqrt(sum_sq/(128²·n)) is a
     * post-hoc scalar when a float is wanted). Same mapPartitions batch shape
     * as the other decode paths; non-WAV payloads yield no rows.

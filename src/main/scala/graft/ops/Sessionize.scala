@@ -1,9 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Gap-based sessionization — the canonical stateful operator the reference
   * lacks (SURVEY §2.2 "streaming / stateful: absent").
@@ -12,11 +11,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * same key exceeds `gapMicros`; session id = running count of starts. One
   * shuffle+sort per key (window), two streaming window functions — linear,
   * spillable, AQE-splittable on skewed keys.
-  *
-  * Streaming: the same semantics as `flatMapGroupsWithState` over a
-  * key-grouped event stream with processing-time timeouts — sessions close
-  * when no event arrives within the gap; closed sessions are emitted
-  * downstream (append mode).
   */
 object Sessionize {
 
@@ -58,51 +52,6 @@ object Sessionize {
       .drop("w")
   }
 
-  final case class SessionEvent(key: String, tsMicros: Long)
-  final case class SessionState(startUs: Long, lastUs: Long, nEvents: Long)
-  final case class ClosedSession(key: String, nEvents: Long, startUs: Long, endUs: Long)
-
-  /** Per-group state transition — exposed so the timeout and advance paths
-    * are unit-testable with `TestGroupState` (the streaming harness only
-    * exercises them with wall-clock timing).
-    */
-  def onGroup(key: String, rows: Iterator[SessionEvent],
-              state: GroupState[SessionState], gapMicros: Long,
-              registerTimeout: Boolean): Iterator[ClosedSession] = {
-    if (state.hasTimedOut) {
-      val s = state.get
-      state.remove()
-      Iterator(ClosedSession(key, s.nEvents, s.startUs, s.lastUs))
-    } else {
-      val sorted = rows.toSeq.sortBy(_.tsMicros)
-      var closed = List.empty[ClosedSession]
-      var cur = state.getOption
-      sorted.foreach { e =>
-        cur match {
-          case Some(s) if e.tsMicros - s.lastUs <= gapMicros =>
-            cur = Some(SessionState(s.startUs, e.tsMicros, s.nEvents + 1))
-          case Some(s) =>
-            closed ::= ClosedSession(key, s.nEvents, s.startUs, s.lastUs)
-            cur = Some(SessionState(e.tsMicros, e.tsMicros, 1))
-          case None =>
-            cur = Some(SessionState(e.tsMicros, e.tsMicros, 1))
-        }
-      }
-      cur.foreach { s =>
-        state.update(s)
-        if (registerTimeout) state.setTimeoutDuration(gapMicros / 1000L + 1L)
-      }
-      closed.reverseIterator
-    }
-  }
-
-  /** Streaming sessionization: a buffered session closes when a new event of
-    * the same key arrives beyond the gap, and — with `idleTimeout=true` —
-    * when the processing-time timeout (= the gap) fires with no new events.
-    * NOTE an armed idle timeout keeps the query scheduling micro-batches
-    * while any session is open (that is what evaluates timeouts); bounded
-    * drains (Trigger.AvailableNow) should run with `idleTimeout=false`.
-    */
   /** Earliest-anchor funnel analysis — the product-analytics staple over
     * the same event stream: per user, the FIRST `steps.head` event anchors
     * the attempt; each later step needs an event strictly after the
@@ -189,18 +138,5 @@ object Sessionize {
       .withColumn("__tot", sum(col("n")).over(Window.partitionBy("from_type")))
       .withColumn("p_ppm", expr("n * 1000000 div __tot"))
       .drop("__tot")
-  }
-
-  def streamingByGap(events: Dataset[SessionEvent], gapMicros: Long,
-                     idleTimeout: Boolean = true)
-                    (implicit spark: SparkSession): Dataset[ClosedSession] = {
-    import spark.implicits._
-    val timeout =
-      if (idleTimeout) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    events.groupByKey(_.key)
-      .flatMapGroupsWithState[SessionState, ClosedSession](OutputMode.Append(), timeout) {
-        (key, rows, state) => onGroup(key, rows, state, gapMicros, idleTimeout)
-      }
   }
 }

@@ -24,12 +24,6 @@ import org.apache.spark.sql.functions._
   */
 object Urls {
 
-  /** All `http(s)://...` URLs in `textCol`, one row per match:
-    * (…input cols…, url). */
-  def extractUrls(df: DataFrame, textCol: String): DataFrame =
-    df.withColumn("url",
-      explode(expr(s"regexp_extract_all($textCol, '(?i)https?://[^\\\\s]+', 0)")))
-
   /** The canonical form of a URL column (see object doc). Non-URL strings
     * pass through unchanged (every component regex just fails to match). */
   def canonicalUrl(url: Column): Column = {

@@ -18,16 +18,13 @@ import org.apache.spark.sql.functions._
   */
 object Validate {
 
-  /** Quality-issue array for a JSON record column, against a fixed schema
-    * field list. `schemaFields` ordering is preserved for the "Missing field"
-    * issues (the reference iterates schema properties in dict order).
-    * Inline, `json_object_keys` runs once per use of the keys (three
-    * times); [[withQualityIssues]] projects them first, one parse a record.
+  /** Quality-issue array for a record's key array (`json_object_keys` of
+    * its JSON; null for non-object JSON), against a fixed schema field list.
+    * `schemaFields` ordering is preserved for the "Missing field" issues
+    * (the reference iterates schema properties in dict order). The keys are
+    * read three times, so pass a projected column, not an inline parse
+    * ([[withQualityIssues]] does).
     */
-  def qualityIssues(jsonCol: Column, schemaFields: Seq[String]): Column =
-    qualityIssuesFromKeys(json_object_keys(jsonCol), schemaFields)
-
-  /** `qualityIssues` over an already-extracted key array (no JSON parse). */
   def qualityIssuesFromKeys(recordKeys: Column, schemaFields: Seq[String]): Column = {
     val schemaArr = array(schemaFields.map(lit): _*).cast("array<string>")
     val extra = transform(

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Dumps `explain("formatted")` for the named queries, one file per query
   * (`<outDir>/<query>_<suffix>.txt`) — the per-round optimization audit
-  * trail (plans/r21/<query>_before.txt / _after.txt).
+  * trail (history/plans/r21/<query>_before.txt / _after.txt).
   *
   *   sbt "runMain graft.tools.PlanDump <sfDir> <outDir> <suffix> q_a q_b ..."
   *

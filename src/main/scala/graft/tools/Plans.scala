@@ -2,14 +2,14 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** Dumps `explain("formatted")` for the headline queries to PLANS.md — the
-  * plan-shape audit trail (pushdown, broadcast, codegen spans, exchange
-  * placement) kept current per round.
+/** Dumps `explain("formatted")` for the headline queries to
+  * history/PLANS.md — the plan-shape audit trail (pushdown, broadcast,
+  * codegen spans, exchange placement) kept current per round.
   */
 object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val out = if (args.length > 1) args(1) else "PLANS.md"
+    val out = if (args.length > 1) args(1) else "history/PLANS.md"
     val spark = SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
@@ -61,7 +61,7 @@ object Plans {
     val sb = new StringBuilder
     sb.append("# PLANS — physical plans of the headline queries\n\n")
     sb.append(s"Generated by `graft.tools.Plans` over `$sfDir` — regenerate with\n")
-    sb.append("`sbt \"runMain graft.tools.Plans <sfDir> PLANS.md\"`.\n")
+    sb.append("`sbt \"runMain graft.tools.Plans <sfDir> history/PLANS.md\"`.\n")
     sb.append("Read for: `PushedFilters`/`ReadSchema` on scans, `BroadcastHashJoin`\n")
     sb.append("on dimension joins, `TakeOrderedAndProject` for top-K, `*(n)` codegen\n")
     sb.append("spans around the native kernels, and exchange placement.\n\n")

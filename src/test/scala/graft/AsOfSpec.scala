@@ -43,19 +43,6 @@ class AsOfSpec extends SparkSpec {
     ))
   }
 
-  test("tolerance nulls out matches farther than the bound") {
-    val out = AsOf.joinWithTolerance(trades, quotes, Seq("sym"), "t", "t",
-      Seq("px"), tolerance = 4L)
-      .orderBy("trade_id")
-      .collect().map(r => (r.getAs[String]("trade_id"), Option(r.getAs[Any]("px"))))
-    assert(out.toSeq == Seq(
-      ("t1", None),      // nearest earlier quote @5 is 5 away > 4
-      ("t2", Some(2.0)), // exact tie, distance 0
-      ("t3", None),      // nearest earlier @20 is 5 away
-      ("t4", None)
-    ))
-  }
-
   test("plan is a single exchange + window, no nested-loop join") {
     val plan = AsOf.joinBackward(trades, quotes, Seq("sym"), "t", "t", Seq("px"))
       .queryExecution.executedPlan.toString

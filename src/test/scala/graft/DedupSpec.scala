@@ -43,15 +43,12 @@ class DedupSpec extends SparkSpec {
     assert(sigs(0).length == 16)
   }
 
-  test("simhash: string form is bin(long) and dup pair is at distance 0") {
+  test("simhashLong: the dup pair shares one fingerprint within the low 16 bits") {
     val r = docs.filter(col("id") <= 2)
-      .select(Dedup.simhash(col("text"), 16).as("s"),
-        Dedup.simhashLong(col("text"), 16).as("l"))
-      .collect()
-    assert(r(0).getString(0) == r(1).getString(0))
-    assert(r(0).getString(0).length == 16)
-    assert(r(0).getString(0).forall(c => c == '0' || c == '1'))
-    assert(java.lang.Long.parseLong(r(0).getString(0), 2) == r(0).getLong(1))
+      .select(Dedup.simhashLong(col("text"), 16))
+      .collect().map(_.getLong(0))
+    assert(r(0) == r(1))
+    assert(r.forall(l => l >= 0 && l < (1L << 16)))
   }
 
   test("simhashNearDuplicates finds the exact-dup pair at distance 0 with pigeonhole recall") {
@@ -559,7 +556,7 @@ class DedupSpec extends SparkSpec {
     assert(narrow.map(_._1).toSet.intersect(droppedIds).isEmpty)
   }
 
-  test("minhashDedupIds matches CC-over-pairs on both gate paths; simhash frames release") {
+  test("dropNearDuplicates matches CC-over-pairs on both paths; simhash frames release") {
     import spark.implicits._
     val base = Seq(
       "the quick brown fox jumps over the lazy dog again and again today",
@@ -569,16 +566,19 @@ class DedupSpec extends SparkSpec {
     val dupDocs = base.zip(Seq(3, 3, 3, 1)).zipWithIndex.flatMap {
       case ((t, m), i) => (0 until m).map(c => (i * 10L + c, t))
     }.toDF("id", "text")
-    def canon2(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(identity).toSeq
-    val expected = canon2(Dedup.connectedComponents(
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("id").collect().map(_.getLong(0)).sorted.toSeq
+    // survivors = every id except the non-min members of the CC closure
+    // of the per-doc pair API's output
+    val dropped = ids(Dedup.connectedComponents(
         Dedup.minhashNearDuplicates(dupDocs, "id", "text", 0.9,
           collapse = Some(false)).select("id_a", "id_b"))
-      .filter(col("id") =!= col("component"))
-      .select(col("component"), col("id")))
-    assert(canon2(Dedup.minhashDedupIds(dupDocs, "id", "text", 0.9,
+      .filter(col("id") =!= col("component")))
+    assert(dropped.nonEmpty)
+    val expected = ids(dupDocs).diff(dropped)
+    assert(ids(Dedup.dropNearDuplicates(dupDocs, "id", "text", 0.9,
       collapse = Some(true))) == expected)
-    assert(canon2(Dedup.minhashDedupIds(dupDocs, "id", "text", 0.9,
+    assert(ids(Dedup.dropNearDuplicates(dupDocs, "id", "text", 0.9,
       collapse = Some(false))) == expected)
     // the tracked frames release deterministically (house pattern)
     val (out, caches) = graft.ops.Materialize.tracked(

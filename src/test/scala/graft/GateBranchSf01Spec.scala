@@ -46,9 +46,9 @@ class GateBranchSf01Spec extends SparkSpec {
 
   test("minhash collapse gate: survivor API branches row-identical on sf0.1") {
     assume(available, s"$sf missing")
-    assertRowEqual("minhashDedupIds",
-      Dedup.minhashDedupIds(docs, "doc_id", "text", 0.9, collapse = Some(true)),
-      Dedup.minhashDedupIds(docs, "doc_id", "text", 0.9, collapse = Some(false)))
+    assertRowEqual("dropNearDuplicates",
+      Dedup.dropNearDuplicates(docs, "doc_id", "text", 0.9, collapse = Some(true)),
+      Dedup.dropNearDuplicates(docs, "doc_id", "text", 0.9, collapse = Some(false)))
   }
 
   test("embedding occupancy gate: pair branches row-identical on sf0.1") {

@@ -171,8 +171,6 @@ class GateSpec extends SparkSpec {
         .filter(r => !before.contains(r.id) && !r.isCheckpointed)
         .map(_.id)
     val wrappers: Seq[(String, Boolean => Unit)] = Seq(
-      ("minhashDedupIds", c =>
-        Dedup.minhashDedupIds(docs, "id", "text", 0.9, collapse = Some(c)).collect()),
       ("minhashClusters", c =>
         Dedup.minhashClusters(docs, "id", "text", 0.9, collapse = Some(c)).collect()),
       ("dropNearDuplicates", c =>

@@ -36,27 +36,4 @@ class LayoutSpec extends SparkSpec {
     intercept[IllegalArgumentException](
       Layout.zOrderKey(Seq(col("a"), col("b")), 32)) // 64 bits > 63
   }
-
-  test("clusterByZOrder: rows survive, partition count honored, sorted runs") {
-    val df = (for { x <- 0L to 15L; y <- 0L to 15L } yield (x, y))
-      .toDF("x", "y")
-    val out = Layout.clusterByZOrder(df, Seq("x", "y"), bits = 4,
-      numPartitions = 4)
-    assert(out.count() == 256)
-    assert(out.rdd.getNumPartitions == 4)
-    assert(out.columns.toSeq == Seq("x", "y")) // helper column dropped
-    // each partition holds a contiguous sorted z-range: max(z) of partition
-    // p < min(z) of partition p+1
-    val ranges = out
-      .withColumn("z", Layout.zOrderKey(Seq(col("x"), col("y")), 4))
-      .withColumn("p", spark_partition_id())
-      .groupBy("p").agg(min("z").as("lo"), max("z").as("hi"))
-      .orderBy("p").collect()
-      .map(r => (r.getLong(1), r.getLong(2)))
-    ranges.sliding(2).foreach {
-      case Array((_, hi), (lo, _)) =>
-        assert(hi < lo, s"z-ranges overlap across partitions: $ranges")
-      case _ =>
-    }
-  }
 }

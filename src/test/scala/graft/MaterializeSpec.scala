@@ -76,8 +76,6 @@ class MaterializeSpec extends SparkSpec {
         Dedup.dropNearDuplicates(docs, "id", "text", 0.9).collect()),
       "minhashClusters" -> (() =>
         Dedup.minhashClusters(docs, "id", "text", 0.9).collect()),
-      "minhashDedupIds" -> (() =>
-        Dedup.minhashDedupIds(docs, "id", "text", 0.9).collect()),
       "dropNearDuplicatesBy" -> (() =>
         Dedup.dropNearDuplicatesBy(docs, "id", "text", "score", 0.9).collect()),
       "curateCorpus" -> (() =>

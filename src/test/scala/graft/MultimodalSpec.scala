@@ -4,8 +4,8 @@ import graft.ops.Multimodal
 import org.apache.spark.sql.functions._
 
 /** Multimodal plumbing: schema shape, REAL WAV/BMP decode (pure-JVM byte
-  * parsing — no codec libs needed for those formats), deterministic stub
-  * features for undecodable payloads, frame sampling stride semantics.
+  * parsing — no codec libs needed for those formats), JDK-ImageIO image
+  * decode, frame sampling stride semantics.
   */
 class MultimodalSpec extends SparkSpec {
   import graft.functions.MediaCodecs
@@ -19,15 +19,6 @@ class MultimodalSpec extends SparkSpec {
     assert(df.columns.contains("media_id") && df.columns.contains("payload"))
     val meta = df.select("meta.*").columns.toSet
     assert(Set("width", "height", "n_frames").subsetOf(meta))
-  }
-
-  test("withFeatures returns fixed-length float features, deterministic") {
-    val f1 = Multimodal.withFeatures(spark, media)
-      .select(col("media_id"), col("features")).orderBy("media_id").collect()
-    val f2 = Multimodal.withFeatures(spark, media)
-      .select(col("media_id"), col("features")).orderBy("media_id").collect()
-    assert(f1.map(_.getSeq[Float](1).toSeq).toSeq == f2.map(_.getSeq[Float](1).toSeq).toSeq)
-    assert(f1.forall(_.getSeq[Float](1).nonEmpty))
   }
 
   test("resizeImages: nearest-neighbor resample matches the fixture pixel formula") {
@@ -144,15 +135,6 @@ class MultimodalSpec extends SparkSpec {
     assert(out(2).isNullAt(out(2).fieldIndex("sample_rate")))
   }
 
-  test("withFeatures computes real per-window RMS for WAV payloads") {
-    // first half silence (128 -> 0.0), second half constant 192 -> 0.5
-    val samples = Array.fill(100)(128.toByte) ++ Array.fill(100)(192.toByte)
-    val df = Seq((1L, MediaCodecs.encodeWav(samples, 8000))).toDF("media_id", "payload")
-    val feats = Multimodal.withFeatures(spark, df, k = 2)
-      .select("features").collect()(0).getSeq[Float](0)
-    assert(feats.toSeq == Seq(0.0f, 0.5f), s"got $feats")
-  }
-
   test("windowEnergy: exact integer sums consistent with the float RMS") {
     // silence window: sum_sq 0; constant-192 window: 100 * 64^2 = 409600
     val samples = Array.fill(100)(128.toByte) ++ Array.fill(100)(192.toByte)
@@ -264,27 +246,28 @@ class MultimodalSpec extends SparkSpec {
     assert(info.getAs[Double]("duration_ms") == 5 * 1000.0 / 8000)
   }
 
-  test("AVI round-trip: MJPEG frames decode with dims and near-exact means") {
-    // three solid-color frames; JPEG is lossy but a solid 16x16 decodes to
-    // a near-constant image (DC-only blocks), so means land within ±2
+  test("JPEG round-trip: decodeImage/decodeImageGray give dims and near-exact color") {
+    // solid 16x16 frames: JPEG is lossy but a solid image decodes to a
+    // near-constant one (DC-only blocks), so means and luma land within ±2
     val colors = Seq((200, 30, 60), (10, 180, 90), (120, 120, 250))
-    val frames = colors.map { case (r, g, b) =>
-      MediaCodecs.encodeJpeg(16, 16,
+    colors.foreach { case (r, g, b) =>
+      val jpg = MediaCodecs.encodeJpeg(16, 16,
         Array.fill(256)((r.toByte, g.toByte, b.toByte)))
-    }.toArray
-    val avi = MediaCodecs.encodeAviMjpeg(16, 16, frames)
-    val decoded = MediaCodecs.decodeAviFrames(avi).get
-    assert(decoded.map(_._1) == Seq(0, 1, 2))
-    assert(decoded.forall { case (_, i) => i.width == 16 && i.height == 16 })
-    decoded.zip(colors).foreach { case ((_, i), (r, g, b)) =>
+      val Some((fmt, i)) = MediaCodecs.decodeImage(jpg)
+      assert(fmt == "image/jpeg" && i.width == 16 && i.height == 16)
       assert(math.abs(i.meanR - r) <= 2 && math.abs(i.meanG - g) <= 2 &&
         math.abs(i.meanB - b) <= 2,
         s"means (${i.meanR},${i.meanG},${i.meanB}) far from ($r,$g,$b)")
+      val Some((w, h, gray)) = MediaCodecs.decodeImageGray(jpg)
+      val luma = (299 * r + 587 * g + 114 * b) / 1000
+      assert((w, h) == ((16, 16)) && gray.length == 256)
+      assert(gray.forall(v => math.abs(v - luma) <= 2),
+        s"gray ${gray.distinct.toSeq} far from luma $luma")
     }
-    // non-AVI RIFF (a WAV) and junk are None, not errors
-    assert(MediaCodecs.decodeAviFrames(
-      MediaCodecs.encodeWav(Array[Byte](1, 2, 3, 4), 8000)).isEmpty)
-    assert(MediaCodecs.decodeAviFrames(Array[Byte](1, 2, 3)).isEmpty)
+    // a truncated JPEG and junk are None, not errors
+    val jpg = MediaCodecs.encodeJpeg(2, 2, Array.fill(4)((1.toByte, 2.toByte, 3.toByte)))
+    assert(MediaCodecs.decodeImageGray(jpg.take(4)).isEmpty)
+    assert(MediaCodecs.decodeImage(Array[Byte](1, 2, 3)).isEmpty)
   }
 
   test("dHash: identical images hash equal; a local edit flips few bits") {
@@ -365,17 +348,4 @@ class MultimodalSpec extends SparkSpec {
     assert(MediaCodecs.decodeBmp(minH.array()).isEmpty)
   }
 
-  test("videoFrames: one row per frame, deterministic frame count from text") {
-    val docs = Seq((1L, "abcdef"), (2L, "xy")).toDF("id", "text")
-    val media = Multimodal.demoAviTable(docs, "id", "text")
-    val rows = Multimodal.videoFrames(spark, media)
-      .orderBy("media_id", "frame_no").collect()
-    // n_frames = 2 + len % 4: "abcdef" -> 4, "xy" -> 4
-    val byMedia = rows.groupBy(_.getLong(0)).view.mapValues(_.length).toMap
-    assert(byMedia == Map(1L -> 4, 2L -> 4))
-    assert(rows.forall(r => r.getInt(2) == 16 && r.getInt(3) == 16))
-    // frame colors vary by (id, frame): distinct means across a media's frames
-    val m1 = rows.filter(_.getLong(0) == 1L).map(r => (r.getDouble(4), r.getDouble(5)))
-    assert(m1.distinct.length == m1.length)
-  }
 }

@@ -544,6 +544,20 @@ class PipelineSpec extends SparkSpec {
     assert(filesOf(Pipeline.ingest(spark, unknown, dir)) == 4)
   }
 
+  test("a pre-shuffled batch runs its shuffle once: splits are read from the plan") {
+    // Dataset.rdd would run the adaptive plan's exchange to count its
+    // partitions, and the write would then run it again: 3 jobs
+    val dir = tmpDir("corpus_")
+    Pipeline.ingest(spark, Seq(("a", 1)).toDF("content", "n"), dir)
+    val batch = csvBatch("content,n,extra", 6000, pad = " " + "lorem ipsum " * 10) // ~0.8 MB
+      .repartition(4)
+    var r: Pipeline.IngestResult = null
+    val jobs = FinalPlans.jobsDuring(spark) { r = Pipeline.ingest(spark, batch, dir) }
+    assert(jobs == 2, "one shuffle-map job and the write")
+    assert(r.recordCount == 6000)
+    assert(dataFiles(s"$dir/records/schema_version=${r.version}").size == 4)
+  }
+
   test("IngestResult names the fields its version added and removed") {
     val dir = tmpDir("corpus_")
     val r1 = Pipeline.ingest(spark, Seq(("a", 1)).toDF("content", "n"), dir)

@@ -5,37 +5,10 @@ import graft.streaming.StreamingIngest
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
-
-  test("continuous ingest: landed files flow through the full pipeline into the corpus") {
-    val landing = tmpDir("landing_")
-    val corpus = tmpDir("corpus_")
-    val checkpoint = tmpDir("ckpt_")
-    Files.write(Paths.get(landing, "a.txt"),
-      "alpha line\nbeta line\n".getBytes(StandardCharsets.UTF_8))
-    val q = StreamingIngest.start(spark, landing, corpus, checkpoint)
-    try {
-      q.processAllAvailable()
-      val round1 = Corpus.records(spark, corpus).count()
-      assert(round1 == 2, s"expected 2 records after first file, got $round1")
-
-      Files.write(Paths.get(landing, "b.txt"),
-        "gamma line\n".getBytes(StandardCharsets.UTF_8))
-      q.processAllAvailable()
-      val all = Corpus.records(spark, corpus)
-      assert(all.count() == 3)
-      // ids must stay unique across micro-batches (corpus-seeded idBase)
-      val ids = all.select("id").collect().map(_.getLong(0))
-      assert(ids.distinct.length == 3)
-      // schema stays v1 (same field set every batch)
-      assert(Corpus.schemaHistory(spark, corpus).count() == 1)
-    } finally q.stop()
-  }
 
   test("retried micro-batch with a committed marker is skipped (idempotent replay)") {
     val corpus = tmpDir("corpus_")
@@ -48,27 +21,6 @@ class StreamingSpec extends SparkSpec {
     // a new batchId ingests normally
     assert(StreamingIngest.ingestBatchOnce(spark, batch, corpus, batchId = 8L))
     assert(Corpus.records(spark, corpus).count() == 4)
-  }
-
-  test("streaming exact dedup keeps the first record per fingerprint") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Timestamp, String)]
-    mem.addData(
-      (new Timestamp(1000L), "Hello  World"),
-      (new Timestamp(2000L), "hello world"),   // same fingerprint as above
-      (new Timestamp(3000L), "different doc"))
-    val deduped = StreamingIngest.dedupStream(
-      mem.toDF().toDF("ts", "content")
-        .withColumn("fp", graft.ops.TextAnalysis.fingerprintMd5(col("content"))),
-      "ts", Seq("fp"), watermark = "10 seconds")
-    val q = deduped.writeStream.format("memory").queryName("dedup_out")
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      val contents = spark.table("dedup_out").collect().map(_.getAs[String]("content"))
-      assert(contents.sorted.toSeq == Seq("Hello  World", "different doc"),
-        s"expected first-per-fingerprint, got ${contents.toSeq}")
-    } finally q.stop()
   }
 
   test("batch sessionization: sessions split exactly at the gap") {
@@ -102,57 +54,6 @@ class StreamingSpec extends SparkSpec {
     assert(custom.toSeq == native.toSeq, s"\ncustom: ${custom.toSeq}\nnative: ${native.toSeq}")
   }
 
-  test("streaming sessionization: a beyond-gap event closes the buffered session") {
-    implicit val s = spark
-    import graft.ops.Sessionize
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Sessionize.SessionEvent]
-    mem.addData(
-      Sessionize.SessionEvent("u1", 0L),
-      Sessionize.SessionEvent("u1", 500000L),
-      Sessionize.SessionEvent("u1", 5000000L)) // 4.5s after -> new session
-    // idleTimeout=false + AvailableNow: drain the pending data then stop (an
-    // armed processing-time timeout would keep the query scheduling batches)
-    val closed = Sessionize.streamingByGap(mem.toDS(), gapMicros = 1000000L,
-      idleTimeout = false)
-    val q = closed.writeStream.format("memory").queryName("sessions")
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try {
-      assert(q.awaitTermination(120000L), "stream did not drain in time")
-      val rows = spark.table("sessions")
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      assert(rows.toSeq == Seq(("u1", 2L, 0L, 500000L)),
-        s"expected first session closed, got ${rows.toSeq}")
-    } finally q.stop()
-  }
-
-  test("session state machine: advance, beyond-gap closure, idle timeout") {
-    import graft.ops.Sessionize._
-    import org.apache.spark.sql.streaming.TestGroupState
-    // fresh key opens a session, nothing closes
-    val s1 = TestGroupState.create[SessionState](
-      org.apache.spark.api.java.Optional.empty[SessionState](),
-      org.apache.spark.sql.streaming.GroupStateTimeout.ProcessingTimeTimeout(),
-      1000L, org.apache.spark.api.java.Optional.empty[Long](), hasTimedOut = false)
-    val out1 = onGroup("u", Iterator(SessionEvent("u", 10L), SessionEvent("u", 20L)),
-      s1, gapMicros = 100L, registerTimeout = true).toSeq
-    assert(out1.isEmpty && s1.get == SessionState(10L, 20L, 2))
-    // an event beyond the gap closes the buffered session and re-opens
-    val out2 = onGroup("u", Iterator(SessionEvent("u", 500L)), s1, 100L, true).toSeq
-    assert(out2 == Seq(ClosedSession("u", 2, 10L, 20L)))
-    assert(s1.get == SessionState(500L, 500L, 1))
-    // idle timeout closes and clears
-    val s2 = TestGroupState.create[SessionState](
-      org.apache.spark.api.java.Optional.of(SessionState(1L, 2L, 3)),
-      org.apache.spark.sql.streaming.GroupStateTimeout.ProcessingTimeTimeout(),
-      5000L, org.apache.spark.api.java.Optional.empty[Long](), hasTimedOut = true)
-    val out3 = onGroup("u", Iterator.empty, s2, 100L, true).toSeq
-    assert(out3 == Seq(ClosedSession("u", 3, 1L, 2L)))
-    assert(s2.isRemoved)
-  }
-
   test("windowedCounts: watermarked tumbling window aggregates by event_type") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Timestamp, String, Double)]
@@ -170,54 +71,6 @@ class StreamingSpec extends SparkSpec {
         .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getDouble(3))).toSet
       assert(out.contains(("2024-01-01 00:00:00", "click", 2L, 3.0)), s"got $out")
       assert(out.contains(("2024-01-01 00:10:00", "view", 1L, 5.0)), s"got $out")
-    } finally q.stop()
-  }
-
-  test("streaming session_window: sessions emit once the watermark passes") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Timestamp, String)]
-    val sessions = StreamingIngest.sessionCounts(
-      mem.toDF().toDF("ts", "user"), "user", "ts",
-      gap = "5 minutes", watermark = "0 seconds")
-    val q = sessions.writeStream.format("memory").queryName("sess")
-      .outputMode("append").start()
-    try {
-      mem.addData(
-        (Timestamp.valueOf("2024-01-01 00:00:00"), "u1"),
-        (Timestamp.valueOf("2024-01-01 00:03:00"), "u1"))
-      q.processAllAvailable()
-      // advance the watermark far past the session's end to force emission
-      mem.addData((Timestamp.valueOf("2024-01-01 01:00:00"), "u1"))
-      q.processAllAvailable()
-      val rows = spark.table("sess")
-        .select(col("user"), col("start").cast("string"), col("n"))
-        .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-      assert(rows.toSeq == Seq(("u1", "2024-01-01 00:00:00", 2L)),
-        s"expected the closed 2-event session, got ${rows.toSeq}")
-    } finally q.stop()
-  }
-
-  test("intervalJoin: clicks attribute to impressions within the window only") {
-    implicit val sqlCtx = spark.sqlContext
-    val imps = MemoryStream[(Timestamp, String)]
-    val clicks = MemoryStream[(Timestamp, String)]
-    val joined = StreamingIngest.intervalJoin(
-      imps.toDF().toDF("imp_ts", "imp_user"),
-      clicks.toDF().toDF("click_ts", "click_user"),
-      "imp_user", "click_user", "imp_ts", "click_ts",
-      watermark = "1 hour", lower = "0 seconds", upper = "10 minutes")
-    val q = joined.writeStream.format("memory").queryName("attrib")
-      .outputMode("append").start()
-    try {
-      imps.addData((Timestamp.valueOf("2024-01-01 00:00:00"), "u1"),
-        (Timestamp.valueOf("2024-01-01 00:00:00"), "u2"))
-      clicks.addData(
-        (Timestamp.valueOf("2024-01-01 00:05:00"), "u1"),  // in window
-        (Timestamp.valueOf("2024-01-01 00:20:00"), "u2"),  // too late
-        (Timestamp.valueOf("2024-01-01 00:03:00"), "u3"))  // no impression
-      q.processAllAvailable()
-      val rows = spark.table("attrib").select("imp_user").collect().map(_.getString(0))
-      assert(rows.toSeq == Seq("u1"), s"only u1's click is in-window, got ${rows.toSeq}")
     } finally q.stop()
   }
 
@@ -260,47 +113,6 @@ class StreamingSpec extends SparkSpec {
         .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2))).toMap
       assert(streamed == batch,
         s"streamed cells must equal the batch sketch: $streamed vs $batch")
-    } finally q.stop()
-  }
-
-  test("streaming CDC: per-key state converges to the batch applyCdc result") {
-    import graft.streaming.StreamingCdc
-    import graft.streaming.StreamingCdc.CdcChange
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[CdcChange]
-    val q = StreamingCdc.latestByKey(mem.toDS())
-      .writeStream.format("memory").queryName("cdc_cur")
-      .outputMode("update").start()
-    try {
-      mem.addData(
-        CdcChange(1L, 1L, "U", "a1"),
-        CdcChange(2L, 1L, "U", "b1"),
-        CdcChange(3L, 1L, "U", "c1"))
-      q.processAllAvailable()
-      mem.addData(
-        CdcChange(2L, 2L, "U", "b2"),   // update
-        CdcChange(3L, 2L, "D", "c1"),   // delete -> tombstone
-        CdcChange(3L, 1L, "U", "c-stale"), // stale: must NOT resurrect key 3
-        CdcChange(4L, 1L, "U", "d1"))   // insert
-      q.processAllAvailable()
-      // update mode: the LAST emission per key is its current state
-      val cur = spark.table("cdc_cur").collect()
-        .map(r => (r.getLong(0), (r.getLong(1), r.getBoolean(2), r.getString(3))))
-        .groupBy(_._1).map { case (k, vs) => k -> vs.last._2 }
-      assert(cur(1L) == ((1L, false, "a1")))
-      assert(cur(2L) == ((2L, false, "b2")))
-      assert(cur(3L) == ((2L, true, "c1")), s"tombstone must survive: ${cur(3L)}")
-      assert(cur(4L) == ((1L, false, "d1")))
-      // live (non-deleted) rows match the batch operator over the same log
-      val base = Seq.empty[(Long, String, Long)].toDF("key", "payload", "version")
-      val changes = Seq(
-        (1L, "a1", 1L, "U"), (2L, "b1", 1L, "U"), (3L, "c1", 1L, "U"),
-        (2L, "b2", 2L, "U"), (3L, "c1", 2L, "D"), (4L, "d1", 1L, "U"))
-        .toDF("key", "payload", "version", "op")
-      val batch = graft.ops.Warehouse.applyCdc(base, changes, Seq("key"), "version")
-        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-      val live = cur.collect { case (k, (_, false, p)) => k -> p }
-      assert(live == batch, s"streaming $live vs batch $batch")
     } finally q.stop()
   }
 }

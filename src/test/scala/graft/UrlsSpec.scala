@@ -40,16 +40,6 @@ class UrlsSpec extends SparkSpec {
       Seq("not a url", "ftp:/missing-slashes", ""))
   }
 
-  test("extractUrls pulls every http(s) URL out of free text") {
-    val df = Seq(
-      (1L, "see https://a.example/x and HTTP://B.example/y?z=1 thanks"),
-      (2L, "no links here")
-    ).toDF("id", "text")
-    val urls = Urls.extractUrls(df, "text").select("id", "url").collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSeq
-    assert(urls == Seq((1L, "https://a.example/x"), (1L, "HTTP://B.example/y?z=1")))
-  }
-
   test("dedupByUrl groups raw variants under one canonical key") {
     val raw = Seq(
       "HTTP://Example.COM:80/p?b=2&a=1#f",

@@ -14,7 +14,7 @@ class ValidateSpec extends SparkSpec {
 
   private def issues(json: String, fields: Seq[String]): Seq[String] =
     Seq(json).toDF("data")
-      .select(Validate.qualityIssues(col("data"), fields).as("q"))
+      .select(Validate.qualityIssuesFromKeys(json_object_keys(col("data")), fields).as("q"))
       .collect()(0).getSeq[String](0).toSeq
 
   test("extra field message") {

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Pairwise per-query bench diff: `bench_diff.py OLD.json NEW.json`.
 
-Compares two Bench artifacts (`graft_bench_full.json` / `BENCH_r*.json`)
+Compares two Bench artifacts (`graft_bench_full.json` / `history/BENCH_r*.json`)
 query by query and separates three things the r8 round-end conflated:
 
   1. run contamination — the NEW artifact's canary (fixed micro-workload,

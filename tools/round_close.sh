@@ -12,21 +12,25 @@ cd "$(dirname "$0")/.."
 
 r="${1:?usage: round_close.sh <round-number>}"
 
-# Stage every per-round artifact that exists (driver files land untracked).
-for f in BENCH_r$r.json CORRECTNESS_r$r.json VERIFY_r$r.json PERF_r$r.json \
+# Per-round bench and correctness artifacts (they land untracked in the
+# root) are kept under history/, with the plan dumps of the round.
+mkdir -p history
+for f in BENCH_r$r.json CORRECTNESS_r$r.json BENCH_*_r${r}*_kept.json; do
+  [ -e "$f" ] && mv "$f" history/ && git add "history/$f"
+done
+[ -d history/plans/r$r ] && git add history/plans/r$r
+# Stage every other round artifact that exists.
+for f in VERIFY_r$r.json PERF_r$r.json \
          LEAKCHECK.json graft_bench_compact.json BENCH_NOTES.md ADVICE.md \
          VERDICT.md README.md OPTIMIZATION_r$r.md; do
   [ -e "$f" ] && git add "$f"
 done
-# kept bench artifacts and plan dumps of the round
-ls BENCH_*_r${r}*_kept.json >/dev/null 2>&1 && git add BENCH_*_r${r}*_kept.json
-[ -d plans/r$r ] && git add plans/r$r
 
 # ADVICE.md must mention every finding as fixed/accepted/noted or be
 # regenerated this round — heuristic: it must have been touched on a commit
 # no older than the newest BENCH artifact, else warn.
-if [ -e "BENCH_r$r.json" ] && [ "ADVICE.md" -ot "BENCH_r$r.json" ]; then
-  echo "WARN: ADVICE.md is older than BENCH_r$r.json — refresh it" >&2
+if [ -e "history/BENCH_r$r.json" ] && [ "ADVICE.md" -ot "history/BENCH_r$r.json" ]; then
+  echo "WARN: ADVICE.md is older than history/BENCH_r$r.json — refresh it" >&2
 fi
 
 # all staged-clean statuses count as staged (adds, mods, deletes, renames,
