@@ -110,9 +110,10 @@ object Curate {
     * are one run in (md5(id), id) order. Per-bucket sums (the bucket is the
     * md5 prefix [[bucketedRunningSum]] uses) place that run to the bucket:
     *
-    *   1. one aggregate per (part, bucket) — value sum, non-null count, row
-    *      count, min value — collected on the driver: ≤ parts × 257 rows,
-    *      the bound of [[bucketedRunningSum]]'s offsets table;
+    *   1. per (part, bucket) the value sum, non-null count, row count and
+    *      min value ([[bucketSums]]: one job, a fold whose per-partition
+    *      maps merge on the driver, no shuffle): ≤ parts × 257 groups, the
+    *      bound of [[bucketedRunningSum]]'s offsets table;
     *   2. walking each part's buckets in order, null bucket first, a bucket
     *      is KEPT whole when the sum at its end is within the budget and
     *      none of its rows can have a null running sum; DROPPED when the
@@ -132,7 +133,7 @@ object Curate {
     * its run of kept buckets or a boundary bucket's key range.
     *
     * PRECONDITION: `valCol` is never negative (token counts are not). The
-    * aggregate's min checks it at no extra job and a negative value fails.
+    * fold's min checks it at no extra job and a negative value fails.
     * `partCol` is low-cardinality, as for [[bucketedRunningSum]].
     */
   private[graft] def budgetCut(df: DataFrame, partCol: String, idCol: String,
@@ -140,12 +141,10 @@ object Curate {
     val keyed = df.withColumn("__g_md5", md5(col(idCol).cast("string")))
       .withColumn("__g_bkt", substring(col("__g_md5"), 1, 2))
     val v = valCol.cast("long")
-    val buckets = keyed.groupBy(col(partCol), col("__g_bkt"))
-      .agg(coalesce(sum(v), lit(0L)), count(v), count(lit(1)), min(v))
-      .collect()
-    buckets.find(r => !r.isNullAt(5) && r.getLong(5) < 0).foreach { r =>
+    val buckets = bucketSums(keyed.select(col(partCol), col("__g_bkt"), v))
+    buckets.find(_.min.exists(_ < 0)).foreach { b =>
       throw new IllegalArgumentException(s"budgetCut needs non-negative " +
-        s"values; $partCol = ${r.get(0)} holds ${r.getLong(5)}")
+        s"values; $partCol = ${b.part} holds ${b.min.get}")
     }
     def partIs(p: Any): Column =
       if (p == null) col(partCol).isNull else col(partCol) === lit(p)
@@ -153,16 +152,15 @@ object Curate {
     val kept = Seq.newBuilder[Column]
     // (part, bucket) -> (sum before the bucket, non-null values before it)
     val boundary = Map.newBuilder[(Any, String), (Long, Long)]
-    buckets.groupBy(_.get(0)).foreach { case (p, bs) =>
+    buckets.groupBy(_.part).foreach { case (p, bs) =>
       var off, nnBefore = 0L
       val run = Seq.newBuilder[String]
-      bs.sortBy(r => Option(r.getString(1))).foreach { r =>
-        val (b, bsum, nn, n) = (r.getString(1), r.getLong(2), r.getLong(3), r.getLong(4))
+      bs.sortBy(b => Option(b.bkt)).foreach { case BucketSum(_, b, bsum, nn, n, _) =>
         if (off <= budget && nnBefore + nn > 0) {
           if (off + bsum <= budget && (b == null || nnBefore > 0 || nn == n)) run += b
           else if (b != null) boundary += (p, b) -> (off, nnBefore)
         }
-        off += bsum
+        off = Math.addExact(off, bsum)
         nnBefore += nn
       }
       // the running sum never falls, so the kept buckets are one run
@@ -212,6 +210,54 @@ object Curate {
       .drop("__g_md5", "__g_bkt")
   }
 
+  /** One (part, bucket) group of [[budgetCut]]: the sum of the values (0
+    * when none is non-null), how many are non-null, the row count, and the
+    * least value (None when none is non-null).
+    */
+  private[graft] final case class BucketSum(part: Any, bkt: String, sum: Long,
+                                            nonNull: Long, rows: Long, min: Option[Long])
+
+  /** [[BucketSum]]s of (part, bucket, long value) rows — the rows of
+    * `groupBy(part, bucket).agg(coalesce(sum(v), 0), count(v), count(1),
+    * min(v))` — as one fold: each partition sums into a map keyed by the
+    * group, the driver merges the maps. One job, nothing shuffled, no
+    * hash-aggregate page; the maps hold ≤ parts × 257 entries. Keys are
+    * converted to Scala values as they are read, because the row buffer
+    * is reused. A sum past `Long.MaxValue` throws `ArithmeticException`,
+    * as ANSI `sum` does.
+    */
+  private[graft] def bucketSums(rows: DataFrame): Seq[BucketSum] = {
+    val partType = rows.schema.head.dataType
+    val toScala = CatalystTypeConverters.createToScalaConverter(partType)
+    type Sums = scala.collection.mutable.HashMap[(Any, String), Array[Long]]
+    // per group: sum, non-null count, row count, min
+    def add(m: Sums, r: InternalRow): Sums = {
+      val b = if (r.isNullAt(1)) null else r.getUTF8String(1).toString
+      val s = m.getOrElseUpdate((toScala(r.get(0, partType)), b),
+        Array(0L, 0L, 0L, Long.MaxValue))
+      s(2) += 1
+      if (!r.isNullAt(2)) {
+        val x = r.getLong(2)
+        s(0) = Math.addExact(s(0), x); s(1) += 1; s(3) = math.min(s(3), x)
+      }
+      m
+    }
+    def merge(m: Sums, o: Sums): Sums = {
+      o.foreach { case (k, x) =>
+        m.get(k) match {
+          case None => m(k) = x
+          case Some(s) =>
+            s(0) = Math.addExact(s(0), x(0)); s(1) += x(1); s(2) += x(2)
+            s(3) = math.min(s(3), x(3))
+        }
+      }
+      m
+    }
+    rows.queryExecution.toRdd.treeAggregate(new Sums)(add, merge, 1).toSeq.map {
+      case ((p, b), s) => BucketSum(p, b, s(0), s(1), s(2), if (s(1) > 0) Some(s(3)) else None)
+    }
+  }
+
   /** The curated document set: rows of `df` that (1) score at least
     * `minQuality`, (2) survive near-dup clustering as their cluster's
     * canonical (min-id) member, and (3) fit the per-`langCol` running token
@@ -223,14 +269,20 @@ object Curate {
     * precondition on [[budgetCut]].
     *
     * The budget is a prefix cut ([[budgetCut]]): construction runs one
-    * small aggregate over the survivors (per language and md5 bucket,
-    * collected on the driver) and, when some language's budget falls
+    * fold over the survivors (per language and md5 bucket sums, merged on
+    * the driver, no shuffle) and, when some language's budget falls
     * inside a bucket, one job without a shuffle that collects that
     * bucket's (md5, id, token count) keys. The returned frame is a single
     * map-only filter of the checkpointed survivors: no curated row crosses
     * an exchange, however many of its columns the caller keeps. Token
     * counts are never negative, which the cut's exactness relies on; a
     * negative one would fail at construction.
+    *
+    * The eager dedup steps before it run no job that only fills a cache a
+    * second time or counts rows nobody reads: the duplication probe is one
+    * fold that also fills the gated cache, and the dedup chain fills each
+    * of its caches once with [[Materialize.fill]] before a query reads it
+    * (see [[Dedup.minhashPerDoc]]).
     *
     * The survivor anti-join runs at construction (it is checkpointed) and
     * follows [[Dedup.dropNearDuplicates]]: it broadcasts the near-dup

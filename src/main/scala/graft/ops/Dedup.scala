@@ -306,13 +306,13 @@ object Dedup {
     * EAGER: runs one Spark job over the input at operator-CONSTRUCTION
     * time when the caller leaves `collapse = None` — callers composing
     * lazy plans who don't want that job pass an explicit override and no
-    * job runs. One corpus scan, aggregate-only: the distinct estimate is
-    * HLL over a deterministic 1-in-8 KEY-HASH sample (`xxhash64(key) % 8`
-    * — a pure function of the data, so the same corpus always takes the
+    * job runs. One corpus scan, no shuffle ([[probeCounts]]): the distinct
+    * estimate is HLL over a deterministic 1-in-8 KEY-HASH sample
+    * (`xxhash64(key) % 8` — a pure function of the data, so the same corpus always takes the
     * same path regardless of partitioning; the r12 anti-bimodality rule).
     * Key-sampling keeps every copy of a sampled key, so sampled
     * distinct/total estimates the corpus duplication ratio directly. A
-    * full-population HLL rides the SAME aggregate as one extra column
+    * full-population HLL rides the SAME fold as one extra register array
     * (merge-only — the probe is one job on every corpus size); it decides
     * the verdict when the sample is too small for a stable ratio
     * (< 4096 rows sampled, i.e. < ~32k-row corpora). An
@@ -326,7 +326,9 @@ object Dedup {
     duplicationStats(df, key).material
 
   /** [[duplicationMaterial]] plus the probed row count — same single job,
-    * same memo entry. */
+    * same memo entry. One job, no shuffle: the probe is a fold whose
+    * partials merge on the driver, and a persisted input (curate's gated
+    * corpus) is filled inside that same job. */
   private[graft] def duplicationStats(df: DataFrame, key: Column): DupStats = {
     val probed = df.select(key.as("__k"))
     val memoKey = (probed.queryExecution.analyzed.semanticHash(),
@@ -357,21 +359,7 @@ object Dedup {
       // closes that window.
       val replay = gateCache.get(memoKey)
       if (replay != null) { fresh.complete(replay); return replay }
-      val inSample = pmod(xxhash64(col("__k")), lit(8L)) === 0L
-      // ONE job, always: the full-population HLL rides the same aggregate
-      // as a fourth column so the tiny-sample fallback never needs a
-      // second pass. Its cost is one extra hash per key inside a scan the
-      // sampling predicate already hashes every key for — marginal against
-      // the scan itself at any size, and strictly cheaper than the second
-      // full-input job it replaces wherever that fallback would fire.
-      // Sampled estimate when the sample is stable, population HLL below
-      // 4096 sampled rows (< ~32k-row corpora).
-      val s = probed.agg(
-        count(lit(1)).as("n"),
-        count(when(inSample, lit(1))).as("ns"),
-        approx_count_distinct(when(inSample, col("__k"))).as("ds"),
-        approx_count_distinct(col("__k")).as("d")).head()
-      val (n, ns, ds, d) = (s.getLong(0), s.getLong(1), s.getLong(2), s.getLong(3))
+      val ProbeCounts(n, ns, ds, d) = probeCounts(probed)
       val v = DupStats(n,
         if (ns >= 4096L) ds * 10L < ns * 9L else d * 10L < n * 9L)
       gateCache.put(memoKey, v)
@@ -382,16 +370,73 @@ object Dedup {
     } finally gateInFlight.remove(memoKey)
   }
 
+  /** The probe's four numbers over the one column of `probed`: rows `n`,
+    * key-sampled rows `ns` (`pmod(xxhash64(key), 8) = 0`; a null key
+    * hashes to the seed, 42, and is never sampled), and the HLL++
+    * distinct estimates of the sampled keys `ds` and of all keys `d`
+    * (nulls not counted). Exactly `agg(count(1), count(when(sampled, 1)),
+    * approx_count_distinct(when(sampled, key)), approx_count_distinct(key))`:
+    * the registers come from Spark's own HLL++ helper at the default
+    * relative error, which hashes with the same xxhash64 seed. Computed as
+    * one `treeAggregate` of depth 1 over the rows, so it is one job with
+    * no exchange and no hash-aggregate page; the driver merges one pair of
+    * register arrays per partition.
+    */
+  private[graft] def probeCounts(probed: DataFrame): ProbeCounts = {
+    val dt = probed.schema.head.dataType
+    probed.queryExecution.toRdd
+      .treeAggregate(new ProbeFold(dt))((f, row) => f.add(row.get(0, dt)), _ merge _, 1)
+      .counts
+  }
+
+  private[graft] final case class ProbeCounts(n: Long, ns: Long, ds: Long, d: Long)
+
+  /** The fold state of [[probeCounts]]. */
+  private final class ProbeFold(dt: org.apache.spark.sql.types.DataType) extends Serializable {
+    import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, XxHash64Function}
+    private val hll = new org.apache.spark.sql.catalyst.util.HyperLogLogPlusPlusHelper(0.05)
+    private def registers = new GenericInternalRow(Array.fill[Any](hll.numWords)(0L))
+    private var n, ns = 0L
+    private val sampled, all = registers
+
+    def add(k: Any): ProbeFold = {
+      n += 1
+      if (k != null) {
+        hll.update(all, 0, k, dt)
+        if (Math.floorMod(XxHash64Function.hash(k, dt, 42L), 8L) == 0L) {
+          ns += 1
+          hll.update(sampled, 0, k, dt)
+        }
+      }
+      this
+    }
+
+    def merge(o: ProbeFold): ProbeFold = {
+      n += o.n
+      ns += o.ns
+      hll.merge(sampled, o.sampled, 0, 0)
+      hll.merge(all, o.all, 0, 0)
+      this
+    }
+
+    def counts: ProbeCounts = ProbeCounts(n, ns, hll.query(sampled, 0), hll.query(all, 0))
+  }
+
   /** The per-document chain (no collapse) — optimal for all-distinct
     * corpora: signatures → banded candidates → pinned verify joins. The
     * collapsed chain runs this same verify block over its representatives
     * ([[minhashCollapsedRep]]).
     *
     * @param keyed rows with `id` and `__text` columns.
-    * @param materializePairs run one job that fills the `pairs` cache
-    *        BEFORE the verify plan is built. Set only by the eager label
-    *        path ([[minhashLabels]]); the lazy pair API leaves it off so
-    *        an explicit-collapse construction stays job-free (spec-pinned).
+    * @param materializePairs fill the `pairs` cache, then the `sets`
+    *        cache, with [[Materialize.fill]] BEFORE the verify plan is
+    *        built: one fill job each (plus the exchanges inside them), and
+    *        no count aggregate. The verify query then reads both filled,
+    *        so neither its two reads of `sets` nor the bucket self-join's
+    *        two reads of the bucket table fill a cache a second time. Set
+    *        only by the eager label path ([[minhashLabels]]); the lazy pair
+    *        API leaves it off so an explicit-collapse construction stays
+    *        job-free (spec-pinned).
     */
   private[graft] def minhashPerDoc(keyed: DataFrame, threshold: Double,
                                    numHashes: Int, bands: Int,
@@ -411,7 +456,7 @@ object Dedup {
     // before AQE switches it to a broadcast.
     val pairs = Materialize.persist(
       minhashCandidatePairs(keyed, "id", "__text", numHashes, bands, shingleSize))
-    if (materializePairs) pairs.count()
+    if (materializePairs) Materialize.fill(pairs)
     val candIds = pairs.select(explode(array(col("id_a"), col("id_b"))).as("id")).distinct()
     // Both verify joins read `sets`, so it is persisted already partitioned
     // on `id` (the rule on [[Materialize]]): candidates are shingled once,
@@ -420,6 +465,8 @@ object Dedup {
       .join(candIds, Seq("id"), "leftsemi") // filter BEFORE shingling
       .select(col("id"), shingleHashSet(col("__text"), shingleSize).as("sh"))
       .repartition(col("id")))
+    // filled before the verify query reads it twice, so it fills once
+    if (materializePairs) Materialize.fill(sets)
     // The sets side carries the shingle-hash ARRAYS — Catalyst's size
     // estimate for array columns runs low, so left to itself the planner
     // sometimes broadcasts a corpus-proportional HashedRelation of shingle
@@ -1093,12 +1140,18 @@ object Dedup {
     // size and shuffle the other side first. The cutoff is BYTE-aware, not
     // just row-count: 2M long edges ≈ 32 MB is control-plane grade, but 2M
     // long-TEXT keys could be hundreds of MB, so string ids are sized from
-    // a sampled average length
-    // (one cheap agg over the checkpoint blocks) and non-Long/Int/String id
-    // types always take the distributed loop (their driver ordering isn't
-    // guaranteed to match min(lbl)). Pass driverCutoff = 0 to force the loop.
-    lazy val avgStrLen: Double = edges
-      .agg(avg(length(col("src").cast("string")))).head().getDouble(0)
+    // their average length (one fold over the checkpoint blocks: one job,
+    // no exchange, per-partition sums merged on the driver) and
+    // non-Long/Int/String id types always take the distributed loop (their
+    // driver ordering isn't guaranteed to match min(lbl)). Pass
+    // driverCutoff = 0 to force the loop.
+    lazy val avgStrLen: Double = {
+      val (chars, ids) = edges.select(length(col("src").cast("string")))
+        .queryExecution.toRdd.treeAggregate((0L, 0L))(
+          (a, r) => if (r.isNullAt(0)) a else (a._1 + r.getInt(0), a._2 + 1),
+          (a, b) => (a._1 + b._1, a._2 + b._2), 1)
+      chars.toDouble / ids
+    }
     if (driverPathAllowed(edgeCount, idType, avgStrLen,
                           driverCutoff, driverCutoffBytes)) {
       val parent = new java.util.HashMap[Any, Any]()

@@ -3,6 +3,9 @@ package graft.ops
 import scala.collection.mutable.ListBuffer
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.storage.StorageLevel
 
 /** The engine's one way to keep an intermediate result in the block
@@ -32,6 +35,14 @@ import org.apache.spark.storage.StorageLevel
   * count, so the join has no exchange on either side. The minhash chain
   * keeps three caches so: the LSH bucket table on (`band`, `bkey`), the
   * candidate pairs on `id_a` and the verify shingle sets on `id`.
+  *
+  * An eager step fills its caches with [[fill]], never with an action such
+  * as `count()`: the action adds its own aggregate jobs, and a query that
+  * reads one unfilled cache twice fills it twice. Each table-cache stage
+  * of such a query submits its own fill job, and the two stages start
+  * together, so neither sees the other's blocks (the twin-fill rule).
+  * [[fill]] runs the cache's own column-buffer RDD, once, so the stages of
+  * a later query find it filled and submit nothing.
   */
 object Materialize {
 
@@ -45,6 +56,29 @@ object Materialize {
     scopes.get.headOption.foreach(_ += p)
     p
   }
+
+  /** Fills every unfilled persisted frame in `df`'s plan, `df` itself
+    * included, innermost first: one job per cache, over the column-buffer
+    * RDD that AQE's table-cache stage would run (plus the jobs of any
+    * exchange inside the cached plan). A filled cache is skipped, with the
+    * caches inside it, so a second call runs no job.
+    */
+  def fill(df: DataFrame): Unit = {
+    val sc = df.sparkSession.sparkContext
+    val seen = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean])
+    def visit(plan: SparkPlan): Unit =
+      Stages.collectWithSubqueries(plan) { case s: InMemoryTableScanExec => s }.foreach { s =>
+        if (seen.add(s.relation.cachedPlan) && !s.isMaterialized) {
+          visit(s.relation.cachedPlan)
+          sc.runJob(s.baseCacheRDD(), (_: Iterator[_]) => ())
+        }
+      }
+    visit(df.queryExecution.executedPlan)
+  }
+
+  /** Walks AQE plans into their query stages and subqueries. */
+  private object Stages extends AdaptiveSparkPlanHelper
 
   /** `body`'s result plus every frame persisted while it ran, nested calls
     * included. The frames stay persisted and are also reported to the

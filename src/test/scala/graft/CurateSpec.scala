@@ -1,6 +1,7 @@
 package graft
 
-import graft.ops.Curate
+import graft.ops.{Curate, Dedup}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class CurateSpec extends SparkSpec {
@@ -95,16 +96,82 @@ class CurateSpec extends SparkSpec {
   test("curateCorpus job count: the budget is cut from per-bucket sums") {
     // en's budget of 40 keeps one of its two survivors (30 and 38 tokens),
     // so the cut falls inside an md5 bucket. Cut by the running-sum window
-    // with its broadcast offsets table, this ran 36 jobs
+    // with its broadcast offsets table, this ran 36 jobs. The probe memo
+    // is cleared so the probe always runs; cut from per-bucket sums, this
+    // then ran 37 jobs, and 30 once each eager step was one job: gone are the probe's partial-count exchange and result jobs
+    // (it is one fold that also fills the gated cache), the second fills
+    // of the bucket table and of the shingle sets (each read twice by one
+    // query), `pairs.count()`'s exchange and result jobs, and the budget
+    // aggregate's exchange job (its per-bucket sums are one fold)
+    Dedup.gateCacheClear()
     spark.catalog.clearCache()
     var summary = Seq.empty[(String, Long)]
-    val jobs = FinalPlans.jobsDuring(spark) {
+    val jobs = FinalPlans.jobSitesDuring(spark) {
       summary = Curate.curationSummary(Curate.curateCorpus(docs, "doc_id", "text",
         "lang", minQuality = 0.5, dupThreshold = 0.9, tokenBudget = 40L), "lang")
         .collect().map(r => (r.getString(0), r.getLong(1))).toSeq.sorted
     }
     assert(summary == Seq(("en", 1L), ("fr", 1L)), s"got $summary")
-    assert(jobs == 35, s"curateCorpus + curationSummary ran $jobs jobs")
+    assert(jobs.size == 30,
+      s"curateCorpus + curationSummary ran ${jobs.size} jobs:\n${jobs.mkString("\n")}")
+  }
+
+  /** A random (rid, part, idc, v) batch over 1 + trial % 8 partitions:
+    * string parts, null parts, null ids (the null bucket), duplicate ids
+    * (RANGE-frame peers), null and zero values, and a part whose values
+    * are mostly null.
+    */
+  private def randomBatch(rnd: scala.util.Random, trial: Int): DataFrame = {
+    val parts = Seq("en", "fr", "sparse", null)
+    val n = 1 + rnd.nextInt(2000)
+    val rows = (0 until n).map { i =>
+      val part = parts(rnd.nextInt(parts.size))
+      // sparse has no null ids: a null bucket with a value would precede
+      // its first non-null bucket, which must start with nulls
+      val id = if (part != "sparse" && rnd.nextInt(15) == 0) null
+        else java.lang.Long.valueOf(rnd.nextInt(n).toLong)
+      val nullsIn10 = if (part == "sparse") 6 else 1
+      val v = if (rnd.nextInt(10) < nullsIn10) null
+        else java.lang.Long.valueOf(if (rnd.nextInt(4) == 0) 0L else rnd.nextInt(50).toLong)
+      (i.toLong, part, id, v)
+    }
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1 + trial % 8))
+      .toDF("rid", "part", "idc", "v")
+  }
+
+  test("bucketSums folds exactly the rows of the per-(part, bucket) aggregate") {
+    // Each partition's map is keyed by values read from a reused row buffer;
+    // a key kept without a copy would merge the string parts of many rows
+    val rnd = new scala.util.Random(11)
+    for (trial <- 0 until 16) {
+      val rows = randomBatch(rnd, trial)
+        .select(col("part"), substring(md5(col("idc").cast("string")), 1, 2).as("b"), col("v"))
+      val want = rows.groupBy(col("part"), col("b"))
+        .agg(coalesce(sum(col("v")), lit(0L)), count(col("v")), count(lit(1)), min(col("v")))
+        .collect().map(r => Curate.BucketSum(r.get(0), r.getString(1), r.getLong(2),
+          r.getLong(3), r.getLong(4), if (r.isNullAt(5)) None else Some(r.getLong(5))))
+      val got = Curate.bucketSums(rows)
+      assert(got.size == want.length && got.toSet == want.toSet,
+        s"trial $trial: ${got.toSet.diff(want.toSet).take(3)} vs ${want.toSet.diff(got.toSet).take(3)}")
+    }
+    // a sum past Long.MaxValue fails, as ANSI sum does: inside one task
+    // (one partition), in the driver's merge (two), and across buckets
+    // (ids 1 and 2 fall in different md5 buckets)
+    def overflow(ids: Seq[Long], slices: Int) = {
+      val big = ids.zipWithIndex.map { case (id, i) => (i.toLong, "en", id, Long.MaxValue / 2 + 1) }
+      val df = spark.createDataFrame(spark.sparkContext.parallelize(big, slices))
+        .toDF("rid", "part", "idc", "v")
+      val e = intercept[Exception](Curate.budgetCut(df, "part", "idc", col("v"), 10L))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[ArithmeticException]), s"ids $ids over $slices: $e")
+    }
+    overflow(Seq(5L, 5L), 1)
+    overflow(Seq(5L, 5L), 2)
+    overflow(Seq(1L, 2L), 1)
+    val negative = Seq((1L, "en", 1L, 3L), (2L, "en", 2L, -1L)).toDF("rid", "part", "idc", "v")
+    val e = intercept[IllegalArgumentException](
+      Curate.budgetCut(negative, "part", "idc", col("v"), 10L))
+    assert(e.getMessage == "budgetCut needs non-negative values; part = en holds -1", e.getMessage)
   }
 
   test("budgetCut keeps exactly the rows the running-sum window keeps") {
@@ -114,22 +181,8 @@ class CurateSpec extends SparkSpec {
     // value inside the bucket holding that value. Budgets: 0, exactly a
     // bucket's end sum, exactly a row's sum, and above everything.
     val rnd = new scala.util.Random(7)
-    val parts = Seq("en", "fr", "sparse", null)
     for (trial <- 0 until 10) {
-      val n = 1 + rnd.nextInt(2000)
-      val rows = (0 until n).map { i =>
-        val part = parts(rnd.nextInt(parts.size))
-        // sparse has no null ids: a null bucket with a value would precede
-        // its first non-null bucket, which must start with nulls
-        val id = if (part != "sparse" && rnd.nextInt(15) == 0) null
-          else java.lang.Long.valueOf(rnd.nextInt(n).toLong)
-        val nullsIn10 = if (part == "sparse") 6 else 1
-        val v = if (rnd.nextInt(10) < nullsIn10) null
-          else java.lang.Long.valueOf(if (rnd.nextInt(4) == 0) 0L else rnd.nextInt(50).toLong)
-        (i.toLong, part, id, v)
-      }
-      val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1 + trial % 8))
-        .toDF("rid", "part", "idc", "v")
+      val df = randomBatch(rnd, trial)
       val sums = Curate.bucketedRunningSum(df, "part", "idc", col("v"), "c")
         .withColumn("b", substring(md5(col("idc").cast("string")), 1, 2))
       def cum(r: org.apache.spark.sql.Row) = if (r.isNullAt(4)) None else Some(r.getLong(4))

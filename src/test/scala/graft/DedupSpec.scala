@@ -223,15 +223,18 @@ class DedupSpec extends SparkSpec {
     // per-doc path on a corpus with candidate pairs. With a separate edge
     // count and the shingle sets rebuilt for each verify join this ran 23
     // jobs: the count's aggregate and result, and a second candidate-id
-    // distinct and broadcast
+    // distinct and broadcast. Filling the caches with Materialize.fill took
+    // 19 to 15: gone are the second fills of the bucket table and of the
+    // shingle sets (each read twice by one query) and `pairs.count()`'s
+    // exchange and result jobs
     spark.catalog.clearCache()
     var kept = 0
-    val jobs = FinalPlans.jobsDuring(spark) {
+    val jobs = FinalPlans.jobSitesDuring(spark) {
       kept = Dedup.dropNearDuplicates(nearDupCorpus, "id", "text", 0.9,
         collapse = Some(false)).collect().length
     }
     assert(kept == 420, s"expected the 20 one-token and 10 exact copies dropped, kept $kept")
-    assert(jobs == 19, s"dropNearDuplicates ran $jobs jobs")
+    assert(jobs.size == 15, s"dropNearDuplicates ran ${jobs.size} jobs:\n${jobs.mkString("\n")}")
   }
 
   test("dedup rows do not depend on shuffle partitions or cached-plan repartitioning") {
@@ -312,6 +315,32 @@ class DedupSpec extends SparkSpec {
     assert(!Dedup.driverPathAllowed(10L, DecimalType(10, 0), 0.0, 2000000L, Long.MaxValue))
     assert(!Dedup.driverPathAllowed(10L, BinaryType, 0.0, 2000000L, Long.MaxValue))
     assert(!Dedup.driverPathAllowed(10L, ShortType, 0.0, 2000000L, Long.MaxValue))
+  }
+
+  test("connectedComponents: a string-id graph under the driver cutoff sizes its ids in one job") {
+    // 6 directed edges whose ids average 3 chars: the union-find is
+    // estimated at 6 * 2 * (48 + 2 * 3) = 648 bytes, so a cutoff of 648
+    // takes the driver path and 647 the loop. The average is one fold over
+    // the edge checkpoint; as `agg(avg(...)).head()` it was an exchange job
+    // and a result job
+    val pairs = Seq(("bbb", "aaa"), ("aaa", "ccc"), ("zzz", "yyy")).toDF("id_a", "id_b")
+    val expect = Map("aaa" -> "aaa", "bbb" -> "aaa", "ccc" -> "aaa",
+      "yyy" -> "yyy", "zzz" -> "yyy")
+    def run(bytes: Long) = {
+      var labels = Map.empty[String, String]
+      val jobs = FinalPlans.jobSitesDuring(spark) {
+        labels = Dedup.connectedComponents(pairs, driverCutoffBytes = bytes)
+          .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      }
+      assert(labels == expect, s"cutoff $bytes: $labels")
+      jobs
+    }
+    def unionFind(jobs: Seq[FinalPlans.JobSite]) = jobs.exists(_.name.startsWith("collect at Dedup.scala"))
+    val driver = run(648L)
+    assert(unionFind(driver) && driver.count(_.name.startsWith("treeAggregate")) == 1 &&
+      driver.size == 6, driver.mkString("\n"))
+    val loop = run(647L)
+    assert(!unionFind(loop), loop.mkString("\n"))
   }
 
   test("connectedComponents: string ids above the byte cutoff take the loop and agree") {

@@ -1,12 +1,17 @@
 package graft
 
+import scala.collection.mutable
+
 import org.apache.spark.SparkContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerEvent,
+  SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.storage.RDDBlockId
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Final (post-AQE) physical plans and job counts of what a block of code
@@ -33,15 +38,75 @@ object FinalPlans extends AdaptiveSparkPlanHelper {
   }
 
   /** Spark jobs submitted while `body` runs. */
-  def jobsDuring(spark: SparkSession)(body: => Unit): Int = {
+  def jobsDuring(spark: SparkSession)(body: => Unit): Int = jobSitesDuring(spark)(body).size
+
+  /** A job as [[jobSitesDuring]] reports it: `name` is its final stage's
+    * call site or, for a stage AQE submits on its own thread, the SQL
+    * query's call site and the operator the stage runs; `fills` lists the
+    * persisted RDDs whose first block the job wrote.
+    */
+  final case class JobSite(name: String, fills: Seq[String]) {
+    override def toString: String =
+      if (fills.isEmpty) name else s"$name, fills ${fills.mkString("; ")}"
+  }
+
+  /** Every job submitted while `body` runs, in submission order. A cache
+    * read twice by one query before it is filled shows as two jobs that
+    * fill the same RDD.
+    */
+  def jobSitesDuring(spark: SparkSession)(body: => Unit): Seq[JobSite] = {
     val sc = spark.sparkContext
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    // every callback runs on the listener's one queue thread, in post order
+    var seq = 0L
+    val queries = mutable.Map.empty[String, String]
+    val jobs = mutable.LinkedHashMap.empty[Int, (String, Map[Int, String], Long)]
+    val ends = mutable.Map.empty[Int, Long]
+    val firstBlock = mutable.Map.empty[Int, Long]
     val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = n.incrementAndGet()
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case q: SparkListenerSQLExecutionStart => queries(q.executionId.toString) = q.description
+        case _ =>
+      }
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        seq += 1
+        // a job over no partitions has no stages
+        val last = js.stageInfos.maxByOption(_.stageId).fold("a job of no partitions")(_.name)
+        val props = Option(js.properties)
+        def prop(k: String) = props.flatMap(p => Option(p.getProperty(k)))
+        val name =
+          if (!last.contains("withThreadLocalCaptured")) last
+          else {
+            val op = prop("spark.rdd.scope").flatMap(
+              "\"name\":\"([^\"]*)\"".r.findFirstMatchIn(_)).map(_.group(1)).getOrElse("?")
+            val query = prop("spark.sql.execution.id").flatMap(queries.get)
+              .getOrElse("a cache fill")
+            s"$op stage of $query"
+          }
+        // a cache's RDD is named after its plan: keep the top operator
+        def top(plan: String) = plan.linesIterator.map(_.dropWhile(" +-:".contains(_)))
+          .find(l => l.nonEmpty && !l.startsWith("AdaptiveSparkPlan")).getOrElse("").take(60)
+        val cached = js.stageInfos.flatMap(_.rddInfos).filter(_.storageLevel.isValid)
+          .map(r => r.id -> s"rdd ${r.id} ${top(r.name)}").toMap
+        jobs(js.jobId) = (name, cached, seq)
+      }
+      override def onJobEnd(je: SparkListenerJobEnd): Unit = { seq += 1; ends(je.jobId) = seq }
+      override def onBlockUpdated(b: SparkListenerBlockUpdated): Unit = {
+        seq += 1
+        b.blockUpdatedInfo.blockId match {
+          case RDDBlockId(rdd, _) => firstBlock.getOrElseUpdate(rdd, seq)
+          case _ =>
+        }
+      }
     }
     sc.addSparkListener(l)
-    try { body; drainListenerBus(sc); n.get() }
+    try { body; drainListenerBus(sc) }
     finally sc.removeSparkListener(l)
+    jobs.toSeq.map { case (id, (name, cached, start)) =>
+      val end = ends.getOrElse(id, Long.MaxValue)
+      JobSite(name, cached.toSeq.sortBy(_._1).collect {
+        case (rdd, label) if firstBlock.get(rdd).exists(t => t > start && t < end) => label
+      })
+    }
   }
 
   /** `waitUntilEmpty` is private[spark], so it is reached reflectively. */

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -129,6 +130,42 @@ class GateSpec extends SparkSpec {
     val st = Dedup.duplicationStats(emb, col("vec"))
     assert(st.rows == 4L && st.material,
       s"probe stats should see 4 rows, 50% duplicated: $st")
+  }
+
+  test("the folded probe returns exactly the SQL aggregate's four numbers and verdict") {
+    val inSample = pmod(xxhash64(col("__k")), lit(8L)) === 0L
+    def sql(probed: DataFrame): Dedup.ProbeCounts = {
+      val r = probed.agg(count(lit(1)), count(when(inSample, lit(1))),
+        approx_count_distinct(when(inSample, col("__k"))),
+        approx_count_distinct(col("__k"))).head()
+      Dedup.ProbeCounts(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
+    }
+    // string keys and the array keys Similarity probes, each with null keys
+    // and repeats, below (2,000 rows) and above (40,000 rows: ~5,000
+    // sampled) the 4,096-sampled-row switch, at 1-8 partitions
+    def strings(n: Long, parts: Int) = spark.range(0, n, 1, parts).select(
+      when(col("id") % 13 === 0, lit(null))
+        .otherwise(concat(lit("doc "), (col("id") % (n / 3)).cast("string"))).as("__k"))
+    def vectors(n: Long, parts: Int) = spark.range(0, n, 1, parts).select(
+      when(col("id") % 11 === 0, lit(null))
+        .otherwise(array((col("id") % (n / 4)).cast("double"), lit(0.5))).as("__k"))
+    val empty = spark.range(0, 0, 1, 1).select(lit("x").as("__k"))
+    val cases = Seq(("empty", empty)) ++
+      (1 to 8).flatMap(p => Seq((s"strings/2000/$p", strings(2000L, p)),
+        (s"vectors/2000/$p", vectors(2000L, p)))) ++
+      Seq(1, 8).flatMap(p => Seq((s"strings/40000/$p", strings(40000L, p)),
+        (s"vectors/40000/$p", vectors(40000L, p))))
+    val sides = cases.map { case (name, probed) =>
+      val want = sql(probed)
+      assert(Dedup.probeCounts(probed) == want, name)
+      Dedup.gateCacheClear()
+      val st = Dedup.duplicationStats(probed, col("__k"))
+      val material = if (want.ns >= 4096L) want.ds * 10L < want.ns * 9L
+        else want.d * 10L < want.n * 9L
+      assert(st == Dedup.DupStats(want.n, material), s"$name: $st vs $want")
+      want.ns >= 4096L
+    }
+    assert(sides.contains(true) && sides.contains(false))
   }
 
   test("concurrent same-plan probes share ONE job; results agree (per-key in-flight dedup)") {

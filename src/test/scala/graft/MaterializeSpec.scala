@@ -56,6 +56,39 @@ class MaterializeSpec extends SparkSpec {
     fromThread.unpersist(blocking = true)
   }
 
+  test("fill: one job per unfilled cache, none once filled, and no fill job in a later query") {
+    def selfJoin(d: DataFrame) = d.as("l").join(d.as("r"), col("l.k") === col("r.k"))
+      .select(col("l.x"), col("r.x").as("y"))
+    def rows(d: DataFrame) = d.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    def keyed(tag: String) = frame(tag).select(col("x"), (col("x") % 5).as("k"))
+    val want = rows(selfJoin(keyed("fill")))
+    val cache = Materialize.persist(keyed("fill"))
+    try {
+      // a query that reads one persisted frame twice: one cache to fill
+      val query = selfJoin(cache)
+      val first = FinalPlans.jobSitesDuring(spark)(Materialize.fill(query))
+      assert(first.size == 1 && first.head.fills.size == 1, first.mkString("\n"))
+      val again = FinalPlans.jobSitesDuring(spark)(Materialize.fill(query))
+      assert(again.isEmpty, again.mkString("\n"))
+      var got = Set.empty[(Long, Long)]
+      val read = FinalPlans.jobSitesDuring(spark) { got = rows(query) }
+      assert(read.forall(_.fills.isEmpty), read.mkString("\n"))
+      assert(got == want)
+      // a persisted self-join of a persisted frame: the inner cache fills
+      // first, and each cache once
+      val inner = Materialize.persist(keyed("nested"))
+      val outer = Materialize.persist(selfJoin(inner))
+      val nested = FinalPlans.jobSitesDuring(spark)(Materialize.fill(outer))
+      val fills = nested.flatMap(_.fills)
+      assert(fills.size == 2 && fills.distinct.size == 2 && nested.last.fills.size == 1,
+        nested.mkString("\n"))
+      assert(FinalPlans.jobSitesDuring(spark)(Materialize.fill(outer)).isEmpty)
+      val later = FinalPlans.jobSitesDuring(spark) { got = rows(outer) }
+      assert(later.forall(_.fills.isEmpty) && got == want, later.mkString("\n"))
+      Seq(inner, outer).foreach(_.unpersist(blocking = true))
+    } finally cache.unpersist(blocking = true)
+  }
+
   test("eager composites leave only checkpoint blocks in getPersistentRDDs") {
     // Each composite runs its chain under Materialize.scoped. After it
     // returns (and its result is consumed), the only new block-manager
