@@ -548,8 +548,12 @@ object Dedup {
                                          numHashes: Int, bands: Int,
                                          shingleSize: Int,
                                          materializePairs: Boolean = false): CollapsedRep = {
-    val (hashed, reps) = contentGroups(keyed, unhex(sha2(col("__text"), 256)),
+    val (hashed, groups) = contentGroups(keyed, unhex(sha2(col("__text"), 256)),
       first(col("__text")).as("__text"))
+    // the membership join, the bucket table's fill and the shingle sets'
+    // fill all read the representatives: persisted, their SHA-256 group
+    // exchange runs once
+    val reps = Materialize.persist(groups)
     val membership = contentMembership(hashed, reps)
     // verified edges between distinct texts: the per-document chain, run
     // over one representative per content
@@ -1068,6 +1072,9 @@ object Dedup {
     * else reads it. Callers may therefore pass an un-persisted plan — the
     * minhash label path hands in its whole verify chain.
     *
+    * A graph with no edges returns an empty local relation at once: no
+    * label checkpoint, no round, no fixpoint check.
+    *
     * Small graphs (under `driverCutoff` edges and `driverCutoffBytes` of
     * estimated driver heap) are labelled by a driver-side union-find whose
     * result is a checkpointed local relation carrying its exact size, so
@@ -1126,6 +1133,15 @@ object Dedup {
     }
     val (edges, edgeCount) = directedEdges(pairs, ckpt)
     val idType = edges.schema("src").dataType
+    val spark = pairs.sparkSession
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("id", idType, nullable = false),
+      org.apache.spark.sql.types.StructField("component", idType, nullable = false)))
+    if (edgeCount == 0) {
+      Materialize.releaseCheckpoint(edges)
+      return spark.createDataFrame(
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
+    }
     // Adaptive small-graph path: verified near-dup pair graphs are usually
     // a tiny fraction of the corpus, and each distributed round costs two
     // fixed job overheads regardless of size. Below the cutoff a driver-side
@@ -1188,10 +1204,6 @@ object Dedup {
         val cur = minOfRoot.get(r)
         if (cur == null || lt(id, cur)) minOfRoot.put(r, id)
       }
-      val spark = pairs.sparkSession
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id", idType, nullable = false),
-        org.apache.spark.sql.types.StructField("component", idType, nullable = false)))
       val rows = ids.map(id =>
         org.apache.spark.sql.Row(id, minOfRoot.get(find(id))))
       Materialize.releaseCheckpoint(edges)

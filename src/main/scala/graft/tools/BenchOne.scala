@@ -1,32 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev probe: run a warm-up list of queries, then time one query — isolates
   * order-dependent slowdowns seen in the full bench.
   */
 object BenchOne {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    // A/B instrument: "k=v;k=v" extra confs (e.g. kill broadcasts to test
-    // a suspected AQE join-strategy flip)
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(';').foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) if k.nonEmpty => builder.config(k, v)
-        case Array("") => // empty segment (trailing ';')
-        case _ => sys.error(
-          s"SPARK_GRAFT_EXTRA_CONF segment '$kv' is not k=v")
-      }
-    })
-    val spark = builder.getOrCreate()
+    val spark = graft.LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("WARN")
     val warm = args.dropRight(1)
     val target = args.last

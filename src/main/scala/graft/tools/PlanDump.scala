@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps `explain("formatted")` for the named queries, one file per query
   * (`<outDir>/<query>_<suffix>.txt`) — the per-round optimization audit
   * trail (history/plans/r21/<query>_before.txt / _after.txt).
@@ -17,14 +15,7 @@ object PlanDump {
       "usage: PlanDump <sfDir> <outDir> <suffix> <query>...")
     val (sfDir, outDir, suffix) = (args(0), args(1), args(2))
     val names = args.drop(3).toSeq
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSession(4)
     spark.sparkContext.setLogLevel("ERROR")
     val dir = java.nio.file.Paths.get(outDir)
     java.nio.file.Files.createDirectories(dir)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev probe: synthesize an sf1-scale rehearsal dataset from sf0.1 by
@@ -30,14 +30,7 @@ object ScaleUp {
     val only: Option[Set[String]] =
       if (args.length > 3) Some(args(3).split(",").toSet) else None
     def wanted(name: String): Boolean = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt)
     spark.sparkContext.setLogLevel("WARN")
 
     def tbl(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.ops.{Dedup, InferSchema}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev smoke main: drives the engine through its public API on sf0.001 —
@@ -10,16 +9,7 @@ import org.apache.spark.sql.functions._
 object Smoke {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // testdata events.ts is timestamp[ns], which Spark 4 parquet rejects
-      // unless read as long nanos:
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSession(8)
     spark.sparkContext.setLogLevel("WARN")
 
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")

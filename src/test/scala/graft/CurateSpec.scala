@@ -95,14 +95,12 @@ class CurateSpec extends SparkSpec {
 
   test("curateCorpus job count: the budget is cut from per-bucket sums") {
     // en's budget of 40 keeps one of its two survivors (30 and 38 tokens),
-    // so the cut falls inside an md5 bucket. Cut by the running-sum window
-    // with its broadcast offsets table, this ran 36 jobs. The probe memo
-    // is cleared so the probe always runs; cut from per-bucket sums, this
-    // then ran 37 jobs, and 30 once each eager step was one job: gone are the probe's partial-count exchange and result jobs
-    // (it is one fold that also fills the gated cache), the second fills
-    // of the bucket table and of the shingle sets (each read twice by one
-    // query), `pairs.count()`'s exchange and result jobs, and the budget
-    // aggregate's exchange job (its per-bucket sums are one fold)
+    // so the cut falls inside an md5 bucket. The probe memo is cleared so
+    // the probe always runs. Each eager step is one job: the probe is one
+    // fold that also fills the gated cache, each dedup cache is filled
+    // once, and the budget's per-bucket sums are one fold. The rep graph
+    // has no edges, so components run only the edge checkpoint, and the
+    // persisted reps' SHA-256 group exchange runs once, in their own fill.
     Dedup.gateCacheClear()
     spark.catalog.clearCache()
     var summary = Seq.empty[(String, Long)]
@@ -112,7 +110,7 @@ class CurateSpec extends SparkSpec {
         .collect().map(r => (r.getString(0), r.getLong(1))).toSeq.sorted
     }
     assert(summary == Seq(("en", 1L), ("fr", 1L)), s"got $summary")
-    assert(jobs.size == 30,
+    assert(jobs.size == 24,
       s"curateCorpus + curationSummary ran ${jobs.size} jobs:\n${jobs.mkString("\n")}")
   }
 

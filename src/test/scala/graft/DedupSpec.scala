@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops.{Dedup, TextAnalysis}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class DedupSpec extends SparkSpec {
@@ -106,10 +107,17 @@ class DedupSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(cc == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L, 22L -> 20L))
-    // empty pair list -> empty labeling, no infinite loop
-    val empty = Dedup.connectedComponents(
-      Seq.empty[(Long, Long)].toDF("id_a", "id_b"))
+    // empty pair list -> empty labeling at once: the edge checkpoint's jobs
+    // count 0 edges, and no label checkpoint, round or fixpoint check runs
+    // (a range, not a local relation, so the optimizer cannot fold it away)
+    var empty: DataFrame = null
+    val jobs = FinalPlans.jobSitesDuring(spark) {
+      empty = Dedup.connectedComponents(spark.range(8).filter(col("id") < 0)
+        .select(col("id").as("id_a"), (col("id") + 1).as("id_b")))
+    }
+    assert(jobs.size == 1, jobs.mkString("\n"))
     assert(empty.count() == 0)
+    assert(empty.columns.toSeq == Seq("id", "component"))
   }
 
   test("connectedComponents: driver union-find path equals the distributed loop") {

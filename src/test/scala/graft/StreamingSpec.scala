@@ -1,6 +1,5 @@
 package graft
 
-import graft.ops.Corpus
 import graft.streaming.StreamingIngest
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -9,19 +8,6 @@ import java.sql.Timestamp
 
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
-
-  test("retried micro-batch with a committed marker is skipped (idempotent replay)") {
-    val corpus = tmpDir("corpus_")
-    val batch = Seq("row one", "row two").toDF("content")
-    assert(StreamingIngest.ingestBatchOnce(spark, batch, corpus, batchId = 7L))
-    assert(Corpus.records(spark, corpus).count() == 2)
-    // same batchId again — the foreachBatch retry case
-    assert(!StreamingIngest.ingestBatchOnce(spark, batch, corpus, batchId = 7L))
-    assert(Corpus.records(spark, corpus).count() == 2, "retry double-appended")
-    // a new batchId ingests normally
-    assert(StreamingIngest.ingestBatchOnce(spark, batch, corpus, batchId = 8L))
-    assert(Corpus.records(spark, corpus).count() == 4)
-  }
 
   test("batch sessionization: sessions split exactly at the gap") {
     val df = Seq(
