@@ -270,22 +270,26 @@ object Curate {
     *
     * The budget is a prefix cut ([[budgetCut]]): construction runs one
     * fold over the survivors (per language and md5 bucket sums, merged on
-    * the driver, no shuffle) and, when some language's budget falls
-    * inside a bucket, one job without a shuffle that collects that
-    * bucket's (md5, id, token count) keys. The returned frame is a single
-    * map-only filter of the checkpointed survivors: no curated row crosses
-    * an exchange, however many of its columns the caller keeps. Token
-    * counts are never negative, which the cut's exactness relies on; a
-    * negative one would fail at construction.
+    * the driver, no shuffle), which also fills their checkpoint, and,
+    * when some language's budget falls inside a bucket, one job without a
+    * shuffle that collects that bucket's (md5, id, token count) keys. The
+    * returned frame is a single map-only filter of the checkpointed
+    * survivors: no curated row crosses an exchange, however many of its
+    * columns the caller keeps. Token counts are never negative, which the
+    * cut's exactness relies on; a negative one would fail at construction.
     *
     * The eager dedup steps before it run no job that only fills a cache a
     * second time or counts rows nobody reads: the duplication probe is one
     * fold that also fills the gated cache, and the dedup chain fills each
     * of its caches once with [[Materialize.fill]] before a query reads it
-    * (see [[Dedup.minhashPerDoc]]).
+    * (see [[Dedup.minhashPerDoc]]). No checkpoint on the per-document path
+    * runs a job of its own either: the component step's pair table and
+    * labels and the survivors are each filled by the job that first reads
+    * them ([[Materialize.checkpoint]]).
     *
-    * The survivor anti-join runs at construction (it is checkpointed) and
-    * follows [[Dedup.dropNearDuplicates]]: it broadcasts the near-dup
+    * The survivor anti-join runs at construction, inside that fold (its
+    * broadcast or exchanges run before it, when the checkpoint is built),
+    * and follows [[Dedup.dropNearDuplicates]]: it broadcasts the near-dup
     * losers when the dedup graph took the driver union-find and the losers
     * fit the broadcast threshold, so the gated corpus is never shuffled;
     * it shuffles the gated corpus on the id when the losers are larger or
@@ -294,14 +298,17 @@ object Curate {
   def curateCorpus(df: DataFrame, idCol: String, textCol: String,
                    langCol: String, minQuality: Double,
                    dupThreshold: Double, tokenBudget: Long): DataFrame = {
-    // The dedup chain is already eager (the component loop runs jobs), so an
-    // eager localCheckpoint of its survivor set costs one extra anti-join
-    // job — and lets the scope RELEASE the gated cache before returning
-    // instead of leaking it for the session's lifetime (repeated curations
-    // would pile cached blocks up). The returned frame is backed by the
-    // checkpoint; its blocks are freed by the ContextCleaner once the
-    // frame is unreachable.
-    val deduped = Materialize.scoped {
+    // The survivors are checkpointed, and the budget's per-bucket fold is
+    // the job that first reads them whole, so it fills the checkpoint
+    // (Materialize.checkpoint) instead of a job of its own. That fold runs
+    // inside the scope: until it has run the survivors read the gated
+    // cache, and outside the scope they would recompute the quality
+    // features from the input. The scope then RELEASES the gated cache
+    // before returning instead of leaking it for the session's lifetime
+    // (repeated curations would pile cached blocks up). The returned frame
+    // reads the checkpoint; its blocks are freed by the ContextCleaner once
+    // the frame is unreachable.
+    Materialize.scoped {
       // The gated working set feeds several consumers (the dedup chain's
       // bucket scan and verify joins, the anti-join); without persisting
       // it, every consumer re-runs the regex-heavy quality features over
@@ -309,13 +316,14 @@ object Curate {
       // materialize-the-filtered-working-set pattern.
       val gated = Materialize.persist(TextAnalysis.withQualityFeatures(df, textCol)
         .filter(col("quality_score") >= minQuality))
-      Dedup.dropNearDuplicates(gated, idCol, textCol, dupThreshold)
-        .localCheckpoint()
+      val deduped = Materialize.checkpoint(
+        Dedup.dropNearDuplicates(gated, idCol, textCol, dupThreshold))
+      // The running budget keeps a prefix in (md5(id), id) order, so
+      // per-bucket sums answer it and only the bucket it falls in is
+      // replayed (see [[budgetCut]]): the survivors are filtered where
+      // they lie.
+      budgetCut(deduped, langCol, idCol, col("q_n_tokens"), tokenBudget)
     }
-    // The running budget keeps a prefix in (md5(id), id) order, so per-bucket
-    // sums answer it and only the bucket it falls in is replayed (see
-    // [[budgetCut]]): the survivors are filtered where they lie.
-    budgetCut(deduped, langCol, idCol, col("q_n_tokens"), tokenBudget)
   }
 
   /** Per-language summary of a curated set: document and token counts. */

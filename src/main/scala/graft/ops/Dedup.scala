@@ -1,8 +1,13 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType,
+  StructField, StructType}
+import org.apache.spark.unsafe.Platform
 
 /** Deduplication operators for large-scale training-data pipelines (extension
   * mandate, SURVEY §2.3). Designed scale-first:
@@ -648,12 +653,16 @@ object Dedup {
     * pair-audit API emits — the same consumer
     * [[graft.ops.Similarity.embeddingDedupIds]] runs.
     *
-    * The returned labels are localCheckpoint-materialized (the CC loop
-    * inside is already eager), so callers run this under
-    * [[Materialize.scoped]]: the labels read executor blocks only. Being eager
-    * anyway, this path also fills the candidate-pair cache before the
-    * verify plan is built (`materializePairs`, see [[minhashPerDoc]]), so
-    * a small candidate set never shuffles the corpus text.
+    * The returned labels never read the chain's caches again, so callers
+    * run this under [[Materialize.scoped]]. On the collapsed path they are
+    * an eager local checkpoint. On the per-document path they are
+    * [[connectedComponents]]' labels: the loop's eager checkpoint, or the
+    * driver union-find's local relation behind a lazy checkpoint, which
+    * the job that first reads them fills. Being eager anyway (the
+    * component step reads the verified pairs), this path also fills the
+    * candidate-pair cache before the verify plan is built
+    * (`materializePairs`, see [[minhashPerDoc]]), so a small candidate set
+    * never shuffles the corpus text.
     */
   private[graft] def minhashLabels(df: DataFrame, idCol: String,
                                    textCol: String, threshold: Double,
@@ -943,9 +952,10 @@ object Dedup {
         .filter(col("id") =!= col("survivor"))
         .select(col("survivor"), col("id").as("dropped_id"))
     } else {
-      // The CC labels are checkpointed by the eager loop, so the result
-      // reads executor blocks only and never re-touches the segment table,
-      // whose blocks stay cached until the caller's scope releases them.
+      // connectedComponents reads its pairs in its own first job and the
+      // labels are checkpointed, so the result never re-touches the
+      // segment table, whose blocks stay cached until the caller's scope
+      // releases them.
       connectedComponents(
           segmentedHammingJoin(hashes, bits, maxDistance).select(col("id_a"), col("id_b")),
           toFixpoint = true)
@@ -1014,12 +1024,9 @@ object Dedup {
     * `min(lbl)` (Long/Int/String — anything else, e.g. Decimal or Binary,
     * falls through to the loop rather than risk a toString-ordered label),
     * and only when the estimated driver heap fits `cutoffBytes`. */
-  private[graft] def driverPathAllowed(edgeCount: Long,
-                                       idType: org.apache.spark.sql.types.DataType,
-                                       avgStrLen: => Double,
-                                       cutoffRows: Long,
-                                       cutoffBytes: Long): Boolean = {
-    import org.apache.spark.sql.types._
+  private[graft] def driverPathAllowed(edgeCount: Long, idType: DataType,
+                                       avgStrLen: Double, cutoffRows: Long,
+                                       cutoffBytes: Long): Boolean =
     if (edgeCount <= 0 || edgeCount > cutoffRows) false
     else idType match {
       case LongType    => driverUnionFindBytes(edgeCount, 8L) <= cutoffBytes
@@ -1029,22 +1036,25 @@ object Dedup {
           math.ceil(2 * math.max(avgStrLen, 1.0)).toLong) <= cutoffBytes
       case _ => false
     }
-  }
 
   /** The distinct directed edge table of `pairs` (`src`, `dst`),
-    * materialized by `ckpt`, and its row count. Both directions of every
-    * pair come from one scan: a union of two projections would run the
-    * input plan once per branch. `ReuseExchange` could share at most the
-    * exchanges inside it, and those above reads of a persisted frame never
-    * match (see [[Materialize]]). The count is an `Observation` on the
-    * plan `ckpt` runs, so it rides the checkpoint job instead of running
-    * an aggregate job of its own; an empty `pairs` counts 0.
+    * materialized by `ckpt`, and its row count. A pair with a null end is
+    * no edge: a null id joins nothing. Both directions of every pair come
+    * from one scan: a union of two projections would run the input plan
+    * once per branch. `ReuseExchange` could share at most the exchanges
+    * inside it, and those above reads of a persisted frame never match
+    * (see [[Materialize]]). The count is an `Observation` on the plan
+    * `ckpt` runs, so it rides the checkpoint job instead of running an
+    * aggregate job of its own; an empty `pairs` counts 0. Only the
+    * component loop of [[connectedComponents]] builds it, from the pair
+    * checkpoint that the loop's first job already filled.
     */
   private[graft] def directedEdges(pairs: DataFrame,
                                    ckpt: DataFrame => DataFrame): (DataFrame, Long) = {
     // a fresh Observation per call: one can observe only one Dataset
     val counted = new org.apache.spark.sql.Observation()
     val edges = ckpt(pairs
+      .filter(col("id_a").isNotNull && col("id_b").isNotNull)
       .select(explode(array(
         struct(col("id_a").as("src"), col("id_b").as("dst")),
         struct(col("id_b").as("src"), col("id_a").as("dst")))).as("__e"))
@@ -1052,6 +1062,38 @@ object Dedup {
       .distinct()
       .observe(counted, count(lit(1)).as("n")))
     (edges, counted.get("n").asInstanceOf[Long])
+  }
+
+  /** One partition of the pair table as [[connectedComponents]]' first job
+    * sees it: its pairs with no null end, their id characters (string ids
+    * only), and those pairs as UnsafeRow bytes, each after its size as an
+    * int. `rows` is null once the partition's own union-find estimate
+    * passes `rowsShare` edges or `bytesShare` bytes; it stops buffering
+    * there and only counts.
+    */
+  private final case class PairPart(pairs: Long, chars: Long, rows: Array[Byte])
+
+  private def pairPart(idType: DataType, rowsShare: Long, bytesShare: Long)
+                      (it: Iterator[InternalRow]): PairPart = {
+    val toUnsafe = UnsafeProjection.create(Array[DataType](idType, idType))
+    val text = idType == StringType
+    var bytes = new java.io.ByteArrayOutputStream
+    var out = new java.io.DataOutputStream(bytes)
+    var n, chars = 0L
+    it.foreach { r =>
+      if (!r.isNullAt(0) && !r.isNullAt(1)) {
+        n += 1
+        if (text) chars += r.getUTF8String(0).numChars + r.getUTF8String(1).numChars
+        if (out != null) {
+          if (driverPathAllowed(2 * n, idType, chars / (2.0 * n), rowsShare, bytesShare)) {
+            val u = toUnsafe(r)
+            out.writeInt(u.getSizeInBytes)
+            u.writeToStream(out, null) // on-heap rows need no copy buffer
+          } else { bytes = null; out = null }
+        }
+      }
+    }
+    PairPart(n, chars, if (bytes == null) null else bytes.toByteArray)
   }
 
   /** Connected components over an undirected pair list — the CLUSTER step
@@ -1064,31 +1106,43 @@ object Dedup {
     * the fixpoint labels every vertex with the smallest id in its component
     * (deterministic, engine-agnostic — a DuckDB recursive CTE replays it
     * exactly). Rounds needed = graph diameter; similarity graphs are
-    * clique-ish, so a handful.
+    * clique-ish, so a handful. A pair with a null end is no edge (a null
+    * id joins nothing), on either path.
     *
-    * `pairs` is read exactly once (spec-pinned): one scan emits both
-    * directions of every pair (explode of the two (src, dst) structs),
-    * and the distinct directed edge table is checkpointed before anything
-    * else reads it. Callers may therefore pass an un-persisted plan — the
-    * minhash label path hands in its whole verify chain.
+    * `pairs` is read exactly once (spec-pinned), by one job that does three
+    * things: it fills a checkpoint of the (`id_a`, `id_b`) rows (lazy, see
+    * [[Materialize.checkpoint]]), it counts the pairs and the id
+    * characters, and it returns the pairs to the driver. Callers may
+    * therefore pass an un-persisted plan — the minhash label path hands in
+    * its whole verify chain. Each task stops buffering once its own
+    * union-find estimate passes its share of the cutoff (the cutoff over
+    * the partition count), so the rows shipped stay within one cutoff's
+    * worth however many partitions the graph spans. The estimate counts
+    * 2 × pairs edges, an upper bound on the distinct directed edges.
     *
     * A graph with no edges returns an empty local relation at once: no
     * label checkpoint, no round, no fixpoint check.
     *
     * Small graphs (under `driverCutoff` edges and `driverCutoffBytes` of
-    * estimated driver heap) are labelled by a driver-side union-find whose
-    * result is a checkpointed local relation carrying its exact size, so
-    * a join against the labels can be planned as a broadcast.
+    * estimated driver heap) are labelled by a driver-side union-find over
+    * the returned pairs; a partition that passed its share returned none,
+    * and one more job reads those partitions from the filled checkpoint.
+    * The labels are a checkpointed local relation carrying its exact size,
+    * so a join against them can be planned as a broadcast; the job that
+    * first reads them fills their checkpoint.
     *
-    * Scale shape (the GraphX/GraphFrames pattern): ONE shuffle-join + ONE
-    * min-aggregate job per round — shuffle volume is O(edges), never
-    * materializing anything quadratic. Each vertex's previous label rides
-    * the aggregation (`min` over a tagged own-row), so the convergence check
-    * is a trivial scan of the round's already-materialized checkpoint blocks
-    * instead of a second shuffle-join job. Each round's label table is
-    * checkpointed (lineage truncation — constant-size plans/codegen across
-    * rounds, the GraphFrames iterative discipline) and the previous round's
-    * blocks are freed once the new round materializes.
+    * Larger graphs run the distributed loop. It first builds the distinct
+    * directed edge table from the filled pair checkpoint, one more pass
+    * over the checkpointed pairs (see [[directedEdges]]). Scale shape (the
+    * GraphX/GraphFrames pattern): ONE shuffle-join + ONE min-aggregate job
+    * per round — shuffle volume is O(edges), never materializing anything
+    * quadratic. Each vertex's previous label rides the aggregation (`min`
+    * over a tagged own-row), so the convergence check is a trivial scan of
+    * the round's already-materialized checkpoint blocks instead of a second
+    * shuffle-join job. Each round's label table is checkpointed eagerly
+    * (lineage truncation — constant-size plans/codegen across rounds, the
+    * GraphFrames iterative discipline) and the previous round's blocks are
+    * freed once the new round materializes.
     *
     * If the loop hits `maxIters` before the fixpoint (diameter > maxIters),
     * a WARNING is logged and the partially-propagated labels are returned —
@@ -1100,11 +1154,13 @@ object Dedup {
     * set) and `maxIters` degrades to a soft logging threshold.
     *
     * @param pairs undirected edges as two id columns (`id_a`, `id_b`).
-    * @param checkpointDir when set, label tables use RELIABLE `checkpoint`
-    *        into this directory (survives executor loss — on a real cluster
-    *        `localCheckpoint` blocks live on executors and a lost executor
-    *        kills the job mid-iteration with no lineage to recompute); when
-    *        None (default), the faster executor-local `localCheckpoint`.
+    * @param checkpointDir when set, every checkpoint is a RELIABLE eager
+    *        `checkpoint` into this directory (survives executor loss — on a
+    *        real cluster `localCheckpoint` blocks live on executors and a
+    *        lost executor kills the job mid-iteration with no lineage to
+    *        recompute). A lazy reliable checkpoint would write its files in
+    *        a job of its own after the first read anyway. When None
+    *        (default), the faster executor-local `localCheckpoint`.
     * @return (id, component) for every vertex appearing in some pair,
     *         component = min id in the vertex's connected component.
     */
@@ -1131,45 +1187,52 @@ object Dedup {
         df => df.checkpoint()
       case None => df => df.localCheckpoint()
     }
-    val (edges, edgeCount) = directedEdges(pairs, ckpt)
-    val idType = edges.schema("src").dataType
+    // the pair table and the driver's labels are read whole by the next
+    // job, which fills them; the loop's rounds stay eager
+    val pin: DataFrame => DataFrame =
+      if (checkpointDir.isEmpty) Materialize.checkpoint else ckpt
+    val idType = pairs.select(array(col("id_a"), col("id_b"))).schema.head.dataType
+      .asInstanceOf[ArrayType].elementType
+    val pinned = pin(pairs.select(col("id_a").cast(idType).as("id_a"),
+      col("id_b").cast(idType).as("id_b")))
     val spark = pairs.sparkSession
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id", idType, nullable = false),
-      org.apache.spark.sql.types.StructField("component", idType, nullable = false)))
-    if (edgeCount == 0) {
-      Materialize.releaseCheckpoint(edges)
-      return spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
-    }
+    val schema = StructType(Seq(StructField("id", idType, nullable = false),
+      StructField("component", idType, nullable = false)))
     // Adaptive small-graph path: verified near-dup pair graphs are usually
     // a tiny fraction of the corpus, and each distributed round costs two
     // fixed job overheads regardless of size. Below the cutoff a driver-side
-    // union-find computes the IDENTICAL min-id labels in one collect; the
-    // result is a local relation, checkpointed so multi-consumer chains read
-    // executor blocks, not a re-serialized driver collection (without the
-    // checkpoint a clique-heavy 2M-edge rehearsal graph measured 3× SLOWER
-    // than the loop). A local relation knows its exact size and the
-    // checkpoint keeps that figure, so a join against the labels (the
-    // survivor anti-join) is planned as a broadcast when they are small —
-    // a parallelized RDD would report an unknown, effectively infinite,
-    // size and shuffle the other side first. The cutoff is BYTE-aware, not
-    // just row-count: 2M long edges ≈ 32 MB is control-plane grade, but 2M
-    // long-TEXT keys could be hundreds of MB, so string ids are sized from
-    // their average length (one fold over the checkpoint blocks: one job,
-    // no exchange, per-partition sums merged on the driver) and
-    // non-Long/Int/String id types always take the distributed loop (their
-    // driver ordering isn't guaranteed to match min(lbl)). Pass
-    // driverCutoff = 0 to force the loop.
-    lazy val avgStrLen: Double = {
-      val (chars, ids) = edges.select(length(col("src").cast("string")))
-        .queryExecution.toRdd.treeAggregate((0L, 0L))(
-          (a, r) => if (r.isNullAt(0)) a else (a._1 + r.getInt(0), a._2 + 1),
-          (a, b) => (a._1 + b._1, a._2 + b._2), 1)
-      chars.toDouble / ids
+    // union-find computes the IDENTICAL min-id labels from the pairs the
+    // first job returned; the result is a local relation, checkpointed so
+    // multi-consumer chains read executor blocks, not a re-serialized
+    // driver collection (without the checkpoint a clique-heavy 2M-edge
+    // rehearsal graph measured 3× SLOWER than the loop). A local relation
+    // knows its exact size and the checkpoint keeps that figure, so a join
+    // against the labels (the survivor anti-join) is planned as a broadcast
+    // when they are small — a parallelized RDD would report an unknown,
+    // effectively infinite, size and shuffle the other side first. The
+    // cutoff is BYTE-aware, not just row-count: 2M long edges ≈ 32 MB is
+    // control-plane grade, but 2M long-TEXT keys could be hundreds of MB,
+    // so string ids are sized from their average length (counted by the
+    // same job) and non-Long/Int/String id types always take the
+    // distributed loop (their driver ordering isn't guaranteed to match
+    // min(lbl)). Pass driverCutoff = 0 to force the loop.
+    val rdd = pinned.queryExecution.toRdd
+    val sc = spark.sparkContext
+    val shares = math.max(rdd.getNumPartitions, 1)
+    val parts = sc.runJob(rdd, pairPart(idType, driverCutoff / shares,
+      driverCutoffBytes / shares) _)
+    val pairCount = parts.map(_.pairs).sum
+    if (pairCount == 0) {
+      Materialize.releaseCheckpoint(pinned)
+      return spark.createDataFrame(
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
     }
-    if (driverPathAllowed(edgeCount, idType, avgStrLen,
+    val avgStrLen = parts.map(_.chars).sum.toDouble / (2 * pairCount)
+    if (driverPathAllowed(2 * pairCount, idType, avgStrLen,
                           driverCutoff, driverCutoffBytes)) {
+      val over = parts.indices.filter(parts(_).rows == null)
+      val rest = if (over.isEmpty) Array.empty[PairPart]
+        else sc.runJob(rdd, pairPart(idType, Long.MaxValue, Long.MaxValue) _, over)
       val parent = new java.util.HashMap[Any, Any]()
       def find(x: Any): Any = {
         var r = x
@@ -1178,20 +1241,33 @@ object Dedup {
         while (parent.get(c) != r) { val n = parent.get(c); parent.put(c, r); c = n }
         r
       }
-      edges.collect().foreach { row =>
-        val (a, b) = (row.get(0), row.get(1))
-        if (!parent.containsKey(a)) parent.put(a, a)
-        if (!parent.containsKey(b)) parent.put(b, b)
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent.put(ra, rb)
+      // driverPathAllowed gates this path to exactly these id types
+      val idAt: (UnsafeRow, Int) => Any = idType match {
+        case LongType => _.getLong(_)
+        case IntegerType => _.getInt(_)
+        case StringType => _.getUTF8String(_).toString
+      }
+      val row = new UnsafeRow(2)
+      (parts.filter(_.rows != null) ++ rest).foreach { p =>
+        val sizes = java.nio.ByteBuffer.wrap(p.rows)
+        var at = 0
+        while (at < p.rows.length) {
+          val size = sizes.getInt(at)
+          row.pointTo(p.rows, Platform.BYTE_ARRAY_OFFSET + at + 4, size)
+          val (a, b) = (idAt(row, 0), idAt(row, 1))
+          if (!parent.containsKey(a)) parent.put(a, a)
+          if (!parent.containsKey(b)) parent.put(b, b)
+          val (ra, rb) = (find(a), find(b))
+          if (ra != rb) parent.put(ra, rb)
+          at += 4 + size
+        }
       }
       import scala.jdk.CollectionConverters._
       val minOfRoot = new java.util.HashMap[Any, Any]()
       val ids = parent.keySet().asScala.toSeq
-      // driverPathAllowed gates this path to exactly these id types, so the
-      // ordering here always matches the distributed loop's native min(lbl)
-      // (no toString fallback — "10" < "9" lexicographically would silently
-      // mislabel numeric-ish types; anything else takes the loop instead).
+      // the ordering here always matches the distributed loop's native
+      // min(lbl) (no toString fallback — "10" < "9" lexicographically would
+      // silently mislabel numeric-ish types; anything else takes the loop).
       def lt(x: Any, y: Any): Boolean = (x, y) match {
         case (a: Long, b: Long) => a < b
         case (a: Int, b: Int) => a < b
@@ -1206,11 +1282,13 @@ object Dedup {
       }
       val rows = ids.map(id =>
         org.apache.spark.sql.Row(id, minOfRoot.get(find(id))))
-      Materialize.releaseCheckpoint(edges)
+      Materialize.releaseCheckpoint(pinned)
       // the local scan spreads its rows over up to defaultParallelism
       // partitions, so downstream joins are not serialized on one task
-      return ckpt(spark.createDataFrame(rows.asJava, schema))
+      return pin(spark.createDataFrame(rows.asJava, schema))
     }
+    val (edges, edgeCount) = directedEdges(pinned, ckpt)
+    Materialize.releaseCheckpoint(pinned)
     // `current` is the round's checkpointed table (held for unpersist);
     // `labels` the (id, lbl) view of it the next round joins against.
     var current = ckpt(edges.select(col("src").as("id"), col("src").as("lbl"))
@@ -1298,7 +1376,8 @@ object Dedup {
     * (graphs under [[connectedComponents]]' driver cutoff, the usual case)
     * carry their exact size, so the losers are broadcast whenever they fit
     * `spark.sql.autoBroadcastJoinThreshold` and `df` is scanned map-only,
-    * never shuffled. When it shuffles: losers over the threshold, or labels
+    * never shuffled. That broadcast is the job that fills the labels' lazy
+    * checkpoint. When it shuffles: losers over the threshold, or labels
     * from the distributed loop, whose size is only an estimate — then `df`
     * is exchanged on the id (AQE may still switch to a broadcast after that
     * exchange once it sees the real loser count).

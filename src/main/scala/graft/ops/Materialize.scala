@@ -43,6 +43,11 @@ import org.apache.spark.storage.StorageLevel
   * together, so neither sees the other's blocks (the twin-fill rule).
   * [[fill]] runs the cache's own column-buffer RDD, once, so the stages of
   * a later query find it filled and submit nothing.
+  *
+  * The same holds for checkpoints: an eager `localCheckpoint()` is a job
+  * that only writes blocks. A step whose next job reads the whole result
+  * anyway (a fold, a broadcast, a collect) checkpoints with [[checkpoint]],
+  * and that reader fills it.
   */
 object Materialize {
 
@@ -76,6 +81,25 @@ object Materialize {
       }
     visit(df.queryExecution.executedPlan)
   }
+
+  /** `df` checkpointed to executor-local blocks without a job of its own:
+    * `localCheckpoint(eager = false)`, the checkpoint counterpart of
+    * [[fill]]. The first job that computes every partition (a fold, a
+    * broadcast, a collect) writes the blocks, and Spark's `doCheckpoint`
+    * after that job finds none missing and runs nothing; every later read
+    * starts at the blocks. A reader that stops early (`isEmpty`, `take`)
+    * leaves partitions unwritten, and `doCheckpoint` computes those in a
+    * job of its own.
+    *
+    * Building it runs the query stages below `df`'s final stage (AQE
+    * materializes exchanges and broadcasts to plan it); the final stage
+    * runs in the first reader. Until then the frame reads its inputs, so a
+    * cache it reads must still be persisted when that reader runs: read it
+    * inside the cache's scope. The result keeps `df`'s size estimate, and
+    * a local relation's is exact, so a join against it still plans a
+    * broadcast.
+    */
+  def checkpoint(df: DataFrame): DataFrame = df.localCheckpoint(eager = false)
 
   /** Walks AQE plans into their query stages and subqueries. */
   private object Stages extends AdaptiveSparkPlanHelper

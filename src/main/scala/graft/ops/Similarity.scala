@@ -615,9 +615,9 @@ object Similarity {
     * come from [[Dedup.repLabels]], the consumer the minhash label path
     * shares, and each label IS its cluster's survivor.
     *
-    * The connected-components loop inside is EAGER, so construction runs
-    * jobs; the returned frame then reads only the CC loop's checkpointed
-    * labels plus the persisted membership.
+    * The connected-components step inside is EAGER, so construction runs
+    * jobs; the returned frame then reads only its checkpointed labels
+    * plus the persisted membership.
     *
     * CACHE LIFETIME: persists the corpus-proportional membership table and
     * the distinct-vector groups table; long-lived drivers wrap the call in

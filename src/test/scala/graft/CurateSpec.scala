@@ -56,6 +56,29 @@ class CurateSpec extends SparkSpec {
     assert(curated.count() == 400L)
   }
 
+  test("curateCorpus reads its input once, and the budget's fold fills the survivors") {
+    // The survivors' checkpoint is filled by the budget's fold, so that fold
+    // must run while the gated cache is alive: run after the scope releases
+    // it, it would compute the quality features over the input again. The
+    // input is an RDD that counts its rows as they are computed.
+    val rnd = new scala.util.Random(13)
+    def doc() = Seq.fill(30)(s"w${rnd.nextInt(5000)}").mkString(" ")
+    val base = (1 to 400).map(i => (i.toLong, doc(), "en"))
+    val near = base.take(20).map { case (i, t, l) => (1000L + i, t + " tail", l) }
+    val reads = spark.sparkContext.longAccumulator("curate_reads")
+    val corpus = spark.sparkContext.parallelize(base ++ near, 4)
+      .map { r => reads.add(1L); r }.toDF("doc_id", "text", "lang")
+    var curated: DataFrame = null
+    val jobs = FinalPlans.jobSitesDuring(spark) {
+      curated = Curate.curateCorpus(corpus, "doc_id", "text", "lang",
+        minQuality = 0.0, dupThreshold = 0.9, tokenBudget = 1000000L)
+    }
+    val fold = jobs.filter(_.name.startsWith("treeAggregate at Curate.scala"))
+    assert(fold.size == 1 && fold.head.fills.size == 1, jobs.mkString("\n"))
+    assert(curated.count() == 400L)
+    assert(reads.value == 420L, s"${reads.value} input rows computed for 420")
+  }
+
   test("curateCorpus: token budget caps each language independently") {
     // budget below a single doc's token count → everything capped out
     val none = Curate.curateCorpus(docs, "doc_id", "text", "lang",
@@ -99,8 +122,10 @@ class CurateSpec extends SparkSpec {
     // the probe always runs. Each eager step is one job: the probe is one
     // fold that also fills the gated cache, each dedup cache is filled
     // once, and the budget's per-bucket sums are one fold. The rep graph
-    // has no edges, so components run only the edge checkpoint, and the
-    // persisted reps' SHA-256 group exchange runs once, in their own fill.
+    // has no edges, so components run only their one job over the pairs,
+    // and the persisted reps' SHA-256 group exchange runs once, in their
+    // own fill. The survivors' checkpoint is filled by the budget's fold:
+    // its own job, gone since, made this 24.
     Dedup.gateCacheClear()
     spark.catalog.clearCache()
     var summary = Seq.empty[(String, Long)]
@@ -110,7 +135,7 @@ class CurateSpec extends SparkSpec {
         .collect().map(r => (r.getString(0), r.getLong(1))).toSeq.sorted
     }
     assert(summary == Seq(("en", 1L), ("fr", 1L)), s"got $summary")
-    assert(jobs.size == 24,
+    assert(jobs.size == 23,
       s"curateCorpus + curationSummary ran ${jobs.size} jobs:\n${jobs.mkString("\n")}")
   }
 

@@ -8,18 +8,11 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class DeadCodeSpec extends AnyFunSuite {
 
-  private def python(script: String, what: String): Unit = {
-    val path = java.nio.file.Paths.get(script)
-    assume(java.nio.file.Files.exists(path)) // repo-root working dir
-    val rc = new ProcessBuilder("python3", script).inheritIO().start().waitFor()
-    assert(rc == 0, what)
-  }
-
   test("dead-code gate self-test (tools/test_spec_only_defs.py)") {
-    python("tools/test_spec_only_defs.py", "the gate's self-test reported failures")
+    PythonCheck("tools/test_spec_only_defs.py", "the gate's self-test reported failures")
   }
 
   test("no src/main member is unreachable outside the keep list (tools/spec_only_defs.py)") {
-    python("tools/spec_only_defs.py", "the gate printed DEAD members")
+    PythonCheck("tools/spec_only_defs.py", "the gate printed DEAD members")
   }
 }

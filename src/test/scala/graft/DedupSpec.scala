@@ -107,9 +107,10 @@ class DedupSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(cc == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L, 22L -> 20L))
-    // empty pair list -> empty labeling at once: the edge checkpoint's jobs
-    // count 0 edges, and no label checkpoint, round or fixpoint check runs
-    // (a range, not a local relation, so the optimizer cannot fold it away)
+    // empty pair list -> empty labeling at once: the one job over the pairs
+    // counts 0 of them, and no label checkpoint, round or fixpoint check
+    // runs (a range, not a local relation, so the optimizer cannot fold it
+    // away). It was the edge table's exchange before that job replaced it
     var empty: DataFrame = null
     val jobs = FinalPlans.jobSitesDuring(spark) {
       empty = Dedup.connectedComponents(spark.range(8).filter(col("id") < 0)
@@ -154,6 +155,90 @@ class DedupSpec extends SparkSpec {
       labels.collect()
       assert(reads.value == raw.size.toLong,
         s"driverCutoff=$cutoff: reading the labels re-scanned the pairs")
+    }
+  }
+
+  test("connectedComponents: union-find, loop and reliable mode agree on adversarial pair lists") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    // Duplicate pairs, both orientations, self-loops and null ends over
+    // Long, Int and String ids (the string ids order "v10" before "v9"), on
+    // 1 to 8 partitions. A pair with a null end is no edge on either path
+    // (the driver path used to label a vertex 0 for it, the loop a vertex
+    // null). Partition 0 holds 70% of the pairs: at a cutoff of exactly the
+    // graph's estimate it passes its share (the cutoff over the partition
+    // count) and one more job reads it from the pair checkpoint; at a
+    // cutoff below its own estimate the loop runs. Reliable mode
+    // (checkpointDir) takes both sides of the cutoff once per id type.
+    val rnd = new scala.util.Random(17)
+    val dir = java.nio.file.Files.createTempDirectory("graft_cc_parity").toString
+    val types = Seq[(DataType, Long => Any, (Any, Any) => Boolean)](
+      (LongType, v => v, (a, b) => a.asInstanceOf[Long] < b.asInstanceOf[Long]),
+      (IntegerType, v => v.toInt, (a, b) => a.asInstanceOf[Int] < b.asInstanceOf[Int]),
+      (StringType, v => s"v$v", (a, b) => a.asInstanceOf[String] < b.asInstanceOf[String]))
+    // min-label propagation to the fixpoint, over the pairs with no null end
+    def reference(rows: Seq[(Any, Any)], lt: (Any, Any) => Boolean): Map[Any, Any] = {
+      val edges = rows.filter { case (a, b) => a != null && b != null }
+      val label = scala.collection.mutable.Map.empty[Any, Any]
+      edges.foreach { case (a, b) => label(a) = a; label(b) = b }
+      var changed = true
+      while (changed) {
+        changed = false
+        edges.foreach { case (a, b) =>
+          val m = if (lt(label(a), label(b))) label(a) else label(b)
+          if (label(a) != m || label(b) != m) { label(a) = m; label(b) = m; changed = true }
+        }
+      }
+      label.toMap
+    }
+    def pairJobs(jobs: Seq[FinalPlans.JobSite]) = jobs.count(_.name.startsWith("runJob at Dedup.scala"))
+    def looped(jobs: Seq[FinalPlans.JobSite]) = jobs.exists(_.name.startsWith("isEmpty at Dedup.scala"))
+    for (parts <- 1 to 8) {
+      val (idType, as, lt) = types(parts % 3)
+      val base = Seq.fill(120)((rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
+      val longs = base ++ base.take(30) ++ base.slice(30, 60).map(_.swap) ++
+        Seq.fill(10)(rnd.nextInt(60).toLong).map(v => (v, v))
+      val rows = rnd.shuffle(longs.map { case (a, b) => (as(a), as(b)) } ++
+        Seq((null, as(3L)), (as(4L), null), (null, null)))
+      val chunks = if (parts == 1) Seq(rows) else {
+        val (head, rest) = rows.splitAt(rows.size * 7 / 10)
+        (head +: rest.grouped((rest.size + parts - 2) / (parts - 1)).toSeq).padTo(parts, Nil)
+      }
+      assert(chunks.size == parts && chunks.flatten == rows)
+      val schema = StructType(Seq(StructField("id_a", idType), StructField("id_b", idType)))
+      val pairs = spark.createDataFrame(spark.sparkContext.parallelize(chunks, parts)
+        .flatMap(_.map { case (a, b) => Row(a, b) }), schema)
+      def estimate(rs: Seq[(Any, Any)]): Long = {
+        val nn = rs.filter { case (a, b) => a != null && b != null }
+        val width = idType match {
+          case LongType => 8L
+          case IntegerType => 4L
+          case _ => math.ceil(2 * math.max(
+            nn.map { case (a, b) => a.toString.length + b.toString.length }.sum / (2.0 * nn.size),
+            1.0)).toLong
+        }
+        Dedup.driverUnionFindBytes(2L * nn.size, width)
+      }
+      def labels(bytes: Long, ck: Option[String] = None) = {
+        var got = Map.empty[Any, Any]
+        val jobs = FinalPlans.jobSitesDuring(spark) {
+          got = Dedup.connectedComponents(pairs, checkpointDir = ck, driverCutoffBytes = bytes,
+            toFixpoint = true).collect().map(r => r.get(0) -> r.get(1)).toMap
+        }
+        (got, jobs)
+      }
+      val want = reference(rows, lt)
+      val at = s"$idType on $parts partitions"
+      val (fits, fitsJobs) = labels(estimate(rows))
+      assert(fits == want && !looped(fitsJobs) && pairJobs(fitsJobs) == (if (parts > 1) 2 else 1),
+        s"$at, cutoff at the estimate:\n${fitsJobs.mkString("\n")}")
+      val (over, overJobs) = labels(estimate(chunks.head) - 1)
+      assert(over == want && looped(overJobs), s"$at, partition 0 alone over the cutoff")
+      val (small, smallJobs) = labels(256L << 20)
+      assert(small == want && !looped(smallJobs) && pairJobs(smallJobs) == 1, s"$at, default cutoff")
+      // reliable mode, once per id type
+      if (parts <= types.size) for (bytes <- Seq(256L << 20, 0L))
+        assert(labels(bytes, Some(dir))._1 == want, s"$at, reliable mode, cutoff $bytes")
     }
   }
 
@@ -234,7 +319,11 @@ class DedupSpec extends SparkSpec {
     // distinct and broadcast. Filling the caches with Materialize.fill took
     // 19 to 15: gone are the second fills of the bucket table and of the
     // shingle sets (each read twice by one query) and `pairs.count()`'s
-    // exchange and result jobs
+    // exchange and result jobs. One job over the verified pairs that fills
+    // their checkpoint and returns them took 15 to 12: gone are the directed
+    // edge table's `distinct` exchange, its checkpoint job (the union-find's
+    // collect is now that one job) and the labels' checkpoint job (the
+    // loser broadcast fills it)
     spark.catalog.clearCache()
     var kept = 0
     val jobs = FinalPlans.jobSitesDuring(spark) {
@@ -242,7 +331,7 @@ class DedupSpec extends SparkSpec {
         collapse = Some(false)).collect().length
     }
     assert(kept == 420, s"expected the 20 one-token and 10 exact copies dropped, kept $kept")
-    assert(jobs.size == 15, s"dropNearDuplicates ran ${jobs.size} jobs:\n${jobs.mkString("\n")}")
+    assert(jobs.size == 12, s"dropNearDuplicates ran ${jobs.size} jobs:\n${jobs.mkString("\n")}")
   }
 
   test("dedup rows do not depend on shuffle partitions or cached-plan repartitioning") {
@@ -326,11 +415,13 @@ class DedupSpec extends SparkSpec {
   }
 
   test("connectedComponents: a string-id graph under the driver cutoff sizes its ids in one job") {
-    // 6 directed edges whose ids average 3 chars: the union-find is
-    // estimated at 6 * 2 * (48 + 2 * 3) = 648 bytes, so a cutoff of 648
-    // takes the driver path and 647 the loop. The average is one fold over
-    // the edge checkpoint; as `agg(avg(...)).head()` it was an exchange job
-    // and a result job
+    // 3 pairs whose ids average 3 chars: the union-find is estimated at
+    // 2 * 3 edges * 2 * (48 + 2 * 3) = 648 bytes, so a cutoff of 648 takes
+    // the driver path and 647 the loop. One job over the pairs counts them
+    // and their characters and returns them; the labels' checkpoint is
+    // filled by the collect that reads them. That is 2 jobs; with the edge
+    // table's exchange and checkpoint, the fold over it, the union-find's
+    // collect and the label checkpoint it was 6
     val pairs = Seq(("bbb", "aaa"), ("aaa", "ccc"), ("zzz", "yyy")).toDF("id_a", "id_b")
     val expect = Map("aaa" -> "aaa", "bbb" -> "aaa", "ccc" -> "aaa",
       "yyy" -> "yyy", "zzz" -> "yyy")
@@ -343,12 +434,14 @@ class DedupSpec extends SparkSpec {
       assert(labels == expect, s"cutoff $bytes: $labels")
       jobs
     }
-    def unionFind(jobs: Seq[FinalPlans.JobSite]) = jobs.exists(_.name.startsWith("collect at Dedup.scala"))
+    def pairJob(j: FinalPlans.JobSite) = j.name.startsWith("runJob at Dedup.scala")
     val driver = run(648L)
-    assert(unionFind(driver) && driver.count(_.name.startsWith("treeAggregate")) == 1 &&
-      driver.size == 6, driver.mkString("\n"))
+    assert(driver.size == 2 && pairJob(driver.head) && driver.count(pairJob) == 1,
+      driver.mkString("\n"))
+    // the loop runs the same first job, then the edge table and its rounds
     val loop = run(647L)
-    assert(!unionFind(loop), loop.mkString("\n"))
+    assert(pairJob(loop.head) && loop.count(pairJob) == 1 &&
+      loop.exists(_.name.startsWith("isEmpty at Dedup.scala")), loop.mkString("\n"))
   }
 
   test("connectedComponents: string ids above the byte cutoff take the loop and agree") {

@@ -89,6 +89,40 @@ class MaterializeSpec extends SparkSpec {
     } finally cache.unpersist(blocking = true)
   }
 
+  test("checkpoint: no job of its own; the job that first reads it fills it") {
+    // Over a local relation of 300 (long, long) rows, 7,200 bytes. Building
+    // the checkpoint runs nothing, and its first reader (a fold, and
+    // separately a broadcast) runs as many jobs as over an eager checkpoint:
+    // it fills the blocks, and doCheckpoint after it finds none missing.
+    // Later reads start at the checkpoint.
+    val local = (1 to 300).map(i => (i.toLong, 2L * i)).toDF("x", "y")
+    def size(d: DataFrame) = d.queryExecution.optimizedPlan.stats.sizeInBytes
+    def startsAtBlocks(d: DataFrame) = {
+      val lineage = d.queryExecution.toRdd.toDebugString
+      lineage.contains("LocalCheckpointRDD") && !lineage.contains("ParallelCollectionRDD")
+    }
+    val fold = (d: DataFrame) =>
+      d.queryExecution.toRdd.treeAggregate(0L)((s, r) => s + r.getLong(1), _ + _, 1)
+    val broadcastJoin = (d: DataFrame) =>
+      spark.range(0, 600).toDF("x").join(broadcast(d), "x").collect().length.toLong
+    for ((reader, want) <- Seq(fold -> 90300L, broadcastJoin -> 300L)) {
+      var eager: DataFrame = null
+      assert(FinalPlans.jobsDuring(spark) { eager = local.localCheckpoint() } == 1)
+      val eagerJobs = FinalPlans.jobSitesDuring(spark)(assert(reader(eager) == want))
+      var ck: DataFrame = null
+      val built = FinalPlans.jobSitesDuring(spark) { ck = Materialize.checkpoint(local) }
+      assert(built.isEmpty, built.mkString("\n"))
+      assert(size(ck) == 7200 && size(ck) == size(eager), s"${size(ck)} vs ${size(eager)}")
+      assert(!startsAtBlocks(ck))
+      val first = FinalPlans.jobSitesDuring(spark)(assert(reader(ck) == want))
+      assert(first.size == eagerJobs.size && first.flatMap(_.fills).size == 1,
+        s"first read:\n${first.mkString("\n")}\nover an eager checkpoint:\n${eagerJobs.mkString("\n")}")
+      assert(startsAtBlocks(ck), ck.queryExecution.toRdd.toDebugString)
+      val later = FinalPlans.jobSitesDuring(spark)(assert(reader(ck) == want))
+      assert(later.size == eagerJobs.size && later.forall(_.fills.isEmpty), later.mkString("\n"))
+    }
+  }
+
   test("eager composites leave only checkpoint blocks in getPersistentRDDs") {
     // Each composite runs its chain under Materialize.scoped. After it
     // returns (and its result is consumed), the only new block-manager
