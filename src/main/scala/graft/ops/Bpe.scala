@@ -62,9 +62,8 @@ object Bpe {
     import spark.implicits._
     // the iterated working set: re-evaluated plans would re-run every prior
     // step each round, so checkpoint per step (tiny table: distinct words)
-    var words = vocab(docs, textCol)
-      .select(col("cnt"), symbolize(col("word")).as("sym"))
-      .localCheckpoint()
+    var words = Materialize.checkpoint(vocab(docs, textCol)
+      .select(col("cnt"), symbolize(col("word")).as("sym")), eager = true)
     val learned = Seq.newBuilder[(Int, String, String, Long)]
     var step = 1
     var exhausted = false
@@ -89,9 +88,9 @@ object Bpe {
         // replace(), so the oracle chains the very same operation. The
         // pattern spends the pair's inner owned spaces; the replacement
         // restores the outer ones, preserving the double-space invariant.
-        val next = words.select(col("cnt"),
-          replace(col("sym"), lit(s" $a  $b "), lit(s" $a$b ")).as("sym"))
-          .localCheckpoint()
+        val next = Materialize.checkpoint(words.select(col("cnt"),
+          replace(col("sym"), lit(s" $a  $b "), lit(s" $a$b ")).as("sym")),
+          eager = true)
         Materialize.releaseCheckpoint(words)
         words = next
         step += 1

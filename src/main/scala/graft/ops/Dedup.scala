@@ -671,9 +671,9 @@ object Dedup {
                                    collapse: Option[Boolean]): DataFrame = {
     val keyed = df.select(col(idCol).as("id"), col(textCol).as("__text"))
     if (collapse.getOrElse(duplicationMaterial(keyed, col("__text")))) {
-      repLabels(minhashCollapsedRep(keyed, threshold, numHashes, bands,
-          shingleSize, materializePairs = true))
-        .localCheckpoint() // pin label rows before the caches release
+      // pin label rows before the caches release
+      Materialize.checkpoint(repLabels(minhashCollapsedRep(keyed, threshold,
+        numHashes, bands, shingleSize, materializePairs = true)), eager = true)
     } else {
       val verified = minhashPerDoc(keyed, threshold, numHashes,
         bands, shingleSize, materializePairs = true)
@@ -1037,30 +1037,29 @@ object Dedup {
       case _ => false
     }
 
-  /** The distinct directed edge table of `pairs` (`src`, `dst`),
-    * materialized by `ckpt`, and its row count. A pair with a null end is
-    * no edge: a null id joins nothing. Both directions of every pair come
-    * from one scan: a union of two projections would run the input plan
-    * once per branch. `ReuseExchange` could share at most the exchanges
-    * inside it, and those above reads of a persisted frame never match
-    * (see [[Materialize]]). The count is an `Observation` on the plan
-    * `ckpt` runs, so it rides the checkpoint job instead of running an
-    * aggregate job of its own; an empty `pairs` counts 0. Only the
+  /** The distinct directed edge table of `pairs` (`src`, `dst`), behind an
+    * eager [[Materialize.checkpoint]], and its row count. A pair with a
+    * null end is no edge: a null id joins nothing. Both directions of every
+    * pair come from one scan: a union of two projections would run the
+    * input plan once per branch. `ReuseExchange` could share at most the
+    * exchanges inside it, and those above reads of a persisted frame never
+    * match (see [[Materialize]]). The count is an `Observation` on the plan
+    * the checkpoint runs, so it rides the checkpoint job instead of running
+    * an aggregate job of its own; an empty `pairs` counts 0. Only the
     * component loop of [[connectedComponents]] builds it, from the pair
     * checkpoint that the loop's first job already filled.
     */
-  private[graft] def directedEdges(pairs: DataFrame,
-                                   ckpt: DataFrame => DataFrame): (DataFrame, Long) = {
+  private[graft] def directedEdges(pairs: DataFrame): (DataFrame, Long) = {
     // a fresh Observation per call: one can observe only one Dataset
     val counted = new org.apache.spark.sql.Observation()
-    val edges = ckpt(pairs
+    val edges = Materialize.checkpoint(pairs
       .filter(col("id_a").isNotNull && col("id_b").isNotNull)
       .select(explode(array(
         struct(col("id_a").as("src"), col("id_b").as("dst")),
         struct(col("id_b").as("src"), col("id_a").as("dst")))).as("__e"))
       .select(col("__e.src").as("src"), col("__e.dst").as("dst"))
       .distinct()
-      .observe(counted, count(lit(1)).as("n")))
+      .observe(counted, count(lit(1)).as("n")), eager = true)
     (edges, counted.get("n").asInstanceOf[Long])
   }
 
@@ -1153,48 +1152,23 @@ object Dedup {
     * (guaranteed finite — min propagation is monotone on a finite label
     * set) and `maxIters` degrades to a soft logging threshold.
     *
+    * Inside [[Materialize.reliable]] every checkpoint here is eager and
+    * survives executor loss.
+    *
     * @param pairs undirected edges as two id columns (`id_a`, `id_b`).
-    * @param checkpointDir when set, every checkpoint is a RELIABLE eager
-    *        `checkpoint` into this directory (survives executor loss — on a
-    *        real cluster `localCheckpoint` blocks live on executors and a
-    *        lost executor kills the job mid-iteration with no lineage to
-    *        recompute). A lazy reliable checkpoint would write its files in
-    *        a job of its own after the first read anyway. When None
-    *        (default), the faster executor-local `localCheckpoint`.
     * @return (id, component) for every vertex appearing in some pair,
     *         component = min id in the vertex's connected component.
     */
   def connectedComponents(pairs: DataFrame, maxIters: Int = 20,
-                          checkpointDir: Option[String] = None,
                           driverCutoff: Long = 2000000L,
                           driverCutoffBytes: Long = 256L << 20,
                           toFixpoint: Boolean = false): DataFrame = {
-    val ckpt: DataFrame => DataFrame = checkpointDir match {
-      case Some(dir) =>
-        val sc = pairs.sparkSession.sparkContext
-        // getCheckpointDir reports the qualified UUID SUBdirectory Spark
-        // created, so compare its parent with the qualified `dir` (a
-        // whole-string compare would re-set — and thereby clobber — the
-        // session-global dir every call; a substring test let `…/ck` match
-        // an earlier `…/ck2`). Checkpoint FILES outlive the job unless
-        // spark.cleaner.referenceTracking.cleanCheckpoints=true; a
-        // long-running service should enable it or sweep `dir` itself.
-        val want = new org.apache.hadoop.fs.Path(dir)
-        val qualified = want.getFileSystem(sc.hadoopConfiguration).makeQualified(want)
-        if (!sc.getCheckpointDir.exists(d =>
-              new org.apache.hadoop.fs.Path(d).getParent == qualified))
-          sc.setCheckpointDir(dir)
-        df => df.checkpoint()
-      case None => df => df.localCheckpoint()
-    }
-    // the pair table and the driver's labels are read whole by the next
-    // job, which fills them; the loop's rounds stay eager
-    val pin: DataFrame => DataFrame =
-      if (checkpointDir.isEmpty) Materialize.checkpoint else ckpt
     val idType = pairs.select(array(col("id_a"), col("id_b"))).schema.head.dataType
       .asInstanceOf[ArrayType].elementType
-    val pinned = pin(pairs.select(col("id_a").cast(idType).as("id_a"),
-      col("id_b").cast(idType).as("id_b")))
+    // the pair table and the driver's labels are read whole by the next
+    // job, which fills them; the loop's rounds stay eager
+    val pinned = Materialize.checkpoint(pairs.select(
+      col("id_a").cast(idType).as("id_a"), col("id_b").cast(idType).as("id_b")))
     val spark = pairs.sparkSession
     val schema = StructType(Seq(StructField("id", idType, nullable = false),
       StructField("component", idType, nullable = false)))
@@ -1285,14 +1259,14 @@ object Dedup {
       Materialize.releaseCheckpoint(pinned)
       // the local scan spreads its rows over up to defaultParallelism
       // partitions, so downstream joins are not serialized on one task
-      return pin(spark.createDataFrame(rows.asJava, schema))
+      return Materialize.checkpoint(spark.createDataFrame(rows.asJava, schema))
     }
-    val (edges, edgeCount) = directedEdges(pinned, ckpt)
+    val (edges, edgeCount) = directedEdges(pinned)
     Materialize.releaseCheckpoint(pinned)
     // `current` is the round's checkpointed table (held for unpersist);
     // `labels` the (id, lbl) view of it the next round joins against.
-    var current = ckpt(edges.select(col("src").as("id"), col("src").as("lbl"))
-      .distinct())
+    var current = Materialize.checkpoint(edges.select(col("src").as("id"),
+      col("src").as("lbl")).distinct(), eager = true)
     var labels = current
     var iter = 0
     var converged = false
@@ -1311,11 +1285,11 @@ object Dedup {
       // aggregate (min ignores the messages' nulls; ids are unique in
       // `labels`), so the round's single job also materializes everything
       // the convergence check needs.
-      val next = ckpt(labels
+      val next = Materialize.checkpoint(labels
         .select(col("id"), col("lbl"), col("lbl").as("prev"))
         .union(edges.join(labels, edges("src") === labels("id"))
           .select(edges("dst").as("id"), col("lbl"), lit(null).cast(idType).as("prev")))
-        .groupBy("id").agg(min("lbl").as("lbl"), min("prev").as("prev")))
+        .groupBy("id").agg(min("lbl").as("lbl"), min("prev").as("prev")), eager = true)
       // min propagation is monotone: converged when no vertex improved.
       // This scans the just-written checkpoint blocks — no recompute, no join.
       converged = next.filter(col("lbl") =!= col("prev")).isEmpty

@@ -15,22 +15,6 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** Fixed-point integer PageRank — every arithmetic step is exact long
-    * math (scaled by `scale`, per-edge floor division), so the whole power
-    * iteration replays bit-identically in any SQL engine: no FP summation
-    * order, no libm. The variant is documented, deterministic PageRank:
-    *
-    *   rank⁰(v)   = scale
-    *   rank⁺(v)   = floor(scale·(dampDen−dampNum)/dampDen)
-    *                + Σ_{(u,v)∈E} floor(rank(u)·dampNum / (dampDen·outdeg(u)))
-    *
-    * (dangling mass is dropped, per-edge flooring loses ≤1 unit per edge —
-    * both standard simplifications; ranking order matches float PageRank on
-    * non-adversarial graphs at scale=10⁶.)
-    *
-    * @param edges directed edges (`src`, `dst`), multi-edges deduplicated.
-    * @return (id, rank) for every vertex, rank in `scale` fixed-point.
-    */
   /** Exact triangle count of the undirected graph in (`src`, `dst`),
     * self-loops and duplicate/reversed edges ignored.
     *
@@ -57,13 +41,13 @@ object Graph {
     // orient by (degree, id): a < b iff (d_a, a) < (d_b, b)
     val du = deg.select(col("id").as("u"), col("d").as("du"))
     val dv = deg.select(col("id").as("v"), col("d").as("dv"))
-    val oriented = e.join(du, "u").join(dv, "v")
+    // reused three times below; plans stay constant
+    val oriented = Materialize.checkpoint(e.join(du, "u").join(dv, "v")
       .select(
         when(struct(col("du"), col("u")) < struct(col("dv"), col("v")),
           col("u")).otherwise(col("v")).as("a"),
         when(struct(col("du"), col("u")) < struct(col("dv"), col("v")),
-          col("v")).otherwise(col("u")).as("b"))
-      .localCheckpoint() // reused three times below; plans stay constant
+          col("v")).otherwise(col("u")).as("b")), eager = true)
     val o1 = oriented.select(col("a").as("x"), col("b").as("p"))
     val o2 = oriented.select(col("a").as("x"), col("b").as("q"))
     // wedges p—x—q with a deterministic p<q cut so each wedge counts once
@@ -78,26 +62,39 @@ object Graph {
       .agg(count(lit(1)).as("triangles"))
   }
 
+  /** Fixed-point integer PageRank — every arithmetic step is exact long
+    * math (scaled by `scale`, per-edge floor division), so the whole power
+    * iteration replays bit-identically in any SQL engine: no FP summation
+    * order, no libm. The variant is documented, deterministic PageRank:
+    *
+    *   rank⁰(v)   = scale
+    *   rank⁺(v)   = floor(scale·(dampDen−dampNum)/dampDen)
+    *                + Σ_{(u,v)∈E} floor(rank(u)·dampNum / (dampDen·outdeg(u)))
+    *
+    * (dangling mass is dropped, per-edge flooring loses ≤1 unit per edge —
+    * both standard simplifications; ranking order matches float PageRank on
+    * non-adversarial graphs at scale=10⁶.)
+    *
+    * @param edges directed edges (`src`, `dst`), multi-edges deduplicated.
+    * @return (id, rank) for every vertex, rank in `scale` fixed-point.
+    */
   def pageRankInt(edges: DataFrame, iters: Int, scale: Long = 1000000L,
-                  dampNum: Long = 85L, dampDen: Long = 100L,
-                  ckptEvery: Int = 2): DataFrame = {
-    require(ckptEvery >= 1, s"bad checkpoint cadence $ckptEvery")
+                  dampNum: Long = 85L, dampDen: Long = 100L): DataFrame = {
     val e = edges.select(col("src"), col("dst")).distinct()
     val deg = e.groupBy("src").agg(count(lit(1)).as("od"))
-    // Pre-partition the loop-invariant tables ON THEIR JOIN KEYS once:
-    // localCheckpoint preserves outputPartitioning, so every iteration's
-    // contribution join reads `edged` already hashpartitioned(src) and
-    // only exchanges the (small) ranks side, and the vertex left-join
-    // reads `verts` already hashpartitioned(id) against the contribution
-    // aggregate that comes out of its groupBy with the same partitioning.
-    // Without this the 10-iteration loop re-shuffled the full edge table
-    // — the largest table in the query — once per round.
-    val edged = e.join(deg, "src").repartition(col("src")).localCheckpoint()
-    val verts = edged.select(col("src").as("id"))
+    // Pre-partition the loop-invariant tables on their join keys once, so
+    // that every round's contribution join could read `edged` already
+    // hashpartitioned(src) and the vertex left-join `verts` already
+    // hashpartitioned(id). A checkpoint, local or reliable, keeps that
+    // partitioning only with AQE off: under AQE, the engine's default, the
+    // checkpointed plan reports it unknown, and each round's joins
+    // exchange both tables again unless they broadcast.
+    val edged = Materialize.checkpoint(
+      e.join(deg, "src").repartition(col("src")), eager = true)
+    val verts = Materialize.checkpoint(edged.select(col("src").as("id"))
       .union(edged.select(col("dst").as("id")))
       .distinct()
-      .repartition(col("id"))
-      .localCheckpoint()
+      .repartition(col("id")), eager = true)
     val base = scale * (dampDen - dampNum) / dampDen // exact for sane params
     var ranks = verts.withColumn("rank", lit(scale))
     var prev: Option[DataFrame] = None
@@ -108,20 +105,15 @@ object Graph {
         .groupBy("id").agg(sum("c").as("c"))
       val next = verts.join(contribs, Seq("id"), "left")
         .select(col("id"), (lit(base) + coalesce(col("c"), lit(0L))).as("rank"))
-      // Checkpoint every `ckptEvery`-th iteration plus the last (r21; was
-      // every iteration): the per-iteration eager localCheckpoint made this
-      // the battery's most write-sensitive row — each round paid one
-      // materialization job and one MEMORY_AND_DISK block write of the
-      // full rank table. Letting lazy rounds ride into the next keeps
-      // the plan constant-bounded (≤ ckptEvery rounds of join+agg — lineage
-      // still never grows with `iters`) while dividing the checkpoint jobs
-      // and block writes. The LAST round always checkpoints so the returned
-      // frame reads its own blocks and the edge/vertex checkpoints below
-      // can be released before the caller consumes the result. The default
-      // cadence (2) is the r22 sf10 ABBA winner; cadence stays a parameter
-      // so probes can re-measure on other write regimes.
-      if (i % ckptEvery == 0 || i == iters) {
-        val ck = next.localCheckpoint()
+      // Checkpoint every second round plus the last: each checkpoint is
+      // one job and one block write of the full rank table, and a lazy
+      // round riding into the next keeps the plan bounded (at most two
+      // rounds of join+agg; lineage never grows with `iters`). The LAST
+      // round always checkpoints so the returned frame reads its own
+      // blocks and the edge/vertex checkpoints below can be released
+      // before the caller consumes the result.
+      if (i % 2 == 0 || i == iters) {
+        val ck = Materialize.checkpoint(next, eager = true)
         // safe only AFTER ck materialized — the lazy round in between
         // still read prev's blocks during the checkpoint job
         prev.foreach(Materialize.releaseCheckpoint)

@@ -2,7 +2,7 @@ package graft.ops
 
 import scala.collection.mutable.ListBuffer
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -44,15 +44,26 @@ import org.apache.spark.storage.StorageLevel
   * [[fill]] runs the cache's own column-buffer RDD, once, so the stages of
   * a later query find it filled and submit nothing.
   *
-  * The same holds for checkpoints: an eager `localCheckpoint()` is a job
-  * that only writes blocks. A step whose next job reads the whole result
-  * anyway (a fold, a broadcast, a collect) checkpoints with [[checkpoint]],
-  * and that reader fills it.
+  * Every checkpoint goes through [[checkpoint]], and the same holds for
+  * it: an eager checkpoint is a job that only writes blocks, so a step
+  * whose next job reads the whole result anyway (a fold, a broadcast, a
+  * collect) checkpoints lazily, and that reader fills it.
+  *
+  * Durability is one per-thread scope, [[reliable]]. Outside it a
+  * checkpoint is `localCheckpoint(eager)`: executor blocks, which a lost
+  * executor takes with it. Inside it both forms are an eager
+  * `checkpoint()` into the session's checkpoint dir, which survives
+  * executor loss. A lazy reliable checkpoint would save nothing: Spark
+  * writes its files in a job of its own after the first read.
   */
 object Materialize {
 
   private val scopes = new ThreadLocal[List[ListBuffer[DataFrame]]] {
     override def initialValue(): List[ListBuffer[DataFrame]] = Nil
+  }
+
+  private val durable = new ThreadLocal[Boolean] {
+    override def initialValue(): Boolean = false
   }
 
   /** `df.persist(MEMORY_AND_DISK)`, recorded in the innermost open scope. */
@@ -82,24 +93,43 @@ object Materialize {
     visit(df.queryExecution.executedPlan)
   }
 
-  /** `df` checkpointed to executor-local blocks without a job of its own:
-    * `localCheckpoint(eager = false)`, the checkpoint counterpart of
-    * [[fill]]. The first job that computes every partition (a fold, a
-    * broadcast, a collect) writes the blocks, and Spark's `doCheckpoint`
-    * after that job finds none missing and runs nothing; every later read
-    * starts at the blocks. A reader that stops early (`isEmpty`, `take`)
-    * leaves partitions unwritten, and `doCheckpoint` computes those in a
-    * job of its own.
+  /** `df` checkpointed: the engine's one checkpoint call. Inside
+    * [[reliable]] it is an eager `checkpoint()`, whatever `eager` says.
+    * Outside it `eager` writes executor-local blocks in a job of its own,
+    * and the default lazy form is the checkpoint counterpart of [[fill]]:
+    * the first job that computes every partition (a fold, a broadcast, a
+    * collect) writes the blocks, and Spark's `doCheckpoint` after that job
+    * finds none missing and runs nothing; every later read starts at the
+    * blocks. A reader that stops early (`isEmpty`, `take`) leaves
+    * partitions unwritten, and `doCheckpoint` computes those in a job of
+    * its own.
     *
-    * Building it runs the query stages below `df`'s final stage (AQE
-    * materializes exchanges and broadcasts to plan it); the final stage
-    * runs in the first reader. Until then the frame reads its inputs, so a
-    * cache it reads must still be persisted when that reader runs: read it
-    * inside the cache's scope. The result keeps `df`'s size estimate, and
-    * a local relation's is exact, so a join against it still plans a
-    * broadcast.
+    * Building a lazy checkpoint runs the query stages below `df`'s final
+    * stage (AQE materializes exchanges and broadcasts to plan it); the
+    * final stage runs in the first reader. Until then the frame reads its
+    * inputs, so a cache it reads must still be persisted when that reader
+    * runs: read it inside the cache's scope. Either form keeps `df`'s size
+    * estimate, and a local relation's is exact, so a join against it still
+    * plans a broadcast. Under AQE neither form keeps `df`'s output
+    * partitioning: the checkpointed plan reports it unknown.
     */
-  def checkpoint(df: DataFrame): DataFrame = df.localCheckpoint(eager = false)
+  def checkpoint(df: DataFrame, eager: Boolean = false): DataFrame =
+    if (durable.get) df.checkpoint() else df.localCheckpoint(eager)
+
+  /** `body` with every [[checkpoint]] this thread takes in it reliable,
+    * under the session's checkpoint dir: set where the session is built,
+    * never by the scope, which throws before `body` runs without one.
+    * Checkpoint files outlive the job unless
+    * `spark.cleaner.referenceTracking.cleanCheckpoints=true`.
+    */
+  def reliable[T](body: => T): T = {
+    require(SparkSession.active.sparkContext.getCheckpointDir.isDefined,
+      "Materialize.reliable needs a checkpoint dir: set spark.checkpoint.dir " +
+        "when the session is built, or call sparkContext.setCheckpointDir")
+    val outer = durable.get
+    durable.set(true)
+    try body finally durable.set(outer)
+  }
 
   /** Walks AQE plans into their query stages and subqueries. */
   private object Stages extends AdaptiveSparkPlanHelper

@@ -464,10 +464,10 @@ object TextAnalysis {
     // one explode pass serves both N and the filtered pair table: the
     // aggregated (vocabulary²-bounded) counts are checkpointed, N is their
     // sum — without this the bigram explode would run three times (count
-    // action + pair agg + final plan)
-    val biAll = bigrams.groupBy("w1", "w2").agg(count(lit(1)).as("n_pair"))
-      .localCheckpoint()
-    val nTotal = biAll.agg(sum(col("n_pair"))).head().getLong(0)
+    // action + pair agg + final plan). With no bigram, N is 0.
+    val biAll = Materialize.checkpoint(
+      bigrams.groupBy("w1", "w2").agg(count(lit(1)).as("n_pair")), eager = true)
+    val nTotal = biAll.agg(coalesce(sum(col("n_pair")), lit(0L))).head().getLong(0)
     biAll.filter(col("n_pair") >= minCount)
       .join(uni.select(col("w").as("w1"), col("cu").as("c1")), "w1")
       .join(uni.select(col("w").as("w2"), col("cu").as("c2")), "w2")

@@ -31,4 +31,18 @@ class CollocationsSpec extends SparkSpec {
     assert(TextAnalysis.collocations(docs, "text", minCount = 5L, topK = 20)
       .count() == 0)
   }
+
+  test("collocations on input with no bigram is an empty frame of the same schema") {
+    // N, the sum over no bigram, is NULL; reading it as a long threw
+    val some = TextAnalysis.collocations(
+      Seq("new york stock exchange").toDF("text"), "text", minCount = 1L)
+    val inputs = Seq(
+      "an empty frame" -> Seq.empty[String].toDF("text"),
+      "documents of fewer than 2 tokens" -> Seq("one", "", "two", "  three  ").toDF("text"))
+    for ((what, docs) <- inputs) {
+      val out = TextAnalysis.collocations(docs, "text", minCount = 1L)
+      assert(out.collect().isEmpty, what)
+      assert(out.schema == some.schema, s"$what: ${out.schema} vs ${some.schema}")
+    }
+  }
 }

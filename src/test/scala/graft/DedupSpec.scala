@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.{Dedup, TextAnalysis}
+import graft.ops.{Dedup, Materialize, TextAnalysis}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -169,9 +169,8 @@ class DedupSpec extends SparkSpec {
     // graph's estimate it passes its share (the cutoff over the partition
     // count) and one more job reads it from the pair checkpoint; at a
     // cutoff below its own estimate the loop runs. Reliable mode
-    // (checkpointDir) takes both sides of the cutoff once per id type.
+    // (Materialize.reliable) takes both sides of the cutoff once per id type.
     val rnd = new scala.util.Random(17)
-    val dir = java.nio.file.Files.createTempDirectory("graft_cc_parity").toString
     val types = Seq[(DataType, Long => Any, (Any, Any) => Boolean)](
       (LongType, v => v, (a, b) => a.asInstanceOf[Long] < b.asInstanceOf[Long]),
       (IntegerType, v => v.toInt, (a, b) => a.asInstanceOf[Int] < b.asInstanceOf[Int]),
@@ -219,11 +218,12 @@ class DedupSpec extends SparkSpec {
         }
         Dedup.driverUnionFindBytes(2L * nn.size, width)
       }
-      def labels(bytes: Long, ck: Option[String] = None) = {
+      def labels(bytes: Long, reliable: Boolean = false) = {
         var got = Map.empty[Any, Any]
+        def run() = Dedup.connectedComponents(pairs, driverCutoffBytes = bytes,
+          toFixpoint = true).collect().map(r => r.get(0) -> r.get(1)).toMap
         val jobs = FinalPlans.jobSitesDuring(spark) {
-          got = Dedup.connectedComponents(pairs, checkpointDir = ck, driverCutoffBytes = bytes,
-            toFixpoint = true).collect().map(r => r.get(0) -> r.get(1)).toMap
+          got = if (reliable) Materialize.reliable(run()) else run()
         }
         (got, jobs)
       }
@@ -238,7 +238,7 @@ class DedupSpec extends SparkSpec {
       assert(small == want && !looped(smallJobs) && pairJobs(smallJobs) == 1, s"$at, default cutoff")
       // reliable mode, once per id type
       if (parts <= types.size) for (bytes <- Seq(256L << 20, 0L))
-        assert(labels(bytes, Some(dir))._1 == want, s"$at, reliable mode, cutoff $bytes")
+        assert(labels(bytes, reliable = true)._1 == want, s"$at, reliable mode, cutoff $bytes")
     }
   }
 
@@ -292,22 +292,21 @@ class DedupSpec extends SparkSpec {
       .select(explode(array(struct(col("id_a").as("s"), col("id_b").as("d")),
         struct(col("id_b").as("s"), col("id_a").as("d")))).as("e"))
       .select(col("e.*")).distinct()
-    spark.sparkContext.setCheckpointDir(
-      java.nio.file.Files.createTempDirectory("graft_cc_observe").toString)
-    val modes = Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
-      "localCheckpoint" -> (_.localCheckpoint()), "checkpoint" -> (_.checkpoint()))
-    for ((mode, ckpt) <- modes) {
+    for ((mode, reliable) <- Seq("local" -> false, "reliable" -> true)) {
+      def in[T](body: => T): T = if (reliable) Materialize.reliable(body) else body
       var counted = -1L
       var edges: org.apache.spark.sql.DataFrame = null
       val jobs = FinalPlans.jobsDuring(spark) {
-        val r = Dedup.directedEdges(pairs, ckpt); edges = r._1; counted = r._2
+        val r = in(Dedup.directedEdges(pairs)); edges = r._1; counted = r._2
       }
       assert(counted == 8L && edges.count() == 8L, s"$mode: counted $counted")
-      val bareJobs = FinalPlans.jobsDuring(spark)(ckpt(bare(pairs)))
+      val bareJobs = FinalPlans.jobsDuring(spark)(
+        in(Materialize.checkpoint(bare(pairs), eager = true)))
       assert(jobs == bareJobs,
         s"$mode: the count ran ${jobs - bareJobs} jobs beyond the checkpoint")
-      // an empty pair list still reports its metrics: 0, and no hang
-      val none = Await.result(Future(Dedup.directedEdges(empty, ckpt)._2), 60.seconds)
+      // an empty pair list still reports its metrics: 0, and no hang; the
+      // scope is per thread, so the future opens its own
+      val none = Await.result(Future(in(Dedup.directedEdges(empty))._2), 60.seconds)
       assert(none == 0L, s"$mode: empty pair list counted $none")
     }
   }
@@ -461,30 +460,6 @@ class DedupSpec extends SparkSpec {
       s"${wide}z" -> s"${wide}y")
     assert(looped == expect && driver == expect,
       s"loop=$looped driver=$driver")
-  }
-
-  test("connectedComponents with a reliable checkpoint dir matches localCheckpoint") {
-    // the executor-loss-safe variant (checkpoint files instead of
-    // executor-local blocks) must label identically
-    val dir = java.nio.file.Files.createTempDirectory("graft_cc_ckpt").toString
-    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("id_a", "id_b")
-    val cc = Dedup.connectedComponents(pairs, checkpointDir = Some(dir))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(cc == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L))
-    assert(java.nio.file.Files.list(java.nio.file.Paths.get(dir)).count() > 0,
-      "reliable checkpoint files should have been written under the given dir")
-    // a dir whose path is a prefix of the current one is a different dir:
-    // after a run under `…/ck2`, a run under `…/ck` must write under `ck`
-    val base = java.nio.file.Files.createTempDirectory("graft_cc_prefix")
-    val (ck, ck2) = (base.resolve("ck"), base.resolve("ck2"))
-    Dedup.connectedComponents(pairs, checkpointDir = Some(ck2.toString)).collect()
-    val viaCk = Dedup.connectedComponents(pairs, checkpointDir = Some(ck.toString))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(viaCk == cc)
-    assert(java.nio.file.Files.isDirectory(ck) &&
-      java.nio.file.Files.walk(ck).anyMatch(_.getFileName.toString.startsWith("rdd-")),
-      s"checkpoint files for $ck were written elsewhere: " +
-        spark.sparkContext.getCheckpointDir)
   }
 
   test("dropNearDuplicates keeps exactly one canonical member per cluster") {

@@ -160,4 +160,85 @@ class MaterializeSpec extends SparkSpec {
         s"$name left persisted frames behind: ${leaked.map(r => r.id -> r.getStorageLevel)}")
     }
   }
+
+  /** Whether `d` reads reliable checkpoint files (else local blocks). */
+  private def readsFiles(d: DataFrame): Boolean = {
+    val lineage = d.queryExecution.toRdd.toDebugString
+    assert(lineage.contains("CheckpointRDD"), lineage)
+    lineage.contains("ReliableCheckpointRDD")
+  }
+
+  test("reliable: eager and lazy checkpoints write rdd files") {
+    // Inside the scope both forms write under the session's checkpoint dir
+    // at once, and plan like a local checkpoint of the same frame: the same
+    // size estimate and the same exchanges above it. connectedComponents'
+    // labels are one more input: the same labels as its local run.
+    val keyed = base.repartition(col("x"))
+    def size(d: DataFrame) = d.queryExecution.optimizedPlan.stats.sizeInBytes
+    def grouped(d: DataFrame) =
+      FinalPlans.shuffleOutputs(FinalPlans.during(spark)(d.groupBy("x").count().collect()))
+    val local = Materialize.checkpoint(keyed, eager = true)
+    val inputs = Seq[(String, () => DataFrame)](
+      "eager" -> (() => Materialize.checkpoint(keyed, eager = true)),
+      "lazy" -> (() => Materialize.checkpoint(keyed)),
+      "connectedComponents" -> (() => Dedup.connectedComponents(
+        Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("id_a", "id_b"))))
+    for ((name, make) <- inputs) {
+      val before = checkpointFiles()
+      val ck = Materialize.reliable(make())
+      assert((checkpointFiles() -- before).nonEmpty, s"$name wrote no rdd-* files")
+      assert(readsFiles(ck), name)
+      if (name == "connectedComponents")
+        assert(ck.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+          Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L))
+      else assert(size(ck) == size(local) && grouped(ck) == grouped(local), name)
+    }
+  }
+
+  test("reliable: with no checkpoint dir the scope throws before any job") {
+    // the dir is session state set at build time; unset it for this test
+    val sc = spark.sparkContext
+    val saved = sc.getCheckpointDir
+    val setDir = sc.getClass.getMethod("checkpointDir_$eq", classOf[Option[_]])
+    setDir.invoke(sc, None)
+    try {
+      var entered = false
+      val jobs = FinalPlans.jobsDuring(spark) {
+        val e = intercept[IllegalArgumentException](Materialize.reliable {
+          entered = true
+          Materialize.checkpoint(frame("nodir"), eager = true)
+        })
+        assert(e.getMessage.contains("spark.checkpoint.dir") &&
+          e.getMessage.contains("setCheckpointDir"), e.getMessage)
+      }
+      assert(jobs == 0 && !entered, s"$jobs jobs; body entered: $entered")
+    } finally setDir.invoke(sc, saved)
+  }
+
+  test("reliable: a thread started inside the scope checkpoints locally") {
+    var fromThread: DataFrame = null
+    val before = checkpointFiles()
+    Materialize.reliable {
+      val t = new Thread(() =>
+        fromThread = Materialize.checkpoint(frame("thread"), eager = true))
+      t.start(); t.join()
+    }
+    assert(!readsFiles(fromThread) && checkpointFiles() == before)
+  }
+
+  test("reliable: the scope is restored when its body throws") {
+    val e = intercept[IllegalStateException] {
+      Materialize.reliable {
+        assert(readsFiles(Materialize.checkpoint(frame("in"), eager = true)))
+        throw new IllegalStateException("boom")
+      }
+    }
+    assert(e.getMessage == "boom")
+    assert(!readsFiles(Materialize.checkpoint(frame("after"), eager = true)))
+    // a nested scope that throws leaves the outer one reliable
+    Materialize.reliable {
+      intercept[IllegalStateException](Materialize.reliable(throw new IllegalStateException))
+      assert(readsFiles(Materialize.checkpoint(frame("outer"), eager = true)))
+    }
+  }
 }

@@ -18,6 +18,9 @@ object TestSpark {
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_wh_").toString)
       .config("spark.ui.enabled", "false")
+      // Materialize.reliable writes under it; the engine never sets one
+      .config("spark.checkpoint.dir",
+        java.nio.file.Files.createTempDirectory("graft_ckpt_").toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
@@ -28,4 +31,13 @@ abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** The `rdd-*` entries reliable checkpoints wrote under the session's
+    * checkpoint dir. */
+  def checkpointFiles(): Set[String] = {
+    val dir = new org.apache.hadoop.fs.Path(spark.sparkContext.getCheckpointDir.get)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(dir)) Set.empty
+    else fs.listStatus(dir).map(_.getPath.getName).filter(_.startsWith("rdd-")).toSet
+  }
 }

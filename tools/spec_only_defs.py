@@ -53,6 +53,7 @@ KEEP = {
     "MediaCodecs.encodePng": "fixture encoder for the PNG decode tests",
     "MediaCodecs.encodeJpeg": "fixture encoder for the JPEG decode test",
     "Corpus.compact": "offline small-files maintenance an operator runs between ingests",
+    "Materialize.reliable": "the durability scope a cluster deployment opens around a run",
 }
 
 # the external harness calls these
