@@ -3,7 +3,8 @@ package graft
 import graft.functions.{ArgmaxCosine, ArgminSqDist, BloomContains, DotProduct, JsonFieldTypes, LongDotProduct, LshBucket, MinHashSignature, NfcNormalize, PyJsonRender, QuantizeVector, ShingleHashes, ShingleInterSize, SimHash, TextStats, VecBytes}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** Session extensions registering graft's native Catalyst expressions.
   *
@@ -52,26 +53,14 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction((
       new FunctionIdentifier("graft_minhash"),
       new ExpressionInfo(classOf[MinHashSignature].getName, "graft_minhash"),
-      (children: Seq[Expression]) => {
-        def intArg(e: Expression, name: String): Int = e match {
-          case Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(
-            s"graft_minhash: $name must be an integer literal, got $other")
-        }
-        MinHashSignature(children.head,
-          intArg(children(1), "shingleSize"), intArg(children(2), "numHashes"))
-      }))
+      (children: Seq[Expression]) => MinHashSignature(children.head,
+        intLiteral("graft_minhash", "shingleSize", children(1), 1),
+        intLiteral("graft_minhash", "numHashes", children(2), 1))))
     ext.injectFunction((
       new FunctionIdentifier("graft_simhash"),
       new ExpressionInfo(classOf[SimHash].getName, "graft_simhash"),
-      (children: Seq[Expression]) => {
-        val bits = children(1) match {
-          case Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(
-            s"graft_simhash: bits must be an integer literal, got $other")
-        }
-        SimHash(children.head, bits)
-      }))
+      (children: Seq[Expression]) =>
+        SimHash(children.head, intLiteral("graft_simhash", "bits", children(1), 1, 32))))
     ext.injectFunction((
       new FunctionIdentifier("graft_argmax_cos"),
       new ExpressionInfo(classOf[ArgmaxCosine].getName, "graft_argmax_cos"),
@@ -87,14 +76,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction((
       new FunctionIdentifier("graft_quant"),
       new ExpressionInfo(classOf[QuantizeVector].getName, "graft_quant"),
-      (children: Seq[Expression]) => {
-        val levels = children(1) match {
-          case Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(
-            s"graft_quant: levels must be an integer literal, got $other")
-        }
-        QuantizeVector(children.head, levels)
-      }))
+      (children: Seq[Expression]) => QuantizeVector(children.head,
+        intLiteral("graft_quant", "levels", children(1), 1))))
     ext.injectFunction((
       new FunctionIdentifier("graft_bloom"),
       new ExpressionInfo(classOf[BloomContains].getName, "graft_bloom"),
@@ -114,25 +97,34 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction((
       new FunctionIdentifier("graft_shingle_hashes"),
       new ExpressionInfo(classOf[ShingleHashes].getName, "graft_shingle_hashes"),
-      (children: Seq[Expression]) => {
-        // accept any integral literal (a SQL 3::SMALLINT or 3::BIGINT means
-        // the same k), and reject k < 1 at plan time — k = 0 would silently
-        // collapse every document's shingle set to one constant hash
-        // (every pair jaccard 1.0), not error (r21 ADVICE)
-        val k = children(1) match {
-          case Literal(v: Int, _) => v
-          case Literal(v: Short, _) => v.toInt
-          case Literal(v: Byte, _) => v.toInt
-          case Literal(v: Long, _) if v.isValidInt => v.toInt
-          case other => throw new IllegalArgumentException(
-            s"graft_shingle_hashes: k must be an integer literal, got $other")
-        }
-        require(k >= 1, s"graft_shingle_hashes: k must be >= 1, got $k")
-        ShingleHashes(children.head, k)
-      }))
+      (children: Seq[Expression]) =>
+        ShingleHashes(children.head, intLiteral("graft_shingle_hashes", "k", children(1), 1))))
     ext.injectFunction((
       new FunctionIdentifier("graft_inter_size"),
       new ExpressionInfo(classOf[ShingleInterSize].getName, "graft_inter_size"),
       (children: Seq[Expression]) => ShingleInterSize(children.head, children(1))))
+  }
+
+  /** The value of `fn`'s integer argument `name`, checked against
+    * `lo..hi` when the function is resolved, before any job runs. Any
+    * constant of an integral type is accepted: `3`, `3L` and `3::SMALLINT`
+    * mean the same 3. An out-of-range size would not fail later, it would
+    * silently change the output: shingle size 0 gives every document the
+    * same MinHash signature, so every pair becomes a candidate.
+    */
+  private def intLiteral(fn: String, name: String, e: Expression,
+                         lo: Int, hi: Int = Int.MaxValue): Int = {
+    val integral = e.resolved && e.foldable && (e.dataType match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    })
+    val n = Option(if (integral) e.eval() else null)
+      .map(_.asInstanceOf[Number].longValue).filter(_.isValidInt)
+      .getOrElse(throw new IllegalArgumentException(
+        s"$fn: $name must be an integer literal, got $e")).toInt
+    require(n >= lo && n <= hi,
+      if (hi == Int.MaxValue) s"$fn: $name must be >= $lo, got $n"
+      else s"$fn: $name must be in $lo..$hi, got $n")
+    n
   }
 }

@@ -3021,8 +3021,7 @@ object Queries {
     // has no per-byte blob arithmetic.)
     ("q_multimodal_decode",
       (s: SparkSession, d: String) =>
-        Multimodal.decodeMedia(s,
-          Multimodal.demoWavTable(
+        Multimodal.decodeMedia(Multimodal.demoWavTable(
             tbl(s, d, "documents").filter(col("doc_id") < 200), "doc_id", "text"))
           .select(col("media_id"), col("format"), col("sample_rate"),
             col("n_samples"), Nums.round6(col("duration_ms")).as("duration_ms"))
@@ -3063,8 +3062,7 @@ object Queries {
     // not replicable in DuckDB's double-only list math.
     ("q_multimodal_features",
       (s: SparkSession, d: String) =>
-        Multimodal.windowEnergy(s,
-          Multimodal.demoWavTable(
+        Multimodal.windowEnergy(Multimodal.demoWavTable(
             tbl(s, d, "documents").filter(col("doc_id") < 100), "doc_id", "text"),
           k = 4)
           .orderBy("media_id", "window"),
@@ -3091,8 +3089,7 @@ object Queries {
     // same per-char ascii() ground as q_multimodal_features.
     ("q_multimodal_mulaw",
       (s: SparkSession, d: String) =>
-        Multimodal.windowEnergy16(s,
-          Multimodal.demoMulawTable(
+        Multimodal.windowEnergy16(Multimodal.demoMulawTable(
             tbl(s, d, "documents").filter(col("doc_id") < 100), "doc_id", "text"),
           k = 4)
           .orderBy("media_id", "window"),
@@ -3125,8 +3122,7 @@ object Queries {
     // sample — both oracle-checked here, plus the exact duration double.
     ("q_multimodal_adpcm",
       (s: SparkSession, d: String) =>
-        Multimodal.audioInfo(s,
-          Multimodal.demoAdpcmTable(
+        Multimodal.audioInfo(Multimodal.demoAdpcmTable(
             tbl(s, d, "documents").filter(col("doc_id") < 100), "doc_id", "text"))
           .filter(col("n_samples") > 0)
           .orderBy("media_id"),
@@ -3150,8 +3146,7 @@ object Queries {
     // the container signature.
     ("q_multimodal_flac",
       (s: SparkSession, d: String) =>
-        Multimodal.flacInfo(s,
-          Multimodal.demoFlacTable(
+        Multimodal.flacInfo(Multimodal.demoFlacTable(
             tbl(s, d, "documents").filter(col("doc_id") < 100), "doc_id", "text"))
           .filter(col("n_samples") > 0)
           .orderBy("media_id"),

@@ -320,21 +320,9 @@ object MediaCodecs {
     * rule as [[wavWindowEnergy]]. The μ-law variant is fully
     * oracle-replayable (closed-form decode, see [[MuLawTable]]). */
   def wavWindowEnergy16(bytes: Array[Byte], k: Int): Option[Array[(Long, Long)]] =
-    decodeWavSamples(bytes) match {
-      case Some((_, samples)) if samples.nonEmpty =>
-        val n = samples.length
-        val sumSq = new Array[Long](k)
-        val cnt = new Array[Long](k)
-        var i = 0
-        while (i < n) {
-          val w = (i.toLong * k / n).toInt
-          val d = samples(i).toLong
-          sumSq(w) += d * d
-          cnt(w) += 1
-          i += 1
-        }
-        Some(Array.tabulate(k)(w => (sumSq(w), cnt(w))))
-      case _ => None
+    decodeWavSamples(bytes).collect {
+      case (_, samples) if samples.nonEmpty =>
+        windowSums(samples.length, k)(samples(_).toLong)
     }
 
   /** RMS over `k` equal sample windows — a real per-window audio feature
@@ -342,29 +330,23 @@ object MediaCodecs {
     */
   def wavWindowRms(bytes: Array[Byte], k: Int): Array[Float] = {
     val out = new Array[Float](k)
-    decodeWav(bytes) match {
-      case Some(info)
-          if info.codec == "pcm" && info.bitsPerSample == 8 && info.nSamples > 0 =>
-        // data chunk offset: re-walk (cheap; payloads are already in memory)
-        val dataOff = findChunk(bytes, "data").getOrElse(return out)
-        val n = info.nSamples
-        val sumSq = new Array[Double](k)
-        val cnt = new Array[Long](k)
-        var i = 0
-        while (i < n) {
-          val w = (i.toLong * k / n).toInt
-          val v = ((bytes(dataOff + i) & 0xff) - 128) / 128.0
-          sumSq(w) += v * v; cnt(w) += 1
-          i += 1
-        }
-        var w = 0
-        while (w < k) {
-          out(w) = if (cnt(w) == 0) 0f else math.sqrt(sumSq(w) / cnt(w)).toFloat
-          w += 1
-        }
-        out
-      case _ => out
+    for ((dataOff, n) <- pcm8Data(bytes)) {
+      val sumSq = new Array[Double](k)
+      val cnt = new Array[Long](k)
+      var i = 0
+      while (i < n) {
+        val w = (i.toLong * k / n).toInt
+        val v = ((bytes(dataOff + i) & 0xff) - 128) / 128.0
+        sumSq(w) += v * v; cnt(w) += 1
+        i += 1
+      }
+      var w = 0
+      while (w < k) {
+        out(w) = if (cnt(w) == 0) 0f else math.sqrt(sumSq(w) / cnt(w)).toFloat
+        w += 1
+      }
     }
+    out
   }
 
   /** Integer-exact per-window energy over 8-bit mono PCM: window w of `k`
@@ -376,37 +358,34 @@ object MediaCodecs {
     * index, same ⌊i·k/n⌋ rule as wavWindowRms.
     */
   def wavWindowEnergy(bytes: Array[Byte], k: Int): Option[Array[(Long, Long)]] =
-    decodeWav(bytes) match {
-      case Some(info)
-          if info.codec == "pcm" && info.bitsPerSample == 8 && info.nSamples > 0 =>
-        findChunk(bytes, "data").map { dataOff =>
-          val n = info.nSamples
-          val sumSq = new Array[Long](k)
-          val cnt = new Array[Long](k)
-          var i = 0
-          while (i < n) {
-            val w = (i.toLong * k / n).toInt
-            val d = (bytes(dataOff + i) & 0xff) - 128
-            sumSq(w) += d.toLong * d
-            cnt(w) += 1
-            i += 1
-          }
-          Array.tabulate(k)(w => (sumSq(w), cnt(w)))
-        }
-      case _ => None
+    pcm8Data(bytes).map { case (dataOff, n) =>
+      windowSums(n, k)(i => ((bytes(dataOff + i) & 0xff) - 128).toLong)
     }
 
-  private def findChunk(bytes: Array[Byte], id: String): Option[Int] = {
-    val b = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    var off = 12
-    while (off + 8 <= bytes.length) {
-      val tag = new String(bytes, off, 4, "ASCII")
-      val len = b.getInt(off + 4)
-      if (len < 0 || off + 8 + len > bytes.length) return None
-      if (tag == id) return Some(off + 8)
-      off += 8 + len + (len & 1)
+  /** (data offset, sample count) of an 8-bit PCM WAV holding at least one
+    * sample, from the [[wavLayout]] walk [[decodeWav]] also runs. The count
+    * is [[decodeWav]]'s `nSamples` (frames), so the 8-bit window features
+    * read the first `count` data bytes. */
+  private def pcm8Data(bytes: Array[Byte]): Option[(Int, Int)] =
+    wavLayout(bytes).collect {
+      case WavLayout(1, channels, _, 8, _, dOff, dLen) if dLen / channels > 0 =>
+        (dOff, dLen / channels)
     }
-    None
+
+  /** Per window of `k`: Σ d(i)² and the sample count, sample i of `n` in
+    * window ⌊i·k/n⌋ — the one window loop of both energy features. */
+  private def windowSums(n: Int, k: Int)(d: Int => Long): Array[(Long, Long)] = {
+    val sumSq = new Array[Long](k)
+    val cnt = new Array[Long](k)
+    var i = 0
+    while (i < n) {
+      val w = (i.toLong * k / n).toInt
+      val v = d(i)
+      sumSq(w) += v * v
+      cnt(w) += 1
+      i += 1
+    }
+    Array.tabulate(k)(w => (sumSq(w), cnt(w)))
   }
 
   // ------------------------------------------------------------------ BMP
@@ -441,13 +420,10 @@ object MediaCodecs {
     buf.array()
   }
 
-  /** Parse a 24-bit uncompressed BITMAPINFOHEADER BMP; channel means over
-    * all pixels.
-    */
   /** Validated 24-bit-BMP header: (width, height signed as stored, dataOff,
     * stride). All size math in Long so hostile headers (width·3 wrapping
     * Int, height = Int.MinValue) fail the bounds check instead of passing a
-    * negative stride — shared by [[decodeBmp]] and [[decodeBmpGray]].
+    * negative stride — shared by [[decodeBmp]] and [[decodeBmpRgb]].
     */
   private def bmpHeader(bytes: Array[Byte]): Option[(Int, Int, Int, Int)] = {
     if (bytes == null || bytes.length < 54) return None
@@ -468,6 +444,9 @@ object MediaCodecs {
     Some((width, height, dataOff, stride.toInt))
   }
 
+  /** Parse a 24-bit uncompressed BITMAPINFOHEADER BMP; channel means over
+    * all pixels.
+    */
   def decodeBmp(bytes: Array[Byte]): Option[BmpInfo] = {
     val (width, height, dataOff, stride) = bmpHeader(bytes).getOrElse(return None)
     val bpp = 24
@@ -489,35 +468,9 @@ object MediaCodecs {
     Some(BmpInfo(width, h, bpp, sumR / n, sumG / n, sumB / n))
   }
 
-  /** 24-bit BMP → top-down row-major integer grayscale (ITU-R BT.601
-    * integer luma: (299·R + 587·G + 114·B) div 1000 — exact, so a gray
-    * BMP (R=G=B=v) decodes back to exactly v). Handles both bottom-up
-    * (positive height) and top-down (negative height) rows.
-    */
-  def decodeBmpGray(bytes: Array[Byte]): Option[(Int, Int, Array[Int])] = {
-    val (width, height, dataOff, stride) = bmpHeader(bytes).getOrElse(return None)
-    val h = math.abs(height)
-    val gray = new Array[Int](width * h)
-    var dy = 0
-    while (dy < h) {
-      val iy = if (height > 0) h - 1 - dy else dy // disk row → image row
-      val row = dataOff + dy * stride
-      var x = 0
-      while (x < width) {
-        val bb = bytes(row + x * 3) & 0xff
-        val g = bytes(row + x * 3 + 1) & 0xff
-        val r = bytes(row + x * 3 + 2) & 0xff
-        gray(iy * width + x) = (299 * r + 587 * g + 114 * bb) / 1000
-        x += 1
-      }
-      dy += 1
-    }
-    Some((width, h, gray))
-  }
-
   /** 24-bit BMP → top-down row-major packed `0xRRGGBB` pixels — the exact
-    * integer parser (oracle-replayable), with the same bottom-up/top-down
-    * row handling as [[decodeBmpGray]].
+    * integer parser (oracle-replayable). Handles both bottom-up (positive
+    * height) and top-down (negative height) rows.
     */
   def decodeBmpRgb(bytes: Array[Byte]): Option[(Int, Int, Array[Int])] = {
     val (width, height, dataOff, stride) = bmpHeader(bytes).getOrElse(return None)
@@ -541,13 +494,14 @@ object MediaCodecs {
   }
 
   /** Packed-`0xRRGGBB` pixels of ANY supported image payload: the exact
-    * BMP parser first, else the JDK ImageIO path — the color counterpart
-    * of [[decodeImageGray]] (resize and other pixel transforms must not
-    * collapse color to luma). Never throws.
+    * BMP parser first, else the JDK ImageIO path (PNG/JPEG/GIF). Resize and
+    * other pixel transforms read these, never a luma collapse. Never throws.
     */
   def decodeImageRgb(bytes: Array[Byte]): Option[(Int, Int, Array[Int])] =
     decodeBmpRgb(bytes).orElse {
       try {
+        // memory-backed input stream (the default FileCache one writes a
+        // temp file per payload on the executor) + bulk per-row getRGB
         val img = javax.imageio.ImageIO.read(
           new javax.imageio.stream.MemoryCacheImageInputStream(
             new java.io.ByteArrayInputStream(bytes)))
@@ -565,45 +519,26 @@ object MediaCodecs {
           while (i < px.length) { px(i) &= 0xffffff; i += 1 }
           Some((w, h, px))
         }
-      } catch { case scala.util.control.NonFatal(_) => None }
-    }
-
-  /** Grayscale pixels of ANY supported image payload: the exact integer
-    * BMP parser first (oracle-replayable), else the JDK ImageIO path
-    * (PNG/JPEG/GIF) with the same integer luma — so perceptual hashing
-    * covers every format [[decodeImage]] sniffs. Never throws.
-    */
-  def decodeImageGray(bytes: Array[Byte]): Option[(Int, Int, Array[Int])] =
-    decodeBmpGray(bytes).orElse {
-      try {
-        // memory-backed input stream (the default FileCache one writes a
-        // temp file per payload on the executor) + bulk per-row getRGB
-        val img = javax.imageio.ImageIO.read(
-          new javax.imageio.stream.MemoryCacheImageInputStream(
-            new java.io.ByteArrayInputStream(bytes)))
-        if (img == null || img.getWidth <= 0 || img.getHeight <= 0 ||
-            img.getWidth.toLong * img.getHeight > Int.MaxValue) None
-        else {
-          val (w, h) = (img.getWidth, img.getHeight)
-          val gray = new Array[Int](w * h)
-          val row = new Array[Int](w)
-          var y = 0
-          while (y < h) {
-            img.getRGB(0, y, w, 1, row, 0, w)
-            var x = 0
-            while (x < w) {
-              val rgb = row(x)
-              gray(y * w + x) = (299 * ((rgb >> 16) & 0xff) +
-                587 * ((rgb >> 8) & 0xff) + 114 * (rgb & 0xff)) / 1000
-              x += 1
-            }
-            y += 1
-          }
-          Some((w, h, gray))
-        }
         // NonFatal only: an ImageIO OutOfMemoryError must fail the task,
         // not silently drop the image
       } catch { case scala.util.control.NonFatal(_) => None }
+    }
+
+  /** Grayscale pixels of ANY supported image payload: the ITU-R BT.601
+    * integer luma (299·R + 587·G + 114·B) div 1000 of [[decodeImageRgb]]'s
+    * pixels, converted in place. Exact, so a gray pixel (R=G=B=v) decodes
+    * back to exactly v, and oracle-replayable on BMP; perceptual hashing
+    * covers every format [[decodeImage]] sniffs. Never throws.
+    */
+  def decodeImageGray(bytes: Array[Byte]): Option[(Int, Int, Array[Int])] =
+    decodeImageRgb(bytes).map { case (w, h, px) =>
+      var i = 0
+      while (i < px.length) {
+        val p = px(i)
+        px(i) = (299 * ((p >> 16) & 0xff) + 587 * ((p >> 8) & 0xff) + 114 * (p & 0xff)) / 1000
+        i += 1
+      }
+      (w, h, px)
     }
 
   /** Synthesize a JPEG via the JDK encoder (fixture generation). */

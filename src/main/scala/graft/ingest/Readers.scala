@@ -218,27 +218,7 @@ object Readers {
     * `q_ingest_txt_encodings` fixture, so a future detector upgrade shows
     * up as a deliberate oracle change, not drift.
     */
-  /** Test accessor for the decode ladder (PropertySpec lives in `graft`). */
-  private[graft] def decodeFallbackForTest(bytes: Array[Byte]): String =
-    decodeFallback(bytes)
-
-  /** Fuzz accessor: the structured parsers must never throw on junk. */
-  private[graft] def parseForTest(bytes: Array[Byte]): Unit = {
-    parseXmlRecords(bytes)
-    parseDocxParagraphs(bytes)
-    parseHtml(bytes)
-    parseWarcResponses(bytes)
-  }
-
-  /** Test accessor for the HTML scanner (ReadersSpec lives in `graft`). */
-  private[graft] def parseForTestHtml(bytes: Array[Byte]): (String, String) =
-    parseHtml(bytes)
-
-  /** Test accessor for the WARC scanner. */
-  private[graft] def parseForTestWarc(bytes: Array[Byte]): Seq[(String, Int, String)] =
-    parseWarcResponses(bytes)
-
-  private[ingest] def decodeFallback(bytes: Array[Byte]): String = {
+  private[graft] def decodeFallback(bytes: Array[Byte]): String = {
     def b(i: Int): Int = bytes(i) & 0xff
     // BOM sniff
     if (bytes.length >= 3 && b(0) == 0xef && b(1) == 0xbb && b(2) == 0xbf)
@@ -588,7 +568,7 @@ object Readers {
     * batch ingest contract — same ethos as PERMISSIVE json/csv and
     * `txtSafe`).
     */
-  private[ingest] def parseXmlRecords(bytes: Array[Byte]): Seq[Map[String, String]] =
+  private[graft] def parseXmlRecords(bytes: Array[Byte]): Seq[Map[String, String]] =
     try parseXmlRecordsStrict(bytes)
     catch { case scala.util.control.NonFatal(_) => Seq.empty }
 
@@ -643,7 +623,7 @@ object Readers {
   /** A malformed DOCX (broken zip / invalid inner XML) yields zero
     * paragraphs instead of failing the batch — see [[parseXmlRecords]].
     */
-  private[ingest] def parseDocxParagraphs(bytes: Array[Byte]): Seq[String] =
+  private[graft] def parseDocxParagraphs(bytes: Array[Byte]): Seq[String] =
     try parseDocxParagraphsStrict(bytes)
     catch { case scala.util.control.NonFatal(_) => Seq.empty }
 
@@ -742,7 +722,7 @@ object Readers {
     * contract as [[parseXmlRecords]]. (The scanner itself has no failure
     * path; the guard covers decode pathologies.)
     */
-  private[ingest] def parseHtml(bytes: Array[Byte]): (String, String) =
+  private[graft] def parseHtml(bytes: Array[Byte]): (String, String) =
     try parseHtmlStrict(bytes)
     catch { case scala.util.control.NonFatal(_) => ("", "") }
 
@@ -869,7 +849,7 @@ object Readers {
       .select(col("url"), col("doc._1").as("title"), col("doc._2").as("content"))
   }
 
-  private[ingest] def parseWarcResponses(bytes: Array[Byte]): Seq[(String, Int, String)] =
+  private[graft] def parseWarcResponses(bytes: Array[Byte]): Seq[(String, Int, String)] =
     try parseWarcStrict(bytes)
     catch { case scala.util.control.NonFatal(_) => Seq.empty }
 

@@ -756,7 +756,7 @@ object Dedup {
   }
 
   /** The segment self-join core of [[bandedHammingJoin]] (wide-fingerprint
-    * path; also reachable directly for A/B probes).
+    * path).
     */
   private[graft] def segmentedHammingJoin(hashes: DataFrame, bits: Int,
                                           maxDistance: Int): DataFrame = {

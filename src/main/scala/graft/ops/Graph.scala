@@ -82,19 +82,10 @@ object Graph {
                   dampNum: Long = 85L, dampDen: Long = 100L): DataFrame = {
     val e = edges.select(col("src"), col("dst")).distinct()
     val deg = e.groupBy("src").agg(count(lit(1)).as("od"))
-    // Pre-partition the loop-invariant tables on their join keys once, so
-    // that every round's contribution join could read `edged` already
-    // hashpartitioned(src) and the vertex left-join `verts` already
-    // hashpartitioned(id). A checkpoint, local or reliable, keeps that
-    // partitioning only with AQE off: under AQE, the engine's default, the
-    // checkpointed plan reports it unknown, and each round's joins
-    // exchange both tables again unless they broadcast.
-    val edged = Materialize.checkpoint(
-      e.join(deg, "src").repartition(col("src")), eager = true)
+    val edged = Materialize.checkpoint(e.join(deg, "src"), eager = true)
     val verts = Materialize.checkpoint(edged.select(col("src").as("id"))
       .union(edged.select(col("dst").as("id")))
-      .distinct()
-      .repartition(col("id")), eager = true)
+      .distinct(), eager = true)
     val base = scale * (dampDen - dampNum) / dampDen // exact for sane params
     var ranks = verts.withColumn("rank", lit(scale))
     var prev: Option[DataFrame] = None

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -16,8 +16,8 @@ import org.apache.spark.sql.types._
   * FIXED/LPC/Rice/stereo-decorrelation, [[graft.functions.Flac]]).
   * PERCEPTUAL compressed-audio codecs (MP3/AAC...) are not decoded — the
   * JDK genuinely ships none — and [[decodeMedia]] flags such payloads
-  * `unknown`. Every decode path shares one batch shape: mapPartitions,
-  * per-partition init, no per-row driver work.
+  * `unknown`. Every decode path shares one batch shape, [[mapPayload]]:
+  * mapPartitions, per-partition init, no per-row driver work.
   */
 object Multimodal {
 
@@ -42,38 +42,28 @@ object Multimodal {
     * the hot path); decode is the operator under test.
     */
   def demoWavTable(df: DataFrame, idCol: String, textCol: String,
-                   sampleRate: Int = 8000): DataFrame = {
-    val wav = udf((t: String) => graft.functions.MediaCodecs.encodeWav(
-      t.getBytes(java.nio.charset.StandardCharsets.UTF_8), sampleRate))
-    df.select(col(idCol).cast("long").as("media_id"),
-      wav(col(textCol)).as("payload"))
-  }
+                   sampleRate: Int = 8000): DataFrame =
+    demoAudioTable(df, idCol, textCol)(
+      graft.functions.MediaCodecs.encodeWav(_, sampleRate))
 
   /** Demo μ-law AUDIO table: each row's text framed as a REAL G.711 μ-law
     * WAV (format 7) whose codewords ARE the utf-8 bytes — decode is the
     * operator under test and, because μ-law decode is closed-form integer
     * arithmetic, fully SQL-oracle-replayable from the source text. */
   def demoMulawTable(df: DataFrame, idCol: String, textCol: String,
-                     sampleRate: Int = 8000): DataFrame = {
-    val wav = udf((t: String) => graft.functions.MediaCodecs.encodeWavMulaw(
-      t.getBytes(java.nio.charset.StandardCharsets.UTF_8), sampleRate))
-    df.select(col(idCol).cast("long").as("media_id"),
-      wav(col(textCol)).as("payload"))
-  }
+                     sampleRate: Int = 8000): DataFrame =
+    demoAudioTable(df, idCol, textCol)(
+      graft.functions.MediaCodecs.encodeWavMulaw(_, sampleRate))
 
   /** Demo IMA ADPCM AUDIO table: each row's text rendered as 16-bit samples
     * ((byte−128)·256) and compressed through the REAL IMA/DVI4 encoder —
     * a valid format-17 WAV any ADPCM-aware reader decodes. */
   def demoAdpcmTable(df: DataFrame, idCol: String, textCol: String,
-                     sampleRate: Int = 8000): DataFrame = {
-    val wav = udf { (t: String) =>
-      val samples = t.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        .map(b => (((b & 0xff) - 128) * 256).toShort)
-      graft.functions.MediaCodecs.encodeWavAdpcm(samples, sampleRate)
+                     sampleRate: Int = 8000): DataFrame =
+    demoAudioTable(df, idCol, textCol) { bytes =>
+      graft.functions.MediaCodecs.encodeWavAdpcm(
+        bytes.map(b => (((b & 0xff) - 128) * 256).toShort), sampleRate)
     }
-    df.select(col(idCol).cast("long").as("media_id"),
-      wav(col(textCol)).as("payload"))
-  }
 
   /** Demo FLAC AUDIO table: each row's text rendered as 16-bit samples
     * ((byte−128)·256, the ADPCM fixture waveform) and compressed through
@@ -81,14 +71,19 @@ object Multimodal {
     * predictors, Rice residuals, CRC-8/16, STREAMINFO MD5). Lossless, so
     * the decode side is checkable sample-exactly. */
   def demoFlacTable(df: DataFrame, idCol: String, textCol: String,
-                    sampleRate: Int = 8000): DataFrame = {
-    val flac = udf { (t: String) =>
-      val samples = t.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        .map(b => ((b & 0xff) - 128) * 256)
-      graft.functions.Flac.encode(samples, sampleRate)
+                    sampleRate: Int = 8000): DataFrame =
+    demoAudioTable(df, idCol, textCol) { bytes =>
+      graft.functions.Flac.encode(bytes.map(b => ((b & 0xff) - 128) * 256), sampleRate)
     }
+
+  /** (media_id, payload) with payload = `encode` of the text's utf-8 bytes:
+    * the one fixture builder behind the demo audio tables. */
+  private def demoAudioTable(df: DataFrame, idCol: String, textCol: String)(
+      encode: Array[Byte] => Array[Byte]): DataFrame = {
+    val payload = udf((t: String) =>
+      encode(t.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
     df.select(col(idCol).cast("long").as("media_id"),
-      flac(col(textCol)).as("payload"))
+      payload(col(textCol)).as("payload"))
   }
 
   val flacInfoSchema: StructType = StructType(Seq(
@@ -112,28 +107,16 @@ object Multimodal {
     * in SQL). `md5_ok` re-hashes the decoded PCM against the STREAMINFO
     * signature. Non-FLAC payloads yield no rows. Same scale shape as every
     * decoder: mapPartitions, per-row sequential work, no shuffle. */
-  def flacInfo(spark: SparkSession, media: DataFrame): DataFrame = {
-    import graft.functions.Flac
-    val enc = org.apache.spark.sql.Encoders.row(flacInfoSchema)
-    val idIdx = media.schema.fieldIndex("media_id")
-    val payloadIdx = media.schema.fieldIndex("payload")
-    media.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val id = r.getLong(idIdx)
-        val bytes = r.getAs[Array[Byte]](payloadIdx)
-        Flac.decode(bytes) match {
-          case Some((info, chans)) =>
-            val c0 = if (chans.isEmpty) Array.emptyIntArray else chans(0)
-            var sum = 0L; var wsum = 0L; var i = 0
-            while (i < c0.length) { sum += c0(i); wsum += (i + 1L) * c0(i); i += 1 }
-            Iterator.single(Row(id, "audio/flac", info.sampleRate,
-              info.channels, info.bitsPerSample, c0.length,
-              if (c0.isEmpty) null else Int.box(c0(0)), sum, wsum, info.md5Ok))
-          case None => Iterator.empty
-        }
+  def flacInfo(media: DataFrame): DataFrame =
+    mapPayload(media) { (id, bytes) =>
+      graft.functions.Flac.decode(bytes).map { case (info, chans) =>
+        val c0 = if (chans.isEmpty) Array.emptyIntArray else chans(0)
+        var sum = 0L; var wsum = 0L; var i = 0
+        while (i < c0.length) { sum += c0(i); wsum += (i + 1L) * c0(i); i += 1 }
+        Row(id, "audio/flac", info.sampleRate, info.channels, info.bitsPerSample,
+          c0.length, if (c0.isEmpty) null else Int.box(c0(0)), sum, wsum, info.md5Ok)
       }
-    }(enc)
-  }
+    }(Encoders.row(flacInfoSchema))
 
   val decodedSchema: StructType = StructType(Seq(
     StructField("media_id", LongType, nullable = false),
@@ -156,40 +139,33 @@ object Multimodal {
     * format="unknown" with null fields — flagged, never failing the batch.
     * mapPartitions keeps the decode loop executor-side and batch-shaped.
     */
-  def decodeMedia(spark: SparkSession, media: DataFrame): DataFrame = {
+  def decodeMedia(media: DataFrame): DataFrame = {
     import graft.functions.MediaCodecs
-    val enc = org.apache.spark.sql.Encoders.row(decodedSchema)
-    val idIdx = media.schema.fieldIndex("media_id")
-    val payloadIdx = media.schema.fieldIndex("payload")
-    media.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(idIdx)
-        val bytes = r.getAs[Array[Byte]](payloadIdx)
-        MediaCodecs.decodeWav(bytes) match {
-          case Some(w) =>
-            val fmt = w.codec match {
-              case "mulaw"     => "audio/mulaw"
-              case "ima_adpcm" => "audio/adpcm"
-              case _           => "audio/wav"
-            }
-            Row(id, fmt, w.sampleRate, w.channels, w.nSamples,
-              w.durationMs, w.rms, null, null, null, null, null)
-          case None => MediaCodecs.decodeBmp(bytes) match {
-            case Some(b) =>
-              Row(id, "image/bmp", null, null, null, null, null,
-                b.width, b.height, b.meanR, b.meanG, b.meanB)
-            case None => MediaCodecs.decodeImage(bytes) match {
-              case Some((fmt, m)) =>
-                Row(id, fmt, null, null, null, null, null,
-                  m.width, m.height, m.meanR, m.meanG, m.meanB)
-              case None =>
-                Row(id, "unknown", null, null, null, null, null,
-                  null, null, null, null, null)
-            }
+    mapPayload(media) { (id, bytes) =>
+      Some(MediaCodecs.decodeWav(bytes) match {
+        case Some(w) =>
+          val fmt = w.codec match {
+            case "mulaw"     => "audio/mulaw"
+            case "ima_adpcm" => "audio/adpcm"
+            case _           => "audio/wav"
+          }
+          Row(id, fmt, w.sampleRate, w.channels, w.nSamples,
+            w.durationMs, w.rms, null, null, null, null, null)
+        case None => MediaCodecs.decodeBmp(bytes) match {
+          case Some(b) =>
+            Row(id, "image/bmp", null, null, null, null, null,
+              b.width, b.height, b.meanR, b.meanG, b.meanB)
+          case None => MediaCodecs.decodeImage(bytes) match {
+            case Some((fmt, m)) =>
+              Row(id, fmt, null, null, null, null, null,
+                m.width, m.height, m.meanR, m.meanG, m.meanB)
+            case None =>
+              Row(id, "unknown", null, null, null, null, null,
+                null, null, null, null, null)
           }
         }
-      }
-    }(enc)
+      })
+    }(Encoders.row(decodedSchema))
   }
 
   val windowEnergySchema: StructType = StructType(Seq(
@@ -208,24 +184,8 @@ object Multimodal {
     * post-hoc scalar when a float is wanted). Same mapPartitions batch shape
     * as the other decode paths; non-WAV payloads yield no rows.
     */
-  def windowEnergy(spark: SparkSession, media: DataFrame, k: Int = 4): DataFrame = {
-    import graft.functions.MediaCodecs
-    val enc = org.apache.spark.sql.Encoders.row(windowEnergySchema)
-    val idIdx = media.schema.fieldIndex("media_id")
-    val payloadIdx = media.schema.fieldIndex("payload")
-    media.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val id = r.getLong(idIdx)
-        val bytes = r.getAs[Array[Byte]](payloadIdx)
-        MediaCodecs.wavWindowEnergy(bytes, k) match {
-          case Some(windows) => windows.iterator.zipWithIndex.map {
-            case ((sq, n), w) => Row(id, w, sq, n)
-          }
-          case None => Iterator.empty
-        }
-      }
-    }(enc)
-  }
+  def windowEnergy(media: DataFrame, k: Int = 4): DataFrame =
+    windowRows(media)(graft.functions.MediaCodecs.wavWindowEnergy(_, k))
 
   /** Integer-exact windowed energy over the DECODED 16-bit samples of
     * compressed-audio WAVs (μ-law / IMA ADPCM): `k` rows of
@@ -234,24 +194,18 @@ object Multimodal {
     * closed-form integer arithmetic, so a DuckDB oracle recomputes it
     * bit-identically from the source text. Same mapPartitions batch shape;
     * non-decodable payloads yield no rows. */
-  def windowEnergy16(spark: SparkSession, media: DataFrame, k: Int = 4): DataFrame = {
-    import graft.functions.MediaCodecs
-    val enc = org.apache.spark.sql.Encoders.row(windowEnergySchema)
-    val idIdx = media.schema.fieldIndex("media_id")
-    val payloadIdx = media.schema.fieldIndex("payload")
-    media.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val id = r.getLong(idIdx)
-        val bytes = r.getAs[Array[Byte]](payloadIdx)
-        MediaCodecs.wavWindowEnergy16(bytes, k) match {
-          case Some(windows) => windows.iterator.zipWithIndex.map {
-            case ((sq, n), w) => Row(id, w, sq, n)
-          }
-          case None => Iterator.empty
-        }
-      }
-    }(enc)
-  }
+  def windowEnergy16(media: DataFrame, k: Int = 4): DataFrame =
+    windowRows(media)(graft.functions.MediaCodecs.wavWindowEnergy16(_, k))
+
+  /** One [[windowEnergySchema]] row per (window, Σ sample², count) that
+    * `windows` returns for a payload; payloads it declines yield no rows. */
+  private def windowRows(media: DataFrame)(
+      windows: Array[Byte] => Option[Array[(Long, Long)]]): DataFrame =
+    mapPayload(media) { (id, bytes) =>
+      windows(bytes).iterator.flatMap(_.iterator.zipWithIndex.map {
+        case ((sq, n), w) => Row(id, w, sq, n)
+      })
+    }(Encoders.row(windowEnergySchema))
 
   val audioInfoSchema: StructType = StructType(Seq(
     StructField("media_id", LongType, nullable = false),
@@ -267,26 +221,14 @@ object Multimodal {
     * this is the decode-correctness probe an oracle CAN state in SQL even
     * though the full nibble stream is sequential-stateful. Non-audio
     * payloads yield no rows. */
-  def audioInfo(spark: SparkSession, media: DataFrame): DataFrame = {
-    import graft.functions.MediaCodecs
-    val enc = org.apache.spark.sql.Encoders.row(audioInfoSchema)
-    val idIdx = media.schema.fieldIndex("media_id")
-    val payloadIdx = media.schema.fieldIndex("payload")
-    media.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val id = r.getLong(idIdx)
-        val bytes = r.getAs[Array[Byte]](payloadIdx)
-        MediaCodecs.decodeWavSamples(bytes) match {
-          case Some((info, samples)) =>
-            val fmt = if (info.codec == "mulaw") "audio/mulaw" else "audio/adpcm"
-            Iterator.single(Row(id, fmt, info.sampleRate, info.nSamples,
-              if (samples.isEmpty) null else Int.box(samples(0).toInt),
-              info.durationMs))
-          case None => Iterator.empty
-        }
+  def audioInfo(media: DataFrame): DataFrame =
+    mapPayload(media) { (id, bytes) =>
+      graft.functions.MediaCodecs.decodeWavSamples(bytes).map { case (info, samples) =>
+        val fmt = if (info.codec == "mulaw") "audio/mulaw" else "audio/adpcm"
+        Row(id, fmt, info.sampleRate, info.nSamples,
+          if (samples.isEmpty) null else Int.box(samples(0).toInt), info.durationMs)
       }
-    }(enc)
-  }
+    }(Encoders.row(audioInfoSchema))
 
   /** Frame sampling (video-shaped): split the payload into `meta.n_frames`
     * chunks, emit every `stride`-th chunk as (media_id, frame_no, frame_md5).
@@ -301,28 +243,18 @@ object Multimodal {
       .select(col("media_id"),
         posexplode(transform(
           filter(sequence(lit(0), col("n_frames") - 1), f => f % stride === 0),
-          f => md5(substring_binary(col("payload"), f * col("flen") + 1, col("flen"))))
+          f => md5(col("payload").substr(f * col("flen") + 1, col("flen"))))
         ).as(Seq("frame_no", "frame_md5")))
   }
 
-  // substring over binary with column args: route through base64 stability —
-  // Spark's substring(Column, Int, Int) doesn't take columns, so use expr.
-  private def substring_binary(payload: org.apache.spark.sql.Column,
-                               pos: org.apache.spark.sql.Column,
-                               len: org.apache.spark.sql.Column) = {
-    // substr(Column, Column) is available on Column
-    payload.substr(pos, len)
-  }
-
-  /** Shared map-only scaffold for the per-payload media transforms: one
-    * output row per (media_id, payload) row whose decode-transform `f`
-    * accepts; rows `f` declines (undecodable / wrong codec) are dropped —
-    * the [[imageDHash]] convention. Keeps the five media functions one
-    * lambda each instead of five copies of the encoder/fieldIndex/
-    * mapPartitions boilerplate.
+  /** Shared map-only scaffold for every per-payload media operator: the
+    * rows `f` returns for each (media_id, payload) row — one, several (a
+    * row per window), or none for a payload it declines (undecodable /
+    * wrong codec, the [[imageDHash]] convention). The file's only
+    * `mapPartitions`: each operator is one lambda plus its encoder.
     */
-  private def mapPayload[T](media: DataFrame)(f: (Long, Array[Byte]) => Option[T])(
-      implicit enc: org.apache.spark.sql.Encoder[T]): org.apache.spark.sql.Dataset[T] = {
+  private def mapPayload[T](media: DataFrame)(f: (Long, Array[Byte]) => IterableOnce[T])(
+      implicit enc: Encoder[T]): Dataset[T] = {
     val idIdx = media.schema.fieldIndex("media_id")
     val payloadIdx = media.schema.fieldIndex("payload")
     media.mapPartitions { rows =>
@@ -360,9 +292,9 @@ object Multimodal {
         }
         (id, MediaCodecs.encodeBmp(outW, outH, out))
       }
-    }(org.apache.spark.sql.Encoders.tuple(
-      org.apache.spark.sql.Encoders.scalaLong,
-      org.apache.spark.sql.Encoders.BINARY)).toDF("media_id", "payload")
+    }(Encoders.tuple(
+      Encoders.scalaLong,
+      Encoders.BINARY)).toDF("media_id", "payload")
   }
 
   /** REAL audio resample (sample-rate conversion) for mono 8-bit PCM WAVs:
@@ -394,9 +326,9 @@ object Multimodal {
         }
         (id, MediaCodecs.encodeWav(out, dstRate))
       }
-    }(org.apache.spark.sql.Encoders.tuple(
-      org.apache.spark.sql.Encoders.scalaLong,
-      org.apache.spark.sql.Encoders.BINARY)).toDF("media_id", "payload")
+    }(Encoders.tuple(
+      Encoders.scalaLong,
+      Encoders.BINARY)).toDF("media_id", "payload")
   }
 
   /** (media_id, sample_rate, samples) for every mono 8-bit PCM WAV payload
@@ -409,10 +341,10 @@ object Multimodal {
       MediaCodecs.decodeWavPcm8(bytes).map { case (rate, samples) =>
         (id, rate, samples.iterator.map(b => (b & 0xff).toString).mkString("|"))
       }
-    }(org.apache.spark.sql.Encoders.tuple(
-      org.apache.spark.sql.Encoders.scalaLong,
-      org.apache.spark.sql.Encoders.scalaInt,
-      org.apache.spark.sql.Encoders.STRING))
+    }(Encoders.tuple(
+      Encoders.scalaLong,
+      Encoders.scalaInt,
+      Encoders.STRING))
       .toDF("media_id", "sample_rate", "samples")
   }
 
@@ -427,11 +359,11 @@ object Multimodal {
       MediaCodecs.decodeImageGray(bytes).map { case (w, h, gray) =>
         (id, w, h, gray.mkString("|"))
       }
-    }(org.apache.spark.sql.Encoders.tuple(
-      org.apache.spark.sql.Encoders.scalaLong,
-      org.apache.spark.sql.Encoders.scalaInt,
-      org.apache.spark.sql.Encoders.scalaInt,
-      org.apache.spark.sql.Encoders.STRING))
+    }(Encoders.tuple(
+      Encoders.scalaLong,
+      Encoders.scalaInt,
+      Encoders.scalaInt,
+      Encoders.STRING))
       .toDF("media_id", "width", "height", "pixels")
   }
 
@@ -473,9 +405,9 @@ object Multimodal {
       MediaCodecs.decodeImageGray(bytes).map { case (w, h, gray) =>
         (id, dHash(w, h, gray))
       }
-    }(org.apache.spark.sql.Encoders.tuple(
-      org.apache.spark.sql.Encoders.scalaLong,
-      org.apache.spark.sql.Encoders.scalaLong)).toDF("media_id", "dhash")
+    }(Encoders.tuple(
+      Encoders.scalaLong,
+      Encoders.scalaLong)).toDF("media_id", "dhash")
   }
 
   /** Demo IMAGE table: deterministic gray 24-bit BMPs whose pixel values,

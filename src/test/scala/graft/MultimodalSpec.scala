@@ -126,7 +126,7 @@ class MultimodalSpec extends SparkSpec {
       (2L, MediaCodecs.encodeBmp(2, 2, Array.fill(4)((9.toByte, 9.toByte, 9.toByte)))),
       (3L, "not media at all".getBytes("UTF-8"))
     ).toDF("media_id", "payload")
-    val out = Multimodal.decodeMedia(spark, rows).orderBy("media_id").collect()
+    val out = Multimodal.decodeMedia(rows).orderBy("media_id").collect()
     assert(out(0).getAs[String]("format") == "audio/wav")
     assert(out(0).getAs[Int]("n_samples") == 100)
     assert(out(1).getAs[String]("format") == "image/bmp")
@@ -138,18 +138,27 @@ class MultimodalSpec extends SparkSpec {
   test("windowEnergy: exact integer sums consistent with the float RMS") {
     // silence window: sum_sq 0; constant-192 window: 100 * 64^2 = 409600
     val samples = Array.fill(100)(128.toByte) ++ Array.fill(100)(192.toByte)
-    val df = Seq((1L, MediaCodecs.encodeWav(samples, 8000))).toDF("media_id", "payload")
-    val rows = Multimodal.windowEnergy(spark, df, k = 2)
-      .orderBy("window").collect()
-      .map(r => (r.getInt(1), r.getLong(2), r.getLong(3))).toSeq
+    val wav = MediaCodecs.encodeWav(samples, 8000)
+    // the same WAV with an unknown LIST chunk before `data` (the "walks past
+    // unknown chunks" splice): the data offset comes from the RIFF walk
+    val list = "LIST".getBytes("ASCII") ++ Array[Byte](6, 0, 0, 0, 1, 2, 3, 4, 5, 6)
+    val spliced = wav.take(36) ++ list ++ wav.drop(36)
+    val df = Seq((1L, wav), (3L, spliced)).toDF("media_id", "payload")
+    val byId = Multimodal.windowEnergy(df, k = 2)
+      .orderBy("media_id", "window").collect()
+      .groupBy(_.getLong(0)).map { case (id, rs) =>
+        id -> rs.map(r => (r.getInt(1), r.getLong(2), r.getLong(3))).toSeq }
+    val rows = byId(1L)
     assert(rows == Seq((0, 0L, 100L), (1, 409600L, 100L)), s"got $rows")
+    assert(byId(3L) == rows, s"spliced: ${byId(3L)}")
+    assert(MediaCodecs.wavWindowRms(spliced, 2).toSeq == Seq(0.0f, 0.5f))
     // rms_w = sqrt(sum_sq / (128^2 * n)) reproduces the float path
     val rms = rows.map { case (_, sq, n) =>
       math.sqrt(sq.toDouble / (128.0 * 128.0 * n)).toFloat }
     assert(rms == Seq(0.0f, 0.5f))
     // non-WAV payloads yield no rows
     val junk = Seq((2L, Array[Byte](1, 2, 3))).toDF("media_id", "payload")
-    assert(Multimodal.windowEnergy(spark, junk, k = 2).count() == 0)
+    assert(Multimodal.windowEnergy(junk, k = 2).count() == 0)
   }
 
   test("G.711 mu-law decode table matches the spec's reference points") {
@@ -217,7 +226,7 @@ class MultimodalSpec extends SparkSpec {
       (2L, MediaCodecs.encodeWavAdpcm(Array.fill[Short](9)(7), 16000)),
       (3L, MediaCodecs.encodeWav(Array.fill(10)(128.toByte), 8000))
     ).toDF("media_id", "payload")
-    val out = Multimodal.decodeMedia(spark, rows).orderBy("media_id").collect()
+    val out = Multimodal.decodeMedia(rows).orderBy("media_id").collect()
     assert(out(0).getAs[String]("format") == "audio/mulaw")
     assert(out(1).getAs[String]("format") == "audio/adpcm")
     assert(out(1).getAs[Int]("n_samples") == 9)
@@ -233,13 +242,13 @@ class MultimodalSpec extends SparkSpec {
     val s = MediaCodecs.MuLawTable('A'.toInt).toLong
     val df = Seq((1L, MediaCodecs.encodeWavMulaw("AAAA".getBytes("ASCII"), 8000)))
       .toDF("media_id", "payload")
-    val rows = Multimodal.windowEnergy16(spark, df, k = 2)
+    val rows = Multimodal.windowEnergy16(df, k = 2)
       .orderBy("window").collect()
       .map(r => (r.getInt(1), r.getLong(2), r.getLong(3))).toSeq
     assert(rows == Seq((0, 2 * s * s, 2L), (1, 2 * s * s, 2L)), s"got $rows")
     val adpcm = Seq((2L, MediaCodecs.encodeWavAdpcm(Array.fill[Short](5)(-300), 8000)))
       .toDF("media_id", "payload")
-    val info = Multimodal.audioInfo(spark, adpcm).collect()(0)
+    val info = Multimodal.audioInfo(adpcm).collect()(0)
     assert(info.getAs[String]("format") == "audio/adpcm")
     assert(info.getAs[Int]("n_samples") == 5)
     assert(info.getAs[Int]("first_sample") == -300)
@@ -277,7 +286,7 @@ class MultimodalSpec extends SparkSpec {
         val v = f(i % w, i / w).toByte; (v, v, v)
       })
     def hashOf(bytes: Array[Byte]): Long = {
-      val Some((w, h, g)) = MediaCodecs.decodeBmpGray(bytes)
+      val Some((w, h, g)) = MediaCodecs.decodeImageGray(bytes)
       Multimodal.dHash(w, h, g)
     }
     val base = grayBmp(20, 17, (x, y) => (x * 11 + y * 5) % 256)
@@ -292,12 +301,12 @@ class MultimodalSpec extends SparkSpec {
     assert(java.lang.Long.bitCount(hashOf(base) ^ hashOf(other)) > 10)
   }
 
-  test("decodeBmpGray: exact luma on a gray image, top-down orientation") {
+  test("decodeImageGray: exact luma on a gray BMP, top-down orientation") {
     import graft.functions.MediaCodecs
     val bytes = MediaCodecs.encodeBmp(3, 2, Array.tabulate(6) { i =>
       val v = (i * 40).toByte; (v, v, v)
     })
-    val Some((w, h, g)) = MediaCodecs.decodeBmpGray(bytes)
+    val Some((w, h, g)) = MediaCodecs.decodeImageGray(bytes)
     assert((w, h) == ((3, 2)))
     // encodeBmp takes top-down pixels; gray must come back in that order
     assert(g.toSeq == Seq(0, 40, 80, 120, 160, 200))
@@ -331,21 +340,104 @@ class MultimodalSpec extends SparkSpec {
     assert(siblings.values.forall(_ <= 3))
   }
 
-  test("decodeBmpGray: hostile headers return None, never throw") {
+  test("decodeBmpRgb: hostile headers return None, never throw") {
     import graft.functions.MediaCodecs
     val hostile = java.nio.ByteBuffer.allocate(54)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)
     hostile.put('B'.toByte).put('M'.toByte).putInt(54).putInt(0).putInt(54)
       .putInt(40).putInt(715827883).putInt(3) // width*3 wraps Int
       .putShort(1.toShort).putShort(24.toShort).putInt(0)
-    assert(MediaCodecs.decodeBmpGray(hostile.array()).isEmpty)
+    assert(MediaCodecs.decodeBmpRgb(hostile.array()).isEmpty)
     val minH = java.nio.ByteBuffer.allocate(54)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)
     minH.put('B'.toByte).put('M'.toByte).putInt(54).putInt(0).putInt(54)
       .putInt(40).putInt(4).putInt(Int.MinValue) // |height| overflows
       .putShort(1.toShort).putShort(24.toShort).putInt(0)
-    assert(MediaCodecs.decodeBmpGray(minH.array()).isEmpty)
+    assert(MediaCodecs.decodeBmpRgb(minH.array()).isEmpty)
     assert(MediaCodecs.decodeBmp(minH.array()).isEmpty)
   }
 
+  test("decodeImageGray is the integer luma of decodeImageRgb") {
+    val (w, h) = (7, 5)
+    val px = Array.tabulate(w * h) { i =>
+      ((i * 37 % 256).toByte, (i * 91 % 256).toByte, (255 - i * 13 % 256).toByte)
+    }
+    val bottomUp = MediaCodecs.encodeBmp(w, h, px)
+    // the same image stored top-down: negative height, rows in image order
+    val topDown = bottomUp.clone()
+    val stride = (w * 3 + 3) / 4 * 4
+    java.nio.ByteBuffer.wrap(topDown).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      .putInt(22, -h)
+    (0 until h).foreach { r =>
+      System.arraycopy(bottomUp, 54 + r * stride, topDown, 54 + (h - 1 - r) * stride, stride)
+    }
+    val gif = {
+      val img = new java.awt.image.BufferedImage(w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
+      px.indices.foreach { i =>
+        val (r, g, b) = px(i)
+        img.setRGB(i % w, i / w, ((r & 0xff) << 16) | ((g & 0xff) << 8) | (b & 0xff))
+      }
+      val out = new java.io.ByteArrayOutputStream()
+      assert(javax.imageio.ImageIO.write(img, "gif", out), "no gif writer")
+      out.toByteArray
+    }
+    assert(MediaCodecs.decodeImageRgb(topDown).get._3.toSeq ==
+      MediaCodecs.decodeImageRgb(bottomUp).get._3.toSeq)
+    Seq("bmp bottom-up" -> bottomUp, "bmp top-down" -> topDown,
+        "png" -> MediaCodecs.encodePng(w, h, px),
+        "jpeg" -> MediaCodecs.encodeJpeg(w, h, px),
+        "gif" -> gif).foreach { case (name, bytes) =>
+      val Some((rw, rh, rgb)) = MediaCodecs.decodeImageRgb(bytes)
+      val Some((gw, gh, gray)) = MediaCodecs.decodeImageGray(bytes)
+      assert((gw, gh) == ((rw, rh)) && (rw, rh) == ((w, h)), name)
+      val luma = rgb.map(p =>
+        (299 * ((p >> 16) & 0xff) + 587 * ((p >> 8) & 0xff) + 114 * (p & 0xff)) / 1000)
+      assert(gray.toSeq == luma.toSeq, name)
+    }
+  }
+
+  test("decoder operators return exactly their declared schemas") {
+    import org.apache.spark.sql.types.StructType
+    type Op = org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame
+    val declared = Seq[(String, Op, String)](
+      ("flacInfo", Multimodal.flacInfo(_),
+        "media_id BIGINT NOT NULL, format STRING NOT NULL, " +
+        "sample_rate INT NOT NULL, channels INT NOT NULL, bps INT NOT NULL, " +
+        "n_samples INT NOT NULL, first_sample INT, sample_sum BIGINT NOT NULL, " +
+        "weighted_sum BIGINT NOT NULL, md5_ok BOOLEAN NOT NULL"),
+      ("decodeMedia", Multimodal.decodeMedia(_),
+        "media_id BIGINT NOT NULL, format STRING, sample_rate INT, " +
+        "channels INT, n_samples INT, duration_ms DOUBLE, rms DOUBLE, width INT, " +
+        "height INT, mean_r DOUBLE, mean_g DOUBLE, mean_b DOUBLE"),
+      ("windowEnergy", Multimodal.windowEnergy(_),
+        "media_id BIGINT NOT NULL, `window` INT NOT NULL, " +
+        "sum_sq BIGINT NOT NULL, n_samples BIGINT NOT NULL"),
+      ("windowEnergy16", Multimodal.windowEnergy16(_),
+        "media_id BIGINT NOT NULL, `window` INT NOT NULL, " +
+        "sum_sq BIGINT NOT NULL, n_samples BIGINT NOT NULL"),
+      ("audioInfo", Multimodal.audioInfo(_),
+        "media_id BIGINT NOT NULL, format STRING NOT NULL, " +
+        "sample_rate INT NOT NULL, n_samples INT NOT NULL, first_sample INT, " +
+        "duration_ms DOUBLE NOT NULL"))
+    val ramp = Array.tabulate(9)(i => (i * 20).toByte)
+    val fixtures = Seq(
+      (1L, MediaCodecs.encodeWav(ramp, 8000)),
+      (2L, MediaCodecs.encodeWavMulaw(ramp, 8000)),
+      (3L, MediaCodecs.encodeWavAdpcm(ramp.map(b => (b * 100).toShort), 8000)),
+      (4L, graft.functions.Flac.encode(ramp.map(_ * 100), 8000)),
+      (5L, MediaCodecs.encodeBmp(2, 1, Array.fill(2)((1.toByte, 2.toByte, 3.toByte)))),
+      (6L, MediaCodecs.encodeWav(Array.emptyByteArray, 8000)),
+      (7L, "junk".getBytes("UTF-8"))).toDF("media_id", "payload")
+    val empty = fixtures.limit(0)
+    declared.foreach { case (op, run, ddl) =>
+      val want = StructType.fromDDL(ddl)
+      Seq("empty" -> empty, "fixtures" -> fixtures).foreach { case (in, df) =>
+        val out = run(df)
+        assert(out.schema == want, s"$op on $in: ${out.schema.toDDL}")
+        val rows = out.collect()
+        assert(rows.forall(_.schema == want), s"$op on $in rows")
+        assert(rows.isEmpty == (in == "empty"), s"$op on $in: ${rows.length} rows")
+      }
+    }
+  }
 }

@@ -170,18 +170,18 @@ class PropertySpec extends SparkSpec {
       "日", "本", "語", "テ", "キ", "ス", "ト", "漢", "字")).map(_.mkString)
     samples(sjisText, 30).foreach { t =>
       val bytes = t.getBytes(java.nio.charset.Charset.forName("Shift_JIS"))
-      assert(graft.ingest.Readers.decodeFallbackForTest(bytes) == t,
+      assert(graft.ingest.Readers.decodeFallback(bytes) == t,
         s"sjis round-trip failed for $t")
     }
     val asciiGen = Gen.nonEmptyListOf(Gen.alphaNumChar).map(_.mkString)
     samples(asciiGen, 30).foreach { t =>
-      assert(graft.ingest.Readers.decodeFallbackForTest(t.getBytes("UTF-8")) == t)
+      assert(graft.ingest.Readers.decodeFallback(t.getBytes("UTF-8")) == t)
     }
   }
 
   test("r12 micro-tail round-trips on generated text (UTF-7, HZ, ISO-2022-KR)") {
     def dec(bytes: Array[Byte]): String =
-      graft.ingest.Readers.decodeFallbackForTest(bytes)
+      graft.ingest.Readers.decodeFallback(bytes)
     // UTF-7: independent test-side encoder (RFC 2152 modified base64, all
     // non-direct chars encoded) + the +/v8- BOM; mixed ASCII/BMP text
     def encodeUtf7(s: String): Array[Byte] = {
@@ -277,8 +277,11 @@ class PropertySpec extends SparkSpec {
       graft.ingest.PdfText.asciiHexDecode(bytes)
       graft.ingest.PdfText.ascii85Decode(bytes)
       graft.ingest.PdfText.runLengthDecode(bytes)
-      graft.ingest.Readers.decodeFallbackForTest(bytes)
-      graft.ingest.Readers.parseForTest(bytes)
+      graft.ingest.Readers.decodeFallback(bytes)
+      graft.ingest.Readers.parseXmlRecords(bytes)
+      graft.ingest.Readers.parseDocxParagraphs(bytes)
+      graft.ingest.Readers.parseHtml(bytes)
+      graft.ingest.Readers.parseWarcResponses(bytes)
     }
   }
 

@@ -40,7 +40,7 @@ class ReadersSpec extends SparkSpec {
     // mostly-ASCII cp1252 whose smart punctuation forms VALID SJIS pairs
     // (0x92+'s', 0x96+'M') must NOT trip the Shift-JIS branch — the
     // multi-byte density gate keeps it western
-    val westy = Readers.decodeFallbackForTest(
+    val westy = Readers.decodeFallback(
       "it’s fine in Jan–Mar".getBytes(java.nio.charset.Charset.forName("windows-1252")))
     assert(westy == "it’s fine in Jan–Mar", s"got $westy")
     assert(rows.contains("j k"), s"junk not floored to latin-1: $rows")
@@ -48,7 +48,7 @@ class ReadersSpec extends SparkSpec {
 
   test("chardet-lite CJK/Cyrillic tail: EUC-JP, GBK, Big5, KOI8-R, cp1251") {
     def dec(text: String, cs: String): String =
-      Readers.decodeFallbackForTest(
+      Readers.decodeFallback(
         text.getBytes(java.nio.charset.Charset.forName(cs)))
     assert(dec("日本語のテキストです", "EUC-JP") == "日本語のテキストです")
     assert(dec("中文编码测试", "GBK") == "中文编码测试")
@@ -64,7 +64,7 @@ class ReadersSpec extends SparkSpec {
     // a stray ESC without the JIS shift-in sequence must NOT trip the
     // gate: ANSI-colored logs stay plain UTF-8
     val ansi = "\u001b[31mred text\u001b[0m"
-    assert(Readers.decodeFallbackForTest(ansi.getBytes("UTF-8")) == ansi)
+    assert(Readers.decodeFallback(ansi.getBytes("UTF-8")) == ansi)
     // Chinese GBK text must not be claimed by the (earlier) EUC-KR branch:
     // its decode carries no precomposed hangul
     assert(dec("中文编码测试", "GBK") == "中文编码测试")
@@ -77,7 +77,7 @@ class ReadersSpec extends SparkSpec {
   }
 
   test("r12 micro-tail: ISO-2022-KR, HZ-GB2312, UTF-7 (BOM-gated)") {
-    def dec(bytes: Array[Byte]): String = Readers.decodeFallbackForTest(bytes)
+    def dec(bytes: Array[Byte]): String = Readers.decodeFallback(bytes)
     // ISO-2022-KR: ESC $ ) C designator gates, JDK strict decode validates
     assert(dec("한국어 뉴스 기사 본문".getBytes(
       java.nio.charset.Charset.forName("ISO-2022-KR"))) == "한국어 뉴스 기사 본문")
@@ -689,12 +689,12 @@ class ReadersSpec extends SparkSpec {
     val cases = Seq("<script>never closed", "<p", "<!-- open", "&#xZZ; &unknown; &",
       "", "<title>only title</title>")
     cases.foreach { c =>
-      val (t, b) = Readers.parseForTestHtml(c.getBytes(StandardCharsets.UTF_8))
+      val (t, b) = Readers.parseHtml(c.getBytes(StandardCharsets.UTF_8))
       assert(b == "" || c.contains("&")) // tag-only pages have no visible text
       assert(t == "" || t == "only title")
     }
     // the entity page keeps its literal (undecayable) ampersands
-    val (_, ents) = Readers.parseForTestHtml("&#xZZ; &unknown; &".getBytes(StandardCharsets.UTF_8))
+    val (_, ents) = Readers.parseHtml("&#xZZ; &unknown; &".getBytes(StandardCharsets.UTF_8))
     assert(ents == "&#xZZ; &unknown; &")
   }
 
@@ -733,8 +733,8 @@ class ReadersSpec extends SparkSpec {
     val pages = Readers.warcHtml(spark, dir + "/*.warc.gz").collect()
     assert(pages.length == 1 && pages(0).getString(2) == "Hello crawl")
     // truncated / malformed framing never throws
-    Readers.parseForTestWarc(bout.toByteArray.take(20))
-    val tail = Readers.parseForTestWarc(
+    Readers.parseWarcResponses(bout.toByteArray.take(20))
+    val tail = Readers.parseWarcResponses(
       "WARC/1.0\r\nWARC-Type: response\r\nContent-Length: 999\r\n\r\nshort"
         .getBytes(StandardCharsets.UTF_8))
     assert(tail.length == 1 && tail(0)._3 == "short", s"got $tail")

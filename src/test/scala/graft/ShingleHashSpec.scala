@@ -101,5 +101,42 @@ class ShingleHashSpec extends SparkSpec {
     val viaInt = d.selectExpr("graft_shingle_hashes(split(text, ' '), 2)")
       .collect()(0).getAs[scala.collection.Seq[Long]](0)
     assert(viaLong == viaInt)
+    // the other integer-argument builders share the same literal check:
+    // each rejects an out-of-range value by name at plan time, and takes a
+    // SMALLINT/BIGINT constant for the same value as the INT one
+    val v = Seq((Seq(1.0, -2.0), "a b c")).toDF("vec", "text")
+    Seq(
+      "graft_minhash(split(text, ' '), 0, 8)" -> "shingleSize must be >= 1",
+      "graft_minhash(split(text, ' '), 2, 0)" -> "numHashes must be >= 1",
+      "graft_simhash(split(text, ' '), 0)" -> "bits must be in 1..32",
+      "graft_simhash(split(text, ' '), 33)" -> "bits must be in 1..32",
+      "graft_quant(vec, 0)" -> "levels must be >= 1",
+      "graft_minhash(split(text, ' '), text, 8)" -> "shingleSize must be an integer literal"
+    ).foreach { case (e, msg) =>
+      val err = intercept[Exception](v.selectExpr(e))
+      assert(err.getMessage.contains(msg), s"$e: ${err.getMessage}")
+    }
+    Seq(
+      "graft_minhash(split(text, ' '), %s, 8)",
+      "graft_simhash(split(text, ' '), %s)",
+      "graft_quant(vec, %s)",
+      "graft_shingle_hashes(split(text, ' '), %s)"
+    ).foreach { e =>
+      val vals = Seq("2", "2L", "2S", "CAST(2 AS BIGINT)").map(lit =>
+        v.selectExpr(e.format(lit)).collect()(0).get(0))
+      assert(vals.distinct.length == 1, s"$e: $vals")
+    }
+  }
+
+  test("minhashCandidatePairs rejects zero sizes before any job runs") {
+    // shingle size 0 gives every document the same signature, so every
+    // pair would become a candidate: the builder fails while the frame is
+    // built, before an action can run
+    Seq("shingleSize" -> (() => Dedup.minhashCandidatePairs(df, "id", "text", shingleSize = 0)),
+        "numHashes" -> (() => Dedup.minhashCandidatePairs(df, "id", "text",
+          numHashes = 0, bands = 4))).foreach { case (name, build) =>
+      val err = intercept[Exception](build())
+      assert(err.getMessage.contains(s"$name must be >= 1"), err.getMessage)
+    }
   }
 }

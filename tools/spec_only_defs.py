@@ -30,8 +30,10 @@ code.
 Every member that no root reaches is printed with its definition site and
 the spec files under `src/test` that name it. A keep-list member is marked
 KEEP with its reason; any other is marked DEAD (a member reached only from
-a KEEP member is live and not printed). The exit code is 1 when a DEAD
-member is printed, else 0.
+a KEEP member is live and not printed). A keep-list entry that matches no
+KEEP member, because it names nothing or a root already reaches what it
+names, is printed as `STALE <entry>`. The exit code is 1 when a DEAD or
+STALE line is printed, else 0.
 
 Names are resolved without types, so a local that shadows a member counts
 as a reference to it: the list can miss dead code, it does not report live
@@ -44,8 +46,6 @@ import sys
 KEEP = {
     "Dedup.jaccardDistinct": "reference form PropertySpec compares the verify kernel against",
     "MediaCodecs.wavWindowRms": "float RMS reference PropertySpec checks wavWindowEnergy against",
-    "Readers.parseForTest*": "private[graft] test seams for the reader parsers",
-    "Readers.decodeFallbackForTest": "private[graft] test seam for the charset-decode fallback",
     "Readers.read": "the reference app's upload dispatch by file suffix (app.py:296-315)",
     "Dedup.gateCacheClear": "private[graft] test seam that resets the collapse-gate cache",
     "Similarity.cosine": "scalar cosine the vector specs use as their fixture oracle",
@@ -308,7 +308,8 @@ class Source:
 
 
 def reachability(root, keep=KEEP):
-    """(printed lines, number of DEAD members) for the tree at `root`."""
+    """(printed lines, number of DEAD members, STALE keep entries) for the
+    tree at `root`."""
     sources = [Source(p, read_stripped(p))
                for p in sorted(scala_files(root, "src/main/scala"))]
     members_of = {}
@@ -382,15 +383,18 @@ def reachability(root, keep=KEEP):
             ", ".join(specs) or "none"))
     lines.append("%d member(s) reached from no root; %d not on the keep list"
                  % (len(lines), dead))
-    return lines, dead
+    stale = [k for k in keep
+             if not any(kept(key, {k: keep[k]}) for key in kept_keys)]
+    lines.extend("STALE %s (matches no unreached member)" % k for k in stale)
+    return lines, dead, stale
 
 
 def main():
     root = sys.argv[1] if len(sys.argv) > 1 else \
         os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    lines, dead = reachability(root)
+    lines, dead, stale = reachability(root)
     print("\n".join(lines))
-    return 1 if dead else 0
+    return 1 if dead or stale else 0
 
 
 if __name__ == "__main__":
