@@ -1,11 +1,16 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.InterpretedOrdering
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, InterpretedOrdering,
+  UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.optimizer.NormalizeNaNAndZero
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.types.{DataType, DoubleType, FloatType, LongType, StringType,
+  StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** End-to-end training-set assembly — the composite the individual curation
@@ -20,8 +25,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * md5(id) order ([[budgetCut]]): one small per-(language, md5-bucket)
   * aggregate decides every bucket but the one each budget falls in, the
   * driver replays that bucket's keys, and the curated rows come out of one
-  * map-only filter that no exchange touches. Nothing is quadratic and no
-  * document text reaches the driver — the chain holds at corpus scale
+  * map-only filter that no exchange touches. The per-language summary
+  * ([[curationSummary]]) is eager: one job, the same fold with no exchange,
+  * and `langCol` must be low-cardinality for both. Nothing is quadratic and
+  * no document text reaches the driver — the chain holds at corpus scale
   * because each piece already does.
   */
 object Curate {
@@ -141,24 +148,32 @@ object Curate {
     val keyed = df.withColumn("__g_md5", md5(col(idCol).cast("string")))
       .withColumn("__g_bkt", substring(col("__g_md5"), 1, 2))
     val v = valCol.cast("long")
-    val buckets = bucketSums(keyed.select(col(partCol), col("__g_bkt"), v))
+    val sumRows = keyed.select(col(partCol), col("__g_bkt"), v)
+    val buckets = bucketSums(sumRows)
     buckets.find(_.min.exists(_ < 0)).foreach { b =>
       throw new IllegalArgumentException(s"budgetCut needs non-negative " +
         s"values; $partCol = ${b.part} holds ${b.min.get}")
     }
     def partIs(p: Any): Column =
       if (p == null) col(partCol).isNull else col(partCol) === lit(p)
+    // parts group on the driver as the fold grouped them (see groupKey)
+    val partType = sumRows.schema.head.dataType
+    val partKey = groupKey(Seq(partType))
+    val toCatalystPart = CatalystTypeConverters.createToCatalystConverter(partType)
+    def keyOf(p: Any): UnsafeRow = partKey(InternalRow(toCatalystPart(p))).copy()
     val bkt = col("__g_bkt")
     val kept = Seq.newBuilder[Column]
-    // (part, bucket) -> (sum before the bucket, non-null values before it)
-    val boundary = Map.newBuilder[(Any, String), (Long, Long)]
-    buckets.groupBy(_.part).foreach { case (p, bs) =>
+    // (part key, bucket) -> (part, sum before the bucket, non-null values
+    // before it)
+    val boundary = Map.newBuilder[(UnsafeRow, String), (Any, Long, Long)]
+    buckets.groupBy(b => keyOf(b.part)).foreach { case (k, bs) =>
+      val p = bs.head.part
       var off, nnBefore = 0L
       val run = Seq.newBuilder[String]
       bs.sortBy(b => Option(b.bkt)).foreach { case BucketSum(_, b, bsum, nn, n, _) =>
         if (off <= budget && nnBefore + nn > 0) {
           if (off + bsum <= budget && (b == null || nnBefore > 0 || nn == n)) run += b
-          else if (b != null) boundary += (p, b) -> (off, nnBefore)
+          else if (b != null) boundary += (k, b) -> (p, off, nnBefore)
         }
         off = Math.addExact(off, bsum)
         nnBefore += nn
@@ -180,10 +195,14 @@ object Curate {
         col("__g_md5") > m || (col("__g_md5") === m && col(idCol) >= lit(id))
       def atMost(m: String, id: Any) =
         col("__g_md5") < m || (col("__g_md5") === m && col(idCol) <= lit(id))
-      keyed.filter(bounds.keys.map { case (p, b) => partIs(p) && bkt === b }.reduce(_ || _))
+      keyed.filter(bounds.map { case ((_, b), (p, _, _)) => partIs(p) && bkt === b }
+          .reduce(_ || _))
         .select(col(partCol), bkt, col("__g_md5"), col(idCol), v).collect()
-        .groupBy(r => (r.get(0), r.getString(1))).toSeq.flatMap { case ((p, b), rows) =>
-          var (cum, nn) = bounds((p, b))
+        .groupBy(r => (keyOf(r.get(0)), r.getString(1))).toSeq.flatMap { case (kb, rows) =>
+          val b = kb._2
+          val (p, before, nnBefore) = bounds(kb)
+          var cum = before
+          var nn = nnBefore
           var lo, hi: Option[(String, Any)] = None
           val sorted = rows.map(r => (key(r.getString(2), r.get(3)), r)).sortBy(_._1)(order)
           // RANGE frame: a row's sum includes its peers (equal keys)
@@ -221,27 +240,18 @@ object Curate {
     * `groupBy(part, bucket).agg(coalesce(sum(v), 0), count(v), count(1),
     * min(v))` — as one fold: each partition sums into a map keyed by the
     * group, the driver merges the maps. One job, nothing shuffled, no
-    * hash-aggregate page; the maps hold ≤ parts × 257 entries. Keys are
-    * converted to Scala values as they are read, because the row buffer
-    * is reused. A sum past `Long.MaxValue` throws `ArithmeticException`,
-    * as ANSI `sum` does.
+    * hash-aggregate page; the maps hold ≤ parts × 257 entries. Keys group
+    * as Spark groups them ([[groupKey]]): a binary part compares by
+    * content, every NaN is one group, and 0.0 and -0.0 are one. A map is
+    * keyed by a copy of the key's row, made only when the group is new, and
+    * each key becomes a Scala value once, on the driver. A sum past
+    * `Long.MaxValue` throws `ArithmeticException`, as ANSI `sum` does.
     */
   private[graft] def bucketSums(rows: DataFrame): Seq[BucketSum] = {
     val partType = rows.schema.head.dataType
-    val toScala = CatalystTypeConverters.createToScalaConverter(partType)
-    type Sums = scala.collection.mutable.HashMap[(Any, String), Array[Long]]
+    val keyTypes = Seq(partType, StringType)
+    type Sums = scala.collection.mutable.HashMap[UnsafeRow, Array[Long]]
     // per group: sum, non-null count, row count, min
-    def add(m: Sums, r: InternalRow): Sums = {
-      val b = if (r.isNullAt(1)) null else r.getUTF8String(1).toString
-      val s = m.getOrElseUpdate((toScala(r.get(0, partType)), b),
-        Array(0L, 0L, 0L, Long.MaxValue))
-      s(2) += 1
-      if (!r.isNullAt(2)) {
-        val x = r.getLong(2)
-        s(0) = Math.addExact(s(0), x); s(1) += 1; s(3) = math.min(s(3), x)
-      }
-      m
-    }
     def merge(m: Sums, o: Sums): Sums = {
       o.foreach { case (k, x) =>
         m.get(k) match {
@@ -253,10 +263,46 @@ object Curate {
       }
       m
     }
-    rows.queryExecution.toRdd.treeAggregate(new Sums)(add, merge, 1).toSeq.map {
-      case ((p, b), s) => BucketSum(p, b, s(0), s(1), s(2), if (s(1) > 0) Some(s(3)) else None)
+    val toScala = CatalystTypeConverters.createToScalaConverter(partType)
+    rows.queryExecution.toRdd.mapPartitions { it =>
+      val key = groupKey(keyTypes)
+      val m = new Sums
+      it.foreach { r =>
+        val k = key(r)
+        val s = m.getOrElse(k, {
+          val s = Array(0L, 0L, 0L, Long.MaxValue)
+          m(k.copy()) = s // the projection reuses its row
+          s
+        })
+        s(2) += 1
+        if (!r.isNullAt(2)) {
+          val x = r.getLong(2)
+          s(0) = Math.addExact(s(0), x); s(1) += 1; s(3) = math.min(s(3), x)
+        }
+      }
+      Iterator.single(m)
+    }.treeAggregate(new Sums)(merge, merge, 1).toSeq.map { case (k, s) =>
+      BucketSum(toScala(k.get(0, partType)), if (k.isNullAt(1)) null else k.getString(1),
+        s(0), s(1), s(2), if (s(1) > 0) Some(s(3)) else None)
     }
   }
+
+  /** The key Spark groups the leading `types` columns of a row by: an
+    * UnsafeRow of them, a float or double normalized as the planner
+    * normalizes a grouping key (`NormalizeNaNAndZero`: every NaN one value,
+    * -0.0 as 0.0). Keys that group together are then equal bytes, so a
+    * binary key compares by content. Floats nested in a struct or array
+    * are not normalized: a part is a language or a stratum. The projection
+    * reuses its output row.
+    */
+  private def groupKey(types: Seq[DataType]): UnsafeProjection =
+    UnsafeProjection.create(types.zipWithIndex.map { case (t, i) =>
+      val c = BoundReference(i, t, nullable = true)
+      t match {
+        case FloatType | DoubleType => NormalizeNaNAndZero(c)
+        case _ => c
+      }
+    })
 
   /** The curated document set: rows of `df` that (1) score at least
     * `minQuality`, (2) survive near-dup clustering as their cluster's
@@ -326,11 +372,28 @@ object Curate {
     }
   }
 
-  /** Per-language summary of a curated set: document and token counts. */
-  def curationSummary(curated: DataFrame, langCol: String): DataFrame =
-    curated.groupBy(col(langCol))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("q_n_tokens").cast("long")).as("n_tokens"))
+  /** Per-language summary of a curated set: document and token counts —
+    * the rows and schema of `groupBy(langCol).agg(count(lit(1)) as n_docs,
+    * sum(q_n_tokens as long) as n_tokens)`, as a local relation.
+    *
+    * It is eager: construction runs one job, the [[bucketSums]] fold with
+    * every row in the null bucket, so nothing is shuffled and no
+    * hash-aggregate page is reserved; `collect()` on the result runs no
+    * job. `n_tokens` is null for a language with no non-null count, and an
+    * overflowing sum throws `ArithmeticException`, as ANSI `sum` does.
+    *
+    * `langCol` must be low-cardinality (it is a language): every group
+    * reaches the driver, as for [[budgetCut]].
+    */
+  def curationSummary(curated: DataFrame, langCol: String): DataFrame = {
+    val rows = curated.select(col(langCol), lit(null).cast(StringType),
+      col("q_n_tokens").cast(LongType))
+    val schema = StructType(Seq(rows.schema.head,
+      StructField("n_docs", LongType, nullable = false), StructField("n_tokens", LongType)))
+    curated.sparkSession.createDataFrame(bucketSums(rows).map { g =>
+      Row(g.part, g.rows, if (g.nonNull > 0) g.sum else null)
+    }.asJava, schema)
+  }
 
   /** Deterministic train/val/test corpus split: the id's md5-fraction is
     * compared against cumulative thresholds, so every row gets exactly ONE

@@ -125,7 +125,9 @@ class CurateSpec extends SparkSpec {
     // has no edges, so components run only their one job over the pairs,
     // and the persisted reps' SHA-256 group exchange runs once, in their
     // own fill. The survivors' checkpoint is filled by the budget's fold:
-    // its own job, gone since, made this 24.
+    // its own job, gone since, made this 24. The summary is one fold too;
+    // its groupBy form's partial-count exchange and final aggregate, two
+    // jobs, made this 23.
     Dedup.gateCacheClear()
     spark.catalog.clearCache()
     var summary = Seq.empty[(String, Long)]
@@ -135,17 +137,27 @@ class CurateSpec extends SparkSpec {
         .collect().map(r => (r.getString(0), r.getLong(1))).toSeq.sorted
     }
     assert(summary == Seq(("en", 1L), ("fr", 1L)), s"got $summary")
-    assert(jobs.size == 23,
+    assert(jobs.size == 22,
       s"curateCorpus + curationSummary ran ${jobs.size} jobs:\n${jobs.mkString("\n")}")
   }
 
-  /** A random (rid, part, idc, v) batch over 1 + trial % 8 partitions:
-    * string parts, null parts, null ids (the null bucket), duplicate ids
-    * (RANGE-frame peers), null and zero values, and a part whose values
-    * are mostly null.
+  /** A random (rid, part, idc, v, part_bin, part_nan, part_zero) batch over
+    * 1 + trial % 8 partitions: string parts, null parts, null ids (the null
+    * bucket), duplicate ids (RANGE-frame peers), null and zero values, and
+    * a part whose values are mostly null. The last three columns are copies
+    * of part that Spark groups exactly as it groups part: its bytes (a new
+    * array on every row), and two doubles where en is NaN (two bit
+    * patterns) or 0.0 and -0.0.
     */
   private def randomBatch(rnd: scala.util.Random, trial: Int): DataFrame = {
     val parts = Seq("en", "fr", "sparse", null)
+    val otherNaN = java.lang.Double.longBitsToDouble(0x7ff8000000000123L)
+    def asDouble(part: String, en: Double): java.lang.Double = part match {
+      case null => null
+      case "en" => en
+      case "fr" => 1.5
+      case _ => -2.0
+    }
     val n = 1 + rnd.nextInt(2000)
     val rows = (0 until n).map { i =>
       val part = parts(rnd.nextInt(parts.size))
@@ -156,11 +168,16 @@ class CurateSpec extends SparkSpec {
       val nullsIn10 = if (part == "sparse") 6 else 1
       val v = if (rnd.nextInt(10) < nullsIn10) null
         else java.lang.Long.valueOf(if (rnd.nextInt(4) == 0) 0L else rnd.nextInt(50).toLong)
-      (i.toLong, part, id, v)
+      (i.toLong, part, id, v, if (part == null) null else part.getBytes("UTF-8"),
+        asDouble(part, if (i % 2 == 0) Double.NaN else otherNaN),
+        asDouble(part, if (i % 2 == 0) 0.0 else -0.0))
     }
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1 + trial % 8))
-      .toDF("rid", "part", "idc", "v")
+      .toDF("rid", "part", "idc", "v", "part_bin", "part_nan", "part_zero")
   }
+
+  /** The part columns of [[randomBatch]]. */
+  private val partCols = Seq("part", "part_bin", "part_nan", "part_zero")
 
   test("bucketSums folds exactly the rows of the per-(part, bucket) aggregate") {
     // Each partition's map is keyed by values read from a reused row buffer;
@@ -202,31 +219,130 @@ class CurateSpec extends SparkSpec {
     // bucket), duplicate ids (RANGE-frame peers), null and zero values, and
     // a part whose values are mostly null, so that nulls precede its first
     // value inside the bucket holding that value. Budgets: 0, exactly a
-    // bucket's end sum, exactly a row's sum, and above everything.
+    // bucket's end sum, exactly a row's sum, and above everything. Each
+    // batch is cut on every part column: the fold's keys must group as
+    // Spark groups them, so a binary part compares by content, every NaN
+    // is one part, and 0.0 and -0.0 are one (a key compared by reference,
+    // or a boxed NaN by ==, makes each of its rows a part of its own).
     val rnd = new scala.util.Random(7)
     for (trial <- 0 until 10) {
       val df = randomBatch(rnd, trial)
-      val sums = Curate.bucketedRunningSum(df, "part", "idc", col("v"), "c")
-        .withColumn("b", substring(md5(col("idc").cast("string")), 1, 2))
-      def cum(r: org.apache.spark.sql.Row) = if (r.isNullAt(4)) None else Some(r.getLong(4))
-      val all = sums.collect()
+      // (part, bucket, running sum) of every row
+      val all = Curate.bucketedRunningSum(df, "part", "idc", col("v"), "c")
+        .select(col("part"), substring(md5(col("idc").cast("string")), 1, 2), col("c"))
+        .collect()
+      def cum(r: org.apache.spark.sql.Row) = if (r.isNullAt(2)) None else Some(r.getLong(2))
       val rowSums = all.flatMap(cum).toSeq
-      val bucketEnds = all.groupBy(r => (r.get(1), r.get(5))).values
+      val bucketEnds = all.groupBy(r => (r.get(0), r.get(1))).values
         .flatMap(_.flatMap(cum).maxOption).toSeq
       val budgets = Seq(0L, rowSums.maxOption.getOrElse(0L) + 1) ++
         Seq(rowSums, bucketEnds).filter(_.nonEmpty).map(xs => xs(rnd.nextInt(xs.size)))
-      def sorted(d: org.apache.spark.sql.DataFrame) =
-        d.collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
-      for (budget <- budgets) {
-        val want = sorted(sums.filter(col("c") <= budget).drop("c", "b"))
-        val got = sorted(Curate.budgetCut(df, "part", "idc", col("v"), budget))
-        assert(got == want, s"trial $trial, budget $budget: ${got.size} rows vs ${want.size}")
+      for (partCol <- partCols) {
+        val sums = Curate.bucketedRunningSum(df, partCol, "idc", col("v"), "c")
+          .select("rid", "c").collect()
+        for (budget <- budgets) {
+          val want = sums.filter(r => !r.isNullAt(1) && r.getLong(1) <= budget)
+            .map(_.getLong(0)).sorted.toSeq
+          val cut = Curate.budgetCut(df, partCol, "idc", col("v"), budget)
+          assert(cut.columns.toSeq == df.columns.toSeq)
+          val got = cut.select("rid").collect().map(_.getLong(0)).sorted.toSeq
+          assert(got == want,
+            s"trial $trial, $partCol, budget $budget: ${got.size} rows vs ${want.size}")
+        }
       }
     }
     val negative = Seq((1L, "en", 1L, 3L), (2L, "en", 2L, -1L)).toDF("rid", "part", "idc", "v")
     val e = intercept[IllegalArgumentException](
       Curate.budgetCut(negative, "part", "idc", col("v"), 10L))
     assert(e.getMessage.contains("non-negative"), e.getMessage)
+  }
+
+  /** `groupBy(lang).agg(count(lit(1)) as n_docs, sum(q_n_tokens as long) as
+    * n_tokens)`: what [[Curate.curationSummary]] returns. */
+  private def groupBySummary(df: DataFrame, lang: String): DataFrame =
+    df.groupBy(col(lang)).agg(count(lit(1)).as("n_docs"),
+      sum(col("q_n_tokens").cast("long")).as("n_tokens"))
+
+  /** A frame's rows as a sorted multiset, binary as bytes and NaN as "NaN". */
+  private def multiset(df: DataFrame): Seq[Seq[Any]] =
+    df.collect().map(_.toSeq.map {
+      case b: Array[Byte] => b.toSeq
+      case d: Double if d.isNaN => "NaN"
+      case x => x
+    }).toSeq.sortBy(_.toString)
+
+  test("curationSummary is the groupBy summary: rows, schema and empty input") {
+    // Random batches with v as the int token count; on even trials sparse's
+    // counts (and the null language's) are all null, so their n_tokens is
+    // null. Languages: strings with a null, and part's binary and double
+    // copies (NaN, 0.0 and -0.0).
+    val rnd = new scala.util.Random(5)
+    for (trial <- 0 until 6) {
+      val tokens = if (trial % 2 == 0) when(col("part") =!= "sparse", col("v")) else col("v")
+      val df = randomBatch(rnd, trial).withColumn("q_n_tokens", tokens.cast("int"))
+      for (lang <- partCols; d <- Seq(df, df.filter(lit(false)))) {
+        val want = groupBySummary(d, lang)
+        val got = Curate.curationSummary(d, lang)
+        assert(got.schema == want.schema, s"trial $trial, $lang: ${got.schema} vs ${want.schema}")
+        assert(multiset(got) == multiset(want), s"trial $trial, $lang")
+      }
+    }
+  }
+
+  test("curationSummary: one job that shuffles nothing, a collect that runs none") {
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(
+      Seq(("en", 3), ("fr", 4), ("en", 5), (null, 6)), 3)).toDF("lang", "q_n_tokens")
+    val grouped = FinalPlans.jobSitesDuring(spark)(groupBySummary(df, "lang").collect())
+    assert(grouped.map(_.shuffleBytes).sum > 0, s"the groupBy form shuffles: $grouped")
+    var summary: DataFrame = null
+    val built = FinalPlans.jobSitesDuring(spark) { summary = Curate.curationSummary(df, "lang") }
+    assert(built.size == 1 && built.head.shuffleBytes == 0L, built.mkString("\n"))
+    var rows = Seq.empty[Seq[Any]]
+    val read = FinalPlans.jobSitesDuring(spark) { rows = multiset(summary) }
+    assert(read.isEmpty, read.mkString("\n"))
+    assert(rows == Seq(Seq("en", 2L, 8L), Seq("fr", 1L, 4L), Seq(null, 1L, 6L)), s"got $rows")
+    // a token sum past Long.MaxValue fails, as ANSI sum does
+    val big = spark.createDataFrame(spark.sparkContext.parallelize(
+      Seq(("en", Long.MaxValue / 2 + 1), ("en", Long.MaxValue / 2 + 1)), 2))
+      .toDF("lang", "q_n_tokens")
+    val e = intercept[Exception](Curate.curationSummary(big, "lang"))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[ArithmeticException]), s"$e")
+  }
+
+  test("curateCorpus and its summary do not depend on shuffle or join settings") {
+    // The near-dup corpus of the anti-join specs with every tenth document
+    // in fr, curated under a budget that cuts en inside a bucket. Without
+    // exact copies the probe keeps the per-document path; with 80 of them
+    // it takes the collapsed one. Each setting must give the same curated
+    // ids and the same summary as the session's own settings.
+    val rnd = new scala.util.Random(13)
+    def doc() = Seq.fill(30)(s"w${rnd.nextInt(5000)}").mkString(" ")
+    val base = (1 to 400).map(i => (i.toLong, doc(), if (i % 10 == 0) "fr" else "en"))
+    val near = base.take(20).map { case (i, t, l) => (1000L + i, t + " tail", l) }
+    val copies = base.slice(100, 180).map { case (i, t, l) => (2000L + i, t, l) }
+    def run(corpus: DataFrame) = {
+      Dedup.gateCacheClear()
+      val curated = Curate.curateCorpus(corpus, "doc_id", "text", "lang",
+        minQuality = 0.0, dupThreshold = 0.9, tokenBudget = 3000L)
+      (curated.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq,
+        multiset(Curate.curationSummary(curated, "lang")))
+    }
+    val settings = Seq("spark.sql.shuffle.partitions" -> "1",
+      "spark.sql.shuffle.partitions" -> "7",
+      "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+    for ((rows, collapsed) <- Seq((base ++ near, false), (base ++ near ++ copies, true))) {
+      val corpus = rows.toDF("doc_id", "text", "lang")
+      assert(Dedup.duplicationMaterial(corpus, col("text")) == collapsed)
+      val reference = run(corpus)
+      assert(reference._2.map(_.head) == Seq("en", "fr"), s"summary ${reference._2}")
+      for ((k, v) <- settings) under(k, v) {
+        val got = run(corpus)
+        assert(got._1 == reference._1, s"$k=$v, ${rows.size} rows: curated ids differ")
+        assert(got._2 == reference._2, s"$k=$v, ${rows.size} rows: ${got._2} vs ${reference._2}")
+      }
+    }
   }
 
   test("packSequences: concat-and-chunk manifest, doc attributed to its start chunk") {

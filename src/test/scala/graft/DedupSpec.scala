@@ -741,13 +741,6 @@ class DedupSpec extends SparkSpec {
     }.toSeq
   }
 
-  /** `body` with one session conf set, restored afterwards. */
-  private def under(key: String, value: String)(body: => Unit): Unit = {
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
-
   test("bandCandidatePairs is exactly band agreement, each pair once, under every plan") {
     // A pair that agrees on k bands leaves the bucket join k times, and
     // the pair dedup keeps one. The reference is brute force on the

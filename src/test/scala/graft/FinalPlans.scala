@@ -4,7 +4,7 @@ import scala.collection.mutable
 
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerEvent,
-  SparkListenerJobEnd, SparkListenerJobStart}
+  SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -43,9 +43,10 @@ object FinalPlans extends AdaptiveSparkPlanHelper {
   /** A job as [[jobSitesDuring]] reports it: `name` is its final stage's
     * call site or, for a stage AQE submits on its own thread, the SQL
     * query's call site and the operator the stage runs; `fills` lists the
-    * persisted RDDs whose first block the job wrote.
+    * persisted RDDs whose first block the job wrote; `shuffleBytes` is what
+    * the stages it ran wrote to shuffle files.
     */
-  final case class JobSite(name: String, fills: Seq[String]) {
+  final case class JobSite(name: String, fills: Seq[String], shuffleBytes: Long) {
     override def toString: String =
       if (fills.isEmpty) name else s"$name, fills ${fills.mkString("; ")}"
   }
@@ -62,6 +63,8 @@ object FinalPlans extends AdaptiveSparkPlanHelper {
     val jobs = mutable.LinkedHashMap.empty[Int, (String, Map[Int, String], Long)]
     val ends = mutable.Map.empty[Int, Long]
     val firstBlock = mutable.Map.empty[Int, Long]
+    val stageJob = mutable.Map.empty[Int, Int]
+    val written = mutable.Map.empty[Int, Long].withDefaultValue(0L)
     val l = new SparkListener {
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
         case q: SparkListenerSQLExecutionStart => queries(q.executionId.toString) = q.description
@@ -88,6 +91,12 @@ object FinalPlans extends AdaptiveSparkPlanHelper {
         val cached = js.stageInfos.flatMap(_.rddInfos).filter(_.storageLevel.isValid)
           .map(r => r.id -> s"rdd ${r.id} ${top(r.name)}").toMap
         jobs(js.jobId) = (name, cached, seq)
+        js.stageIds.foreach(stageJob(_) = js.jobId)
+      }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val s = e.stageInfo
+        for (job <- stageJob.get(s.stageId); m <- Option(s.taskMetrics))
+          written(job) += m.shuffleWriteMetrics.bytesWritten
       }
       override def onJobEnd(je: SparkListenerJobEnd): Unit = { seq += 1; ends(je.jobId) = seq }
       override def onBlockUpdated(b: SparkListenerBlockUpdated): Unit = {
@@ -105,7 +114,7 @@ object FinalPlans extends AdaptiveSparkPlanHelper {
       val end = ends.getOrElse(id, Long.MaxValue)
       JobSite(name, cached.toSeq.sortBy(_._1).collect {
         case (rdd, label) if firstBlock.get(rdd).exists(t => t > start && t < end) => label
-      })
+      }, written(id))
     }
   }
 

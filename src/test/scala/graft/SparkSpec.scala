@@ -32,6 +32,13 @@ abstract class SparkSpec extends AnyFunSuite {
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
+  /** `body` with one session conf set, restored afterwards. */
+  def under(key: String, value: String)(body: => Unit): Unit = {
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   /** The `rdd-*` entries reliable checkpoints wrote under the session's
     * checkpoint dir. */
   def checkpointFiles(): Set[String] = {

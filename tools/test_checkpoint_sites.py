@@ -4,10 +4,11 @@
 checks that `tools/checkpoint_sites.py`:
 
   1. passes a tree whose only direct calls sit in `Materialize.scala`, and
-     whose other files call `Materialize.checkpoint` or name the calls in
-     comments and strings;
-  2. fails on a planted `localCheckpoint()`, `.checkpoint()` or
-     `setCheckpointDir` elsewhere, and prints each file and line.
+     whose other files call `Materialize.checkpoint` or `Materialize.persist`
+     or name the calls in comments and strings;
+  2. fails on a planted `localCheckpoint()`, `.checkpoint()`,
+     `setCheckpointDir`, `.cache()` or `.persist(StorageLevel.DISK_ONLY)`
+     elsewhere, and prints each file and line.
 
 Exit 0 when every case holds, else 1 with the failing case named.
 """
@@ -25,17 +26,20 @@ package graft.ops
 object Materialize {
   def checkpoint(df: DataFrame, eager: Boolean = false): DataFrame =
     if (eager) df.checkpoint() else df.localCheckpoint(eager)
+  def persist(df: DataFrame): DataFrame = df.persist(StorageLevel.MEMORY_AND_DISK)
 }
 """,
     "src/main/scala/graft/ops/Loop.scala": """
 package graft.ops
 /** Rounds are eager: `localCheckpoint()` would be too, and so would
-  * `sc.setCheckpointDir` once set; df.checkpoint() is the reliable form. */
+  * `sc.setCheckpointDir` once set; df.checkpoint() is the reliable form,
+  * and df.cache() or df.persist(StorageLevel.DISK_ONLY) would leak. */
 object Loop {
-  val note = "call df.localCheckpoint() here"
+  val note = "call df.localCheckpoint() or df.cache() here"
   def round(df: DataFrame) = Materialize.checkpoint(df, eager = true)
   def lazyRound(df: DataFrame) = Materialize
     .checkpoint(df)
+  def kept(df: DataFrame) = Materialize.persist(df)
 }
 """,
 }
@@ -46,6 +50,9 @@ package graft.ops
 object Graph {
   def edges(df: DataFrame) =
     df.localCheckpoint()
+  def verts(df: DataFrame) = df.cache()
+  def ranks(df: DataFrame) =
+    df.persist(StorageLevel.DISK_ONLY)
 }
 """,
     "src/main/scala/graft/Main.scala": """
@@ -92,6 +99,8 @@ def main():
         rc, out = run(root)
         check(rc == 1, "planted calls fail the guard", out)
         for site in ("src/main/scala/graft/ops/Graph.scala:5:",
+                     "src/main/scala/graft/ops/Graph.scala:6:",
+                     "src/main/scala/graft/ops/Graph.scala:8:",
                      "src/main/scala/graft/Main.scala:5:",
                      "src/main/scala/graft/Main.scala:7:"):
             check(site in out, "the guard prints %s" % site, out)
